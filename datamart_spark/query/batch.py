@@ -1,59 +1,276 @@
-"""Batched multi-query BM25 top-k: N queries in ONE scan + kernel pass.
+"""The query planner: every BM25 search is a planned batch.
 
-The bulk-evaluation shape of a training-data pipeline (relevance
-labeling, query-set regression sweeps, dedup-against-reference-set)
-runs thousands of queries against the same index snapshot.  The
-single-query path (wand.bm25_topk_blockmax) is one Spark job per
-query, so a 50-query sweep pays 50 job round-trips, 50 postings scans
-and 50 python-worker kernel spin-ups even though the queries overlap
-heavily in terms (Zipf: a handful of frequent terms appear in a large
-fraction of queries).  The reference has the same N-round-trips shape
-(one ES request per query, apiserver/apiserver/search/__init__.py:
-55-105) — batching is where the Spark rebuild can beat it outright.
+One keyword query, one phrase, a phrase prefix or a 10^3-query
+relevance sweep are all the same program.  ``bm25_topk_blockmax``,
+``bm25_phrase_topk``, ``bm25_phrase_prefix_topk`` and ``search`` are
+batches of one; ``phrase_spans`` and ``passages`` take their plan from
+here and swap only the shard kernel.  The bulk-evaluation shape of a
+training-data pipeline (relevance labeling, query-set regression
+sweeps, dedup-against-reference-set) is where batching pays: the
+reference answers one ES request per query
+(apiserver/apiserver/search/__init__.py:55-105), while a batch here
+pays one scan and one kernel pass however many queries overlap in
+terms (Zipf: a handful of frequent terms appear in a large fraction of
+queries).
 
-Batch execution:
+Planning (driver, ``_plan_queries``): the snapshot and format checks;
+per-spec flag validation; analysis (keyword terms dedup; a phrase keeps
+its ordered token sequence, and a one-token exact phrase becomes the
+keyword AND query on that token); ONE ``expand_prefixes`` term_stats
+scan for every distinct phrase prefix; ONE idf fetch for the union of
+all terms; then df=0 pruning — an AND or phrase spec with a position
+that has no df>0 term can match nothing and is dropped, an OR spec
+keeps its df>0 terms.
 
-  driver: analyze every query once; ONE term_stats fetch for the
-  union of all terms (idf_map already batches + caches); AND queries
-  containing a df=0 term are dropped here — they can match nothing
-  → postings scan, `term IN (union of all queries' terms)` pushed to
-    parquet row-group pruning — ONE scan regardless of query count
-  → groupBy shard [cogroup with the union of the distinct filter
-    contexts' doc-id sets, tagged by context id, when any query is
-    filtered] → per-shard kernel: group the shard's rows by term
-    ONCE, then score each query via wand._topk_from_terms over its
-    term subset, with per-term block-decode caches shared across
-    queries — a posting block is varbyte-decoded at most once per
-    shard no matter how many queries touch its term
-  → per-query top-k: one window over ≤ k·S·Q tiny local rows.
+Execution (wand._shard_kernel_job, the one skeleton):
 
-Rank identity with the single-query engine is exact and gated by
-tests/test_batch_queries.py: per query, the kernel runs the very same
-_topk_from_terms code over the same per-term row groups — the only
-batch-specific state, the decode cache, stores lossless decoded
-triples keyed by block_id.
+  postings scan, `term IN (union of every live spec's terms)` pushed
+  to parquet row-group pruning — ONE scan regardless of query count
+  → groupBy shard [cogroup with the distinct filter contexts' doc-id
+    sets, tagged by context id, when any spec is filtered]
+  → per-shard kernel: score each spec over its term subset
+    (wand._topk_from_terms / phrase._phrase_topk_from_terms) with
+    per-term block-decode caches shared across specs — a posting
+    block is decoded at most once per shard no matter how many
+    queries touch its term
+  → merge: one live spec is ``orderBy(score desc, doc_id asc).limit(k)``
+    (TakeOrderedAndProject, no exchange); several take one per-query
+    window over ≤ k·S·Q tiny local rows.
 
-Scale: one batch call is one job whose shuffle volume is the union
-scan (≤ sum of the individual scans, typically far less under term
-overlap) plus k·S·Q result rows.  Query fan-out lives in the kernel
-loop, not the scheduler — at 10^3 queries the per-shard kernel is a
-tight numpy loop over an already-decoded block pool, which is exactly
-the layout a 1000-executor cluster wants: S shard tasks, each doing
-Q independent small scoring problems with shared immutable inputs.
+Scale: one call is one job whose shuffle volume is the union scan
+(≤ sum of the individual scans, typically far less under term overlap)
+plus k·S·Q result rows.  Query fan-out lives in the kernel loop, not
+the scheduler — at 10^3 queries the per-shard kernel is a tight numpy
+loop over an already-decoded block pool, which is exactly the layout a
+1000-executor cluster wants: S shard tasks, each doing Q independent
+small scoring problems with shared immutable inputs.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from typing import NamedTuple
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..analyzer import analyze_query
-from ..index.build import TFN_REF_AVGDL
-from .bm25 import _filtered_doc_ids, idf_map
-from .wand import _POSTING_COLS, _topk_from_terms
+from ..analyzer import StemCache, analyze_query, analyze_str
+from .bm25 import _committed_snapshot, idf_map
+from .phrase import _PHRASE_COLS, _phrase_topk_from_terms, expand_prefixes
+from .wand import _POSTING_COLS, _shard_kernel_job, _topk_from_terms
 
-_BATCH_RESULT_SCHEMA = "query_id string, doc_id long, score double"
+#: fixed reference avgdl the baked per-block max_tfn is quantized at —
+#: single definition in index.build (a drifted duplicate would silently
+#: mis-scale the baked bound and block pruning could drop true top-k
+#: docs).  Queries read the value the INDEX was built with from the
+#: snapshot manifest; this import is only the fallback for format-2
+#: snapshots that predate the manifest field.
+from ..index.build import TFN_REF_AVGDL
+
+_RESULT_SCHEMA = "query_id string, doc_id long, score double"
+
+
+class _Spec(NamedTuple):
+    """One live query of a plan."""
+
+    query_id: str | None
+    #: acceptable terms per position: a keyword spec has one singleton
+    #: per term; a phrase one per token; a phrase prefix ends with its
+    #: expansion set (the Lucene MultiPhraseQuery shape)
+    term_sets: list[list[str]]
+    positional: bool
+    or_mode: bool
+    slop: int
+    #: MultiPhraseWeight idf: Σ over phrase positions and expansions
+    idf_sum: float
+    #: filter context id (index into ``_Plan.contexts``), None = unfiltered
+    cid: int | None
+
+
+class _Plan(NamedTuple):
+    avgdl: float
+    tfn_ref: float
+    tokenizer: str
+    idfs: dict[str, float]
+    specs: list[_Spec]
+    #: distinct (lang, ts_lo, ts_hi) filter contexts of the live specs
+    contexts: list[tuple]
+    scan_terms: list[str]
+
+
+def _plan_queries(spark: SparkSession, catalog, queries: list[dict]) -> _Plan:
+    """Validate, analyze and prune ``queries`` (spec dicts, see
+    ``bm25_topk_batch``; ``query_id`` may be None for a batch of one)
+    into the live specs one scan serves."""
+    snap = _committed_snapshot(catalog)
+    if snap.get("postings_format", 1) < 2:
+        raise ValueError(
+            "index predates the doclen-in-postings layout (postings_format 2); "
+            "rebuild with build_index(resume=False)"
+        )
+    stemming = snap.get("stemming", True)
+    tokenizer = snap.get("tokenizer", "simple")
+    if any(q.get("phrase") or q.get("phrase_prefix") for q in queries) and not snap.get(
+        "positions", False
+    ):
+        raise ValueError(
+            "phrase queries need a positional index — rebuild with "
+            "build_index(..., positions=True)"
+        )
+    qids = [q["query_id"] for q in queries if q.get("query_id") is not None]
+    if len(set(qids)) != len(qids):
+        dupes = sorted({i for i in qids if qids.count(i) > 1})
+        raise ValueError(
+            f"duplicate query_id(s) in batch: {dupes} — results are "
+            "grouped per query_id, so duplicates would silently merge "
+            "two queries' top-k lists"
+        )
+
+    # (query_id, ctx, positional, or_mode, slop, term_sets, idf_terms,
+    # (prefix, max_expansions) | None) — prefixes resolve after the scan
+    analyzed: list[tuple] = []
+    prefix_reqs: dict[str, int] = {}
+    for q in queries:
+        qid = q.get("query_id")
+        where = "" if qid is None else f"query_id {qid!r}: "
+        positional = bool(q.get("phrase") or q.get("phrase_prefix"))
+        slop = int(q.get("slop", 0))
+        if slop and not positional:
+            raise ValueError(f"{where}slop is only valid on phrase/phrase_prefix specs")
+        if slop < 0:
+            raise ValueError(f"{where}slop must be >= 0, got {slop}")
+        if positional and q.get("or_mode"):
+            raise ValueError(f"{where}or_mode does not apply to phrase/phrase_prefix specs")
+        if q.get("phrase") and q.get("phrase_prefix"):
+            raise ValueError(f"{where}set phrase OR phrase_prefix, not both")
+        ctx = (q.get("lang"), q.get("ts_lo"), q.get("ts_hi"))
+        if q.get("phrase_prefix"):
+            mx = int(q.get("max_expansions", 50))
+            if mx <= 0:
+                raise ValueError(f"{where}max_expansions must be > 0, got {mx}")
+            toks = analyze_str(q["query"], None, tokenizer=tokenizer)
+            if not toks:
+                continue
+            prefix, fixed = toks[-1], toks[:-1]
+            if stemming:
+                stem = StemCache()
+                fixed = [stem(t) for t in fixed]
+            prefix_reqs[prefix] = max(prefix_reqs.get(prefix, 0), mx)
+            analyzed.append((qid, ctx, True, False, slop, [[t] for t in fixed],
+                             fixed, (prefix, mx)))
+            continue
+        if q.get("phrase"):
+            # the ordered sequence, duplicates kept (a phrase is not a
+            # term set — analyze_query dedups)
+            terms = analyze_str(q["query"], StemCache() if stemming else None,
+                                tokenizer=tokenizer)
+            # a one-token phrase is exactly the keyword query on it
+            positional = len(terms) > 1
+        else:
+            terms = analyze_query(q["query"], stemming=stemming, tokenizer=tokenizer)
+        if terms:
+            analyzed.append((qid, ctx, positional, bool(q.get("or_mode")), slop,
+                             [[t] for t in terms], terms, None))
+
+    # every distinct prefix in ONE term_stats scan; a lower per-spec cap
+    # is a prefix of the shared lexicographically-first list
+    expansions_of = expand_prefixes(spark, catalog, prefix_reqs)
+    resolved = []
+    for qid, ctx, positional, or_mode, slop, term_sets, idf_terms, pre in analyzed:
+        if pre is not None:
+            expansions = expansions_of[pre[0]][:pre[1]]
+            if not expansions:
+                continue
+            term_sets = term_sets + [expansions]
+            idf_terms = idf_terms + expansions
+        resolved.append((qid, ctx, positional, or_mode, slop, term_sets, idf_terms))
+
+    all_terms = sorted({t for r in resolved for ts in r[5] for t in ts})
+    idfs = idf_map(spark, catalog, all_terms) if all_terms else {}
+    ctx_ids: dict[tuple, int] = {}
+    specs: list[_Spec] = []
+    for qid, ctx, positional, or_mode, slop, term_sets, idf_terms in resolved:
+        kept = [[t for t in ts if t in idfs] for ts in term_sets]
+        if or_mode:
+            kept = [ts for ts in kept if ts]  # OR keeps only df>0 terms
+        if not kept or not all(kept):
+            continue  # a position with no df>0 term: AND / phrase match nothing
+        cid = None
+        if ctx != (None, None, None):
+            cid = ctx_ids.setdefault(ctx, len(ctx_ids))
+        # MultiPhraseWeight: one TermStatistics entry per fixed position
+        # plus one per expansion — a fixed term that is also an
+        # expansion counts in both sums
+        idf_sum = float(sum(idfs[t] for t in idf_terms if t in idfs))
+        specs.append(_Spec(qid, kept, positional, or_mode, slop, idf_sum, cid))
+    return _Plan(
+        avgdl=snap["avgdl"],
+        tfn_ref=float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL)),
+        tokenizer=tokenizer,
+        idfs=idfs,
+        specs=specs,
+        contexts=list(ctx_ids),
+        scan_terms=sorted({t for s in specs for ts in s.term_sets for t in ts}),
+    )
+
+
+def _topk(spark: SparkSession, catalog, queries: list[dict], k: int) -> DataFrame:
+    """Plan ``queries`` and run them as one top-k job:
+    (query_id, doc_id, score), ≤ k rows per live spec."""
+    plan = _plan_queries(spark, catalog, queries)
+    if not plan.specs:
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+    idfs, avgdl, tfn_ref = plan.idfs, plan.avgdl, plan.tfn_ref
+
+    def kernel(by_term, fids_by_ctx) -> pd.DataFrame:
+        # per-term decode caches shared by every spec of the shard; the
+        # positional cache keys differ from the keyword ones, so the two
+        # kernels keep separate pools
+        caches: dict[str, dict] = {}
+        pos_caches: dict[str, dict] = {}
+        parts = []
+        for s in plan.specs:
+            fids = fids_by_ctx[s.cid]
+            if s.positional:
+                r = _phrase_topk_from_terms(by_term, fids, s.term_sets, s.idf_sum,
+                                            avgdl, k, s.slop, pos_caches)
+            else:
+                sub = {ts[0]: by_term[ts[0]] for ts in s.term_sets if ts[0] in by_term}
+                if not sub:
+                    continue
+                r = _topk_from_terms(
+                    sub, fids, idfs, avgdl, k, len(s.term_sets), s.or_mode, tfn_ref,
+                    {t: caches.setdefault(t, {}) for t in sub},
+                )
+            if len(r):
+                r.insert(0, "query_id", s.query_id)
+                parts.append(r)
+        if not parts:
+            return pd.DataFrame({"query_id": pd.Series([], dtype="object"),
+                                 "doc_id": pd.Series([], dtype="int64"),
+                                 "score": pd.Series([], dtype="float64")})
+        return pd.concat(parts, ignore_index=True)
+
+    cols = _PHRASE_COLS if any(s.positional for s in plan.specs) else _POSTING_COLS
+    local = _shard_kernel_job(spark, catalog, plan.scan_terms, kernel,
+                              _RESULT_SCHEMA, plan.contexts, cols=cols)
+    if len(plan.specs) == 1:
+        # one query needs no per-query window: Spark's
+        # TakeOrderedAndProject is a per-partition partial top-k with
+        # no exchange (measured cheaper than the window on the serve mix)
+        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        local.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .drop("rn")
+        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+    )
+
+
+def _topk_one(spark: SparkSession, catalog, spec: dict, k: int) -> DataFrame:
+    """Top-k (doc_id, score) of one spec — a batch of one with the
+    query_id dropped."""
+    return _topk(spark, catalog, [dict(spec, query_id=None)], k).drop("query_id")
 
 
 def bm25_topk_batch(
@@ -78,285 +295,12 @@ def bm25_topk_batch(
     ``bm25_phrase_topk(slop=...)``.  A phrase_prefix spec may add
     ``max_expansions`` (default 50); all distinct prefixes in the
     batch resolve in ONE term_stats scan (``expand_prefixes``).
-    ``or_mode`` on a positional spec raises, like the facade.
+    ``or_mode`` on a positional spec raises.
 
     Returns (query_id, doc_id, score), each query's rows ordered
     (score desc, doc_id asc), ≤ k rows per query; queries with no
     match (absent AND term, empty analysis, all-pruned) contribute no
-    rows — identical to the single-query engine returning empty.
+    rows.
     """
-    snap = catalog.current_snapshot()
-    if snap.get("postings_format", 1) < 2:
-        raise ValueError(
-            "index predates the doclen-in-postings layout (postings_format 2); "
-            "rebuild with build_index(resume=False)"
-        )
-    avgdl = snap["avgdl"]
-    tfn_ref = float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL))
-    stemming = snap.get("stemming", True)
-    tokenizer = snap.get("tokenizer", "simple")
-
-    qids = [str(q["query_id"]) for q in queries]
-    if len(set(qids)) != len(qids):
-        dupes = sorted({i for i in qids if qids.count(i) > 1})
-        raise ValueError(
-            f"duplicate query_id(s) in batch: {dupes} — results are "
-            "grouped per query_id, so duplicates would silently merge "
-            "two queries' top-k lists"
-        )
-    empty = spark.createDataFrame([], _BATCH_RESULT_SCHEMA)
-    analyzed: list[tuple[str, list[str], bool, tuple]] = []
-    # positional specs: (query_id, term_sets, ordered phrase terms
-    # incl. expansions for the idf sum, ctx, slop) — resolved after
-    # the idf fetch
-    phrased: list[tuple[str, list[list[str]], list[str], tuple, int]] = []
-    all_terms: set[str] = set()
-    any_positional = any(
-        q.get("phrase") or q.get("phrase_prefix") for q in queries
-    )
-    if any_positional and not snap.get("positions", False):
-        raise ValueError(
-            "batch contains phrase/phrase_prefix specs but the index is "
-            "not positional — rebuild with build_index(..., positions=True)"
-        )
-    # prefix specs resolve against the term dictionary; batch every
-    # distinct prefix into ONE term_stats scan (expand_prefixes) instead
-    # of one driver-side job per spec
-    prefix_reqs: dict[str, int] = {}
-    prefixed: list[tuple[str, list[str], str, int, tuple, int]] = []
-    for q in queries:
-        ctx = (q.get("lang"), q.get("ts_lo"), q.get("ts_hi"))
-        positional = bool(q.get("phrase") or q.get("phrase_prefix"))
-        slop = int(q.get("slop", 0))
-        if slop and not positional:
-            raise ValueError(
-                f"query_id {q['query_id']!r}: slop is only valid on "
-                "phrase/phrase_prefix specs"
-            )
-        if slop < 0:
-            raise ValueError(
-                f"query_id {q['query_id']!r}: slop must be >= 0, got {slop}"
-            )
-        if positional and q.get("or_mode"):
-            raise ValueError(
-                f"query_id {q['query_id']!r}: or_mode does not apply to "
-                "phrase/phrase_prefix specs"
-            )
-        if q.get("phrase") and q.get("phrase_prefix"):
-            raise ValueError(
-                f"query_id {q['query_id']!r}: set phrase OR phrase_prefix, "
-                "not both"
-            )
-        if positional:
-            from ..analyzer import StemCache, analyze_str
-
-            if q.get("phrase_prefix"):
-                toks = analyze_str(q["query"], None, tokenizer=tokenizer)
-                if not toks:
-                    continue
-                prefix, fixed_surface = toks[-1], toks[:-1]
-                if stemming:
-                    cache = StemCache()
-                    fixed = [cache(t) for t in fixed_surface]
-                else:
-                    fixed = fixed_surface
-                mx = int(q.get("max_expansions", 50))
-                if mx <= 0:
-                    raise ValueError(
-                        f"query_id {q['query_id']!r}: max_expansions must "
-                        f"be > 0, got {mx}"
-                    )
-                prefix_reqs[prefix] = max(prefix_reqs.get(prefix, 0), mx)
-                prefixed.append(
-                    (str(q["query_id"]), fixed, prefix, mx, ctx, slop)
-                )
-                continue
-            terms = analyze_str(
-                q["query"], StemCache() if stemming else None,
-                tokenizer=tokenizer,
-            )
-            if not terms:
-                continue
-            phrased.append(
-                (str(q["query_id"]), [[t] for t in terms], terms, ctx, slop)
-            )
-            all_terms.update(terms)
-            continue
-        terms = analyze_query(q["query"], stemming=stemming, tokenizer=tokenizer)
-        if not terms:
-            continue
-        analyzed.append((str(q["query_id"]), terms, bool(q.get("or_mode", False)), ctx))
-        all_terms.update(terms)
-    if prefix_reqs:
-        from .phrase import expand_prefixes
-
-        expansions_of = expand_prefixes(spark, catalog, prefix_reqs)
-        for qid, fixed, prefix, mx, ctx, slop in prefixed:
-            # a lower per-spec cap is a prefix of the shared
-            # lexicographically-first list
-            expansions = expansions_of.get(prefix, [])[:mx]
-            if not expansions:
-                continue
-            term_sets = ([[t] for t in fixed] + [expansions]
-                         if fixed else [expansions])
-            phrased.append((qid, term_sets, fixed + expansions, ctx, slop))
-            all_terms.update(t for ts in term_sets for t in ts)
-    if not analyzed and not phrased:
-        return empty
-
-    idfs = idf_map(spark, catalog, sorted(all_terms))
-
-    # Driver-side pruning mirrors the single-query entry exactly:
-    # AND with any df=0 term ⇒ empty; OR keeps only df>0 terms.
-    ctx_ids: dict[tuple, int] = {}
-    specs: list[tuple[str, tuple[str, ...], int, bool, int | None]] = []
-    for qid, terms, or_mode, ctx in analyzed:
-        if or_mode:
-            terms = [t for t in terms if t in idfs]
-            if not terms:
-                continue
-            n_terms = len(terms)
-        else:
-            n_terms = len(terms)
-            if sum(t in idfs for t in terms) < n_terms:
-                continue
-        cid = None
-        if ctx != (None, None, None):
-            cid = ctx_ids.setdefault(ctx, len(ctx_ids))
-        specs.append((qid, tuple(terms), n_terms, or_mode, cid))
-
-    # positional specs: a singleton position's term with df=0 kills the
-    # query (same as AND); a multi-term position (prefix expansion set)
-    # keeps its df>0 members
-    pspecs: list[tuple[str, list[list[str]], float, int | None, int]] = []
-    for qid, term_sets, idf_terms, ctx, slop in phrased:
-        kept_sets = []
-        dead = False
-        for ts in term_sets:
-            if len(ts) == 1:
-                if ts[0] not in idfs:
-                    dead = True
-                    break
-                kept_sets.append(ts)
-            else:
-                here = [t for t in ts if t in idfs]
-                if not here:
-                    dead = True
-                    break
-                kept_sets.append(here)
-        if dead:
-            continue
-        idf_sum = float(sum(idfs[t] for t in idf_terms if t in idfs))
-        cid = None
-        if ctx != (None, None, None):
-            cid = ctx_ids.setdefault(ctx, len(ctx_ids))
-        pspecs.append((qid, kept_sets, idf_sum, cid, slop))
-    if not specs and not pspecs:
-        return empty
-
-    union_terms = sorted(
-        {t for _, terms, _, _, _ in specs for t in terms}
-        | {t for _, sets, _, _, _ in pspecs for ts in sets for t in ts}
-    )
-    scan_cols = list(_POSTING_COLS)
-    if pspecs:
-        scan_cols.append("pos_vb")
-    postings = (
-        catalog.read_snapshot(spark, "postings")
-        .where(F.col("term").isin(union_terms))
-        .select(*scan_cols)
-    )
-
-    _empty_fids = np.zeros(0, np.uint64)
-
-    def _run_shard(post_pdf: pd.DataFrame, fids_by_ctx: dict[int, np.ndarray]) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="object"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        if post_pdf.empty:
-            return out_empty
-        by_term = dict(tuple(post_pdf.groupby("term", sort=False)))
-        caches: dict[str, dict] = {}
-        parts = []
-        for qid, terms, n_terms, or_mode, cid in specs:
-            sub = {t: by_term[t] for t in terms if t in by_term}
-            if not sub:
-                continue
-            fids = None
-            if cid is not None:
-                fids = fids_by_ctx.get(cid, _empty_fids)
-            qcaches = {t: caches.setdefault(t, {}) for t in sub}
-            r = _topk_from_terms(
-                sub, fids, idfs, avgdl, k, n_terms, or_mode, tfn_ref, qcaches
-            )
-            if len(r):
-                r = r.copy()
-                r.insert(0, "query_id", qid)
-                parts.append(r)
-        if pspecs:
-            from .phrase import _phrase_topk_from_terms
-
-            # phrase specs share one per-term positional decode cache
-            # across the whole batch (keyed per block inside) — the
-            # decode-once-per-shard contract holds for pos_vb payloads
-            # exactly as `caches` holds for the keyword kernels
-            pos_caches: dict[str, dict] = {}
-            for qid, term_sets, idf_sum, cid, slop in pspecs:
-                fids = None
-                if cid is not None:
-                    fids = fids_by_ctx.get(cid, _empty_fids)
-                r = _phrase_topk_from_terms(
-                    by_term, fids, term_sets, idf_sum, avgdl, k, slop=slop,
-                    caches=pos_caches,
-                )
-                if len(r):
-                    r = r.copy()
-                    r.insert(0, "query_id", qid)
-                    parts.append(r)
-        return pd.concat(parts, ignore_index=True) if parts else out_empty
-
-    if not ctx_ids:
-
-        def kernel(post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return _run_shard(post_pdf, {})
-
-        local = postings.groupby("shard").applyInPandas(
-            kernel, schema=_BATCH_RESULT_SCHEMA
-        )
-    else:
-        docs_parts = []
-        for ctx, cid in ctx_ids.items():
-            lang, ts_lo, ts_hi = ctx
-            docs_parts.append(
-                _filtered_doc_ids(spark, catalog, lang, ts_lo, ts_hi).withColumn(
-                    "ctx", F.lit(cid)
-                )
-            )
-        docs_side = docs_parts[0]
-        for d in docs_parts[1:]:
-            docs_side = docs_side.unionByName(d)
-
-        def kernel2(key, post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-            fids_by_ctx = {
-                int(c): np.sort(g["doc_id"].to_numpy().astype(np.uint64))
-                for c, g in docs_pdf.groupby("ctx")
-            }
-            return _run_shard(post_pdf, fids_by_ctx)
-
-        local = (
-            postings.groupby("shard")
-            .cogroup(docs_side.groupby("shard"))
-            .applyInPandas(kernel2, schema=_BATCH_RESULT_SCHEMA)
-        )
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    return _topk(spark, catalog,
+                 [dict(q, query_id=str(q["query_id"])) for q in queries], k)

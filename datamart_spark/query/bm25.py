@@ -19,8 +19,8 @@ Plan shape (Catalyst-visible, scale story):
     partial top-k, no full sort.
 
 This path is the *verification* engine (pure built-ins after decode).
-``wand.bm25_topk_blockmax`` is the optimized kernel; both must agree
-(tests/test_bm25_rank_identity.py).
+Every other query runs through the planner (query/batch.py) and the
+block-max kernels; both must agree (tests/test_index_and_rank_identity.py).
 """
 
 from __future__ import annotations
@@ -74,6 +74,13 @@ def decode_postings_df(postings: DataFrame) -> DataFrame:
             )
 
     return postings.mapInPandas(decode, schema=_DECODED_SCHEMA)
+
+
+def _committed_snapshot(catalog: IndexCatalog) -> dict:
+    snap = catalog.current_snapshot()
+    if snap is None:
+        raise ValueError("no committed snapshot in this catalog")
+    return snap
 
 
 # Hot-term df cache: bounded, keyed per committed snapshot.  Keyed on
@@ -199,7 +206,7 @@ def _cached_filter_stats(spark: SparkSession, catalog: IndexCatalog) -> DataFram
         from pyspark import StorageLevel
 
         # persisted PRE-HASH-PARTITIONED on shard: the cogroup in
-        # wand.bm25_topk_blockmax requires ClusteredDistribution(shard),
+        # wand._shard_kernel_job requires ClusteredDistribution(shard),
         # and a cached HashPartitioning(shard) child satisfies it — the
         # doc_stats side is then exchange-FREE at query time (only the
         # tiny term-filtered postings side shuffles); filters on the
@@ -240,7 +247,7 @@ def bm25_topk_dataframe(
     ts_lo=None,
     ts_hi=None,
 ) -> DataFrame:
-    snap = catalog.current_snapshot()
+    snap = _committed_snapshot(catalog)
     stemming = snap.get("stemming", True)
     avgdl = snap["avgdl"]
     terms = analyze_query(query, stemming=stemming,

@@ -14,16 +14,21 @@ index and is implemented here the way Lucene's PhraseQuery does it:
 - score = idf_sum · pf / (pf + k1·(1−b + b·dl/avgdl)) — the same BM25
   tf-normalization as a single synthetic term with tf = phraseFreq.
 
-Execution is one scan + one kernel pass, the same shape as the AND
-query path (query/wand.py):
+Every entry point here is planned by query/batch.py — a phrase query
+is a batch of one, and a batch may mix phrase, prefix and keyword
+specs — and runs through the one shard-job skeleton
+(wand._shard_kernel_job):
 
   postings scan (`term IN (phrase terms)` pushed to row-group pruning,
-  positional payload column read ONLY here — plain BM25 queries never
-  select pos_vb, so a positional index costs them nothing)
-  → groupBy shard [cogroup with the filter doc-id set when filtered]
+  positional payload column read only when the plan has a positional
+  spec — plain BM25 queries never select pos_vb, so a positional index
+  costs them nothing)
+  → groupBy shard [cogroup with the filter doc-id sets when filtered]
   → per-shard kernel: AND-intersect candidates via block fences
     (rarest term drives), decode positions only for blocks that can
     contain a candidate, vectorized adjacency join, local top-k
+    (``_phrase_topk_from_terms``) or the occurrences themselves
+    (``phrase_spans``)
   → global merge over ≤ k·S tiny rows.
 
 The adjacency join is numpy: for phrase position i, every candidate
@@ -47,26 +52,22 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..analyzer import analyze_str, StemCache
+from ..analyzer import analyze_str
 from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import K1, B, idf_map
-from .wand import _local_topk, _shard_kernel_job
+from .bm25 import K1, B
+from .wand import _POSTING_COLS, _local_topk, _no_hits, _shard_kernel_job
 
-_RESULT_SCHEMA = "doc_id long, score double"
-
-_PHRASE_COLS = [
-    "shard", "term", "block_id", "n", "first_doc_id", "last_doc_id",
-    "doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb",
-]
+#: the keyword scan columns plus the position payload
+_PHRASE_COLS = [*_POSTING_COLS, "pos_vb"]
 
 _Z = np.zeros(0, np.uint64)
 
 
 def _decode_blocks_pos(
-    rows: pd.DataFrame, candidates: np.ndarray | None, want: int = 3,
-    cache: dict | None = None,
+    rows: pd.DataFrame, candidates: np.ndarray | None, cache: dict,
+    want: int = 3,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Decode one term's surviving blocks incl. positions.  Returns
     (doc_ids, tfs, dls, flat_abs_positions, posting_pos_offsets) where
@@ -79,7 +80,7 @@ def _decode_blocks_pos(
     ``cache`` (one dict per term, lossless per-block entries keyed
     ("ids"|"full", block_id)) makes every block decode at most once per
     shard-kernel no matter how many specs or passes touch it — the same
-    contract as the keyword path's wand decode cache.  Candidate
+    contract as the keyword kernels' wand decode cache.  Candidate
     pruning only selects WHICH blocks decode; the per-block payload is
     candidate-independent, so cached entries are exact."""
     order = np.argsort(rows["block_id"].to_numpy())
@@ -102,28 +103,25 @@ def _decode_blocks_pos(
     for i in np.flatnonzero(keep):
         bid = int(bids[i])
         if want < 3:
-            if cache is not None:
-                hit = cache.get(("full", bid))
-                if hit is not None:
-                    d_parts.append(hit[0])
-                    continue
-                hit = cache.get(("ids", bid))
-                if hit is not None:
-                    d_parts.append(hit)
-                    continue
-            d = delta_decode(vb_decode(bytes(dvb[i])))
-            if cache is not None:
-                cache[("ids", bid)] = d
-            d_parts.append(d)
-            continue
-        if cache is not None:
             hit = cache.get(("full", bid))
             if hit is not None:
                 d_parts.append(hit[0])
-                t_parts.append(hit[1])
-                l_parts.append(hit[2])
-                p_parts.append(hit[3])
                 continue
+            hit = cache.get(("ids", bid))
+            if hit is not None:
+                d_parts.append(hit)
+                continue
+            d = delta_decode(vb_decode(bytes(dvb[i])))
+            cache[("ids", bid)] = d
+            d_parts.append(d)
+            continue
+        hit = cache.get(("full", bid))
+        if hit is not None:
+            d_parts.append(hit[0])
+            t_parts.append(hit[1])
+            l_parts.append(hit[2])
+            p_parts.append(hit[3])
+            continue
         d = delta_decode(vb_decode(bytes(dvb[i])))
         tf = vb_decode(bytes(tvb[i]))
         dl = vb_decode(bytes(lvb[i]))
@@ -136,8 +134,7 @@ def _decode_blocks_pos(
         run = np.cumsum(deltas)
         correction = run[starts] - deltas[starts]
         pos = run - np.repeat(correction, counts)
-        if cache is not None:
-            cache[("full", bid)] = (d, tf, dl, pos)
+        cache[("full", bid)] = (d, tf, dl, pos)
         d_parts.append(d)
         t_parts.append(tf)
         l_parts.append(dl)
@@ -170,30 +167,6 @@ def _ragged_gather(offsets: np.ndarray, counts: np.ndarray) -> np.ndarray:
     )
 
 
-def _phrase_topk_shard(
-    post: pd.DataFrame,
-    filter_ids: np.ndarray | None,
-    term_sets: list[list[str]],
-    idf_sum: float,
-    avgdl: float,
-    k: int,
-    slop: int = 0,
-) -> pd.DataFrame:
-    """Top-k of one shard for a positional sequence query (groups the
-    shard's posting rows by term, then delegates)."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if post.empty:
-        return empty
-    by_term = dict(tuple(post.groupby("term", sort=False)))
-    # a fresh per-call cache still pays off inside ONE query: the
-    # ids-only intersection passes and the full pass hit the same blocks
-    return _phrase_topk_from_terms(
-        by_term, filter_ids, term_sets, idf_sum, avgdl, k, slop=slop,
-        caches={},
-    )
-
-
 def _phrase_topk_from_terms(
     by_term: dict[str, pd.DataFrame],
     filter_ids: np.ndarray | None,
@@ -201,12 +174,13 @@ def _phrase_topk_from_terms(
     idf_sum: float,
     avgdl: float,
     k: int,
-    slop: int = 0,
-    caches: dict[str, dict] | None = None,
+    slop: int,
+    caches: dict[str, dict],
 ) -> pd.DataFrame:
-    """Core of one shard's positional top-k over an already-grouped
-    term → posting-rows map (the batch kernel calls this directly,
-    the way ``wand._topk_from_terms`` is shared).
+    """One positional query's top-k within one shard, over the shard's
+    term → posting-rows map (the batch kernel's positional counterpart
+    of ``wand._topk_from_terms``; ``caches`` maps term → its per-block
+    decode cache, shared across the kernel's specs).
 
     ``term_sets[i]`` is the set of terms acceptable at phrase position
     i — singletons for an exact phrase, and the prefix's expansion set
@@ -218,8 +192,7 @@ def _phrase_topk_from_terms(
     ``slop > 0`` scores ordered proximity matches instead: pf becomes
     the sum of 1/(gap+1) over position-0 occurrences whose greedy
     in-order completion spans ≤ slop extra tokens (``_slop_matches``)."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
+    empty = _no_hits()
     if slop > 0:
         sm = _slop_matches(by_term, filter_ids, term_sets, slop, caches)
         if sm is None:
@@ -246,7 +219,7 @@ def _gather_positions(
     by_term: dict[str, pd.DataFrame],
     filter_ids: np.ndarray | None,
     term_sets: list[list[str]],
-    caches: dict[str, dict] | None = None,
+    caches: dict[str, dict],
 ) -> tuple[np.ndarray, np.ndarray, list[list[str]],
            dict[str, tuple[np.ndarray, np.ndarray]]] | None:
     """Shared front half of every positional-sequence kernel: candidate
@@ -266,12 +239,12 @@ def _gather_positions(
             return None  # no acceptable term for this position here
         present_sets.append(here)
 
-    def tcache(t: str) -> dict | None:
-        return None if caches is None else caches.setdefault(t, {})
+    def tcache(t: str) -> dict:
+        return caches.setdefault(t, {})
 
     def union_docs(ts: list[str], cand: np.ndarray | None) -> np.ndarray:
         parts = [
-            _decode_blocks_pos(by_term[t], cand, want=1, cache=tcache(t))[0]
+            _decode_blocks_pos(by_term[t], cand, tcache(t), want=1)[0]
             for t in ts
         ]
         if len(parts) == 1:
@@ -297,9 +270,7 @@ def _gather_positions(
     keys_of: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     dl_cand = np.zeros(cand.size, dtype=np.float64)
     for t in {t for ts in present_sets for t in ts}:
-        d, tf, dl, flat, off = _decode_blocks_pos(
-            by_term[t], cand, cache=tcache(t)
-        )
+        d, tf, dl, flat, off = _decode_blocks_pos(by_term[t], cand, tcache(t))
         loc = np.searchsorted(d, cand)
         loc_c = np.minimum(loc, max(d.size - 1, 0))
         has = d[loc_c] == cand if d.size else np.zeros(cand.size, bool)
@@ -319,7 +290,7 @@ def _phrase_occurrences(
     by_term: dict[str, pd.DataFrame],
     filter_ids: np.ndarray | None,
     term_sets: list[list[str]],
-    caches: dict[str, dict] | None = None,
+    caches: dict[str, dict],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
     """Candidate docs + phrase-occurrence keys of one shard.  Returns
     (cand, dl_cand, running) where ``running`` holds one int64 key
@@ -361,7 +332,7 @@ def _slop_matches(
     filter_ids: np.ndarray | None,
     term_sets: list[list[str]],
     slop: int,
-    caches: dict[str, dict] | None = None,
+    caches: dict[str, dict],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None:
     """Ordered proximity matches (span_near, in_order=true): for each
     occurrence of a position-0 term, later positions greedily take
@@ -428,7 +399,8 @@ def bm25_phrase_topk(
     ts_hi=None,
 ) -> DataFrame:
     """Phrase BM25 top-k against a positional index
-    (``build_index(..., positions=True)``).
+    (``build_index(..., positions=True)``) — a planned batch of one
+    (query/batch.py).
 
     ``slop=0`` (default) is the exact phrase — Lucene match_phrase.
     ``slop>0`` is ordered proximity — span_near(in_order=true): the
@@ -436,44 +408,14 @@ def bm25_phrase_topk(
     between first and last; each match weighs 1/(gap+1) into the
     phrase frequency (Lucene's SloppyPhraseScorer slop factor).
     Unlike ES match_phrase's slop, reordered terms never match — the
-    in-order semantics keep the kernel one vectorized greedy pass."""
-    if slop < 0:
-        raise ValueError(f"slop must be >= 0, got {slop}")
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    if not snap.get("positions", False):
-        raise ValueError(
-            "phrase queries need a positional index — rebuild with "
-            "build_index(..., positions=True)"
-        )
-    avgdl = snap["avgdl"]
-    stemming = snap.get("stemming", True)
-    # full ordered token sequence, duplicates preserved (a phrase is a
-    # sequence, not a term set — analyze_query dedups and cannot be
-    # used here)
-    terms = analyze_str(phrase, StemCache() if stemming else None,
-                        tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
-    if not terms:
-        return empty
-    idfs = idf_map(spark, catalog, list(dict.fromkeys(terms)))
-    if len(idfs) < len(set(terms)):
-        return empty  # a phrase term with df=0 kills the phrase
-    idf_sum = float(sum(idfs[t] for t in terms))
-    if len(terms) == 1:
-        # degenerate single-term phrase ≡ the term query with summed idf
-        from .wand import bm25_topk_blockmax
+    in-order semantics keep the kernel one vectorized greedy pass.
+    A one-token phrase is the keyword query on that token."""
+    from .batch import _topk_one
 
-        return bm25_topk_blockmax(
-            spark, catalog, phrase, k=k, lang=lang, ts_lo=ts_lo, ts_hi=ts_hi
-        )
-
-    term_sets = [[t] for t in terms]
-    return _run_positional(
-        spark, catalog, term_sets, idf_sum, avgdl, k, lang, ts_lo, ts_hi,
-        slop=slop,
-    )
+    return _topk_one(spark, catalog, {
+        "query": phrase, "phrase": True, "slop": slop, "lang": lang,
+        "ts_lo": ts_lo, "ts_hi": ts_hi,
+    }, k)
 
 
 _SPANS_SCHEMA = "doc_id long, pos int"
@@ -490,13 +432,12 @@ def phrase_spans(
     """Every occurrence of the exact phrase as (doc_id, pos) rows,
     ``pos`` the 0-based token offset of the phrase's first term — the
     passage-extraction primitive a training-data pipeline needs
-    (retrieve matching windows, not just ranked doc ids).  Same one
-    scan + one kernel pass as ``bm25_phrase_topk``; the kernel emits
-    the adjacency join's surviving start offsets instead of folding
-    them into phrase frequencies."""
-    return _phrase_spans_df(
-        spark, catalog, phrase, lang, ts_lo, ts_hi
-    ).orderBy("doc_id", "pos")
+    (retrieve matching windows, not just ranked doc ids).  Same plan
+    and scan as ``bm25_phrase_topk``; the shard kernel emits the
+    adjacency join's surviving start offsets instead of folding them
+    into phrase frequencies."""
+    spans, _, _ = _phrase_spans_df(spark, catalog, phrase, lang, ts_lo, ts_hi)
+    return spans.orderBy("doc_id", "pos")
 
 
 def _phrase_spans_df(
@@ -506,49 +447,40 @@ def _phrase_spans_df(
     lang: str | None = None,
     ts_lo=None,
     ts_hi=None,
-) -> DataFrame:
+) -> tuple[DataFrame, str, int]:
     """``phrase_spans`` without the final global sort — the join-side
-    form ``passages`` consumes."""
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    if not snap.get("positions", False):
-        raise ValueError(
-            "phrase queries need a positional index — rebuild with "
-            "build_index(..., positions=True)"
-        )
-    stemming = snap.get("stemming", True)
-    terms = analyze_str(phrase, StemCache() if stemming else None,
-                        tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _SPANS_SCHEMA)
-    if not terms:
-        return empty
-    idfs = idf_map(spark, catalog, list(dict.fromkeys(terms)))
-    if len(idfs) < len(set(terms)):
-        return empty
-    term_sets = [[t] for t in terms]
+    form ``passages`` consumes — plus the snapshot's tokenizer and the
+    phrase length."""
+    from .batch import _plan_queries
+
+    plan = _plan_queries(spark, catalog, [{
+        "query": phrase, "phrase": True, "lang": lang, "ts_lo": ts_lo,
+        "ts_hi": ts_hi,
+    }])
+    if not plan.specs:
+        return spark.createDataFrame([], _SPANS_SCHEMA), plan.tokenizer, 0
+    spec = plan.specs[0]
+    term_sets = spec.term_sets
     m = len(term_sets)
     mask = (1 << 33) - 1
 
-    def emit(post_pdf: pd.DataFrame, fids: np.ndarray | None) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                  "pos": pd.Series([], dtype="int32")})
-        if post_pdf.empty:
-            return out_empty
-        by_term = dict(tuple(post_pdf.groupby("term", sort=False)))
-        occ = _phrase_occurrences(by_term, fids, term_sets, caches={})
+    def emit(by_term, fids_by_ctx) -> pd.DataFrame:
+        occ = _phrase_occurrences(by_term, fids_by_ctx[spec.cid], term_sets,
+                                  caches={})
         if occ is None:
-            return out_empty
+            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                                 "pos": pd.Series([], dtype="int32")})
         cand, _, running = occ
         return pd.DataFrame({
             "doc_id": cand[(running >> 33)].astype(np.int64),
             "pos": ((running & mask) - m).astype(np.int32),
         })
 
-    return _shard_kernel_job(
-        spark, catalog, sorted(set(terms)), emit, _SPANS_SCHEMA,
-        lang, ts_lo, ts_hi, cols=_PHRASE_COLS,
+    spans = _shard_kernel_job(
+        spark, catalog, plan.scan_terms, emit, _SPANS_SCHEMA, plan.contexts,
+        cols=_PHRASE_COLS,
     )
+    return spans, plan.tokenizer, m
 
 
 _PASSAGE_SCHEMA = "doc_id long, pos int, passage string"
@@ -580,12 +512,8 @@ def passages(
     are indexed, never dropped — so the slice needs no stemmer."""
     if window < 0:
         raise ValueError(f"window must be >= 0, got {window}")
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    tokenizer = snap.get("tokenizer", "simple")
-    m = len(analyze_str(phrase, None, tokenizer=tokenizer))
-    spans = _phrase_spans_df(spark, catalog, phrase, lang, ts_lo, ts_hi)
+    spans, tokenizer, m = _phrase_spans_df(spark, catalog, phrase, lang,
+                                           ts_lo, ts_hi)
     joined = spans.join(docs.select("doc_id", "text"), "doc_id")
 
     def gen(batches):
@@ -614,56 +542,20 @@ def passages(
     )
 
 
-def _run_positional(
-    spark, catalog, term_sets, idf_sum, avgdl, k, lang, ts_lo, ts_hi,
-    slop: int = 0,
-) -> DataFrame:
-    """Shared execution of a positional sequence query: one pruned scan
-    over the union of all positions' terms, per-shard kernel, global
-    merge."""
-    all_terms = sorted({t for ts in term_sets for t in ts})
-    local = _shard_kernel_job(
-        spark, catalog, all_terms,
-        lambda post_pdf, fids: _phrase_topk_shard(
-            post_pdf, fids, term_sets, idf_sum, avgdl, k, slop
-        ),
-        _RESULT_SCHEMA, lang, ts_lo, ts_hi, cols=_PHRASE_COLS,
-    )
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def expand_prefix(
-    spark: SparkSession, catalog, prefix: str, max_expansions: int = 50
-) -> list[str]:
-    """The lexicographically-first ``max_expansions`` index terms with
-    the given prefix — deterministic (Lucene expands in term-dictionary
-    order, which IS lexicographic).  ``startswith`` is a parquet-
-    pushable filter (StringStartsWith) against the term_stats scan."""
-    rows = (
-        catalog.read_snapshot(spark, "term_stats")
-        .where(F.col("term").startswith(prefix))
-        .orderBy("term")
-        .limit(max_expansions)
-        .select("term")
-        .collect()
-    )
-    return [r["term"] for r in rows]
-
-
 def expand_prefixes(
     spark: SparkSession, catalog, reqs: dict[str, int]
 ) -> dict[str, list[str]]:
-    """Resolve MANY prefixes in ONE term_stats scan (the batch form of
-    ``expand_prefix`` — N driver-side jobs collapse to one): the scan
-    filters on the OR of the pushed ``startswith`` predicates, a tiny
-    broadcast prefix table joins each surviving term to the prefixes it
-    extends, and a per-prefix window keeps the lexicographically-first
-    ``reqs[prefix]`` terms, so the collect stays bounded by
-    Σ max_expansions."""
+    """Resolve every prefix of a plan in ONE term_stats scan: for each
+    prefix, the lexicographically-first ``reqs[prefix]`` index terms
+    extending it — deterministic, since Lucene expands in
+    term-dictionary order, which IS lexicographic.  The scan filters on
+    the OR of the pushed ``startswith`` predicates (StringStartsWith
+    reaches the parquet source), a tiny broadcast prefix table joins
+    each surviving term to the prefixes it extends, and a per-prefix
+    window keeps the first ``reqs[prefix]`` terms, so the collect stays
+    bounded by Σ max_expansions."""
     if not reqs:
         return {}
-    from pyspark.sql import Window
-
     cond = None
     for p in sorted(reqs):
         c = F.col("term").startswith(p)
@@ -711,51 +603,12 @@ def bm25_phrase_prefix_topk(
     index terms (on a stemmed index they are stems), mirroring how ES
     keyword-expands against the term dictionary rather than analyzing
     the fragment.  ``slop`` as in ``bm25_phrase_topk`` (ordered
-    proximity; the expansion set is still the last position)."""
-    if slop < 0:
-        raise ValueError(f"slop must be >= 0, got {slop}")
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    if not snap.get("positions", False):
-        raise ValueError(
-            "phrase queries need a positional index — rebuild with "
-            "build_index(..., positions=True)"
-        )
-    avgdl = snap["avgdl"]
-    stemming = snap.get("stemming", True)
-    tokens = analyze_str(phrase, None, tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
-    if not tokens:
-        return empty
-    prefix = tokens[-1]
-    fixed_surface = tokens[:-1]
-    if stemming:
-        cache = StemCache()
-        fixed = [cache(t) for t in fixed_surface]
-    else:
-        fixed = fixed_surface
-    expansions = expand_prefix(spark, catalog, prefix, max_expansions)
-    if not expansions:
-        return empty
-    idfs = idf_map(spark, catalog, list(dict.fromkeys(fixed + expansions)))
-    # membership, not a count: idfs also holds the expansions, so a
-    # df=0 FIXED term would otherwise slip past a size comparison
-    if any(t not in idfs for t in fixed):
-        return empty  # a fixed term with df=0 kills the query
-    # MultiPhraseWeight: one TermStatistics entry per fixed position
-    # plus one per expansion — a fixed term that is also an expansion
-    # counts in both sums
-    idf_sum = float(
-        sum(idfs[t] for t in fixed)
-        + sum(idfs[t] for t in expansions if t in idfs)
-    )
-    if not fixed:
-        # bare prefix: a 1-position sequence over the expansion set
-        term_sets = [expansions]
-    else:
-        term_sets = [[t] for t in fixed] + [expansions]
-    return _run_positional(
-        spark, catalog, term_sets, idf_sum, avgdl, k, lang, ts_lo, ts_hi,
-        slop=slop,
-    )
+    proximity; the expansion set is still the last position).  A
+    planned batch of one (query/batch.py)."""
+    from .batch import _topk_one
+
+    return _topk_one(spark, catalog, {
+        "query": phrase, "phrase_prefix": True,
+        "max_expansions": max_expansions, "slop": slop, "lang": lang,
+        "ts_lo": ts_lo, "ts_hi": ts_hi,
+    }, k)

@@ -6,8 +6,11 @@ time) → non-scoring filter context (lang equality, warc_ts range —
 search/__init__.py:79-105,185-256) → BM25 scoring with AND semantics
 (operator:'and', search/__init__.py:67) → top-k (k=50 default,
 search/base.py:1) → metadata hydration (the reference fetches each
-hit's full document via es.get, join.py:530; here one broadcast-able
-join against doc_stats).
+hit's full document via es.get, join.py:530; here one broadcast join
+against doc_stats).  The first four steps are the query planner and
+its one shard job (query/batch.py): ``search`` is a planned batch of
+one and ``search_many`` a planned batch, and both hydrate through
+``_hydrate``.
 """
 
 from __future__ import annotations
@@ -15,9 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index.catalog import IndexCatalog
-from .batch import bm25_topk_batch
-from .phrase import bm25_phrase_topk
-from .wand import bm25_topk_blockmax
+from .batch import bm25_topk_batch, _topk_one
 
 TOP_K_SIZE = 50  # reference search/base.py:1
 PAGE_SIZE = 200  # reference union-search page (union.py:131-159)
@@ -44,6 +45,26 @@ def paginate(df: DataFrame, order_cols: list[str], page_size: int = PAGE_SIZE,
     return out.orderBy(*[F.asc(c) for c in order_cols]).limit(page_size)
 
 
+def _hydrate(spark: SparkSession, catalog: IndexCatalog, hits: DataFrame,
+             *lead: str) -> DataFrame:
+    """Join (``lead``…, doc_id, score) hits with the url/lang/warc_ts
+    columns doc_stats has, ordered (``lead``…, score desc, doc_id asc)."""
+    ds = catalog.read_snapshot(spark, "doc_stats")
+    meta_cols = [c for c in ("url", "lang", "warc_ts") if c in ds.columns]
+    order = [*lead, F.desc("score"), F.asc("doc_id")]
+    if not meta_cols:
+        return hits.orderBy(*order)
+    # broadcast the ≤k·Q-row hits side: doc_stats (10^12 rows at target
+    # scale) must never be shuffled to hydrate 50 hits — the broadcast
+    # hash join streams doc_stats partitions map-side (plan-asserted in
+    # tests/test_plans.py)
+    return (
+        F.broadcast(hits).join(ds.select("doc_id", *meta_cols), "doc_id")
+        .select(*lead, "doc_id", *meta_cols, "score")
+        .orderBy(*order)
+    )
+
+
 def search(
     spark: SparkSession,
     catalog: IndexCatalog,
@@ -62,36 +83,11 @@ def search(
     against a positional index (``slop`` extra tokens allowed between
     first and last, Lucene 1/(gap+1) weighting — see
     ``bm25_phrase_topk``); ``or_mode`` is keyword-only."""
-    if phrase:
-        if or_mode:
-            raise ValueError("or_mode does not apply to phrase queries")
-        hits = bm25_phrase_topk(
-            spark, catalog, query, k=k, slop=slop, lang=lang,
-            ts_lo=ts_lo, ts_hi=ts_hi,
-        )
-    elif slop:
-        raise ValueError("slop requires phrase=True")
-    else:
-        hits = bm25_topk_blockmax(
-            spark, catalog, query, k=k, lang=lang, ts_lo=ts_lo, ts_hi=ts_hi,
-            or_mode=or_mode,
-        )
-    meta_cols = [
-        c for c in ("url", "lang", "warc_ts")
-        if c in catalog.read(spark, "doc_stats").columns
-    ]
-    if not meta_cols:
-        return hits.orderBy(F.desc("score"), F.asc("doc_id"))
-    meta = catalog.read(spark, "doc_stats").select("doc_id", *meta_cols)
-    # broadcast the ≤k-row hits side: doc_stats (10^12 rows at target
-    # scale) must never be shuffled to hydrate 50 hits — the broadcast
-    # hash join streams doc_stats partitions map-side (plan-asserted in
-    # tests/test_plans.py)
-    return (
-        F.broadcast(hits).join(meta, "doc_id")
-        .select("doc_id", *meta_cols, "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    hits = _topk_one(spark, catalog, {
+        "query": query, "lang": lang, "ts_lo": ts_lo, "ts_hi": ts_hi,
+        "or_mode": or_mode, "phrase": phrase, "slop": slop,
+    }, k)
+    return _hydrate(spark, catalog, hits)
 
 
 def search_many(
@@ -100,27 +96,14 @@ def search_many(
     queries: list[dict],
     k: int = TOP_K_SIZE,
 ) -> DataFrame:
-    """Bulk ranked search: the whole query batch (per-query AND/OR mode
-    and lang/ts filters — see ``bm25_topk_batch``) in ONE job, hydrated
-    with one broadcast join.  Returns (query_id, doc_id, url, lang,
-    warc_ts, score), each query's hits ordered (score desc, doc_id
-    asc).  The reference answers one ``POST /api/v1/search`` per HTTP
-    request; a bulk evaluation client looping that endpoint pays N
-    round-trips + N ES requests — this is the engine-side batch form
+    """Bulk ranked search: the whole query batch (per-query AND/OR mode,
+    phrase flags and lang/ts filters — see ``bm25_topk_batch``) in ONE
+    job, hydrated with one broadcast join.  Returns (query_id, doc_id,
+    url, lang, warc_ts, score), each query's hits ordered (score desc,
+    doc_id asc).  The reference answers one ``POST /api/v1/search`` per
+    HTTP request; a bulk evaluation client looping that endpoint pays
+    N round-trips + N ES requests — this is the engine-side batch form
     of the same semantics (apiserver/apiserver/search/__init__.py:
-    429-604 per query, rank-identical per tests/test_batch_queries.py).
-    """
-    hits = bm25_topk_batch(spark, catalog, queries, k=k)
-    meta_cols = [
-        c for c in ("url", "lang", "warc_ts")
-        if c in catalog.read(spark, "doc_stats").columns
-    ]
-    if not meta_cols:
-        return hits
-    meta = catalog.read(spark, "doc_stats").select("doc_id", *meta_cols)
-    # hits ≤ k·Q rows — broadcast it; doc_stats is never shuffled
-    return (
-        F.broadcast(hits).join(meta, "doc_id")
-        .select("query_id", "doc_id", *meta_cols, "score")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    429-604 per query)."""
+    return _hydrate(spark, catalog, bm25_topk_batch(spark, catalog, queries, k=k),
+                    "query_id")

@@ -1,4 +1,5 @@
-"""Block-max document-at-a-time top-k kernel (the optimized query path).
+"""Block-max document-at-a-time top-k kernels, and the one shard-job
+skeleton every query runs through.
 
 Layout recap (index/build.py): postings are doc-range sharded; within a
 (term, shard) group, fixed 128-entry varbyte blocks carry
@@ -22,14 +23,17 @@ Two block upper bounds, combined with min():
   avgdl — per-document, hence tighter than the corner whenever the
   max-tf document is long.
 
-Query executes as:
+Every query — one keyword or phrase search, or a whole batch — is
+planned once by query/batch.py and executes as:
 
-  postings scan, `term IN (query terms)` pushed to parquet (the build
+  postings scan, `term IN (scan terms)` pushed to parquet (the build
   writes each shard partition as ONE term-sorted file, so row-group
   min/max stats prune everything but the query terms' blocks)
-  → groupBy shard [cogroup with filtered doc-id set when filtered]
-  → per-shard DAAT kernel (this module) → local top-k (k ≤ 50)
-  → global merge: orderBy/limit over ≤ k·S tiny rows.
+  → groupBy shard [cogroup with the tagged filter doc-id sets when any
+    query is filtered]          — ``_shard_kernel_job``, this module
+  → per-shard kernel: top-k per query (``_topk_from_terms`` here,
+    ``phrase._phrase_topk_from_terms``) or phrase spans
+  → global merge over ≤ k·S·Q tiny rows (query/batch.py).
 
 The reference's query semantics are AND (`operator:'and'`,
 apiserver/apiserver/search/__init__.py:67), which admits a *stronger*
@@ -54,19 +58,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..analyzer import analyze_query
 from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import K1, B, idf_map, _filtered_doc_ids
-
-#: fixed reference avgdl the baked per-block max_tfn is quantized at —
-#: single definition in index.build (ADVICE r3: a drifted duplicate
-#: would silently mis-scale the baked bound and block pruning could
-#: drop true top-k docs).  Queries read the value the INDEX was built
-#: with from the snapshot manifest; this import is only the fallback
-#: for format-2 snapshots that predate the manifest field.
-from ..index.build import TFN_REF_AVGDL  # noqa: E402
-
-_RESULT_SCHEMA = "doc_id long, score double"
+from .bm25 import K1, B, _filtered_doc_ids
 
 _POSTING_COLS = [
     "shard", "term", "block_id", "n", "first_doc_id", "last_doc_id",
@@ -77,23 +70,24 @@ _POSTING_COLS = [
 _Z = np.zeros(0, np.uint64)
 
 
+def _no_hits() -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
+                         "score": pd.Series([], dtype="float64")})
+
+
 def _decode_term_blocks(
     rows: pd.DataFrame,
     candidates: np.ndarray | None,
-    want: int = 3,
-    cache: dict | None = None,
+    cache: dict,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode one term's blocks within a shard, skipping blocks whose
     [first_doc_id, last_doc_id] fence misses the candidate set.
-    Returns (doc_ids, tfs, doclens); ``want`` trims decode work:
-    1 = ids only, 2 = ids+tfs, 3 = all three payloads.
+    Returns (doc_ids, tfs, doclens).
 
     ``cache`` (block_id → decoded triple) shares decode work across
-    the queries of a batch (query/batch.py): the single-query path
-    passes None and is byte-identical to the uncached code.  Cached
-    entries always hold all three payloads — a block decoded once
-    serves every later ``want`` level — so ``want`` only trims the
-    cache-miss cost."""
+    the passes of one query and across the queries of a batch: a
+    block decodes at most once per shard kernel.  Entries always hold
+    all three payloads, so one decode serves every later pass."""
     order = np.argsort(rows["block_id"].to_numpy())
     firsts = rows["first_doc_id"].to_numpy()[order]
     lasts = rows["last_doc_id"].to_numpy()[order]
@@ -110,54 +104,20 @@ def _decode_term_blocks(
     tvb = rows["tfs_vb"].to_numpy()[order]
     lvb = rows["dls_vb"].to_numpy()[order]
     for i in np.flatnonzero(keep):
-        if cache is not None:
-            trip = cache.get(bids[i])
-            if trip is None:
-                trip = (
-                    delta_decode(vb_decode(bytes(dvb[i]))),
-                    vb_decode(bytes(tvb[i])),
-                    vb_decode(bytes(lvb[i])),
-                )
-                cache[bids[i]] = trip
-            d_parts.append(trip[0])
-            t_parts.append(trip[1])
-            l_parts.append(trip[2])
-            continue
-        d_parts.append(delta_decode(vb_decode(bytes(dvb[i]))))
-        if want >= 2:
-            t_parts.append(vb_decode(bytes(tvb[i])))
-        if want >= 3:
-            l_parts.append(vb_decode(bytes(lvb[i])))
+        trip = cache.get(bids[i])
+        if trip is None:
+            trip = (
+                delta_decode(vb_decode(bytes(dvb[i]))),
+                vb_decode(bytes(tvb[i])),
+                vb_decode(bytes(lvb[i])),
+            )
+            cache[bids[i]] = trip
+        d_parts.append(trip[0])
+        t_parts.append(trip[1])
+        l_parts.append(trip[2])
     if not d_parts:
         return _Z, _Z, _Z
-    return (
-        np.concatenate(d_parts),
-        np.concatenate(t_parts) if t_parts else _Z,
-        np.concatenate(l_parts) if l_parts else _Z,
-    )
-
-
-def _shard_topk(
-    post: pd.DataFrame,
-    filter_ids: np.ndarray | None,
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    n_terms: int,
-    or_mode: bool,
-    tfn_ref: float = TFN_REF_AVGDL,
-) -> pd.DataFrame:
-    """Top-k of one doc-range shard.  ``filter_ids``: sorted doc_ids
-    surviving the non-scoring filter context, or None = unfiltered."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if post.empty or (filter_ids is not None and filter_ids.size == 0):
-        return empty
-
-    by_term = dict(tuple(post.groupby("term", sort=False)))
-    return _topk_from_terms(
-        by_term, filter_ids, idfs, avgdl, k, n_terms, or_mode, tfn_ref
-    )
+    return np.concatenate(d_parts), np.concatenate(t_parts), np.concatenate(l_parts)
 
 
 def _topk_from_terms(
@@ -168,16 +128,15 @@ def _topk_from_terms(
     k: int,
     n_terms: int,
     or_mode: bool,
-    tfn_ref: float = TFN_REF_AVGDL,
-    caches: dict[str, dict] | None = None,
+    tfn_ref: float,
+    caches: dict[str, dict],
 ) -> pd.DataFrame:
-    """Core of one shard's top-k, over an already-grouped
-    term → posting-rows map.  The single-query kernel calls it with
-    the whole shard group; the batch kernel (query/batch.py) calls it
-    once per query with that query's term subset plus per-term decode
-    caches so queries sharing a term never decode a block twice."""
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
+    """One keyword query's top-k within one shard, over the query's
+    term → posting-rows map.  ``filter_ids``: sorted doc_ids surviving
+    the non-scoring filter context, or None = unfiltered.  ``caches``
+    maps each term to its per-block decode cache, shared by every
+    query of the shard kernel (query/batch.py)."""
+    empty = _no_hits()
     if filter_ids is not None and filter_ids.size == 0:
         return empty
     if not or_mode and len(by_term) < n_terms:
@@ -185,24 +144,21 @@ def _topk_from_terms(
     if not by_term:
         return empty
 
-    def _cache(t: str) -> dict | None:
-        return caches.get(t) if caches is not None else None
-
     if or_mode:
         return _shard_topk_or(by_term, filter_ids, idfs, avgdl, k, empty,
                               tfn_ref, caches)
 
     # AND mode: drive from rarest term (fewest posting entries in shard)
     term_order = sorted(by_term, key=lambda t: int(by_term[t]["n"].sum()))
-    cand, _, _ = _decode_term_blocks(by_term[term_order[0]], None, want=1,
-                                     cache=_cache(term_order[0]))
+    cand, _, _ = _decode_term_blocks(by_term[term_order[0]], None,
+                                     caches[term_order[0]])
     if filter_ids is not None:
         cand = cand[np.isin(cand, filter_ids)]
     tf_by_term: dict[str, np.ndarray] = {}
     for t in term_order[1:]:
         if cand.size == 0:
             return empty
-        d, tf, _ = _decode_term_blocks(by_term[t], cand, want=2, cache=_cache(t))
+        d, tf, _ = _decode_term_blocks(by_term[t], cand, caches[t])
         mask = np.isin(cand, d)
         cand = cand[mask]
         if cand.size == 0:
@@ -216,7 +172,7 @@ def _topk_from_terms(
     # tf + doclen of driver term for surviving candidates (doclen rides
     # in every term's blocks; any one term supplies it)
     d0, tf0, dl0 = _decode_term_blocks(by_term[term_order[0]], cand,
-                                       cache=_cache(term_order[0]))
+                                       caches[term_order[0]])
     sel0 = np.searchsorted(d0, cand)
     tf_by_term[term_order[0]] = tf0[sel0]
 
@@ -230,7 +186,7 @@ def _topk_from_terms(
     return _local_topk(cand, score, k)
 
 
-def _score_docs(cand, by_term, idfs, avgdl, caches=None):
+def _score_docs(cand, by_term, idfs, avgdl, caches):
     """Exact OR score of given docs: fence-decode each term's blocks
     around the candidate set and accumulate present contributions.
     doclen comes from the posting payloads themselves."""
@@ -238,9 +194,7 @@ def _score_docs(cand, by_term, idfs, avgdl, caches=None):
     have_dl = np.zeros(cand.size, dtype=bool)
     contrib = []
     for t, rows in by_term.items():
-        d, tf, dls = _decode_term_blocks(
-            rows, cand, cache=caches.get(t) if caches is not None else None
-        )
+        d, tf, dls = _decode_term_blocks(rows, cand, caches[t])
         if d.size == 0:
             continue
         pos = np.searchsorted(d, cand)
@@ -257,7 +211,7 @@ def _score_docs(cand, by_term, idfs, avgdl, caches=None):
 
 
 def _block_bounds(
-    rows: pd.DataFrame, idf: float, avgdl: float, tfn_ref: float = TFN_REF_AVGDL
+    rows: pd.DataFrame, idf: float, avgdl: float, tfn_ref: float
 ) -> np.ndarray:
     """Per-block BM25 upper bound: min(corner bound, scaled baked bound).
     ``tfn_ref`` is the reference avgdl the index baked qmax_tfn at
@@ -272,8 +226,7 @@ def _block_bounds(
 
 
 def _shard_topk_or(
-    by_term, filter_ids, idfs, avgdl, k, empty, tfn_ref=TFN_REF_AVGDL,
-    caches=None,
+    by_term, filter_ids, idfs, avgdl, k, empty, tfn_ref, caches,
 ) -> pd.DataFrame:
     """OR mode: block-max WAND-style pruning, exact results.
 
@@ -300,8 +253,7 @@ def _shard_topk_or(
     seed_parts = []
     for t, rows in by_term.items():
         order = np.argsort(-ubs[t])
-        d, _, _ = _decode_term_blocks(rows.iloc[order[:n_seed]], None, want=1,
-                                      cache=caches.get(t) if caches is not None else None)
+        d, _, _ = _decode_term_blocks(rows.iloc[order[:n_seed]], None, caches[t])
         seed_parts.append(d)
     seed_docs = np.unique(np.concatenate(seed_parts))
     if filter_ids is not None:
@@ -320,8 +272,7 @@ def _shard_topk_or(
         if not keep.any():
             continue
         kept = rows[pd.Series(keep, index=rows.index)]
-        d, _, _ = _decode_term_blocks(kept, None, want=1,
-                                      cache=caches.get(t) if caches is not None else None)
+        d, _, _ = _decode_term_blocks(kept, None, caches[t])
         cand_parts.append(d)
     cand = np.unique(np.concatenate(cand_parts)) if cand_parts else np.zeros(0, np.uint64)
     if filter_ids is not None:
@@ -358,74 +309,63 @@ def bm25_topk_blockmax(
     ts_hi=None,
     or_mode: bool = False,
 ) -> DataFrame:
-    snap = catalog.current_snapshot()
-    if snap.get("postings_format", 1) < 2:
-        raise ValueError(
-            "index predates the doclen-in-postings layout (postings_format 2); "
-            "rebuild with build_index(resume=False)"
-        )
-    avgdl = snap["avgdl"]
-    # the reference avgdl qmax_tfn was baked at — from the manifest, so
-    # an index built by a different code version can never be silently
-    # mis-scaled (ADVICE r3); pre-field format-2 snapshots used 256.0
-    tfn_ref = float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL))
-    stemming = snap.get("stemming", True)
-    terms = analyze_query(query, stemming=stemming,
-                          tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
-    if not terms:
-        return empty
-    idfs = idf_map(spark, catalog, terms)
-    if not or_mode and len(idfs) < len(terms):
-        return empty
-    if or_mode:
-        terms = [t for t in terms if t in idfs]
-        if not terms:
-            return empty
+    """Top-k (doc_id, score) of one keyword query (AND semantics, or
+    OR with ``or_mode``) — a planned batch of one (query/batch.py)."""
+    from .batch import _topk_one
 
-    n_terms = len(terms)
-    local = _shard_kernel_job(
-        spark, catalog, terms,
-        lambda post_pdf, fids: _shard_topk(
-            post_pdf, fids, idfs, avgdl, k, n_terms, or_mode, tfn_ref
-        ),
-        _RESULT_SCHEMA, lang, ts_lo, ts_hi, cols=_POSTING_COLS,
-    )
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk_one(spark, catalog, {
+        "query": query, "lang": lang, "ts_lo": ts_lo, "ts_hi": ts_hi,
+        "or_mode": or_mode,
+    }, k)
 
 
 def _shard_kernel_job(
     spark, catalog, scan_terms: list[str], shard_fn, schema: str,
-    lang, ts_lo, ts_hi, cols: list[str] = _POSTING_COLS,
+    contexts: list[tuple], cols: list[str] = _POSTING_COLS,
 ) -> DataFrame:
     """The query family's one execution skeleton: term-IN pruned
     postings scan over ``cols`` → per-shard Arrow groups →
-    ``shard_fn(post_pdf, filter_ids)`` — cogrouped with the filter
-    doc-id set when any filter is present (no doc_stats side at all
-    otherwise: doclens ride in the posting blocks).  Keyword top-k and
-    every positional job (top-k, spans, passages — query/phrase.py,
-    which passes its positional column list) run through here, so scan
+    ``shard_fn(by_term, fids_by_ctx)``.  ``by_term`` maps each scanned
+    term to the shard's posting rows of that term; ``fids_by_ctx`` maps
+    a filter-context id (its index in ``contexts``, the distinct
+    (lang, ts_lo, ts_hi) triples of a plan) to the shard's sorted
+    surviving doc ids, and None to None (unfiltered).  Only when some
+    context exists does the scan cogroup with the union of the
+    contexts' doc-id sets, each tagged with its id — with no filter
+    there is no doc_stats side at all (doclens ride in the posting
+    blocks).  Top-k, spans and passages all run through here, so scan
     pruning / filter plumbing fixes apply to all of them at once."""
-    filtered = lang is not None or ts_lo is not None or ts_hi is not None
     postings = (
         catalog.read_snapshot(spark, "postings")
         .where(F.col("term").isin(scan_terms))
         .select(*cols)
     )
-    if not filtered:
-        def kernel(post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return shard_fn(post_pdf, None)
 
-        return postings.groupby("shard").applyInPandas(kernel, schema=schema)
+    def run(post_pdf: pd.DataFrame, fids_by_ctx: dict) -> pd.DataFrame:
+        return shard_fn(dict(tuple(post_pdf.groupby("term", sort=False))),
+                        fids_by_ctx)
 
-    ds = _filtered_doc_ids(spark, catalog, lang, ts_lo, ts_hi)
+    if not contexts:
+        return postings.groupby("shard").applyInPandas(
+            lambda post_pdf: run(post_pdf, {None: None}), schema=schema
+        )
 
-    def kernel2(key, post_pdf, docs_pdf):
-        fids = np.sort(docs_pdf["doc_id"].to_numpy().astype(np.uint64))
-        return shard_fn(post_pdf, fids)
+    docs = None
+    for cid, (lang, ts_lo, ts_hi) in enumerate(contexts):
+        d = _filtered_doc_ids(spark, catalog, lang, ts_lo, ts_hi).withColumn(
+            "ctx", F.lit(cid)
+        )
+        docs = d if docs is None else docs.unionByName(d)
+
+    def cogrouped(key, post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
+        # a context with no surviving doc in this shard filters to nothing
+        fids_by_ctx = {None: None, **{cid: _Z for cid in range(len(contexts))}}
+        for c, g in docs_pdf.groupby("ctx"):
+            fids_by_ctx[int(c)] = np.sort(g["doc_id"].to_numpy().astype(np.uint64))
+        return run(post_pdf, fids_by_ctx)
 
     return (
         postings.groupby("shard")
-        .cogroup(ds.groupby("shard"))
-        .applyInPandas(kernel2, schema=schema)
+        .cogroup(docs.groupby("shard"))
+        .applyInPandas(cogrouped, schema=schema)
     )

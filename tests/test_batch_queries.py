@@ -1,10 +1,11 @@
-"""Batch multi-query engine (query/batch.py): exact rank identity with
-the single-query block-max engine across the full reference query set
-— AND, OR, stopword-tier, absent-term, lang-filtered and ts-filtered
-queries all evaluated in ONE batch call, compared per query against
-``bm25_topk_blockmax``.  The batch kernel runs the same
-``_topk_from_terms`` code per query; the only batch-specific state is
-the shared block-decode cache, so identity here gates that cache.
+"""The query planner and batch engine (query/batch.py): exact rank
+identity with the pure-Python oracle across the full reference query
+set — AND, OR, stopword-tier, absent-term, lang-filtered and
+ts-filtered queries all evaluated in ONE batch call, compared per
+query against ``Bm25Oracle.topk``.  Queries of one batch share the
+shard kernel's block-decode caches, so identity here gates that cache.
+Every public query entry point is planned here, so the planner's
+checks are pinned here too.
 """
 
 import math
@@ -12,9 +13,24 @@ import math
 import pandas as pd
 import pytest
 
-from datamart_spark.corpus import generate_documents, generate_queries
+from datamart_spark.corpus import (
+    generate_documents,
+    generate_documents_pandas,
+    generate_queries,
+)
 from datamart_spark.index import IndexCatalog, build_index
-from datamart_spark.query import bm25_topk_batch, bm25_topk_blockmax
+from datamart_spark.query import (
+    bm25_phrase_prefix_topk,
+    bm25_phrase_topk,
+    bm25_topk_batch,
+    bm25_topk_blockmax,
+    bm25_topk_dataframe,
+    passages,
+    phrase_spans,
+    search,
+    search_many,
+)
+from datamart_spark.query.bm25_oracle import Bm25Oracle
 
 N_DOCS = 1200
 K = 10
@@ -27,6 +43,13 @@ def built(spark, tmp_path_factory):
     docs = generate_documents(spark, N_DOCS)
     build_index(docs, catalog, n_shards=8)
     return catalog
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    return Bm25Oracle(
+        generate_documents_pandas(N_DOCS)[["doc_id", "text", "lang", "warc_ts"]]
+    )
 
 
 def _specs(or_ids=()):
@@ -46,11 +69,14 @@ def _specs(or_ids=()):
     return out
 
 
-def _rows(df):
-    return [(r["doc_id"], r["score"]) for r in df.collect()]
+def _assert_rank_identical(got, want, spec):
+    assert len(got) == len(want), (spec, got, want)
+    for (gd, gs), (wd, ws) in zip(got, want):
+        assert gd == wd, (spec, got, want)
+        assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-12), (spec, gd, gs, ws)
 
 
-def test_batch_rank_identity_full_query_set(built, spark):
+def test_batch_rank_identity_full_query_set(built, oracle, spark):
     catalog = built
     # a third of the set in OR mode, incl. absent-term + filtered ids,
     # so both kernel modes run against the shared decode caches
@@ -62,23 +88,9 @@ def test_batch_rank_identity_full_query_set(built, spark):
         by_qid.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
 
     for s in specs:
-        want = _rows(
-            bm25_topk_blockmax(
-                spark,
-                catalog,
-                s["query"],
-                k=K,
-                lang=s["lang"],
-                ts_lo=s["ts_lo"],
-                ts_hi=s["ts_hi"],
-                or_mode=s["or_mode"],
-            )
-        )
-        got = by_qid.get(s["query_id"], [])
-        assert len(got) == len(want), (s, got, want)
-        for (gd, gs), (wd, ws) in zip(got, want):
-            assert gd == wd, (s, got, want)
-            assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-12), (s, gd, gs, ws)
+        want = oracle.topk(s["query"], k=K, lang=s["lang"], ts_lo=s["ts_lo"],
+                           ts_hi=s["ts_hi"], or_mode=s["or_mode"])
+        _assert_rank_identical(by_qid.get(s["query_id"], []), want, s)
 
 
 def test_filter_stats_cache_skips_dead_session_handles(built, spark):
@@ -124,7 +136,6 @@ def test_batch_empty_and_edge_inputs(built, spark):
 def test_search_many_hydrates_and_matches_search(built, spark):
     """search_many = per-query search(): same hits, same metadata."""
     from datamart_spark.corpus import _VOCAB
-    from datamart_spark.query import search, search_many
 
     catalog = built
     q = f"the {_VOCAB[60]}"
@@ -151,16 +162,17 @@ def test_search_many_hydrates_and_matches_search(built, spark):
     assert all(r["lang"] == "de" for r in out if r["query_id"] == "b")
 
 
-def test_batch_single_query_matches(built, spark):
-    """A 1-query batch is the single-query engine with a query_id."""
+def test_batch_single_query_matches(built, oracle, spark):
+    """A 1-query batch (the one-spec merge) ranks like the oracle."""
     from datamart_spark.corpus import _VOCAB
 
     catalog = built
     q = f"the {_VOCAB[60]}"  # stopword-tier + mid-frequency term
     specs = [{"query_id": "only", "query": q, "lang": "en"}]
-    got = _rows(bm25_topk_batch(spark, catalog, specs, k=K).drop("query_id"))
-    want = _rows(bm25_topk_blockmax(spark, catalog, q, k=K, lang="en"))
-    assert got and got == want
+    out = bm25_topk_batch(spark, catalog, specs, k=K).collect()
+    assert out and {r["query_id"] for r in out} == {"only"}
+    got = [(r["doc_id"], r["score"]) for r in out]
+    _assert_rank_identical(got, oracle.topk(q, k=K, lang="en"), specs[0])
 
 
 def test_batch_rejects_duplicate_query_ids(built, spark):
@@ -205,10 +217,10 @@ def test_generated_query_set_deterministic_and_mixed():
     assert list(generate_query_set(20)["query"]) != list(a["query"][:20])
 
 
-def test_generated_batch_rank_identity_sample(built, spark):
+def test_generated_batch_rank_identity_sample(built, oracle, spark):
     """A generated 100-query batch through ONE bm25_topk_batch call is
-    rank-identical to the single-query engine (spot-checked on every
-    8th query, covering all four shape slices + both filter kinds)."""
+    rank-identical to the oracle (spot-checked on every 8th query,
+    covering all four shape slices + both filter kinds)."""
     from datamart_spark.corpus import generate_query_set
 
     catalog = built
@@ -229,14 +241,36 @@ def test_generated_batch_rank_identity_sample(built, spark):
     for r in batched:
         by_qid.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for s in specs[::8]:
-        want = _rows(
-            bm25_topk_blockmax(
-                spark, catalog, s["query"], k=K, lang=s["lang"],
-                ts_lo=s["ts_lo"], ts_hi=s["ts_hi"],
-            )
-        )
-        got = by_qid.get(s["query_id"], [])
-        assert len(got) == len(want), (s, got, want)
-        for (gd, gs), (wd, ws) in zip(got, want):
-            assert gd == wd, (s, got, want)
-            assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-12)
+        want = oracle.topk(s["query"], k=K, lang=s["lang"], ts_lo=s["ts_lo"],
+                           ts_hi=s["ts_hi"])
+        _assert_rank_identical(by_qid.get(s["query_id"], []), want, s)
+
+
+_DOCS_SCHEMA = "doc_id long, text string"
+
+#: every public query entry point, called with valid arguments
+_ENTRY_POINTS = {
+    "bm25_topk_blockmax": lambda spark, cat: bm25_topk_blockmax(spark, cat, "the"),
+    "bm25_topk_batch": lambda spark, cat: bm25_topk_batch(
+        spark, cat, [{"query_id": "a", "query": "the"}]),
+    "bm25_topk_dataframe": lambda spark, cat: bm25_topk_dataframe(spark, cat, "the"),
+    "search": lambda spark, cat: search(spark, cat, "the"),
+    "search_many": lambda spark, cat: search_many(
+        spark, cat, [{"query_id": "a", "query": "the"}]),
+    "bm25_phrase_topk": lambda spark, cat: bm25_phrase_topk(spark, cat, "the data"),
+    "bm25_phrase_prefix_topk": lambda spark, cat: bm25_phrase_prefix_topk(
+        spark, cat, "the da"),
+    "phrase_spans": lambda spark, cat: phrase_spans(spark, cat, "the data"),
+    "passages": lambda spark, cat: passages(
+        spark, cat, spark.createDataFrame([(0, "the data")], _DOCS_SCHEMA),
+        "the data"),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_ENTRY_POINTS))
+def test_entry_points_reject_catalog_without_snapshot(spark, tmp_path, entry):
+    """A catalog with no committed snapshot is one clear ValueError from
+    every entry point, not an AttributeError on the missing manifest."""
+    cat = IndexCatalog(str(tmp_path / "empty"))
+    with pytest.raises(ValueError, match="no committed snapshot in this catalog"):
+        _ENTRY_POINTS[entry](spark, cat)

@@ -2,17 +2,20 @@
 
 Oracle: a brute-force python scorer over the same analyzed token
 streams — Lucene match_phrase semantics (pf = adjacent-run count,
-idf summed over phrase positions, BM25 tf-normalization on pf).
+idf summed over phrase positions, BM25 tf-normalization on pf) — and
+``Bm25Oracle`` for keyword specs.
 """
 
 import math
 import re
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from datamart_spark.index import IndexCatalog, build_index
 from datamart_spark.query import bm25_phrase_topk
+from datamart_spark.query.bm25_oracle import Bm25Oracle
 
 K1, B = 1.2, 0.75
 
@@ -30,6 +33,19 @@ DOCS = [
 
 def _toks(text):
     return re.findall(r"\w+", text.lower())
+
+
+def _vocab_prefix(prefix, max_expansions=50):
+    """The lexicographically-first fixture terms extending ``prefix``."""
+    vocab = sorted({t for _, text, _ in DOCS for t in _toks(text)})
+    return [t for t in vocab if t.startswith(prefix)][:max_expansions]
+
+
+def _assert_ranked(got, exp, msg=""):
+    assert [d for d, _ in got] == [d for d, _ in exp], msg
+    np.testing.assert_allclose(
+        [s for _, s in got], [s for _, s in exp], rtol=1e-9, err_msg=msg
+    )
 
 
 def _brute_phrase(phrase, k=10, lang=None):
@@ -118,14 +134,10 @@ def test_phrase_lang_filter(spark, pos_catalog):
 
 
 def test_single_term_phrase_delegates(spark, pos_catalog):
-    from datamart_spark.query import bm25_topk_blockmax
-
+    """A one-token phrase is planned as the keyword query on it; its
+    score is the phrase score with pf = tf."""
     got = _run(spark, pos_catalog, "hash")
-    exp = [
-        (r["doc_id"], r["score"])
-        for r in bm25_topk_blockmax(spark, pos_catalog, "hash", k=10).collect()
-    ]
-    assert got == exp
+    _assert_ranked(got, _brute_phrase("hash"))
 
 
 def test_phrase_needs_positional_index(spark, tmp_path):
@@ -189,8 +201,7 @@ def _brute_prefix(phrase, k=10, max_expansions=50):
     fixed, prefix = toks_q[:-1], toks_q[-1]
     n = len(DOCS)
     toks = {d: _toks(t) for d, t, _ in DOCS}
-    vocab = sorted({t for tk in toks.values() for t in tk})
-    exp = [t for t in vocab if t.startswith(prefix)][:max_expansions]
+    exp = _vocab_prefix(prefix, max_expansions)
     if not exp:
         return []
     df = {
@@ -238,9 +249,9 @@ def test_phrase_prefix_matches_bruteforce(spark, pos_catalog, phrase):
 
 def test_phrase_prefix_expansion_cap(spark, pos_catalog):
     from datamart_spark.query import bm25_phrase_prefix_topk
-    from datamart_spark.query.phrase import expand_prefix
+    from datamart_spark.query.phrase import expand_prefixes
 
-    exp_all = expand_prefix(spark, pos_catalog, "s")
+    exp_all = expand_prefixes(spark, pos_catalog, {"s": 50})["s"]
     assert exp_all == sorted(exp_all)  # deterministic lexicographic order
     assert len(exp_all) >= 2
     got = [
@@ -316,13 +327,8 @@ def test_phrase_spans_filtered_and_empty(spark, pos_catalog):
 def test_batch_with_phrase_specs(spark, pos_catalog):
     """A heterogeneous batch mixing keyword AND/OR, exact-phrase,
     phrase-prefix and a lang-filtered phrase is rank-identical to the
-    single-query engines, per query."""
-    from datamart_spark.query import (
-        bm25_phrase_prefix_topk,
-        bm25_phrase_topk,
-        bm25_topk_batch,
-        bm25_topk_blockmax,
-    )
+    brute-force scorers and the keyword oracle, per query."""
+    from datamart_spark.query import bm25_topk_batch
 
     specs = [
         {"query_id": "kw_and", "query": "hash join"},
@@ -337,26 +343,20 @@ def test_batch_with_phrase_specs(spark, pos_catalog):
     for r in bm25_topk_batch(spark, pos_catalog, specs, k=10).collect():
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
 
-    def rows(df):
-        return [(r["doc_id"], r["score"]) for r in df.collect()]
-
+    oracle = Bm25Oracle(
+        pd.DataFrame(DOCS, columns=["doc_id", "text", "lang"]), stemming=False
+    )
     exp = {
-        "kw_and": rows(bm25_topk_blockmax(spark, pos_catalog, "hash join", k=10)),
-        "kw_or": rows(bm25_topk_blockmax(spark, pos_catalog, "hash join",
-                                         k=10, or_mode=True)),
-        "ph": rows(bm25_phrase_topk(spark, pos_catalog, "hash join", k=10)),
-        "ph_de": rows(bm25_phrase_topk(spark, pos_catalog, "hash join",
-                                       k=10, lang="de")),
-        "pp": rows(bm25_phrase_prefix_topk(spark, pos_catalog, "merge s", k=10)),
+        "kw_and": oracle.topk("hash join", k=10),
+        "kw_or": oracle.topk("hash join", k=10, or_mode=True),
+        "ph": _brute_phrase("hash join"),
+        "ph_de": _brute_phrase("hash join", lang="de"),
+        "pp": _brute_prefix("merge s"),
     }
     assert "ph_dead" not in got
     for qid, want in exp.items():
-        have = got.get(qid, [])
-        assert [d for d, _ in have] == [d for d, _ in want], qid
-        np.testing.assert_allclose(
-            [s for _, s in have], [s for _, s in want], rtol=1e-9,
-            err_msg=qid,
-        )
+        assert want, qid  # every live spec has hits to compare
+        _assert_ranked(got.get(qid, []), want, qid)
 
 
 def test_batch_phrase_needs_positions(spark, tmp_path):
@@ -515,9 +515,8 @@ def test_prefix_with_slop_matches_bruteforce(spark, pos_catalog):
     """slop composes with the last-position expansion set: greedy takes
     the smallest next offset matching ANY expansion."""
     from datamart_spark.query import bm25_phrase_prefix_topk
-    from datamart_spark.query.phrase import expand_prefix
 
-    exp_terms = expand_prefix(spark, pos_catalog, "j")
+    exp_terms = _vocab_prefix("j")
     got = [
         (r["doc_id"], r["score"])
         for r in bm25_phrase_prefix_topk(
@@ -533,7 +532,7 @@ def test_prefix_with_slop_matches_bruteforce(spark, pos_catalog):
 
 def test_batch_slop_rank_identical(spark, pos_catalog):
     """A batch mixing exact, sloppy and filtered-sloppy phrase specs is
-    rank-identical to the single-query engine, per query."""
+    rank-identical to the brute-force scorers, per query."""
     from datamart_spark.query import bm25_topk_batch
 
     specs = [
@@ -549,27 +548,18 @@ def test_batch_slop_rank_identical(spark, pos_catalog):
     for r in bm25_topk_batch(spark, pos_catalog, specs, k=10).collect():
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
 
-    from datamart_spark.query import bm25_phrase_prefix_topk
-
+    hj = [["hash"], ["join"]]
+    j_exp = _vocab_prefix("j")
     exp = {
-        "exact": _run(spark, pos_catalog, "hash join"),
-        "s1": _run(spark, pos_catalog, "hash join", slop=1),
-        "s3": _run(spark, pos_catalog, "hash join", slop=3),
-        "s_de": _run(spark, pos_catalog, "join table", slop=3, lang="de"),
-        "pp_s": [
-            (r["doc_id"], r["score"])
-            for r in bm25_phrase_prefix_topk(
-                spark, pos_catalog, "hash j", slop=2
-            ).collect()
-        ],
+        "exact": _brute_phrase("hash join"),
+        "s1": _brute_slop(hj, ["hash", "join"], 1),
+        "s3": _brute_slop(hj, ["hash", "join"], 3),
+        "s_de": _brute_slop([["join"], ["table"]], ["join", "table"], 3,
+                            lang="de"),
+        "pp_s": _brute_slop([["hash"], j_exp], ["hash"] + j_exp, 2),
     }
     for qid, want in exp.items():
-        have = got.get(qid, [])
-        assert [d for d, _ in have] == [d for d, _ in want], qid
-        np.testing.assert_allclose(
-            [s for _, s in have], [s for _, s in want], rtol=1e-9,
-            err_msg=qid,
-        )
+        _assert_ranked(got.get(qid, []), want, qid)
 
 
 def test_search_facade_phrase(spark, pos_catalog):
@@ -582,8 +572,8 @@ def test_search_facade_phrase(spark, pos_catalog):
         for r in search(spark, pos_catalog, "hash join", k=10,
                         phrase=True, slop=2).collect()
     ]
-    exp = _run(spark, pos_catalog, "hash join", slop=2)
-    assert got == exp
+    exp = _brute_slop([["hash"], ["join"]], ["hash", "join"], 2)
+    _assert_ranked(got, exp)
     with pytest.raises(ValueError, match="or_mode"):
         search(spark, pos_catalog, "hash join", phrase=True, or_mode=True)
     with pytest.raises(ValueError, match="phrase"):
@@ -678,10 +668,10 @@ def test_batch_positional_spec_validation(spark, pos_catalog):
 
 
 def test_batch_prefix_max_expansions_and_one_scan(spark, pos_catalog):
-    """Per-spec max_expansions matches the single-query engine, and two
-    specs sharing a prefix with different caps both get the
+    """Per-spec max_expansions matches the brute-force prefix scorer,
+    and two specs sharing a prefix with different caps both get the
     lexicographically-first slice of ONE resolution."""
-    from datamart_spark.query import bm25_phrase_prefix_topk, bm25_topk_batch
+    from datamart_spark.query import bm25_topk_batch
 
     specs = [
         {"query_id": "cap1", "query": "merge s", "phrase_prefix": True,
@@ -692,26 +682,19 @@ def test_batch_prefix_max_expansions_and_one_scan(spark, pos_catalog):
     for r in bm25_topk_batch(spark, pos_catalog, specs, k=10).collect():
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for qid, mx in (("cap1", 1), ("capall", 50)):
-        want = [
-            (r["doc_id"], r["score"])
-            for r in bm25_phrase_prefix_topk(
-                spark, pos_catalog, "merge s", max_expansions=mx
-            ).collect()
-        ]
-        assert [d for d, _ in got.get(qid, [])] == [d for d, _ in want], qid
-        np.testing.assert_allclose(
-            [s for _, s in got.get(qid, [])], [s for _, s in want],
-            rtol=1e-9, err_msg=qid,
-        )
+        _assert_ranked(got.get(qid, []), _brute_prefix("merge s", max_expansions=mx),
+                       qid)
 
 
 def test_expand_prefixes_matches_expand_prefix(spark, pos_catalog):
-    from datamart_spark.query.phrase import expand_prefix, expand_prefixes
+    """One resolution of many prefixes equals, per prefix, the
+    lexicographically-first terms of the fixture vocabulary."""
+    from datamart_spark.query.phrase import expand_prefixes
 
     reqs = {"s": 50, "j": 50, "ha": 1, "zzz": 50}
     many = expand_prefixes(spark, pos_catalog, reqs)
     for p, mx in reqs.items():
-        assert many[p] == expand_prefix(spark, pos_catalog, p, mx), p
+        assert many[p] == _vocab_prefix(p, mx), p
     assert expand_prefixes(spark, pos_catalog, {}) == {}
 
 

@@ -7,7 +7,10 @@ on must be visible in `explain`, not assumed.
   never scores);
 - the idf map joins as a broadcast, never a shuffle;
 - sort-limit top-k compiles to TakeOrderedAndProject (per-partition
-  partial top-k), not a global Sort.
+  partial top-k), not a global Sort;
+- the query planner's merge follows the live spec count (one query:
+  TakeOrderedAndProject, no Window), and only filtered queries
+  cogroup with doc_stats.
 """
 
 import pytest
@@ -250,3 +253,46 @@ def test_postings_scan_capped_at_one_task_per_shard(spark, catalog):
     finally:
         conf.set("spark.sql.files.maxPartitionBytes", prev)
         catalog._df_cache.clear()
+
+
+def test_query_merge_shape_follows_live_spec_count(spark, catalog):
+    """A batch of one — through ``search`` and through
+    ``bm25_topk_batch`` — merges with TakeOrderedAndProject and no
+    per-query Window; a 3-spec batch keeps the Window."""
+    from datamart_spark.corpus import _VOCAB
+    from datamart_spark.query import bm25_topk_batch, search
+
+    q = f"the {_VOCAB[60]}"
+    for df in (
+        search(spark, catalog, q, k=5),
+        bm25_topk_batch(spark, catalog, [{"query_id": "a", "query": q}], k=5),
+    ):
+        plan = _plan(df)
+        assert "TakeOrderedAndProject" in plan, plan
+        assert "Window" not in plan, plan
+    three = bm25_topk_batch(
+        spark,
+        catalog,
+        [
+            {"query_id": "a", "query": q},
+            {"query_id": "b", "query": f"the {_VOCAB[45]}", "or_mode": True},
+            {"query_id": "c", "query": f"{_VOCAB[45]} {_VOCAB[60]}"},
+        ],
+        k=5,
+    )
+    assert "Window" in _plan(three), _plan(three)
+
+
+def test_only_filtered_queries_cogroup(spark, catalog):
+    """An unfiltered query is one grouped postings scan (doclens ride in
+    the posting blocks); only a filtered one cogroups with the doc-id
+    filter set."""
+    from datamart_spark.corpus import _VOCAB
+    from datamart_spark.query import bm25_topk_blockmax
+
+    q = f"the {_VOCAB[60]}"
+    plain = _plan(bm25_topk_blockmax(spark, catalog, q, k=5))
+    assert "FlatMapGroupsInPandas" in plain, plain
+    assert "FlatMapCoGroupsInPandas" not in plain, plain
+    filtered = _plan(bm25_topk_blockmax(spark, catalog, q, k=5, lang="en"))
+    assert "FlatMapCoGroupsInPandas" in filtered, filtered
