@@ -11,14 +11,15 @@ Catalyst can plan, Arrow-vectorized pandas UDFs for the three genuinely
 custom kernels (analyzer, varbyte codec, block-max WAND).
 
 Layout:
-    analyzer    — html_strip → unicode tokenize → lowercase → Porter2
+    analyzer    — html_strip → UAX#29 tokenize → lowercase → Porter2
     corpus      — deterministic Common-Crawl-style synthetic corpus
-    index/      — build doc_stats / term_stats / postings tables
-    query/      — DataFrame BM25 and block-max WAND top-k
-    profiler/   — datamart-parity column profiling (types, ranges)
-    operators/  — augmentation ops (join / union / aggregations)
-    functions/  — dedup, similarity search, text analysis
+    index/      — build doc_stats / term_stats / postings; resume, delete
+    query/      — one batch planner + block-max WAND / positional kernels
+    profiler/   — datamart-parity column profiling (types, geo, ranges)
+    operators/  — augmentation + discovery ops (join, union, sketches)
+    sources/    — format detection, converters to CSV, materializers
     streaming/  — incremental ingest (Structured Streaming)
+    suite/      — the oracle-gated query suite behind __spark_entry__.py
 """
 
 __version__ = "0.1.0"

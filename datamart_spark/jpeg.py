@@ -1,11 +1,8 @@
 """Pure-Python baseline JPEG (ITU T.81) codec — grayscale AND YCbCr color.
 
-The sandbox has no image codec libraries; PNG is already decoded
-in-repo (png.py).  This module closes the JPEG half of the multimodal
-stub boundary for sequential-baseline payloads, making
-``multimodal.extract_image_features`` a REAL operator for them
-(reference scope: the engine's multimodal columns carry crawled image
-bytes; the reference itself never decodes pixels — this exceeds it).
+No image codec library is a dependency, so the codec is in-repo.  It
+is outside the BM25 engine's scope (the reference never decodes
+pixels); nothing in the build or query path imports it.
 
 Decoder (`decode_jpeg`): baseline sequential DCT (SOF0) AND
 progressive (SOF2, full annex G: spectral selection + successive
@@ -24,11 +21,11 @@ the exact reason: the codec boundary stays explicit, it just moved
 Encoders (`encode_jpeg_gray`, `encode_jpeg_color`,
 `encode_jpeg_progressive`): same subset, standard Annex K quantization
 + Huffman tables (overridable; progressive AC scans use a generic
-all-symbols table since Annex K lacks EOBn codes) — used by tests and
-the synthetic multimodal corpus; all-ones quantization roundtrips
-within ±1 grey level for grayscale, and a progressive encoding decodes
-BIT-IDENTICALLY to the baseline encoding at the same quantization
-(same coefficients, different transport; asserted in tests).
+all-symbols table since Annex K lacks EOBn codes) — used by tests;
+all-ones quantization roundtrips within ±1 grey level for grayscale,
+and a progressive encoding decodes BIT-IDENTICALLY to the baseline
+encoding at the same quantization (same coefficients, different
+transport; asserted in tests).
 
 Deterministic pure functions of the bytes (per-row invariance like
 extract_text).  numpy does the 8×8 DCT as two matrix products.
@@ -1039,9 +1036,8 @@ def encode_jpeg_adobe(
 
 def jpeg_feature_extractor(dim: int = 16):
     """Real pixel-level extractor for baseline JPEG payloads (grayscale
-    OR YCbCr color): normalized luminance histogram over ``dim`` bins —
-    drop-in for ``multimodal.extract_image_features(extractor=...)``,
-    mirroring ``png.png_feature_extractor``."""
+    OR YCbCr color): normalized luminance histogram over ``dim`` bins,
+    as a ``bytes -> np.ndarray`` function."""
 
     def fn(payload: bytes) -> np.ndarray:
         img = decode_jpeg(payload).astype(np.float64)

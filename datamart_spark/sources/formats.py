@@ -16,11 +16,11 @@ by construction in the reference; a >memory Stata file was never
 supported there either).
 
 .xlsx converts with a stdlib-only reader (zipfile + ElementTree — an
-xlsx is a zip of XML parts).  Formats needing libraries absent from
-this sandbox (legacy .xls → xlrd, SPSS → pyreadstat) raise
-``ConverterUnavailable`` with the exact dependency, mirroring the
-multimodal codec-stub discipline — the detection chain, registry and
-plumbing are real and tested.
+xlsx is a zip of XML parts).  The formats the reference reads through
+extra libraries are read by in-repo pure-Python readers instead: legacy
+.xls (xlrd in the reference) by sources/xls.py and SPSS .sav/.zsav
+(pyreadstat) by sources/spss.py.  Both raise a ``ValueError`` subclass
+naming the reason on a file they cannot read.
 """
 
 from __future__ import annotations
@@ -44,10 +44,6 @@ _STATA_BIN = (
     b"\x71\x01\x01\x01", b"\x71\x02\x01\x01",
 )
 _PARQUET_MAGIC = b"PAR1"
-
-
-class ConverterUnavailable(NotImplementedError):
-    """Raised when a format's decoder library is not installed."""
 
 
 def detect_format(path: str, peek_bytes: int = 4096) -> str:
@@ -263,7 +259,7 @@ def spss_to_csv(src: str, dst: str) -> None:
     """S8 converter (reference: lib_materialize/spss.py:6-13, pyreadstat
     + '%g'/CRLF to_csv) — REAL via the in-repo pure-Python system-file
     reader (sources/spss.py; the format is publicly documented in the
-    PSPP manual).  zsav and non-IEEE variants raise with the reason."""
+    PSPP manual); unsupported variants raise with the reason."""
     from .spss import sav_to_csv
 
     sav_to_csv(src, dst)

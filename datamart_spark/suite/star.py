@@ -22,9 +22,11 @@ Maps SURVEY.md §2 reference ops to declarative Spark plans:
              (temporal.py:36-57)
   §2.8      json_extract_events  — JSON metadata access (common.py:79-84)
 
-Exact-sum discipline: SUMs of money columns go through decimal(18,2)
-(exact, order-independent) then back to double, so distributed
-summation order cannot flip a rounded value against the oracle.
+Exact-sum discipline: SUMs of money columns add integer cents
+(exact, order-independent) and divide by 100 once, so distributed
+summation order cannot flip a rounded value against the oracle.  This
+relies on every money value having at most 2 decimals, which
+tests/test_money_cents.py checks on every lineitem table.
 """
 
 from __future__ import annotations
@@ -50,11 +52,7 @@ GROUP BY o.o_orderkey ORDER BY o.o_orderkey
 )
 def join_left_agg(spark, sf_dir):
     o = table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 500)
-    # manual semi-join reduction (guide §3.2): the join key equality
-    # means only l_orderkey < 500 rows can ever match, and the preserved
-    # left side is unaffected — the predicate pushes to parquet
-    # row-group stats and prunes most of the lineitem scan
-    l = table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 500)
+    l = table(spark, sf_dir, "lineitem")
     return (
         o.join(l, l["l_orderkey"] == o["o_orderkey"], "left")
         .groupBy("o_orderkey")
@@ -169,8 +167,8 @@ def groupby_flag_status(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n"),
             # Exact order-independent sum via integer cents: money
-            # columns are 2-decimal by construction (verified: zero
-            # violations across every sf), so floor(x*100 + 0.5) is the
+            # columns are 2-decimal by construction (checked on every
+            # sf by tests/test_money_cents.py), so floor(x*100 + 0.5) is the
             # exact cent count (no representable value sits near a .5
             # tie) and Σcents/100.0 is bit-identical to the
             # decimal(18,2) path — which paid a string-formatting

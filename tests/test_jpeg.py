@@ -1,6 +1,6 @@
 """Baseline JPEG codec (jpeg.py): grayscale + YCbCr color roundtrips,
-explicit capability boundary, and the Spark-side multimodal
-integration."""
+progressive identity, explicit capability boundary and the luminance
+feature extractor."""
 
 import numpy as np
 import pytest
@@ -226,20 +226,6 @@ def test_progressive_subsampled_identical_to_baseline(sampling):
     ).all()
 
 
-def test_progressive_feature_extractor_and_meta():
-    """A progressive payload flows through the same multimodal surface:
-    header sniff reports SOF2 dimensions, extractor decodes pixels."""
-    from datamart_spark.jpeg import encode_jpeg_progressive
-    from datamart_spark.multimodal import sniff_image
-
-    img = np.full((16, 16), 97, dtype=np.uint8)
-    p = encode_jpeg_progressive(img, qtable=ONES)
-    assert sniff_image(p) == ("jpeg", 16, 16)
-    f = jpeg_feature_extractor(8)(p)
-    assert f.shape == (8,) and abs(float(f.sum()) - 1.0) < 1e-6
-    assert int(np.argmax(f)) == 97 * 8 // 256
-
-
 def test_color_feature_extractor():
     """jpeg_feature_extractor handles color payloads (BT.601 luma)."""
     img = np.full((16, 16, 3), 0, dtype=np.uint8)
@@ -264,40 +250,6 @@ def test_byte_stuffing_roundtrip():
         assert dec.shape == (24, 40, 1)
         assert np.abs(dec[:, :, 0].astype(int) - img.astype(int)).max() <= 1
     assert saw_stuffing
-
-
-def test_sniff_image_agrees():
-    from datamart_spark.multimodal import sniff_image
-
-    img = _gradient(40, 56)
-    fmt, w, h = sniff_image(encode_jpeg_gray(img))
-    assert (fmt, w, h) == ("jpeg", 56, 40)
-
-
-def test_extract_image_features_jpeg_real(spark):
-    """multimodal.extract_image_features with the in-repo JPEG decoder:
-    the full Spark plumbing over real pixel decode (was the documented
-    stub boundary until round 3)."""
-    from datamart_spark.multimodal import extract_image_features
-
-    rows = []
-    for i in range(6):
-        img = np.full((16, 16), 10 + i * 40, dtype=np.uint8)
-        rows.append((i, bytearray(encode_jpeg_gray(img, qtable=ONES))))
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    feats = {
-        r["doc_id"]: r["features"]
-        for r in extract_image_features(
-            df, dim=8, extractor=jpeg_feature_extractor(8)
-        ).collect()
-    }
-    assert len(feats) == 6
-    for i in range(6):
-        v = np.array(feats[i])
-        assert v.shape == (8,) and abs(v.sum() - 1.0) < 1e-6
-        # a flat image's luminance histogram is a one-hot at its bin
-        assert v.max() == pytest.approx(1.0)
-        assert int(np.argmax(v)) == min(7, (10 + i * 40) * 8 // 256)
 
 
 def test_quant_table_roundtrips_in_header():

@@ -10,7 +10,9 @@ on must be visible in `explain`, not assumed.
   partial top-k), not a global Sort;
 - the query planner's merge follows the live spec count (one query:
   TakeOrderedAndProject, no Window), and only filtered queries
-  cogroup with doc_stats.
+  cogroup with doc_stats;
+- join_left_agg's lineitem scan carries the `l_orderkey < 500` filter
+  Catalyst infers from the join keys.
 """
 
 import pytest
@@ -158,6 +160,24 @@ def test_ann_bucket_probe_partition_pruned(spark):
     assert "PushedFilters: [IsNotNull(vec_id), Not(EqualTo(vec_id,7))]" in plan or (
         "vec_id" in plan
     ), plan
+
+
+@pytest.mark.skipif(
+    not __import__("os").path.isdir(_SF001), reason="TPC-H testdata absent"
+)
+def test_join_left_agg_lineitem_scan_pruned_by_inferred_filter(spark):
+    """join_left_agg filters only orders (o_orderkey < 500); Catalyst
+    infers l_orderkey < 500 for the right side of the LEFT join from
+    the join key equality and pushes it into the lineitem scan, so the
+    entry needs no hand-written copy of the predicate."""
+    from datamart_spark.suite.star import join_left_agg
+
+    plan = _plan(join_left_agg(spark, _SF001))
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "lineitem" in ln]
+    assert len(scans) == 1, plan
+    pushed = scans[0][scans[0].index("PushedFilters"):]
+    assert "LessThan(l_orderkey,500)" in pushed, plan
 
 
 def test_filtered_query_doc_stats_side_exchange_free(spark, catalog):

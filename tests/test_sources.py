@@ -17,7 +17,7 @@ from datamart_spark.sources import (
     sniff_delimiter,
     tsv_to_csv,
 )
-from datamart_spark.sources.formats import ConverterUnavailable, looks_pivoted
+from datamart_spark.sources.formats import looks_pivoted
 
 
 @pytest.fixture()
