@@ -73,6 +73,11 @@ from ..analyzer import analyze_series, extract_text_series
 from .catalog import IndexCatalog
 from .varbyte import vb_encode_with_sizes
 
+#: BM25 k1/b (ES 7.8.1 defaults).  The one engine definition: the
+#: baked qmax_tfn bound below and every query-time bound and score
+#: (query/, suite/) import these, so block pruning cannot drift from
+#: the build.  bm25_oracle.py keeps its own literals as the
+#: independent reference.
 K1 = 1.2
 B = 0.75
 BLOCK_SIZE = 128

@@ -73,8 +73,9 @@ class IndexCatalog:
         # re-creating spark.read.parquet(...) per query re-lists the
         # table's files and re-reads footers for schema inference —
         # pure per-query overhead for an immutable committed snapshot.
-        # Invalidated on every write/commit.
-        self._df_cache: dict[tuple[str, str, int], DataFrame] = {}
+        # Invalidated on every write/commit this instance makes; the
+        # key's committed_at catches commits made by other instances.
+        self._df_cache: dict[tuple[str, str, int, float], DataFrame] = {}
 
     # --- snapshot manifests --------------------------------------------
 
@@ -525,8 +526,12 @@ class IndexCatalog:
         if self.recover():
             self._df_cache.clear()
         snap = self.current_snapshot()
+        # committed_at, not just the sequence: drop() + rebuild restarts
+        # sequences at 1, and another instance on the same root must not
+        # serve the dropped index's file listing
         key = (spark.sparkContext.applicationId, name,
-               snap["sequence"] if snap else -1)
+               snap["sequence"] if snap else -1,
+               snap.get("committed_at", 0.0) if snap else 0.0)
         df = self._df_cache.get(key)
         if df is None:
             if len(self._df_cache) > 16:

@@ -29,10 +29,11 @@ Execution (wand._shard_kernel_job, the one skeleton):
   → groupBy shard [cogroup with the distinct filter contexts' doc-id
     sets, tagged by context id, when any spec is filtered]
   → per-shard kernel: score each spec over its term subset
-    (wand._topk_from_terms / phrase._phrase_topk_from_terms) with
-    per-term block-decode caches shared across specs — a posting
-    block is decoded at most once per shard no matter how many
-    queries touch its term
+    (wand._topk_from_terms / phrase._phrase_topk_from_terms) through
+    the one block decoder (wand._decode_blocks) and one per-term
+    decode cache shared by every spec, keyword and phrase alike — a
+    posting block's payloads decode at most once per shard no matter
+    how many queries touch its term
   → merge: one live spec is ``orderBy(score desc, doc_id asc).limit(k)``
     (TakeOrderedAndProject, no exchange); several take one per-query
     window over ≤ k·S·Q tiny local rows.
@@ -48,6 +49,7 @@ small scoring problems with shared immutable inputs.
 
 from __future__ import annotations
 
+from collections import defaultdict
 from typing import NamedTuple
 
 import pandas as pd
@@ -222,25 +224,21 @@ def _topk(spark: SparkSession, catalog, queries: list[dict], k: int) -> DataFram
     idfs, avgdl, tfn_ref = plan.idfs, plan.avgdl, plan.tfn_ref
 
     def kernel(by_term, fids_by_ctx) -> pd.DataFrame:
-        # per-term decode caches shared by every spec of the shard; the
-        # positional cache keys differ from the keyword ones, so the two
-        # kernels keep separate pools
-        caches: dict[str, dict] = {}
-        pos_caches: dict[str, dict] = {}
+        # one per-term decode pool (wand._decode_blocks) shared by every
+        # spec of the shard, keyword and positional alike
+        caches: dict[str, dict] = defaultdict(dict)
         parts = []
         for s in plan.specs:
             fids = fids_by_ctx[s.cid]
             if s.positional:
                 r = _phrase_topk_from_terms(by_term, fids, s.term_sets, s.idf_sum,
-                                            avgdl, k, s.slop, pos_caches)
+                                            avgdl, k, s.slop, caches)
             else:
                 sub = {ts[0]: by_term[ts[0]] for ts in s.term_sets if ts[0] in by_term}
                 if not sub:
                     continue
-                r = _topk_from_terms(
-                    sub, fids, idfs, avgdl, k, len(s.term_sets), s.or_mode, tfn_ref,
-                    {t: caches.setdefault(t, {}) for t in sub},
-                )
+                r = _topk_from_terms(sub, fids, idfs, avgdl, k, len(s.term_sets),
+                                     s.or_mode, tfn_ref, caches)
             if len(r):
                 r.insert(0, "query_id", s.query_id)
                 parts.append(r)

@@ -33,11 +33,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..analyzer import analyze_query
+from ..index.build import B, K1
 from ..index.catalog import IndexCatalog
 from ..index.varbyte import vb_decode, delta_decode
-
-K1 = 1.2
-B = 0.75
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -152,14 +150,9 @@ def _lookup_df(spark: SparkSession, catalog: IndexCatalog, terms: list[str]) -> 
         return {r["term"]: r["df"] for r in rows}
 
 
-def _filtered_doc_stats(
-    spark: SparkSession,
-    catalog: IndexCatalog,
-    lang: str | None,
-    ts_lo=None,
-    ts_hi=None,
-) -> DataFrame:
-    ds = catalog.read(spark, "doc_stats")
+def _filter_context(ds: DataFrame, lang: str | None, ts_lo, ts_hi) -> DataFrame:
+    """``ds`` (doc_stats columns) restricted to the non-scoring filter
+    context: ``lang`` equality and the inclusive warc_ts range."""
     if lang is not None:
         ds = ds.where(F.col("lang") == lang)
     if ts_lo is not None:
@@ -167,6 +160,16 @@ def _filtered_doc_stats(
     if ts_hi is not None:
         ds = ds.where(F.col("warc_ts") <= F.lit(ts_hi))
     return ds
+
+
+def _filtered_doc_stats(
+    spark: SparkSession,
+    catalog: IndexCatalog,
+    lang: str | None,
+    ts_lo=None,
+    ts_hi=None,
+) -> DataFrame:
+    return _filter_context(catalog.read(spark, "doc_stats"), lang, ts_lo, ts_hi)
 
 
 # Serving-side cache of the NARROW filter columns of doc_stats
@@ -228,13 +231,7 @@ def _filtered_doc_ids(
 ) -> DataFrame:
     """(shard, doc_id) of docs surviving the non-scoring filter context,
     served from the cached narrow doc_stats columns."""
-    ds = _cached_filter_stats(spark, catalog)
-    if lang is not None:
-        ds = ds.where(F.col("lang") == lang)
-    if ts_lo is not None:
-        ds = ds.where(F.col("warc_ts") >= F.lit(ts_lo))
-    if ts_hi is not None:
-        ds = ds.where(F.col("warc_ts") <= F.lit(ts_hi))
+    ds = _filter_context(_cached_filter_stats(spark, catalog), lang, ts_lo, ts_hi)
     return ds.select("shard", "doc_id")
 
 

@@ -35,8 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-K1 = 1.2
-B = 0.75
+from ..index.build import B, K1
 
 
 def _field_tokens(docs: DataFrame) -> DataFrame:

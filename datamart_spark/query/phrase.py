@@ -26,130 +26,43 @@ specs — and runs through the one shard-job skeleton
   → groupBy shard [cogroup with the filter doc-id sets when filtered]
   → per-shard kernel: AND-intersect candidates via block fences
     (rarest term drives), decode positions only for blocks that can
-    contain a candidate, vectorized adjacency join, local top-k
-    (``_phrase_topk_from_terms``) or the occurrences themselves
+    contain a candidate, the ordered chain, local top-k
+    (``_phrase_topk_from_terms``) or the chain's start offsets
     (``phrase_spans``)
   → global merge over ≤ k·S tiny rows.
 
-The adjacency join is numpy: for phrase position i, every candidate
-occurrence becomes a key ``local_doc·2^33 + (pos − i + m)``; the keys
-of position 0 are successively intersected (sorted searchsorted) with
-each later position's keys, and surviving keys bincount into per-doc
-phrase frequencies.  No per-row python anywhere (north rule §2.10).
-
-``slop > 0`` switches the kernel to ordered proximity
-(``_slop_matches``): per position-0 occurrence, a greedy vectorized
-next-offset chain finds the minimal in-order completion; matches with
-gap ≤ slop each contribute Lucene's 1/(gap+1) slop factor to the
-weighted phrase frequency.  This is span_near(in_order=true) — NOT
-ES match_phrase's sloppy mode, which also admits reordered terms
+One positional kernel (``_slop_matches``) serves every slop: per
+position-0 occurrence, a greedy vectorized next-offset chain finds the
+minimal in-order completion, and a start matches when its gap (extra
+tokens between first and last) is ≤ slop.  Each match contributes
+Lucene's 1/(gap+1) slop factor to the weighted phrase frequency.  An
+exact phrase is slop 0: gap 0 means every later term sits at the
+next offset, so the chain counts exactly the adjacent runs, with
+weight 1 each.  This is span_near(in_order=true) — NOT ES
+match_phrase's sloppy mode, which also admits reordered terms
 (transpositions cost 2); the in-order form is the documented choice
 because its greedy chain is provably minimal per start and stays one
-vectorized pass.
+vectorized pass.  Keys are ``local_doc·2^33 + pos`` int64s, so each
+chain step is one sorted searchsorted; no per-row python anywhere
+(north rule §2.10).
 """
 
 from __future__ import annotations
+
+from collections import defaultdict
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..analyzer import analyze_str
-from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import K1, B
-from .wand import _POSTING_COLS, _local_topk, _no_hits, _shard_kernel_job
+from ..index.build import B, K1
+from .wand import (
+    _POSTING_COLS, _decode_blocks, _local_topk, _no_hits, _shard_kernel_job,
+)
 
 #: the keyword scan columns plus the position payload
 _PHRASE_COLS = [*_POSTING_COLS, "pos_vb"]
-
-_Z = np.zeros(0, np.uint64)
-
-
-def _decode_blocks_pos(
-    rows: pd.DataFrame, candidates: np.ndarray | None, cache: dict,
-    want: int = 3,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one term's surviving blocks incl. positions.  Returns
-    (doc_ids, tfs, dls, flat_abs_positions, posting_pos_offsets) where
-    ``posting_pos_offsets`` has len(doc_ids)+1 and posting j's positions
-    are ``flat[off[j]:off[j+1]]`` (ascending within the posting).
-    ``want``: 1 = doc ids only (the candidate-intersection passes — the
-    position payload is the largest and must not be decoded there),
-    3 = everything.
-
-    ``cache`` (one dict per term, lossless per-block entries keyed
-    ("ids"|"full", block_id)) makes every block decode at most once per
-    shard-kernel no matter how many specs or passes touch it — the same
-    contract as the keyword kernels' wand decode cache.  Candidate
-    pruning only selects WHICH blocks decode; the per-block payload is
-    candidate-independent, so cached entries are exact."""
-    order = np.argsort(rows["block_id"].to_numpy())
-    bids = rows["block_id"].to_numpy()[order]
-    firsts = rows["first_doc_id"].to_numpy()[order]
-    lasts = rows["last_doc_id"].to_numpy()[order]
-    keep = np.ones(len(order), dtype=bool)
-    if candidates is not None:
-        if candidates.size == 0:
-            return _Z, _Z, _Z, _Z, np.zeros(1, np.int64)
-        left = np.searchsorted(candidates, firsts, side="left")
-        keep = (left < candidates.size) & (
-            candidates[np.minimum(left, candidates.size - 1)] <= lasts
-        )
-    dvb = rows["doc_ids_vb"].to_numpy()[order]
-    tvb = rows["tfs_vb"].to_numpy()[order]
-    lvb = rows["dls_vb"].to_numpy()[order]
-    pvb = rows["pos_vb"].to_numpy()[order]
-    d_parts, t_parts, l_parts, p_parts = [], [], [], []
-    for i in np.flatnonzero(keep):
-        bid = int(bids[i])
-        if want < 3:
-            hit = cache.get(("full", bid))
-            if hit is not None:
-                d_parts.append(hit[0])
-                continue
-            hit = cache.get(("ids", bid))
-            if hit is not None:
-                d_parts.append(hit)
-                continue
-            d = delta_decode(vb_decode(bytes(dvb[i])))
-            cache[("ids", bid)] = d
-            d_parts.append(d)
-            continue
-        hit = cache.get(("full", bid))
-        if hit is not None:
-            d_parts.append(hit[0])
-            t_parts.append(hit[1])
-            l_parts.append(hit[2])
-            p_parts.append(hit[3])
-            continue
-        d = delta_decode(vb_decode(bytes(dvb[i])))
-        tf = vb_decode(bytes(tvb[i]))
-        dl = vb_decode(bytes(lvb[i]))
-        # positions: per-posting delta streams concatenated; groupwise
-        # cumsum with a reset at each posting start recovers absolutes
-        deltas = vb_decode(bytes(pvb[i])).astype(np.int64)
-        counts = tf.astype(np.int64)
-        starts = np.zeros(counts.size, dtype=np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        run = np.cumsum(deltas)
-        correction = run[starts] - deltas[starts]
-        pos = run - np.repeat(correction, counts)
-        cache[("full", bid)] = (d, tf, dl, pos)
-        d_parts.append(d)
-        t_parts.append(tf)
-        l_parts.append(dl)
-        p_parts.append(pos)
-    if not d_parts:
-        return _Z, _Z, _Z, _Z, np.zeros(1, np.int64)
-    d = np.concatenate(d_parts)
-    if want < 3:
-        return d, _Z, _Z, _Z, np.zeros(1, np.int64)
-    tf = np.concatenate(t_parts)
-    dl = np.concatenate(l_parts)
-    flat = np.concatenate(p_parts)
-    off = np.zeros(d.size + 1, dtype=np.int64)
-    np.cumsum(tf.astype(np.int64), out=off[1:])
-    return d, tf, dl, flat, off
 
 
 def _ragged_gather(offsets: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -179,35 +92,22 @@ def _phrase_topk_from_terms(
 ) -> pd.DataFrame:
     """One positional query's top-k within one shard, over the shard's
     term → posting-rows map (the batch kernel's positional counterpart
-    of ``wand._topk_from_terms``; ``caches`` maps term → its per-block
-    decode cache, shared across the kernel's specs).
+    of ``wand._topk_from_terms``; ``caches`` maps term → its
+    ``_decode_blocks`` pool, shared with the kernel's keyword specs).
 
     ``term_sets[i]`` is the set of terms acceptable at phrase position
     i — singletons for an exact phrase, and the prefix's expansion set
     at the last position for match_phrase_prefix (the Lucene
     MultiPhraseQuery shape).  A document is a candidate iff for EVERY
-    position at least one of its terms is present; pf counts offsets p
-    where position i matches some term of set i at p+i.
-
-    ``slop > 0`` scores ordered proximity matches instead: pf becomes
-    the sum of 1/(gap+1) over position-0 occurrences whose greedy
-    in-order completion spans ≤ slop extra tokens (``_slop_matches``)."""
-    empty = _no_hits()
-    if slop > 0:
-        sm = _slop_matches(by_term, filter_ids, term_sets, slop, caches)
-        if sm is None:
-            return empty
-        cand, dl_cand, doc_local, weights = sm
-        pf = np.bincount(doc_local, weights=weights, minlength=cand.size)
-    else:
-        occ = _phrase_occurrences(by_term, filter_ids, term_sets, caches)
-        if occ is None:
-            return empty
-        cand, dl_cand, running = occ
-        pf = np.bincount(
-            running >> 33, minlength=cand.size
-        ).astype(np.float64)
-
+    position at least one of its terms is present.  pf is the sum of
+    1/(gap+1) over the chain's matches (``_slop_matches``): at slop 0,
+    the number of offsets p where position i matches some term of set
+    i at p+i."""
+    sm = _slop_matches(by_term, filter_ids, term_sets, slop, caches)
+    if sm is None:
+        return _no_hits()
+    cand, dl_cand, start, gap = sm
+    pf = np.bincount(start >> 33, weights=1.0 / (gap + 1.0), minlength=cand.size)
     hit = pf > 0
     pfh = pf[hit]
     norm = K1 * (1.0 - B + B * dl_cand[hit] / avgdl)
@@ -222,13 +122,13 @@ def _gather_positions(
     caches: dict[str, dict],
 ) -> tuple[np.ndarray, np.ndarray, list[list[str]],
            dict[str, tuple[np.ndarray, np.ndarray]]] | None:
-    """Shared front half of every positional-sequence kernel: candidate
-    docs (present in EVERY position's term set, post-filter) plus the
-    decoded (local_doc, position) pairs of each surviving term.
-    Returns (cand, dl_cand, present_sets, keys_of) or None when the
-    shard cannot match.  ``caches`` maps term → its per-block decode
-    cache (shared across the batch kernel's specs AND across this
-    call's own ids-then-full passes)."""
+    """Front half of the positional kernel: candidate docs (present in
+    EVERY position's term set, post-filter) plus the decoded
+    (local_doc, position) pairs of each surviving term.  Returns
+    (cand, dl_cand, present_sets, keys_of) or None when the shard
+    cannot match.  The intersection passes read only the blocks'
+    doc-id/tf/doclen payloads; positions decode afterwards, and only
+    for blocks whose fence holds a surviving candidate."""
     if filter_ids is not None and filter_ids.size == 0:
         return None
     # per position: the subset of its terms present in this shard
@@ -239,14 +139,8 @@ def _gather_positions(
             return None  # no acceptable term for this position here
         present_sets.append(here)
 
-    def tcache(t: str) -> dict:
-        return caches.setdefault(t, {})
-
     def union_docs(ts: list[str], cand: np.ndarray | None) -> np.ndarray:
-        parts = [
-            _decode_blocks_pos(by_term[t], cand, tcache(t), want=1)[0]
-            for t in ts
-        ]
+        parts = [_decode_blocks(by_term[t], cand, caches[t])[0] for t in ts]
         if len(parts) == 1:
             return parts[0]
         return np.unique(np.concatenate(parts))
@@ -270,61 +164,19 @@ def _gather_positions(
     keys_of: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     dl_cand = np.zeros(cand.size, dtype=np.float64)
     for t in {t for ts in present_sets for t in ts}:
-        d, tf, dl, flat, off = _decode_blocks_pos(by_term[t], cand, tcache(t))
+        d, tf, dl, flat = _decode_blocks(by_term[t], cand, caches[t],
+                                         positions=True)
         loc = np.searchsorted(d, cand)
         loc_c = np.minimum(loc, max(d.size - 1, 0))
         has = d[loc_c] == cand if d.size else np.zeros(cand.size, bool)
         dl_cand[has] = dl[loc_c[has]].astype(np.float64)
         sel = loc_c[has]
-        counts = tf[sel].astype(np.int64)
-        idx = _ragged_gather(off[sel], counts)
-        pos = flat[idx]
-        doc_local = np.repeat(
-            np.flatnonzero(has).astype(np.int64), counts
-        )
-        keys_of[t] = (doc_local, pos)
+        tf64 = tf.astype(np.int64)
+        counts = tf64[sel]
+        idx = _ragged_gather((np.cumsum(tf64) - tf64)[sel], counts)
+        doc_local = np.repeat(np.flatnonzero(has).astype(np.int64), counts)
+        keys_of[t] = (doc_local, flat[idx])
     return cand, dl_cand, present_sets, keys_of
-
-
-def _phrase_occurrences(
-    by_term: dict[str, pd.DataFrame],
-    filter_ids: np.ndarray | None,
-    term_sets: list[list[str]],
-    caches: dict[str, dict],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """Candidate docs + phrase-occurrence keys of one shard.  Returns
-    (cand, dl_cand, running) where ``running`` holds one int64 key
-    ``local_doc·2^33 + (start_pos + m)`` per phrase occurrence, or
-    ``None`` when the shard cannot match."""
-    g = _gather_positions(by_term, filter_ids, term_sets, caches)
-    if g is None:
-        return None
-    cand, dl_cand, present_sets, keys_of = g
-    m = len(term_sets)
-
-    def position_keys(i: int) -> np.ndarray:
-        parts = []
-        for t in present_sets[i]:
-            doc_t, pos_t = keys_of[t]
-            parts.append(doc_t * (1 << 33) + (pos_t - i + m))
-        if len(parts) == 1:
-            return parts[0]  # already sorted (docs asc, pos asc)
-        return np.sort(np.concatenate(parts))  # one token per offset ⇒ unique
-
-    # 3. adjacency: intersect key sets shifted by phrase position
-    running = position_keys(0)
-    for i in range(1, m):
-        if running.size == 0:
-            return None
-        keys_i = position_keys(i)
-        loc = np.searchsorted(keys_i, running)
-        loc_c = np.minimum(loc, max(keys_i.size - 1, 0))
-        running = (
-            running[keys_i[loc_c] == running] if keys_i.size else running[:0]
-        )
-    if running.size == 0:
-        return None
-    return cand, dl_cand, running
 
 
 def _slop_matches(
@@ -334,20 +186,23 @@ def _slop_matches(
     slop: int,
     caches: dict[str, dict],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray] | None:
-    """Ordered proximity matches (span_near, in_order=true): for each
-    occurrence of a position-0 term, later positions greedily take
+    """The one positional kernel — ordered proximity matches
+    (span_near, in_order=true), with the exact phrase as slop 0: for
+    each occurrence of a position-0 term, later positions greedily take
     their SMALLEST matching offset strictly after the previous one —
     optimal for a fixed start (exchange argument: the greedy next
     offset minimizes the final span), so a start matches iff ANY
-    in-order completion has gap = span − (m−1) ≤ slop.  Each match
-    weighs 1/(gap+1) — Lucene's SloppyPhraseScorer slop factor — and
-    slop=0 degenerates to the exact-phrase count.  Returns
-    (cand, dl_cand, doc_local, weights) or None."""
+    in-order completion has gap = span − (m−1) ≤ slop.  A start is
+    dropped as soon as its partial gap (next − start) − i exceeds
+    slop: the gap only grows along the chain, so this is exact, and at
+    slop 0 each step keeps only adjacent continuations, the same work
+    as an adjacency join.  Returns (cand, dl_cand, start, gap) — one
+    ``local_doc·2^33 + pos`` start key and one gap per match, starts
+    ascending — or None."""
     g = _gather_positions(by_term, filter_ids, term_sets, caches)
     if g is None:
         return None
     cand, dl_cand, present_sets, keys_of = g
-    m = len(term_sets)
 
     def raw_keys(i: int) -> np.ndarray:
         parts = []
@@ -360,7 +215,7 @@ def _slop_matches(
 
     cur = raw_keys(0)
     start = cur
-    for i in range(1, m):
+    for i in range(1, len(term_sets)):
         if cur.size == 0:
             return None
         keys_i = raw_keys(i)
@@ -372,20 +227,11 @@ def _slop_matches(
         ok = idx < keys_i.size
         nxt = keys_i[np.minimum(idx, keys_i.size - 1)]
         ok &= (nxt >> 33) == (cur >> 33)
+        ok &= (nxt - start) - i <= slop  # same doc: key gap = offset gap
         cur, start = nxt[ok], start[ok]
     if cur.size == 0:
         return None
-    mask = (1 << 33) - 1
-    gap = (cur & mask) - (start & mask) - (m - 1)
-    keep = gap <= slop
-    if not keep.any():
-        return None
-    return (
-        cand,
-        dl_cand,
-        (start[keep] >> 33),
-        1.0 / (gap[keep].astype(np.float64) + 1.0),
-    )
+    return cand, dl_cand, start, cur - start - (len(term_sets) - 1)
 
 
 def bm25_phrase_topk(
@@ -433,9 +279,9 @@ def phrase_spans(
     ``pos`` the 0-based token offset of the phrase's first term — the
     passage-extraction primitive a training-data pipeline needs
     (retrieve matching windows, not just ranked doc ids).  Same plan
-    and scan as ``bm25_phrase_topk``; the shard kernel emits the
-    adjacency join's surviving start offsets instead of folding them
-    into phrase frequencies."""
+    and scan as ``bm25_phrase_topk``; the shard kernel emits the slop-0
+    chain's start offsets instead of folding them into phrase
+    frequencies."""
     spans, _, _ = _phrase_spans_df(spark, catalog, phrase, lang, ts_lo, ts_hi)
     return spans.orderBy("doc_id", "pos")
 
@@ -460,20 +306,18 @@ def _phrase_spans_df(
     if not plan.specs:
         return spark.createDataFrame([], _SPANS_SCHEMA), plan.tokenizer, 0
     spec = plan.specs[0]
-    term_sets = spec.term_sets
-    m = len(term_sets)
-    mask = (1 << 33) - 1
+    m = len(spec.term_sets)
 
     def emit(by_term, fids_by_ctx) -> pd.DataFrame:
-        occ = _phrase_occurrences(by_term, fids_by_ctx[spec.cid], term_sets,
-                                  caches={})
-        if occ is None:
+        sm = _slop_matches(by_term, fids_by_ctx[spec.cid], spec.term_sets, 0,
+                           defaultdict(dict))
+        if sm is None:
             return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                                  "pos": pd.Series([], dtype="int32")})
-        cand, _, running = occ
+        cand, _, start, _ = sm
         return pd.DataFrame({
-            "doc_id": cand[(running >> 33)].astype(np.int64),
-            "pos": ((running & mask) - m).astype(np.int32),
+            "doc_id": cand[start >> 33].astype(np.int64),
+            "pos": (start & ((1 << 33) - 1)).astype(np.int32),
         })
 
     spans = _shard_kernel_job(

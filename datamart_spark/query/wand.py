@@ -4,7 +4,10 @@ skeleton every query runs through.
 Layout recap (index/build.py): postings are doc-range sharded; within a
 (term, shard) group, fixed 128-entry varbyte blocks carry
 (first_doc_id, last_doc_id, max_tf, min_dl, qmax_tfn) skip metadata and
-three varbyte payloads: delta doc_ids, tfs, and per-posting doclens.
+three varbyte payloads: delta doc_ids, tfs, and per-posting doclens
+(plus per-posting token positions on a positional index).
+``_decode_blocks`` is the one block decoder: every kernel, keyword or
+positional, reads blocks through it and its per-term cache.
 Carrying doclen IN the posting block (the classic impact-ordered /
 Lucene-norms layout) means scoring never needs the doc_stats table:
 an unfiltered query is ONE grouped scan of the query terms' blocks —
@@ -58,8 +61,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..index.build import B, K1
 from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import K1, B, _filtered_doc_ids
+from .bm25 import _filtered_doc_ids
 
 _POSTING_COLS = [
     "shard", "term", "block_id", "n", "first_doc_id", "last_doc_id",
@@ -68,6 +72,9 @@ _POSTING_COLS = [
 
 
 _Z = np.zeros(0, np.uint64)
+#: positions decode to int64 (the chain's doc·2^33+pos keys); an empty
+#: uint64 here would promote those keys to float64
+_ZPOS = np.zeros(0, np.int64)
 
 
 def _no_hits() -> pd.DataFrame:
@@ -75,49 +82,65 @@ def _no_hits() -> pd.DataFrame:
                          "score": pd.Series([], dtype="float64")})
 
 
-def _decode_term_blocks(
+def _decode_blocks(
     rows: pd.DataFrame,
     candidates: np.ndarray | None,
     cache: dict,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    positions: bool = False,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray | None]:
     """Decode one term's blocks within a shard, skipping blocks whose
     [first_doc_id, last_doc_id] fence misses the candidate set.
-    Returns (doc_ids, tfs, doclens).
+    Returns (doc_ids, tfs, doclens, positions).  ``positions`` is None
+    unless asked for; then it holds every posting's absolute token
+    offsets, ascending within the posting, concatenated in posting
+    order (posting j owns the tfs[j] offsets after Σ tfs[:j]).
 
-    ``cache`` (block_id → decoded triple) shares decode work across
-    the passes of one query and across the queries of a batch: a
-    block decodes at most once per shard kernel.  Entries always hold
-    all three payloads, so one decode serves every later pass."""
+    ``cache`` is the term's one decode pool in a shard kernel:
+    block_id → [doc_ids, tfs, doclens, positions-or-None].  Every
+    keyword and positional pass of every query of the kernel reads it,
+    so each payload of a block decodes at most once per shard.  The
+    position payload, the largest, decodes only when a positional pass
+    asks for it.  Candidate pruning only selects WHICH blocks decode;
+    the per-block payloads are candidate-independent, so entries are
+    exact."""
     order = np.argsort(rows["block_id"].to_numpy())
     firsts = rows["first_doc_id"].to_numpy()[order]
     lasts = rows["last_doc_id"].to_numpy()[order]
     keep = np.ones(len(order), dtype=bool)
     if candidates is not None:
         if candidates.size == 0:
-            return _Z, _Z, _Z
+            return _Z, _Z, _Z, (_ZPOS if positions else None)
         # block survives iff any candidate falls inside its fence
         left = np.searchsorted(candidates, firsts, side="left")
         keep = (left < candidates.size) & (candidates[np.minimum(left, candidates.size - 1)] <= lasts)
-    d_parts, t_parts, l_parts = [], [], []
     bids = rows["block_id"].to_numpy()[order]
     dvb = rows["doc_ids_vb"].to_numpy()[order]
     tvb = rows["tfs_vb"].to_numpy()[order]
     lvb = rows["dls_vb"].to_numpy()[order]
+    pvb = rows["pos_vb"].to_numpy()[order] if positions else None
+    entries = []
     for i in np.flatnonzero(keep):
-        trip = cache.get(bids[i])
-        if trip is None:
-            trip = (
+        e = cache.get(bids[i])
+        if e is None:
+            e = cache[bids[i]] = [
                 delta_decode(vb_decode(bytes(dvb[i]))),
                 vb_decode(bytes(tvb[i])),
                 vb_decode(bytes(lvb[i])),
-            )
-            cache[bids[i]] = trip
-        d_parts.append(trip[0])
-        t_parts.append(trip[1])
-        l_parts.append(trip[2])
-    if not d_parts:
-        return _Z, _Z, _Z
-    return np.concatenate(d_parts), np.concatenate(t_parts), np.concatenate(l_parts)
+                None,
+            ]
+        if positions and e[3] is None:
+            # per-posting delta streams concatenated; a groupwise cumsum
+            # with a reset at each posting start recovers absolutes
+            deltas = vb_decode(bytes(pvb[i])).astype(np.int64)
+            counts = e[1].astype(np.int64)
+            starts = np.cumsum(counts) - counts
+            run = np.cumsum(deltas)
+            e[3] = run - np.repeat(run[starts] - deltas[starts], counts)
+        entries.append(e)
+    if not entries:
+        return _Z, _Z, _Z, (_ZPOS if positions else None)
+    d, tf, dl = (np.concatenate([e[j] for e in entries]) for j in range(3))
+    return d, tf, dl, (np.concatenate([e[3] for e in entries]) if positions else None)
 
 
 def _topk_from_terms(
@@ -134,8 +157,8 @@ def _topk_from_terms(
     """One keyword query's top-k within one shard, over the query's
     term → posting-rows map.  ``filter_ids``: sorted doc_ids surviving
     the non-scoring filter context, or None = unfiltered.  ``caches``
-    maps each term to its per-block decode cache, shared by every
-    query of the shard kernel (query/batch.py)."""
+    maps each term to its ``_decode_blocks`` pool, shared by every
+    keyword and phrase spec of the shard kernel (query/batch.py)."""
     empty = _no_hits()
     if filter_ids is not None and filter_ids.size == 0:
         return empty
@@ -150,15 +173,14 @@ def _topk_from_terms(
 
     # AND mode: drive from rarest term (fewest posting entries in shard)
     term_order = sorted(by_term, key=lambda t: int(by_term[t]["n"].sum()))
-    cand, _, _ = _decode_term_blocks(by_term[term_order[0]], None,
-                                     caches[term_order[0]])
+    cand = _decode_blocks(by_term[term_order[0]], None, caches[term_order[0]])[0]
     if filter_ids is not None:
         cand = cand[np.isin(cand, filter_ids)]
     tf_by_term: dict[str, np.ndarray] = {}
     for t in term_order[1:]:
         if cand.size == 0:
             return empty
-        d, tf, _ = _decode_term_blocks(by_term[t], cand, caches[t])
+        d, tf, _, _ = _decode_blocks(by_term[t], cand, caches[t])
         mask = np.isin(cand, d)
         cand = cand[mask]
         if cand.size == 0:
@@ -171,8 +193,8 @@ def _topk_from_terms(
                 tf_by_term[t2] = tf_by_term[t2][mask]
     # tf + doclen of driver term for surviving candidates (doclen rides
     # in every term's blocks; any one term supplies it)
-    d0, tf0, dl0 = _decode_term_blocks(by_term[term_order[0]], cand,
-                                       caches[term_order[0]])
+    d0, tf0, dl0, _ = _decode_blocks(by_term[term_order[0]], cand,
+                                     caches[term_order[0]])
     sel0 = np.searchsorted(d0, cand)
     tf_by_term[term_order[0]] = tf0[sel0]
 
@@ -194,7 +216,7 @@ def _score_docs(cand, by_term, idfs, avgdl, caches):
     have_dl = np.zeros(cand.size, dtype=bool)
     contrib = []
     for t, rows in by_term.items():
-        d, tf, dls = _decode_term_blocks(rows, cand, caches[t])
+        d, tf, dls, _ = _decode_blocks(rows, cand, caches[t])
         if d.size == 0:
             continue
         pos = np.searchsorted(d, cand)
@@ -253,8 +275,7 @@ def _shard_topk_or(
     seed_parts = []
     for t, rows in by_term.items():
         order = np.argsort(-ubs[t])
-        d, _, _ = _decode_term_blocks(rows.iloc[order[:n_seed]], None, caches[t])
-        seed_parts.append(d)
+        seed_parts.append(_decode_blocks(rows.iloc[order[:n_seed]], None, caches[t])[0])
     seed_docs = np.unique(np.concatenate(seed_parts))
     if filter_ids is not None:
         seed_docs = seed_docs[np.isin(seed_docs, filter_ids)]
@@ -272,8 +293,7 @@ def _shard_topk_or(
         if not keep.any():
             continue
         kept = rows[pd.Series(keep, index=rows.index)]
-        d, _, _ = _decode_term_blocks(kept, None, caches[t])
-        cand_parts.append(d)
+        cand_parts.append(_decode_blocks(kept, None, caches[t])[0])
     cand = np.unique(np.concatenate(cand_parts)) if cand_parts else np.zeros(0, np.uint64)
     if filter_ids is not None:
         cand = cand[np.isin(cand, filter_ids)]

@@ -17,10 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..index.build import B, K1
 from . import corpus_cache_root, corpus_fingerprint, register, table
-
-K1 = 1.2
-B = 0.75
 
 _TOK_SQL = (
     "SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\\W+'),"
@@ -584,7 +582,7 @@ ORDER BY score DESC, doc_id ASC LIMIT {k}
 def bm25_phrase_indexed(spark, sf_dir):
     """Exact-phrase top-k through the positional block-max path
     (positions carried as a fourth varbyte payload per posting block;
-    query/phrase.py adjacency kernel).  Beyond-reference surface: the
+    query/phrase.py ordered chain at slop 0).  Beyond-reference surface: the
     reference's ES layer exposes only multi_match AND/OR.  Same
     rounded-ordering margin discipline as ``_indexed_topk``."""
     from ..query.phrase import bm25_phrase_topk
@@ -608,7 +606,8 @@ def bm25_phrase_indexed(spark, sf_dir):
 
 def _phrase_slop_sql(terms: list[str], slop: int, k: int = 10) -> str:
     """Ordered-proximity (span_near in_order=true) scoring in ANSI SQL,
-    mirroring query/phrase.py ``_slop_matches`` exactly: per position-0
+    mirroring query/phrase.py ``_slop_matches`` (the one positional
+    kernel, exact phrase = slop 0) exactly: per position-0
     occurrence, each later position takes its SMALLEST ordinal strictly
     after the previous one (a chain of min-aggregating joins — greedy is
     optimal for a fixed start, so the start matches iff the greedy
@@ -658,8 +657,9 @@ ORDER BY score DESC, doc_id ASC LIMIT {k}
 def bm25_phrase_slop(spark, sf_dir):
     """Ordered proximity search: 'scan sort key' within slop 4
     (span_near in_order=true, 1/(gap+1) weighting).  The exact phrase
-    matches ZERO documents at every test SF — the slop kernel
-    (query/phrase.py _slop_matches greedy chain) does all the work, and
+    matches ZERO documents at every test SF — every match has gap > 0,
+    so the 1/(gap+1) weighting of the greedy chain (query/phrase.py
+    _slop_matches) does all the work, and
     the m=3 chain exercises the iterated next-offset step.  Same margin
     discipline as ``_indexed_topk``."""
     from ..query.phrase import bm25_phrase_topk
@@ -771,8 +771,9 @@ ORDER BY t0.doc_id, pos
 def phrase_spans_entry(spark, sf_dir):
     """Passage extraction: every occurrence of the phrase as
     (doc_id, 0-based token offset) — the retrieve-matching-windows
-    primitive of a training-data pipeline, served from the positional
-    index's adjacency kernel (query/phrase.py phrase_spans)."""
+    primitive of a training-data pipeline, served from the start
+    offsets of the positional kernel's slop-0 chain (query/phrase.py
+    phrase_spans)."""
     from ..query.phrase import phrase_spans
 
     cat = _suite_catalog(spark, sf_dir)

@@ -35,9 +35,9 @@ def _toks(text):
     return re.findall(r"\w+", text.lower())
 
 
-def _vocab_prefix(prefix, max_expansions=50):
+def _vocab_prefix(prefix, max_expansions=50, docs=DOCS):
     """The lexicographically-first fixture terms extending ``prefix``."""
-    vocab = sorted({t for _, text, _ in DOCS for t in _toks(text)})
+    vocab = sorted({t for _, text, _ in docs for t in _toks(text)})
     return [t for t in vocab if t.startswith(prefix)][:max_expansions]
 
 
@@ -193,15 +193,15 @@ def test_growth_preserves_positions(spark, tmp_path):
     )
 
 
-def _brute_prefix(phrase, k=10, max_expansions=50):
+def _brute_prefix(phrase, k=10, max_expansions=50, docs=DOCS):
     """match_phrase_prefix oracle: last token expands to the
     lexicographically-first terms with that prefix; idf sums fixed
     positions + every expansion (Lucene MultiPhraseWeight)."""
     toks_q = phrase.split()
     fixed, prefix = toks_q[:-1], toks_q[-1]
-    n = len(DOCS)
-    toks = {d: _toks(t) for d, t, _ in DOCS}
-    exp = _vocab_prefix(prefix, max_expansions)
+    n = len(docs)
+    toks = {d: _toks(t) for d, t, _ in docs}
+    exp = _vocab_prefix(prefix, max_expansions, docs)
     if not exp:
         return []
     df = {
@@ -217,7 +217,7 @@ def _brute_prefix(phrase, k=10, max_expansions=50):
     avgdl = sum(len(v) for v in toks.values()) / n
     m = len(fixed)
     out = []
-    for d, _, _ in DOCS:
+    for d, _, _ in docs:
         tk = toks[d]
         pf = sum(
             1
@@ -324,6 +324,69 @@ def test_phrase_spans_filtered_and_empty(spark, pos_catalog):
     assert phrase_spans(spark, pos_catalog, "zzznotaword").count() == 0
 
 
+def test_keyword_and_phrase_kernels_share_one_decode_pool(pos_catalog, monkeypatch):
+    """No Spark job: the keyword kernel and then the phrase kernel run
+    over one shard's postings with ONE decode-cache dict.  No block
+    payload (doc ids, tfs, doclens, positions) decodes twice and every
+    doc-id payload decodes, so each decodes exactly once; sharing the
+    pool changes no result."""
+    from collections import Counter, defaultdict
+
+    import pyarrow.parquet as pq
+
+    from datamart_spark.query import phrase as phrase_mod
+    from datamart_spark.query import wand
+
+    terms = ["hash", "join"]
+    snap = pos_catalog.current_snapshot()
+    avgdl, tfn_ref = snap["avgdl"], snap["tfn_ref_avgdl"]
+    idfs = {t: 1.0 for t in terms}
+    postings = pq.read_table(
+        pos_catalog.table_path("postings"), filters=[("term", "in", terms)]
+    ).to_pandas()
+
+    calls = []
+    real = wand.vb_decode
+
+    def counting(buf):
+        calls.append(bytes(buf))
+        return real(buf)
+
+    # every query-layer module that binds its own vb_decode
+    for mod in (wand, phrase_mod):
+        if hasattr(mod, "vb_decode"):
+            monkeypatch.setattr(mod, "vb_decode", counting)
+
+    def keyword(by_term, caches):
+        return wand._topk_from_terms(by_term, None, idfs, avgdl, 10, len(terms),
+                                     False, tfn_ref, caches)
+
+    def phrase(by_term, caches):
+        return phrase_mod._phrase_topk_from_terms(
+            by_term, None, [[t] for t in terms], 2.0, avgdl, 10, 0, caches)
+
+    shards_run = 0
+    for _, rows in postings.groupby("shard", observed=True):
+        by_term = dict(tuple(rows.groupby("term", sort=False)))
+        if len(by_term) < len(terms):
+            continue
+        calls.clear()
+        shared = defaultdict(dict)
+        kw, ph = keyword(by_term, shared), phrase(by_term, shared)
+        assert len(kw) and len(ph)
+        payloads = Counter(
+            bytes(b) for c in ("doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb")
+            for b in rows[c]
+        )
+        assert not Counter(calls) - payloads, "a block payload decoded twice"
+        for b in rows["doc_ids_vb"]:
+            assert bytes(b) in calls
+        pd.testing.assert_frame_equal(kw, keyword(by_term, defaultdict(dict)))
+        pd.testing.assert_frame_equal(ph, phrase(by_term, defaultdict(dict)))
+        shards_run += 1
+    assert shards_run
+
+
 def test_batch_with_phrase_specs(spark, pos_catalog):
     """A heterogeneous batch mixing keyword AND/OR, exact-phrase,
     phrase-prefix and a lang-filtered phrase is rank-identical to the
@@ -393,14 +456,14 @@ def test_stemmed_phrase(spark, tmp_path):
 # --- ordered proximity (slop > 0) --------------------------------------------
 
 
-def _brute_slop(term_sets, idf_terms, slop, k=10, lang=None):
+def _brute_slop(term_sets, idf_terms, slop, k=10, lang=None, docs=DOCS):
     """span_near(in_order=true) oracle: per position-0 occurrence, the
     greedy smallest next offset per later position; matched iff the
     completion's gap = span − (m−1) ≤ slop, each match weighing
     1/(gap+1) into pf (Lucene SloppyPhraseScorer slop factor).
     ``term_sets[i]``: acceptable terms at position i."""
-    n = len(DOCS)
-    toks = {d: _toks(t) for d, t, _ in DOCS}
+    n = len(docs)
+    toks = {d: _toks(t) for d, t, _ in docs}
     df = {
         t: sum(1 for d in toks if t in toks[d])
         for t in {t for ts in term_sets for t in ts} | set(idf_terms)
@@ -415,7 +478,7 @@ def _brute_slop(term_sets, idf_terms, slop, k=10, lang=None):
     avgdl = sum(len(v) for v in toks.values()) / n
     m = len(term_sets)
     out = []
-    for d, text, dl_lang in DOCS:
+    for d, text, dl_lang in docs:
         if lang is not None and dl_lang != lang:
             continue
         tk = toks[d]
@@ -529,6 +592,38 @@ def test_prefix_with_slop_matches_bruteforce(spark, pos_catalog):
         [s for _, s in got], [s for _, s in exp], rtol=1e-9
     )
 
+
+@pytest.mark.parametrize("slop", [0, 2])
+def test_phrase_prefix_expansion_fenced_out_of_candidates(spark, tmp_path, slop):
+    """An expansion term present in the shard whose every block fence
+    misses the candidates decodes to no positions; those must stay
+    int64 so the chain's doc·2^33+pos keys are not promoted to float.
+    One shard: 'hash jo' expands to join and jotted, and jotted's fence
+    [2, 2] misses the hash∧jo* candidate doc 0."""
+    from datamart_spark.query import bm25_phrase_prefix_topk
+
+    docs = [(0, "hash join", "en"), (1, "x", "en"), (2, "jotted", "en")]
+    cat = IndexCatalog(str(tmp_path / "cat"))
+    build_index(
+        spark.createDataFrame(docs, "doc_id long, text string, lang string"),
+        cat, n_shards=1, stemming=False, resume=False, n_docs=len(docs),
+        positions=True,
+    )
+    got = [
+        (r["doc_id"], r["score"])
+        for r in bm25_phrase_prefix_topk(spark, cat, "hash jo", slop=slop).collect()
+    ]
+    exp_terms = _vocab_prefix("jo", docs=docs)
+    assert exp_terms == ["join", "jotted"]
+    exp = _brute_slop([["hash"], exp_terms], ["hash"] + exp_terms, slop,
+                      docs=docs)
+    if slop == 0:
+        assert exp == _brute_prefix("hash jo", docs=docs)
+    assert [d for d, _ in exp] == [0]
+    assert [d for d, _ in got] == [d for d, _ in exp]
+    np.testing.assert_allclose(
+        [s for _, s in got], [s for _, s in exp], rtol=1e-9
+    )
 
 def test_batch_slop_rank_identical(spark, pos_catalog):
     """A batch mixing exact, sloppy and filtered-sloppy phrase specs is

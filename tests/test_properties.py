@@ -93,58 +93,6 @@ def test_lazo_estimate_bounds(slots, card_l, card_r):
     assert est_same >= est or np.isclose(est_same, est)
 
 
-# --- codec properties (JPEG baseline/progressive, PNG parity not needed) ------
-
-
-@given(
-    st.integers(min_value=1, max_value=40),
-    st.integers(min_value=1, max_value=40),
-    st.integers(min_value=0, max_value=2**32 - 1),
-    st.sampled_from([0, 1, 2, 5]),
-)
-@settings(max_examples=25, deadline=None)
-def test_jpeg_gray_roundtrip_bound(h, w, seed, restart):
-    """Any image, any shape, any restart interval: all-ones quantization
-    roundtrips within ±1 grey level; restarted streams decode exactly
-    like unrestarted ones."""
-    from datamart_spark.jpeg import decode_jpeg, encode_jpeg_gray
-
-    img = np.random.default_rng(seed).integers(0, 256, (h, w), dtype=np.uint8)
-    ones = np.ones((8, 8))
-    base = decode_jpeg(encode_jpeg_gray(img, qtable=ones))
-    assert base.shape == (h, w, 1)
-    assert np.abs(base[:, :, 0].astype(int) - img.astype(int)).max() <= 1
-    if restart:
-        ri = decode_jpeg(encode_jpeg_gray(img, qtable=ones,
-                                          restart_interval=restart))
-        assert (ri == base).all()
-
-
-@given(
-    st.integers(min_value=1, max_value=33),
-    st.integers(min_value=1, max_value=33),
-    st.integers(min_value=0, max_value=2**32 - 1),
-    st.sampled_from([(1, 1), (2, 2), (2, 1)]),
-)
-@settings(max_examples=20, deadline=None)
-def test_jpeg_progressive_identity_property(h, w, seed, sampling):
-    """For EVERY image/shape/sampling: progressive transport decodes
-    bit-identically to baseline at the same quantization."""
-    from datamart_spark.jpeg import (
-        decode_jpeg, encode_jpeg_color, encode_jpeg_progressive,
-    )
-
-    img = np.random.default_rng(seed).integers(
-        0, 256, (h, w, 3), dtype=np.uint8
-    )
-    ones = np.ones((8, 8))
-    base = decode_jpeg(encode_jpeg_color(img, sampling=sampling,
-                                         luma_q=ones, chroma_q=ones))
-    prog = decode_jpeg(encode_jpeg_progressive(img, qtable=ones,
-                                               sampling=sampling))
-    assert (base == prog).all()
-
-
 @given(
     st.lists(
         st.tuples(

@@ -67,6 +67,31 @@ def test_search_facade(spark, tmp_path):
     assert all(r["lang"] == "de" for r in res_de)
 
 
+def test_reader_instance_serves_rebuilt_index_after_drop(spark, tmp_path):
+    """drop() + rebuild restarts snapshot sequences at 1.  A second
+    catalog instance on the same root that already served a search
+    must answer from the rebuilt index, not from the dropped index's
+    memoized file listing."""
+    root = str(tmp_path / "rebuilt")
+    writer, reader = IndexCatalog(root), IndexCatalog(root)
+
+    def build(rows):
+        docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+        build_index(docs, writer, n_shards=2, stemming=False, resume=False,
+                    n_docs=len(rows))
+
+    build([(0, "alpha beta", "en"), (1, "alpha gamma", "en")])
+    assert [r["doc_id"] for r in search(spark, reader, "alpha").collect()] == [0, 1]
+
+    writer.drop()
+    build([(0, "delta", "en"), (1, "epsilon omega", "en"),
+           (2, "omega zeta", "en"), (3, "omega", "de")])
+    assert reader.current_snapshot()["sequence"] == 1
+    got = search(spark, reader, "omega", lang="en").collect()
+    assert sorted(r["doc_id"] for r in got) == [1, 2]
+    assert search(spark, reader, "alpha").collect() == []
+
+
 def test_resume_after_corpus_growth(spark, tmp_path):
     """ADVICE (r1, medium): a resumed build over a GROWN corpus must
     index the delta — including new docs that extend the committed
