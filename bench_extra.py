@@ -7,6 +7,11 @@ Subcommands:
   plans [names...]        write .explain("formatted") to plans/r07/
   build CPUS [N_DOCS]     one timed index build, print phase breakdown
   p50                     sequential + batch query sweep vs a bench index
+  breakeven ROOT [N_DOCS] both branches of the shard-kernel rule on one
+                          catalog (built positional from N_DOCS
+                          generated docs, default 5000, when ROOT has
+                          no snapshot): selected postings bytes and
+                          min-of-N seconds per branch, one JSON line
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
 measured scale), SPARK_GRAFT_CPUS, BE_REPEATS.
@@ -145,6 +150,49 @@ def cmd_build(cpus: int, n_docs: int) -> None:
     spark.stop()
 
 
+def cmd_breakeven(root: str, n_docs: int) -> None:
+    """Time ``bm25_topk_blockmax(...).collect()`` on each branch of
+    ``query/wand._shard_kernel_job`` for two query shapes: an OR query
+    over four stopword-tier terms (the most kernel work per selected
+    byte measured: every term's blocks hold near-equal bounds, so WAND
+    prunes little and the in-process branch decodes them on one core)
+    and a plain two-term AND query.  The rule's break-even is the
+    selection size where the two branches' times cross."""
+    from datamart_spark.analyzer import analyze_query
+    from datamart_spark.corpus import _VOCAB, generate_documents
+    from datamart_spark.index import IndexCatalog, build_index
+    from datamart_spark.query import bm25_topk_blockmax, wand
+
+    spark = _session("be_breakeven")
+    cat = IndexCatalog(root)
+    if cat.current_snapshot() is None:
+        build_index(generate_documents(spark, n_docs), cat, resume=False,
+                    n_docs=n_docs, positions=True)
+    shapes = {
+        "or_stopwords": (" ".join(_VOCAB[:4]), True),
+        "and": (f"{_VOCAB[45]} {_VOCAB[200]}", False),
+    }
+    out = {"root": root, "n_docs": cat.current_snapshot()["n_docs"],
+           "cpus": CPUS, "repeats": REPEATS, "shapes": {}}
+    for name, (query, or_mode) in shapes.items():
+        snap = cat.current_snapshot()
+        terms = analyze_query(query, stemming=snap.get("stemming", True),
+                              tokenizer=snap.get("tokenizer", "simple"))
+        row = {"query": query, "or_mode": or_mode,
+               "selected_bytes": wand._selection(cat, terms)[3]}
+        for branch, limit in (("in_process_s", 2**62), ("spark_job_s", 0)):
+            wand._IN_PROCESS_MAX_BYTES = limit
+            times = []
+            for _ in range(REPEATS + 1):  # the first call warms the branch
+                t0 = time.perf_counter()
+                bm25_topk_blockmax(spark, cat, query, k=10, or_mode=or_mode).collect()
+                times.append(time.perf_counter() - t0)
+            row[branch] = round(min(times[1:]), 4)
+        out["shapes"][name] = row
+    print(json.dumps(out))
+    spark.stop()
+
+
 def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
@@ -154,6 +202,8 @@ def main() -> None:
         cmd_plans(sys.argv[2:], suffix)
     elif cmd == "build":
         cmd_build(int(sys.argv[2]), int(sys.argv[3]) if len(sys.argv) > 3 else 200000)
+    elif cmd == "breakeven":
+        cmd_breakeven(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 5000)
     else:
         raise SystemExit(f"unknown subcommand {cmd}")
 

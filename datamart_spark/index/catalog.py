@@ -69,13 +69,14 @@ class IndexCatalog:
         # still alive — it must be able to roll back its own staged
         # swaps, which rollback_own() authorizes via this token.
         self._writer_token = uuid.uuid4().hex
-        # DataFrame handles memoized per (spark app, table, snapshot):
-        # re-creating spark.read.parquet(...) per query re-lists the
-        # table's files and re-reads footers for schema inference —
-        # pure per-query overhead for an immutable committed snapshot.
-        # Invalidated on every write/commit this instance makes; the
-        # key's committed_at catches commits made by other instances.
-        self._df_cache: dict[tuple[str, str, int, float], DataFrame] = {}
+        # Table handles memoized per (spark app, table, snapshot) — a
+        # Spark DataFrame, or under app None the pyarrow dataset of
+        # driver-local reads: re-creating either per query re-lists the
+        # table's files and re-reads footers — pure per-query overhead
+        # for an immutable committed snapshot.  Invalidated on every
+        # write/commit this instance makes; the key's committed_at
+        # catches commits made by other instances.
+        self._df_cache: dict[tuple[str | None, str, int, float], Any] = {}
 
     # --- snapshot manifests --------------------------------------------
 
@@ -511,10 +512,8 @@ class IndexCatalog:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self.table_path(name))
 
-    def read_snapshot(self, spark: SparkSession, name: str) -> DataFrame:
-        """Like ``read`` but memoizes the DataFrame handle per committed
-        snapshot — reuses the resolved file index across queries.  Use
-        on the QUERY path only (between writes, ``read`` stays exact).
+    def _snapshot_handle(self, app: str | None, name: str, make) -> Any:
+        """``make(snap)`` memoized per committed snapshot of ``name``.
 
         Resolves any CRASHED rewrite first (ADVICE r3: without this, a
         delete that died mid-swap would leave queries silently missing
@@ -523,19 +522,27 @@ class IndexCatalog:
         against a query — and it never touches a mutation whose writer
         process is still alive, so queries running concurrently with a
         build/delete cannot undo its staged swaps."""
-        if self.recover():
-            self._df_cache.clear()
+        self.recover()
         snap = self.current_snapshot()
         # committed_at, not just the sequence: drop() + rebuild restarts
         # sequences at 1, and another instance on the same root must not
         # serve the dropped index's file listing
-        key = (spark.sparkContext.applicationId, name,
+        key = (app, name,
                snap["sequence"] if snap else -1,
                snap.get("committed_at", 0.0) if snap else 0.0)
-        df = self._df_cache.get(key)
-        if df is None:
+        h = self._df_cache.get(key)
+        if h is None:
             if len(self._df_cache) > 16:
                 self._df_cache.clear()
+            h = self._df_cache[key] = make(snap)
+        return h
+
+    def read_snapshot(self, spark: SparkSession, name: str) -> DataFrame:
+        """Like ``read`` but memoizes the DataFrame handle per committed
+        snapshot — reuses the resolved file index across queries.  Use
+        on the QUERY path only (between writes, ``read`` stays exact)."""
+
+        def make(snap):
             df = self.read(spark, name)
             if name == "postings" and snap and snap.get("n_shards"):
                 # Cap the scan at one task per shard file.  The
@@ -556,8 +563,22 @@ class IndexCatalog:
                 # sessions set spark.sql.files.maxPartitionBytes via
                 # get_spark(extra_conf=...), making this a no-op.
                 df = df.coalesce(int(snap["n_shards"]))
-            self._df_cache[key] = df
-        return df
+            return df
+
+        return self._snapshot_handle(spark.sparkContext.applicationId, name, make)
+
+    def snapshot_dataset(self, name: str):
+        """The committed table ``name`` as a pyarrow dataset, for
+        driver-local reads on the QUERY path.  Same listing as
+        ``read_snapshot``: crashed rewrites resolved first, the
+        ``_``/``.``-prefixed backups, staging dirs and markers skipped
+        (as Spark's listing skips them), ``shard=`` directories read as
+        the int32 partition column; memoized under the same snapshot
+        key, so row-group footers are read once per snapshot."""
+        import pyarrow.dataset as pads
+
+        return self._snapshot_handle(None, name, lambda _snap: pads.dataset(
+            self.table_path(name), format="parquet", partitioning="hive"))
 
     def exists(self, name: str) -> bool:
         p = self.table_path(name)

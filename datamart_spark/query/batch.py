@@ -26,25 +26,35 @@ Execution (wand._shard_kernel_job, the one skeleton):
 
   postings scan, `term IN (union of every live spec's terms)` pushed
   to parquet row-group pruning — ONE scan regardless of query count
-  → groupBy shard [cogroup with the distinct filter contexts' doc-id
-    sets, tagged by context id, when any spec is filtered]
+  → per-shard groups [with the distinct filter contexts' doc-id sets,
+    tagged by context id, when any spec is filtered]
   → per-shard kernel: score each spec over its term subset
     (wand._topk_from_terms / phrase._phrase_topk_from_terms) through
     the one block decoder (wand._decode_blocks) and one per-term
     decode cache shared by every spec, keyword and phrase alike — a
     posting block's payloads decode at most once per shard no matter
     how many queries touch its term
-  → merge: one live spec is ``orderBy(score desc, doc_id asc).limit(k)``
-    (TakeOrderedAndProject, no exchange); several take one per-query
-    window over ≤ k·S·Q tiny local rows.
+  → merge to ≤ k rows per spec, (score desc, doc_id asc).
 
-Scale: one call is one job whose shuffle volume is the union scan
-(≤ sum of the individual scans, typically far less under term overlap)
-plus k·S·Q result rows.  Query fan-out lives in the kernel loop, not
-the scheduler — at 10^3 queries the per-shard kernel is a tight numpy
-loop over an already-decoded block pool, which is exactly the layout a
-1000-executor cluster wants: S shard tasks, each doing Q independent
-small scoring problems with shared immutable inputs.
+``_shard_kernel_job`` picks the branch from the bytes the scan selects.
+A selection up to ``wand._IN_PROCESS_MAX_BYTES`` (94 MiB) runs
+in-process: a pyarrow read of the selected row groups, the kernel once
+per shard on the driver, and a pandas merge — no Spark job.  A larger
+one is one ``applyInPandas`` job (a cogroup with the cached filter doc
+ids when filtered), merged by ``orderBy(score desc, doc_id asc)
+.limit(k)`` for one live spec (TakeOrderedAndProject, no exchange) or
+one per-query window over ≤ k·S·Q tiny local rows for several.  A plan
+with no live spec runs nothing.  Public entry points return a DataFrame
+either way; the in-process result is built from Arrow (a LocalRelation,
+which collects without a job).
+
+Scale: a distributed call is one job whose shuffle volume is the union
+scan (≤ sum of the individual scans, typically far less under term
+overlap) plus k·S·Q result rows.  Query fan-out lives in the kernel
+loop, not the scheduler — at 10^3 queries the per-shard kernel is a
+tight numpy loop over an already-decoded block pool, which is exactly
+the layout a 1000-executor cluster wants: S shard tasks, each doing Q
+independent small scoring problems with shared immutable inputs.
 """
 
 from __future__ import annotations
@@ -56,7 +66,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..analyzer import StemCache, analyze_query, analyze_str
-from .bm25 import _committed_snapshot, idf_map
+from .bm25 import _committed_snapshot, _local_frame, idf_map
 from .phrase import _PHRASE_COLS, _phrase_topk_from_terms, expand_prefixes
 from .wand import _POSTING_COLS, _shard_kernel_job, _topk_from_terms
 
@@ -215,12 +225,15 @@ def _plan_queries(spark: SparkSession, catalog, queries: list[dict]) -> _Plan:
     )
 
 
-def _topk(spark: SparkSession, catalog, queries: list[dict], k: int) -> DataFrame:
-    """Plan ``queries`` and run them as one top-k job:
-    (query_id, doc_id, score), ≤ k rows per live spec."""
+def _topk(spark: SparkSession, catalog, queries: list[dict],
+          k: int) -> DataFrame | pd.DataFrame:
+    """Plan ``queries`` and run them as one top-k pass:
+    (query_id, doc_id, score), ≤ k rows per live spec, ordered
+    (query_id, score desc, doc_id asc) — a pandas frame when the kernels
+    ran in-process or the plan has no live spec, else a DataFrame."""
     plan = _plan_queries(spark, catalog, queries)
     if not plan.specs:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
     idfs, avgdl, tfn_ref = plan.idfs, plan.avgdl, plan.tfn_ref
 
     def kernel(by_term, fids_by_ctx) -> pd.DataFrame:
@@ -249,26 +262,38 @@ def _topk(spark: SparkSession, catalog, queries: list[dict], k: int) -> DataFram
         return pd.concat(parts, ignore_index=True)
 
     cols = _PHRASE_COLS if any(s.positional for s in plan.specs) else _POSTING_COLS
-    local = _shard_kernel_job(spark, catalog, plan.scan_terms, kernel,
-                              _RESULT_SCHEMA, plan.contexts, cols=cols)
+    per_shard = _shard_kernel_job(spark, catalog, plan.scan_terms, kernel,
+                                  _RESULT_SCHEMA, plan.contexts, cols=cols)
+    if isinstance(per_shard, pd.DataFrame):
+        ranked = per_shard.sort_values(["query_id", "score", "doc_id"],
+                                       ascending=[True, False, True])
+        return ranked.groupby("query_id", dropna=False, sort=False).head(k)
     if len(plan.specs) == 1:
         # one query needs no per-query window: Spark's
         # TakeOrderedAndProject is a per-partition partial top-k with
         # no exchange (measured cheaper than the window on the serve mix)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        per_shard.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .drop("rn")
         .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
     )
 
 
+def _frame(spark: SparkSession, hits: DataFrame | pd.DataFrame) -> DataFrame:
+    """``_topk``'s hits as a DataFrame."""
+    if isinstance(hits, pd.DataFrame):
+        return _local_frame(spark, hits, _RESULT_SCHEMA)
+    return hits
+
+
 def _topk_one(spark: SparkSession, catalog, spec: dict, k: int) -> DataFrame:
     """Top-k (doc_id, score) of one spec — a batch of one with the
     query_id dropped."""
-    return _topk(spark, catalog, [dict(spec, query_id=None)], k).drop("query_id")
+    hits = _topk(spark, catalog, [dict(spec, query_id=None)], k)
+    return _frame(spark, hits).drop("query_id")
 
 
 def bm25_topk_batch(
@@ -300,5 +325,10 @@ def bm25_topk_batch(
     match (absent AND term, empty analysis, all-pruned) contribute no
     rows.
     """
+    return _frame(spark, _topk_many(spark, catalog, queries, k))
+
+
+def _topk_many(spark: SparkSession, catalog, queries: list[dict],
+               k: int) -> DataFrame | pd.DataFrame:
     return _topk(spark, catalog,
                  [dict(q, query_id=str(q["query_id"])) for q in queries], k)

@@ -25,12 +25,17 @@ block-max kernels; both must agree (tests/test_index_and_rank_identity.py).
 
 from __future__ import annotations
 
+import datetime as dt
+import functools
 import math
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..analyzer import analyze_query
 from ..index.build import B, K1
@@ -106,7 +111,7 @@ def idf_map(spark: SparkSession, catalog: IndexCatalog, terms: list[str]) -> dic
         cache = _DF_CACHE[key] = {}
     missing = [t for t in terms if t not in cache]
     if missing:
-        found = _lookup_df(spark, catalog, missing)
+        found = _lookup_df(catalog, missing)
         if len(cache) + len(missing) > _DF_CACHE_MAX_TERMS:
             cache.clear()
         for t in missing:
@@ -118,36 +123,19 @@ def idf_map(spark: SparkSession, catalog: IndexCatalog, terms: list[str]) -> dic
     }
 
 
-def _lookup_df(spark: SparkSession, catalog: IndexCatalog, terms: list[str]) -> dict[str, int]:
-    """Fetch df for ``terms`` from the committed term_stats table.
-
-    Fast path: a driver-local Arrow dataset read with a pushed
-    ``term IN`` filter — the analog of an Elasticsearch node consulting
-    its in-memory term dictionary, without paying a whole Spark job
-    round-trip per query (measured: the idf job was half of each
-    query's latency floor).  Work stays O(query terms + row groups
-    touched); ``recover()`` gives the same crashed-rewrite resolution
-    as ``read_snapshot``.  Any failure falls back to the distributed
-    scan (e.g. term_stats on a filesystem the driver cannot read)."""
-    try:
-        import pyarrow.dataset as pads
-
-        catalog.recover()
-        ds = pads.dataset(catalog.table_path("term_stats"), format="parquet")
-        tb = ds.to_table(
-            columns=["term", "df"], filter=pads.field("term").isin(terms)
-        )
-        return dict(
-            zip(tb.column("term").to_pylist(), tb.column("df").to_pylist())
-        )
-    except Exception:
-        rows = (
-            catalog.read_snapshot(spark, "term_stats")
-            .where(F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
-        )
-        return {r["term"]: r["df"] for r in rows}
+def _lookup_df(catalog: IndexCatalog, terms: list[str]) -> dict[str, int]:
+    """Fetch df for ``terms`` from the committed term_stats table: a
+    driver-local Arrow read with a pushed ``term IN`` filter — the
+    analog of an Elasticsearch node consulting its in-memory term
+    dictionary, without paying a whole Spark job round-trip per query
+    (measured: the idf job was half of each query's latency floor).
+    Work stays O(query terms + row groups touched); the snapshot
+    dataset has ``read_snapshot``'s listing and crashed-rewrite
+    resolution."""
+    tb = catalog.snapshot_dataset("term_stats").to_table(
+        columns=["term", "df"], filter=pads.field("term").isin(terms)
+    )
+    return dict(zip(tb.column("term").to_pylist(), tb.column("df").to_pylist()))
 
 
 def _filter_context(ds: DataFrame, lang: str | None, ts_lo, ts_hi) -> DataFrame:
@@ -160,6 +148,52 @@ def _filter_context(ds: DataFrame, lang: str | None, ts_lo, ts_hi) -> DataFrame:
     if ts_hi is not None:
         ds = ds.where(F.col("warc_ts") <= F.lit(ts_hi))
     return ds
+
+
+def _arrow_ts(v, session_tz: str) -> pa.Scalar:
+    """A warc_ts bound as the type doc_stats stores (timestamp[ns], no
+    zone, UTC instants), converted exactly as ``_filter_context``'s
+    ``F.lit`` converts it: a datetime through
+    ``TimestampType.toInternal`` (an aware one at its instant, a naive
+    one in the driver process's local zone); anything else — a string,
+    a date — the way Spark casts it, in the session time zone."""
+    if isinstance(v, dt.datetime):
+        micros = T.TimestampType().toInternal(v)
+    else:
+        ts = pd.Timestamp(v)
+        if ts.tzinfo is None:
+            ts = ts.tz_localize(session_tz)
+        micros = ts.value // 1000
+    return pa.scalar(micros * 1000, pa.timestamp("ns"))
+
+
+def _arrow_filter_context(pred, lang: str | None, ts_lo, ts_hi, session_tz: str):
+    """``pred``, a pyarrow dataset filter over doc_stats, narrowed to
+    ``_filter_context`` — its form for the driver-local reads of
+    query/wand.py."""
+    if lang is not None:
+        pred = pred & (pads.field("lang") == lang)
+    if ts_lo is not None:
+        pred = pred & (pads.field("warc_ts") >= _arrow_ts(ts_lo, session_tz))
+    if ts_hi is not None:
+        pred = pred & (pads.field("warc_ts") <= _arrow_ts(ts_hi, session_tz))
+    return pred
+
+
+@functools.cache
+def _struct(schema: str) -> T.StructType:
+    return T._parse_datatype_string(schema)
+
+
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """``pdf``'s ``schema`` columns as a DataFrame built from Arrow: a
+    LocalRelation, so collecting it runs no Spark job (a list or
+    pandas ``createDataFrame`` runs one, empty or not)."""
+    st = _struct(schema)
+    arrow = to_arrow_schema(st)
+    tb = arrow.empty_table() if pdf.empty else pa.Table.from_pandas(
+        pdf[st.names], schema=arrow, preserve_index=False)
+    return spark.createDataFrame(tb, st)
 
 
 def _filtered_doc_stats(
@@ -250,9 +284,8 @@ def bm25_topk_dataframe(
     terms = analyze_query(query, stemming=stemming,
                           tokenizer=snap.get("tokenizer", "simple"))
 
-    empty = spark.createDataFrame(
-        [], "doc_id long, score double"
-    )
+    empty = _local_frame(spark, pd.DataFrame({"doc_id": [], "score": []}),
+                         "doc_id long, score double")
     if not terms:
         return empty
     idfs = idf_map(spark, catalog, terms)

@@ -23,7 +23,8 @@ specs — and runs through the one shard-job skeleton
   positional payload column read only when the plan has a positional
   spec — plain BM25 queries never select pos_vb, so a positional index
   costs them nothing)
-  → groupBy shard [cogroup with the filter doc-id sets when filtered]
+  → per-shard groups [with the filter doc-id sets when filtered] — in
+    process for a small selection, else one Spark job
   → per-shard kernel: AND-intersect candidates via block fences
     (rarest term drives), decode positions only for blocks that can
     contain a candidate, the ordered chain, local top-k
@@ -57,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..analyzer import analyze_str
 from ..index.build import B, K1
+from .bm25 import _local_frame
 from .wand import (
     _POSTING_COLS, _decode_blocks, _local_topk, _no_hits, _shard_kernel_job,
 )
@@ -283,6 +285,9 @@ def phrase_spans(
     chain's start offsets instead of folding them into phrase
     frequencies."""
     spans, _, _ = _phrase_spans_df(spark, catalog, phrase, lang, ts_lo, ts_hi)
+    if isinstance(spans, pd.DataFrame):
+        spans = spans.sort_values(["doc_id", "pos"])
+        return _local_frame(spark, spans, _SPANS_SCHEMA)
     return spans.orderBy("doc_id", "pos")
 
 
@@ -293,10 +298,11 @@ def _phrase_spans_df(
     lang: str | None = None,
     ts_lo=None,
     ts_hi=None,
-) -> tuple[DataFrame, str, int]:
+) -> tuple[DataFrame | pd.DataFrame, str, int]:
     """``phrase_spans`` without the final global sort — the join-side
-    form ``passages`` consumes — plus the snapshot's tokenizer and the
-    phrase length."""
+    form ``passages`` consumes, a pandas frame when the kernel ran
+    in-process or the plan has no live spec — plus the snapshot's
+    tokenizer and the phrase length."""
     from .batch import _plan_queries
 
     plan = _plan_queries(spark, catalog, [{
@@ -304,7 +310,7 @@ def _phrase_spans_df(
         "ts_hi": ts_hi,
     }])
     if not plan.specs:
-        return spark.createDataFrame([], _SPANS_SCHEMA), plan.tokenizer, 0
+        return pd.DataFrame({"doc_id": [], "pos": []}), plan.tokenizer, 0
     spec = plan.specs[0]
     m = len(spec.term_sets)
 
@@ -358,6 +364,8 @@ def passages(
         raise ValueError(f"window must be >= 0, got {window}")
     spans, tokenizer, m = _phrase_spans_df(spark, catalog, phrase, lang,
                                            ts_lo, ts_hi)
+    if isinstance(spans, pd.DataFrame):
+        spans = _local_frame(spark, spans, _SPANS_SCHEMA)
     joined = spans.join(docs.select("doc_id", "text"), "doc_id")
 
     def gen(batches):
@@ -404,9 +412,8 @@ def expand_prefixes(
     for p in sorted(reqs):
         c = F.col("term").startswith(p)
         cond = c if cond is None else (cond | c)
-    pf = spark.createDataFrame(
-        [(p, n) for p, n in sorted(reqs.items())], "prefix string, mx int"
-    )
+    pf = pd.DataFrame(sorted(reqs.items()), columns=["prefix", "mx"])
+    pf = _local_frame(spark, pf, "prefix string, mx int")
     t = catalog.read_snapshot(spark, "term_stats").where(cond).select("term")
     w = Window.partitionBy("prefix").orderBy("term")
     rows = (

@@ -6,19 +6,26 @@ time) → non-scoring filter context (lang equality, warc_ts range —
 search/__init__.py:79-105,185-256) → BM25 scoring with AND semantics
 (operator:'and', search/__init__.py:67) → top-k (k=50 default,
 search/base.py:1) → metadata hydration (the reference fetches each
-hit's full document via es.get, join.py:530; here one broadcast join
-against doc_stats).  The first four steps are the query planner and
-its one shard job (query/batch.py): ``search`` is a planned batch of
-one and ``search_many`` a planned batch, and both hydrate through
-``_hydrate``.
+hit's full document via es.get, join.py:530).  The first four steps
+are the query planner and its one shard-kernel skeleton
+(query/batch.py): ``search`` is a planned batch of one and
+``search_many`` a planned batch, and both hydrate through ``_hydrate``
+on the branch the kernels took — in-process hits with one pyarrow
+``doc_id IN hits`` read of doc_stats and no Spark job, Spark-job hits
+with one broadcast join against doc_stats.  A query with no live spec
+(an absent AND term) hydrates to its empty frame without reading
+doc_stats.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index.catalog import IndexCatalog
-from .batch import bm25_topk_batch, _topk_one
+from .batch import _topk, _topk_many
+from .bm25 import _local_frame
 
 TOP_K_SIZE = 50  # reference search/base.py:1
 PAGE_SIZE = 200  # reference union-search page (union.py:131-159)
@@ -45,15 +52,23 @@ def paginate(df: DataFrame, order_cols: list[str], page_size: int = PAGE_SIZE,
     return out.orderBy(*[F.asc(c) for c in order_cols]).limit(page_size)
 
 
-def _hydrate(spark: SparkSession, catalog: IndexCatalog, hits: DataFrame,
-             *lead: str) -> DataFrame:
+#: Spark types of the hydrated columns
+_HIT_TYPES = {"query_id": "string", "doc_id": "long", "url": "string",
+              "lang": "string", "warc_ts": "timestamp", "score": "double"}
+
+
+def _hydrate(spark: SparkSession, catalog: IndexCatalog,
+             hits: DataFrame | pd.DataFrame, *lead: str) -> DataFrame:
     """Join (``lead``…, doc_id, score) hits with the url/lang/warc_ts
-    columns doc_stats has, ordered (``lead``…, score desc, doc_id asc)."""
+    columns doc_stats has, ordered (``lead``…, score desc, doc_id asc),
+    on the branch the hits come from (``wand._shard_kernel_job``)."""
+    if isinstance(hits, pd.DataFrame):
+        return _hydrate_local(spark, catalog, hits, lead)
     ds = catalog.read_snapshot(spark, "doc_stats")
     meta_cols = [c for c in ("url", "lang", "warc_ts") if c in ds.columns]
     order = [*lead, F.desc("score"), F.asc("doc_id")]
     if not meta_cols:
-        return hits.orderBy(*order)
+        return hits.select(*lead, "doc_id", "score").orderBy(*order)
     # broadcast the ≤k·Q-row hits side: doc_stats (10^12 rows at target
     # scale) must never be shuffled to hydrate 50 hits — the broadcast
     # hash join streams doc_stats partitions map-side (plan-asserted in
@@ -63,6 +78,25 @@ def _hydrate(spark: SparkSession, catalog: IndexCatalog, hits: DataFrame,
         .select(*lead, "doc_id", *meta_cols, "score")
         .orderBy(*order)
     )
+
+
+def _hydrate_local(spark: SparkSession, catalog: IndexCatalog,
+                   hits: pd.DataFrame, lead: tuple[str, ...]) -> DataFrame:
+    """``_hydrate`` of in-process hits: one pyarrow ``doc_id IN hits``
+    read of doc_stats, a pandas inner join, a frame built from Arrow —
+    no Spark job.  No hits (a plan with no live spec) read nothing."""
+    ds = catalog.snapshot_dataset("doc_stats")
+    meta_cols = [c for c in ("url", "lang", "warc_ts") if c in ds.schema.names]
+    cols = [*lead, "doc_id", *meta_cols, "score"]
+    if meta_cols and len(hits):
+        meta = ds.to_table(
+            columns=["doc_id", *meta_cols],
+            filter=pads.field("doc_id").isin(hits["doc_id"].unique()),
+        ).to_pandas()
+        hits = hits.merge(meta, on="doc_id")
+    out = hits.reindex(columns=cols).sort_values(
+        [*lead, "score", "doc_id"], ascending=[*(True for _ in lead), False, True])
+    return _local_frame(spark, out, ", ".join(f"{c} {_HIT_TYPES[c]}" for c in cols))
 
 
 def search(
@@ -83,10 +117,10 @@ def search(
     against a positional index (``slop`` extra tokens allowed between
     first and last, Lucene 1/(gap+1) weighting — see
     ``bm25_phrase_topk``); ``or_mode`` is keyword-only."""
-    hits = _topk_one(spark, catalog, {
+    hits = _topk(spark, catalog, [{
         "query": query, "lang": lang, "ts_lo": ts_lo, "ts_hi": ts_hi,
-        "or_mode": or_mode, "phrase": phrase, "slop": slop,
-    }, k)
+        "or_mode": or_mode, "phrase": phrase, "slop": slop, "query_id": None,
+    }], k)
     return _hydrate(spark, catalog, hits)
 
 
@@ -105,5 +139,5 @@ def search_many(
     N round-trips + N ES requests — this is the engine-side batch form
     of the same semantics (apiserver/apiserver/search/__init__.py:
     429-604 per query)."""
-    return _hydrate(spark, catalog, bm25_topk_batch(spark, catalog, queries, k=k),
+    return _hydrate(spark, catalog, _topk_many(spark, catalog, queries, k),
                     "query_id")

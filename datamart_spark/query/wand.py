@@ -32,7 +32,7 @@ planned once by query/batch.py and executes as:
   postings scan, `term IN (scan terms)` pushed to parquet (the build
   writes each shard partition as ONE term-sorted file, so row-group
   min/max stats prune everything but the query terms' blocks)
-  → groupBy shard [cogroup with the tagged filter doc-id sets when any
+  → per-shard groups [with the tagged filter doc-id sets when any
     query is filtered]          — ``_shard_kernel_job``, this module
   → per-shard kernel: top-k per query (``_topk_from_terms`` here,
     ``phrase._phrase_topk_from_terms``) or phrase spans
@@ -51,19 +51,26 @@ threshold seeded from the best blocks of every query term, block
 pruning by ub(b) + Σ max_ub(other terms) < θ, exact rescore of
 survivors.
 
-Everything here runs inside ``applyInPandas`` groups — Arrow in,
-Arrow out, no per-row Python at the Spark boundary (north rule §2.10).
+The kernels take and return pandas frames — Arrow in, Arrow out, no
+per-row Python at any boundary (north rule §2.10).  Where they run is
+decided once per query, in ``_shard_kernel_job``, from the bytes the
+``term IN`` filter selects: up to ``_IN_PROCESS_MAX_BYTES`` they run
+in-process on the driver over a pyarrow read of the same committed
+files (no Spark job; a query on a 5k-doc index selects ~3 MB), beyond
+it inside ``applyInPandas`` groups.  Both branches call the same
+kernels, once per shard.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index.build import B, K1
 from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import _filtered_doc_ids
+from .bm25 import _arrow_filter_context, _filtered_doc_ids, _struct
 
 _POSTING_COLS = [
     "shard", "term", "block_id", "n", "first_doc_id", "last_doc_id",
@@ -159,17 +166,15 @@ def _topk_from_terms(
     the non-scoring filter context, or None = unfiltered.  ``caches``
     maps each term to its ``_decode_blocks`` pool, shared by every
     keyword and phrase spec of the shard kernel (query/batch.py)."""
-    empty = _no_hits()
     if filter_ids is not None and filter_ids.size == 0:
-        return empty
+        return _no_hits()
     if not or_mode and len(by_term) < n_terms:
-        return empty  # a query term absent from this shard ⇒ no AND match here
+        return _no_hits()  # a query term absent from this shard ⇒ no AND match here
     if not by_term:
-        return empty
+        return _no_hits()
 
     if or_mode:
-        return _shard_topk_or(by_term, filter_ids, idfs, avgdl, k, empty,
-                              tfn_ref, caches)
+        return _shard_topk_or(by_term, filter_ids, idfs, avgdl, k, tfn_ref, caches)
 
     # AND mode: drive from rarest term (fewest posting entries in shard)
     term_order = sorted(by_term, key=lambda t: int(by_term[t]["n"].sum()))
@@ -179,12 +184,12 @@ def _topk_from_terms(
     tf_by_term: dict[str, np.ndarray] = {}
     for t in term_order[1:]:
         if cand.size == 0:
-            return empty
+            return _no_hits()
         d, tf, _, _ = _decode_blocks(by_term[t], cand, caches[t])
         mask = np.isin(cand, d)
         cand = cand[mask]
         if cand.size == 0:
-            return empty
+            return _no_hits()
         sel = np.searchsorted(d, cand)
         tf_by_term[t] = tf[sel]
         # shrink previously-gathered tf arrays to the surviving candidates
@@ -248,7 +253,7 @@ def _block_bounds(
 
 
 def _shard_topk_or(
-    by_term, filter_ids, idfs, avgdl, k, empty, tfn_ref, caches,
+    by_term, filter_ids, idfs, avgdl, k, tfn_ref, caches,
 ) -> pd.DataFrame:
     """OR mode: block-max WAND-style pruning, exact results.
 
@@ -298,7 +303,7 @@ def _shard_topk_or(
     if filter_ids is not None:
         cand = cand[np.isin(cand, filter_ids)]
     if cand.size == 0:
-        return empty
+        return _no_hits()
 
     # 3. exact rescore of all surviving candidates
     score = _score_docs(cand, by_term, idfs, avgdl, caches)
@@ -339,22 +344,66 @@ def bm25_topk_blockmax(
     }, k)
 
 
+#: The most postings bytes a query may select — the compressed size of
+#: the row groups its ``term IN`` filter keeps — and still run its shard
+#: kernels in-process on the driver; a larger selection runs as the
+#: Spark job.  Measured with ``bench_extra.py breakeven`` (4 vCPU, 15 GB
+#: host, local[4], min of 3–5 warm runs) on the worst shape per
+#: selected byte, an OR query over four stopword-tier terms (WAND
+#: prunes little of their near-equal block bounds), in-process vs job:
+#:
+#:     2.9 MiB   (5k docs)   0.21 s  vs  1.20 s
+#:    10.0 MiB  (20k docs)   0.24 s  vs  1.19 s
+#:    23.8 MiB  (50k docs)   0.49 s  vs  1.21 s
+#:    47.1 MiB (100k docs)   0.51–0.70 s  vs  1.60–1.72 s
+#:    93.7 MiB (200k docs)   0.88–1.03 s  vs  1.44–1.69 s
+#:
+#: In-process time grows 8–9 ms/MiB, the job's ~4 ms/MiB over a ~1.2 s
+#: floor, so the lines cross near 200–250 MiB; a 400k-doc index, which
+#: would show it, ran out of memory to build on that host.  The limit
+#: is the largest selection measured where in-process still won, since
+#: the driver holds the whole selection in memory.
+_IN_PROCESS_MAX_BYTES = 94 * 2**20
+
+
+def _selection(catalog, scan_terms: list[str]):
+    """The postings row groups ``term IN scan_terms`` keeps (pruned on
+    footer min/max statistics), and their compressed bytes."""
+    ds = catalog.snapshot_dataset("postings")
+    filt = pads.field("term").isin(scan_terms)
+    groups = [g for f in ds.get_fragments(filt) for g in f.split_by_row_group(filt)]
+    nbytes = 0
+    for g in groups:
+        md = g.metadata.row_group(g.row_groups[0].id)
+        nbytes += sum(md.column(j).total_compressed_size for j in range(md.num_columns))
+    return ds, filt, groups, nbytes
+
+
 def _shard_kernel_job(
     spark, catalog, scan_terms: list[str], shard_fn, schema: str,
     contexts: list[tuple], cols: list[str] = _POSTING_COLS,
-) -> DataFrame:
+) -> DataFrame | pd.DataFrame:
     """The query family's one execution skeleton: term-IN pruned
     postings scan over ``cols`` → per-shard Arrow groups →
     ``shard_fn(by_term, fids_by_ctx)``.  ``by_term`` maps each scanned
     term to the shard's posting rows of that term; ``fids_by_ctx`` maps
     a filter-context id (its index in ``contexts``, the distinct
     (lang, ts_lo, ts_hi) triples of a plan) to the shard's sorted
-    surviving doc ids, and None to None (unfiltered).  Only when some
-    context exists does the scan cogroup with the union of the
-    contexts' doc-id sets, each tagged with its id — with no filter
-    there is no doc_stats side at all (doclens ride in the posting
-    blocks).  Top-k, spans and passages all run through here, so scan
-    pruning / filter plumbing fixes apply to all of them at once."""
+    surviving doc ids, and None to None (unfiltered).  Top-k, spans and
+    passages all run through here, so scan pruning / filter plumbing
+    fixes apply to all of them at once.
+
+    This is the one place that decides where the kernels run.  A
+    selection of at most ``_IN_PROCESS_MAX_BYTES`` runs in-process and
+    returns the concatenated kernel output as a pandas frame: no Spark
+    job, since reading and scoring that much here costs less than a
+    job's fixed costs.  A larger one returns the ``applyInPandas`` job
+    as a DataFrame; callers merge and hydrate on the branch they get."""
+    ds, filt, groups, nbytes = _selection(catalog, scan_terms)
+    if nbytes <= _IN_PROCESS_MAX_BYTES:
+        return _run_in_process(spark, catalog, ds, filt, groups, shard_fn,
+                               schema, contexts, cols)
+
     postings = (
         catalog.read_snapshot(spark, "postings")
         .where(F.col("term").isin(scan_terms))
@@ -370,6 +419,9 @@ def _shard_kernel_job(
             lambda post_pdf: run(post_pdf, {None: None}), schema=schema
         )
 
+    # only filtered queries cogroup with the union of the contexts'
+    # doc-id sets, each tagged with its id — with no filter there is no
+    # doc_stats side at all (doclens ride in the posting blocks)
     docs = None
     for cid, (lang, ts_lo, ts_hi) in enumerate(contexts):
         d = _filtered_doc_ids(spark, catalog, lang, ts_lo, ts_hi).withColumn(
@@ -389,3 +441,30 @@ def _shard_kernel_job(
         .cogroup(docs.groupby("shard"))
         .applyInPandas(cogrouped, schema=schema)
     )
+
+
+def _run_in_process(spark, catalog, ds, filt, groups, shard_fn, schema: str,
+                    contexts: list[tuple], cols: list[str]) -> pd.DataFrame:
+    """The Spark job's program on the driver: the selected row groups,
+    each context's (shard, doc_id) with its predicate pushed to the
+    doc_stats read, ``shard_fn`` once per shard, results concatenated."""
+    post = pads.FileSystemDataset(groups, ds.schema, ds.format, ds.filesystem)
+    post = post.to_table(columns=cols, filter=filt).to_pandas()
+    shards = sorted(post["shard"].unique().tolist())
+    fids = {s: {None: None, **{cid: _Z for cid in range(len(contexts))}}
+            for s in shards}
+    if contexts and shards:
+        docs = catalog.snapshot_dataset("doc_stats")
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        for cid, ctx in enumerate(contexts):
+            pred = _arrow_filter_context(pads.field("shard").isin(shards), *ctx, tz)
+            ids = docs.to_table(columns=["shard", "doc_id"], filter=pred).to_pandas()
+            for s, g in ids.groupby("shard"):
+                fids[int(s)][cid] = np.sort(g["doc_id"].to_numpy().astype(np.uint64))
+    parts = [
+        shard_fn(dict(tuple(g.groupby("term", sort=False))), fids[int(s)])
+        for s, g in post.groupby("shard", sort=True)
+    ]
+    names = _struct(schema).names
+    return pd.concat(parts, ignore_index=True)[names] if parts else pd.DataFrame(
+        {c: [] for c in names})

@@ -9,6 +9,7 @@ checks are pinned here too.
 """
 
 import math
+import os
 
 import pandas as pd
 import pytest
@@ -76,7 +77,16 @@ def _assert_rank_identical(got, want, spec):
         assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-12), (spec, gd, gs, ws)
 
 
-def test_batch_rank_identity_full_query_set(built, oracle, spark):
+def test_batch_rank_identity_full_query_set(built, oracle, spark, spark_job):
+    _check_batch_rank_identity_full_query_set(built, oracle, spark)
+
+
+def test_batch_rank_identity_full_query_set_in_process(built, oracle, spark,
+                                                       in_process):
+    _check_batch_rank_identity_full_query_set(built, oracle, spark)
+
+
+def _check_batch_rank_identity_full_query_set(built, oracle, spark):
     catalog = built
     # a third of the set in OR mode, incl. absent-term + filtered ids,
     # so both kernel modes run against the shared decode caches
@@ -93,7 +103,82 @@ def test_batch_rank_identity_full_query_set(built, oracle, spark):
         _assert_rank_identical(by_qid.get(s["query_id"], []), want, s)
 
 
-def test_filter_stats_cache_skips_dead_session_handles(built, spark):
+def test_filter_context_bounds_inclusive_naive_and_aware(built, oracle, spark,
+                                                        kernel_branch):
+    """warc_ts bounds equal to stored values are inclusive; naive,
+    UTC-aware and +09:00-aware bounds of one instant select the same
+    docs; a naive bound is read in the driver's local zone (a Spark
+    literal's conversion) on both branches.  The context's docs all sit
+    in one shard, so the other shards' kernels get an empty filter set
+    while an unfiltered spec of the batch still scans them."""
+    import datetime as dt
+    import time
+
+    docs = generate_documents_pandas(N_DOCS)
+    lo_doc, hi_doc = 1000, 1010
+    width = built.current_snapshot()["shard_width"]
+    assert lo_doc // width == hi_doc // width
+    lo, hi = docs.at[lo_doc, "warc_ts"], docs.at[hi_doc, "warc_ts"]
+    q = " ".join(["the", *docs.at[lo_doc, "text"].split()[:2],
+                  *docs.at[hi_doc, "text"].split()[:2]])
+    plus9 = dt.timezone(dt.timedelta(hours=9))
+    bounds = {
+        "naive": (lo, hi),
+        "datetime": (lo.to_pydatetime(), hi.to_pydatetime()),
+        "utc": (lo.tz_localize("UTC"), hi.tz_localize("UTC")),
+        "plus9": (lo.tz_localize("UTC").tz_convert(plus9),
+                  hi.tz_localize("UTC").tz_convert(plus9)),
+    }
+
+    def run():
+        specs = [{"query_id": name, "query": q, "or_mode": True, "ts_lo": a,
+                  "ts_hi": b} for name, (a, b) in bounds.items()]
+        specs.append({"query_id": "all", "query": q, "or_mode": True})
+        got: dict[str, list] = {}
+        for r in bm25_topk_batch(spark, built, specs, k=20).collect():
+            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        return got
+
+    got = run()
+    want = oracle.topk(q, k=20, ts_lo=lo, ts_hi=hi, or_mode=True)
+    assert [d for d, _ in want] and {lo_doc, hi_doc} <= {d for d, _ in want}
+    for name in bounds:
+        _assert_rank_identical(got.get(name, []), want, name)
+    _assert_rank_identical(got["all"], oracle.topk(q, k=20, or_mode=True), "all")
+
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Etc/GMT-9"  # POSIX sign: UTC+09:00
+    time.tzset()
+    try:
+        got = run()
+    finally:
+        if tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()
+    shift = pd.Timedelta(hours=9)
+    shifted = oracle.topk(q, k=20, ts_lo=lo - shift, ts_hi=hi - shift, or_mode=True)
+    assert shifted and shifted != want
+    for name in ("naive", "datetime"):
+        _assert_rank_identical(got.get(name, []), shifted, f"{name} at UTC+9")
+    for name in ("utc", "plus9"):
+        _assert_rank_identical(got.get(name, []), want, f"{name} at UTC+9")
+
+
+def test_absent_term_search_runs_no_spark_job(built, spark, kernel_branch,
+                                             spark_jobs):
+    """A plan with no live spec returns its empty hydrated frame without
+    a job, whichever branch the kernels would take."""
+    rows, jobs = spark_jobs(lambda: search(
+        spark, built, "the zzzneverseen", k=K).collect())
+    assert rows == [] and jobs == 0
+    many, jobs = spark_jobs(lambda: search_many(
+        spark, built, [{"query_id": "a", "query": "zzzneverseen"}], k=K).collect())
+    assert many == [] and jobs == 0
+
+
+def test_filter_stats_cache_skips_dead_session_handles(built, spark, spark_job):
     """Evicting a _DS_CACHE entry from a PREVIOUS SparkSession must not
     touch its dead JVM handle (unpersist on a stopped context NPEs —
     it failed the first filtered query of every new session in a

@@ -56,7 +56,15 @@ def test_manifest_metrics(built, spark):
 
 
 @pytest.mark.parametrize("engine", ["dataframe", "blockmax"])
-def test_rank_identity_query_set(built, spark, engine):
+def test_rank_identity_query_set(built, spark, engine, spark_job):
+    _check_rank_identity_query_set(built, spark, engine)
+
+
+def test_rank_identity_query_set_blockmax_in_process(built, spark, in_process):
+    _check_rank_identity_query_set(built, spark, "blockmax")
+
+
+def _check_rank_identity_query_set(built, spark, engine):
     catalog, oracle, _ = built
     queries = generate_queries()
     fn = bm25_topk_dataframe if engine == "dataframe" else bm25_topk_blockmax

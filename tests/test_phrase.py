@@ -232,8 +232,21 @@ def _brute_prefix(phrase, k=10, max_expansions=50, docs=DOCS):
     return out[:k]
 
 
-@pytest.mark.parametrize("phrase", ["hash j", "merge s", "sort m", "hash jo"])
-def test_phrase_prefix_matches_bruteforce(spark, pos_catalog, phrase):
+_PREFIX_PHRASES = ["hash j", "merge s", "sort m", "hash jo"]
+
+
+@pytest.mark.parametrize("phrase", _PREFIX_PHRASES)
+def test_phrase_prefix_matches_bruteforce(spark, pos_catalog, phrase, spark_job):
+    _check_phrase_prefix(spark, pos_catalog, phrase)
+
+
+@pytest.mark.parametrize("phrase", _PREFIX_PHRASES)
+def test_phrase_prefix_matches_bruteforce_in_process(spark, pos_catalog, phrase,
+                                                     in_process):
+    _check_phrase_prefix(spark, pos_catalog, phrase)
+
+
+def _check_phrase_prefix(spark, pos_catalog, phrase):
     from datamart_spark.query import bm25_phrase_prefix_topk
 
     got = [
@@ -507,19 +520,29 @@ def _brute_slop(term_sets, idf_terms, slop, k=10, lang=None, docs=DOCS):
     return out[:k]
 
 
-@pytest.mark.parametrize(
-    ("phrase", "slop"),
-    [
-        ("hash join", 1),       # admits 'hash ... join' one apart
-        ("hash join", 3),       # wider window, weighted 1/(gap+1)
-        ("join table", 2),      # crosses 'hash' in doc 2
-        ("sort join", 2),       # never adjacent, only sloppy matches
-        ("merge join", 4),      # far apart in doc 4
-        ("hash join hash", 2),  # m=3 greedy chain with repeats
-        ("merge hash runs", 5), # m=3 spanning most of doc 0
-    ],
-)
-def test_slop_matches_bruteforce(spark, pos_catalog, phrase, slop):
+_SLOP_CASES = [
+    ("hash join", 1),       # admits 'hash ... join' one apart
+    ("hash join", 3),       # wider window, weighted 1/(gap+1)
+    ("join table", 2),      # crosses 'hash' in doc 2
+    ("sort join", 2),       # never adjacent, only sloppy matches
+    ("merge join", 4),      # far apart in doc 4
+    ("hash join hash", 2),  # m=3 greedy chain with repeats
+    ("merge hash runs", 5), # m=3 spanning most of doc 0
+]
+
+
+@pytest.mark.parametrize(("phrase", "slop"), _SLOP_CASES)
+def test_slop_matches_bruteforce(spark, pos_catalog, phrase, slop, spark_job):
+    _check_slop(spark, pos_catalog, phrase, slop)
+
+
+@pytest.mark.parametrize(("phrase", "slop"), _SLOP_CASES)
+def test_slop_matches_bruteforce_in_process(spark, pos_catalog, phrase, slop,
+                                            in_process):
+    _check_slop(spark, pos_catalog, phrase, slop)
+
+
+def _check_slop(spark, pos_catalog, phrase, slop):
     got = _run(spark, pos_catalog, phrase, slop=slop)
     terms = phrase.split()
     exp = _brute_slop([[t] for t in terms], terms, slop)
@@ -574,7 +597,16 @@ def test_slop_validation(spark, pos_catalog):
         )
 
 
-def test_prefix_with_slop_matches_bruteforce(spark, pos_catalog):
+def test_prefix_with_slop_matches_bruteforce(spark, pos_catalog, spark_job):
+    _check_prefix_with_slop(spark, pos_catalog)
+
+
+def test_prefix_with_slop_matches_bruteforce_in_process(spark, pos_catalog,
+                                                        in_process):
+    _check_prefix_with_slop(spark, pos_catalog)
+
+
+def _check_prefix_with_slop(spark, pos_catalog):
     """slop composes with the last-position expansion set: greedy takes
     the smallest next offset matching ANY expansion."""
     from datamart_spark.query import bm25_phrase_prefix_topk

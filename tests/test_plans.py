@@ -13,6 +13,10 @@ on must be visible in `explain`, not assumed.
   cogroup with doc_stats;
 - join_left_agg's lineitem scan carries the `l_orderkey < 500` filter
   Catalyst infers from the join keys.
+
+The query-plan tests take the ``spark_job`` fixture: at this fixture's
+size the shard kernels would otherwise run in-process, with no plan to
+assert on.  The last two tests pin the rule that picks the branch.
 """
 
 import pytest
@@ -80,13 +84,16 @@ def test_term_stats_idf_lookup_pushed(spark, catalog):
     assert "PushedFilters" in plan and "In(term" in plan, plan
 
 
-def test_search_hydration_broadcasts_hits(spark, catalog):
+def test_search_hydration_broadcasts_hits(spark, catalog, spark_job):
     """Hydrating top-k hits with url/lang/ts must broadcast the ≤k-row
     hits side — doc_stats (10^12 rows at target scale) must never be
     shuffled for 50 rows (VERDICT r2 #6)."""
+    from datamart_spark.corpus import _VOCAB
     from datamart_spark.query import search
 
-    df = search(spark, catalog, "the data", k=10)
+    # a query with hits: 'data' is not in the corpus vocabulary, and a
+    # plan with no live spec hydrates to its empty frame with no join
+    df = search(spark, catalog, f"the {_VOCAB[60]}", k=10)
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -180,7 +187,7 @@ def test_join_left_agg_lineitem_scan_pruned_by_inferred_filter(spark):
     assert "LessThan(l_orderkey,500)" in pushed, plan
 
 
-def test_filtered_query_doc_stats_side_exchange_free(spark, catalog):
+def test_filtered_query_doc_stats_side_exchange_free(spark, catalog, spark_job):
     """The cached filter-stats side of the cogroup is persisted already
     hash-partitioned on shard, so a filtered query's doc_stats side adds
     NO shuffle exchange — only the tiny term-filtered postings side
@@ -201,7 +208,7 @@ def test_filtered_query_doc_stats_side_exchange_free(spark, catalog):
     assert "Exchange hashpartitioning" not in tail, plan
 
 
-def test_batch_query_plan_single_scan(spark, catalog):
+def test_batch_query_plan_single_scan(spark, catalog, spark_job):
     """The batch engine's whole point at scale: N queries must compile
     to ONE term-pruned postings scan (term IN over the union of every
     query's terms pushed to parquet), no join explosion — query
@@ -227,7 +234,7 @@ def test_batch_query_plan_single_scan(spark, catalog):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_batch_query_filtered_plan_shape(spark, catalog):
+def test_batch_query_filtered_plan_shape(spark, catalog, spark_job):
     """With per-query filter contexts the batch plan adds exactly the
     doc-stats side (cogroup) — still one postings scan, filters pushed
     to the doc_stats source, no nested-loop join."""
@@ -252,7 +259,7 @@ def test_batch_query_filtered_plan_shape(spark, catalog):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_postings_scan_capped_at_one_task_per_shard(spark, catalog):
+def test_postings_scan_capped_at_one_task_per_shard(spark, catalog, spark_job):
     """read_snapshot('postings') coalesces the scan to n_shards: a
     small maxPartitionBytes (the factory's input-split tuning) must not
     fan a query's postings scan out to ~10 scheduling-only tasks per
@@ -275,7 +282,7 @@ def test_postings_scan_capped_at_one_task_per_shard(spark, catalog):
         catalog._df_cache.clear()
 
 
-def test_query_merge_shape_follows_live_spec_count(spark, catalog):
+def test_query_merge_shape_follows_live_spec_count(spark, catalog, spark_job):
     """A batch of one — through ``search`` and through
     ``bm25_topk_batch`` — merges with TakeOrderedAndProject and no
     per-query Window; a 3-spec batch keeps the Window."""
@@ -303,7 +310,7 @@ def test_query_merge_shape_follows_live_spec_count(spark, catalog):
     assert "Window" in _plan(three), _plan(three)
 
 
-def test_only_filtered_queries_cogroup(spark, catalog):
+def test_only_filtered_queries_cogroup(spark, catalog, spark_job):
     """An unfiltered query is one grouped postings scan (doclens ride in
     the posting blocks); only a filtered one cogroups with the doc-id
     filter set."""
@@ -316,3 +323,42 @@ def test_only_filtered_queries_cogroup(spark, catalog):
     assert "FlatMapCoGroupsInPandas" not in plain, plain
     filtered = _plan(bm25_topk_blockmax(spark, catalog, q, k=5, lang="en"))
     assert "FlatMapCoGroupsInPandas" in filtered, filtered
+
+
+def _selected_bytes(spark, catalog, query: str) -> int:
+    from datamart_spark.query import wand
+    from datamart_spark.query.batch import _plan_queries
+
+    terms = _plan_queries(spark, catalog, [{"query": query}]).scan_terms
+    return wand._selection(catalog, terms)[3]
+
+
+def test_selection_above_the_limit_runs_the_shard_job(spark, catalog, monkeypatch,
+                                                      spark_jobs):
+    """One byte over ``_IN_PROCESS_MAX_BYTES``: the query is the
+    grouped ``applyInPandas`` job."""
+    from datamart_spark.corpus import _VOCAB
+    from datamart_spark.query import bm25_topk_blockmax, wand
+
+    q = f"the {_VOCAB[60]}"
+    monkeypatch.setattr(wand, "_IN_PROCESS_MAX_BYTES", _selected_bytes(spark, catalog, q) - 1)
+    df = bm25_topk_blockmax(spark, catalog, q, k=5)
+    assert "FlatMapGroupsInPandas" in _plan(df), _plan(df)
+    rows, jobs = spark_jobs(df.collect)
+    assert rows and jobs > 0
+
+
+def test_selection_at_the_limit_runs_no_spark_job(spark, catalog, monkeypatch,
+                                                  spark_jobs):
+    """A selection of exactly ``_IN_PROCESS_MAX_BYTES`` runs in-process:
+    planning, kernels, merge and hydration run no Spark job, and the
+    hits equal the shard job's."""
+    from datamart_spark.corpus import _VOCAB
+    from datamart_spark.query import search, wand
+
+    q = f"the {_VOCAB[60]}"
+    monkeypatch.setattr(wand, "_IN_PROCESS_MAX_BYTES", _selected_bytes(spark, catalog, q))
+    rows, jobs = spark_jobs(lambda: search(spark, catalog, q, k=5).collect())
+    assert rows and jobs == 0
+    monkeypatch.setattr(wand, "_IN_PROCESS_MAX_BYTES", 0)
+    assert search(spark, catalog, q, k=5).collect() == rows

@@ -67,7 +67,16 @@ def test_search_facade(spark, tmp_path):
     assert all(r["lang"] == "de" for r in res_de)
 
 
-def test_reader_instance_serves_rebuilt_index_after_drop(spark, tmp_path):
+def test_reader_instance_serves_rebuilt_index_after_drop(spark, tmp_path, spark_job):
+    _check_reader_instance_serves_rebuilt_index_after_drop(spark, tmp_path)
+
+
+def test_reader_instance_serves_rebuilt_index_after_drop_in_process(spark, tmp_path,
+                                                                    in_process):
+    _check_reader_instance_serves_rebuilt_index_after_drop(spark, tmp_path)
+
+
+def _check_reader_instance_serves_rebuilt_index_after_drop(spark, tmp_path):
     """drop() + rebuild restarts snapshot sequences at 1.  A second
     catalog instance on the same root that already served a search
     must answer from the rebuilt index, not from the dropped index's
@@ -239,7 +248,16 @@ def test_grown_only_shards_drops_stranded_lineage(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
-def test_recover_rolls_back_half_swapped_partition(spark, tmp_path):
+def test_recover_rolls_back_half_swapped_partition(spark, tmp_path, spark_job):
+    _check_recover_rolls_back_half_swapped_partition(spark, tmp_path)
+
+
+def test_recover_rolls_back_half_swapped_partition_in_process(spark, tmp_path,
+                                                              in_process):
+    _check_recover_rolls_back_half_swapped_partition(spark, tmp_path)
+
+
+def _check_recover_rolls_back_half_swapped_partition(spark, tmp_path):
     """ADVICE (r2, medium): a delete that crashes mid-partition-swap
     leaves a pending marker; recover() must restore the committed
     partition state before anything trusts the directories."""
