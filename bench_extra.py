@@ -6,15 +6,14 @@ Subcommands:
   queries [names...]      time headline suite queries (collect, min-of-N)
   plans [names...]        write .explain("formatted") to plans/r07/
   build CPUS [N_DOCS]     one timed index build, print phase breakdown
-  p50                     sequential + batch query sweep vs a bench index
   breakeven ROOT [N_DOCS] both branches of the shard-kernel rule on one
                           catalog (built positional from N_DOCS
                           generated docs, default 5000, when ROOT has
                           no snapshot): selected postings bytes and
                           min-of-N seconds per branch, one JSON line
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's
-measured scale), SPARK_GRAFT_CPUS, BE_REPEATS.
+Env: SPARK_GRAFT_SF_DIR (default: bench.py's), SPARK_GRAFT_CPUS,
+BE_REPEATS.
 """
 
 from __future__ import annotations
@@ -26,7 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+from bench import SF_DIR  # noqa: E402  (one default for both harnesses)
+
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEATS = int(os.environ.get("BE_REPEATS", "2"))
 
@@ -120,8 +120,7 @@ def cmd_build(cpus: int, n_docs: int) -> None:
         from datamart_spark.corpus import generate_documents
 
         spark = _session("be_gen")
-        parts = max(CPUS, n_docs // 4000)
-        generate_documents(spark, n_docs, partitions=parts).write.mode(
+        generate_documents(spark, n_docs).write.mode(
             "overwrite"
         ).parquet(corpus)
         spark.stop()

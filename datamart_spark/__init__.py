@@ -17,7 +17,6 @@ Layout:
     query/      — one batch planner + block-max WAND / positional kernels
     profiler/   — datamart-parity column profiling (types, geo, ranges)
     operators/  — augmentation + discovery ops (join, union, sketches)
-    sources/    — format detection, converters to CSV, materializers
     streaming/  — incremental ingest (Structured Streaming)
     suite/      — the oracle-gated query suite behind __spark_entry__.py
 """

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import html as _html
 import re
-from collections.abc import Iterable
 
 import pandas as pd
 
@@ -315,9 +314,3 @@ def analyze_query(
     for t in toks:
         seen.setdefault(t, None)
     return list(seen)
-
-
-def iter_analyze(texts: Iterable[str], stemming: bool = True) -> Iterable[list[str]]:
-    cache = StemCache() if stemming else None
-    for t in texts:
-        yield analyze_str(t, cache)

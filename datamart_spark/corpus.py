@@ -174,9 +174,12 @@ def _gen_batch(ids: np.ndarray) -> pd.DataFrame:
 
 
 def generate_documents(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """Distributed deterministic corpus: spark.range → mapInPandas."""
+    """Distributed deterministic corpus: spark.range → mapInPandas.
+
+    By default a task makes about 4000 docs at most: one task per core
+    (100k docs each at 400k on local[4]) got the JVM OOM-killed."""
     if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism, 4)
+        partitions = max(spark.sparkContext.defaultParallelism, 4, n // 4000)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -17,7 +17,11 @@ Ports the reference's discovery algebra (SURVEY.md §2.6):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
+
+_DATISH = re.compile(r"^\s*\d{4}([-/ .]\d{1,2}([-/ .]\d{1,2})?)?\s*$")
 
 
 def name_similarity(a: str, b: str) -> float:
@@ -101,6 +105,17 @@ def unpivot_wide_years(
     pivot.py:10-38 melts when ≥80% of ≥3 column names parse as dates).
     Spark-native ``melt``/``unpivot``."""
     return df.unpivot(id_cols, value_cols, var_name, value_name)
+
+
+def looks_pivoted(columns: list[str]) -> bool:
+    """S10 trigger (lib_core/materialize.py:244-248, exact rule): a
+    header of ≥3 columns where at most max(2, 20%·n) column names fail
+    to parse as dates is a wide-pivoted table and should be melted
+    (``unpivot_wide_years``)."""
+    if len(columns) < 3:
+        return False
+    non_matches = sum(1 for c in columns if not _DATISH.match(c))
+    return non_matches <= max(2.0, 0.20 * len(columns))
 
 
 # --- MinHash-backed containment (J8/A11/R5 at scale) -------------------------

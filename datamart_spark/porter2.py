@@ -46,10 +46,6 @@ _EXCEPTIONS2 = frozenset(
 )
 
 
-def _is_vowel(word: str, i: int) -> bool:
-    return word[i] in VOWELS and word[i] != "Y" if word[i].islower() else word[i] in "AEIOU"
-
-
 def _cons(word: str, i: int) -> bool:
     # 'Y' (marked consonant y) is a consonant; lowercase 'y' counts as vowel here
     c = word[i]

@@ -1,6 +1,6 @@
 """Address → coordinate resolution against a Nominatim server, with
-the injectable-transport discipline (same as sources/noaa.py: every
-request/retry/batch-split decision is real and tested; only the HTTP
+the injectable-transport discipline (every request/retry/batch-split
+decision is real and tested; only the HTTP
 byte-moving is a callable, stdlib-urllib in production, canned
 responses in tests — the sandbox has no network).
 

@@ -74,8 +74,3 @@ def coarser(res_a: str, res_b: str) -> str:
     """The coarser of two resolutions (search/join.py:573-582 picks the
     coarser side for join alignment)."""
     return res_a if RESOLUTION_PRIORITY[res_a] >= RESOLUTION_PRIORITY[res_b] else res_b
-
-
-def truncate_to(df: DataFrame, ts_col: str, resolution: str, out_col: str) -> DataFrame:
-    """date_trunc with the reference's week/quarter semantics."""
-    return df.withColumn(out_col, F.date_trunc(resolution, F.col(ts_col)))

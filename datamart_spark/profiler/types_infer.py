@@ -389,27 +389,3 @@ def profile_dataframe(
             for c in numeric_cols:
                 by_name[c].ranges = kmeans_ranges(pdf[c].to_numpy()) or None
     return profiles
-
-
-def profiles_to_df(spark, profiles: list[ColumnProfile]) -> DataFrame:
-    """Materialize profiles as the engine's `column_meta` table row set."""
-    rows = [
-        (
-            p.name,
-            p.structural_type,
-            p.semantic_types,
-            p.nb_rows,
-            p.nb_empty,
-            p.nb_distinct,
-            p.mean,
-            p.stddev,
-            [list(r) for r in p.ranges] if p.ranges else None,
-        )
-        for p in profiles
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name string, structural_type string, semantic_types array<string>, "
-        "nb_rows long, nb_empty long, nb_distinct long, mean double, "
-        "stddev double, ranges array<array<double>>",
-    )

@@ -355,9 +355,6 @@ def ann_multiband_candidates(spark, sf_dir):
 
 _IVF_K = 8       # coarse centroids
 _IVF_PROBE = 2   # lists probed per query
-_COS = (
-    "{dot} / ({na} * {nb})"
-)
 
 
 def _cos_sql(a: str, b: str) -> str:

@@ -62,3 +62,12 @@ def test_spark_generation_matches_pandas(spark):
     assert [bytes(h) for h in sdf["html"]] == [bytes(h) for h in pdf["html"]]
     assert list(sdf["lang"]) == list(pdf["lang"])
     assert list(pd.to_datetime(sdf["warc_ts"])) == list(pdf["warc_ts"])
+
+
+def test_default_partitions_scale_with_n(spark):
+    """At 400k docs the default plan makes ~4000 docs per task, not one
+    task per core (planned only: no job runs)."""
+    assert generate_documents(spark, 400_000).rdd.getNumPartitions() == 100
+    assert generate_documents(spark, 1000).rdd.getNumPartitions() == max(
+        spark.sparkContext.defaultParallelism, 4
+    )

@@ -1,4 +1,4 @@
-"""Discovery scoring (R6/W3/J8), keyword expansion (A10), unpivot (S10)."""
+"""Discovery scoring (R6/W3/J8) and unpivot (S10)."""
 
 import pytest
 
@@ -8,11 +8,6 @@ from datamart_spark.operators.discovery import (
     name_similarity,
     union_candidate_score,
     unpivot_wide_years,
-)
-from datamart_spark.profiler.keywords import (
-    attribute_keywords,
-    expand_attribute_name,
-    expand_names_df,
 )
 
 
@@ -53,32 +48,6 @@ def test_containment_score(spark):
     assert containment_score(left, "k", right, "k") == pytest.approx(0.5)
     empty = spark.createDataFrame([], "k int")
     assert containment_score(empty, "k", right, "k") == 0.0
-
-
-def test_expand_attribute_name():
-    assert expand_attribute_name("baseDate7days") == [
-        "baseDate7days", "base", "Date", "7", "days",
-    ]
-    assert expand_attribute_name("GDP_per_capita") == [
-        "GDP_per_capita", "GDP", "per", "capita",
-    ]
-    assert expand_attribute_name("") == []
-
-
-def test_attribute_keywords(spark):
-    df = spark.createDataFrame([(1, 2)], "userId int, startDate int")
-    kws = attribute_keywords(df)
-    assert {"userId", "user", "Id", "startDate", "start", "Date"} <= set(kws)
-
-
-def test_expand_names_df(spark):
-    names = spark.createDataFrame([("baseDate7",), ("plain",)], "name string")
-    got = {
-        (r["name"], r["keyword"]) for r in expand_names_df(names).collect()
-    }
-    assert ("baseDate7", "base") in got
-    assert ("baseDate7", "Date") in got or ("baseDate7", "Date7") in got
-    assert ("plain", "plain") in got
 
 
 def test_unpivot_wide_years(spark):

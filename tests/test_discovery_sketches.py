@@ -236,161 +236,3 @@ def test_augmentation_search_excludes_d3mindex(spark):
         assert r.get("input_column") != "d3mIndex"
         if r["type"] == "union":
             assert all("d3mIndex" not in pair[:2] for pair in r["matched_pairs"])
-
-
-# --- persistent dataset registry (registry-scale J8) ---------------------------
-
-
-def _norm_results(rs):
-    return sorted(
-        (r["type"], r["dataset"], r.get("input_column"), r.get("column"),
-         round(r["score"], 9))
-        for r in rs
-    )
-
-
-def test_registry_search_matches_inline(spark, aug_universe, tmp_path):
-    """The persisted sketch-table path must produce exactly the inline
-    augmentation_search results (VERDICT r2 #3)."""
-    from datamart_spark.operators.discovery import augmentation_search
-    from datamart_spark.operators.registry import DatasetRegistry
-
-    inp, candidates = aug_universe
-    reg = DatasetRegistry(str(tmp_path / "reg"))
-    for n, df in candidates.items():
-        assert reg.register(n, df) > 0
-
-    assert _norm_results(reg.search(inp, k=50)) == _norm_results(
-        augmentation_search(inp, candidates, k=50)
-    )
-    # R4 keyword boost parity
-    assert _norm_results(reg.search(inp, keywords="trade", k=50)) == _norm_results(
-        augmentation_search(inp, candidates, keywords="trade", k=50)
-    )
-    # re-registering replaces (delete-then-reinsert): same results
-    reg.register("trade prices", candidates["trade prices"])
-    assert _norm_results(reg.search(inp, k=50)) == _norm_results(
-        augmentation_search(inp, candidates, k=50)
-    )
-
-
-def test_registry_job_count_independent_of_registry_size(spark, aug_universe, tmp_path):
-    """Searching a 6-dataset registry must launch exactly as many Spark
-    jobs as searching a 1-dataset registry — discovery reads the sketch
-    TABLE; it never runs per-candidate jobs (ref search/join.py:334-425
-    queries the persistent Lazo store once)."""
-    from datamart_spark.operators.registry import DatasetRegistry
-
-    inp, candidates = aug_universe
-    reg = DatasetRegistry(str(tmp_path / "reg_jobs"))
-    reg.register("d0", candidates["trade prices"])
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    n_small = jobs("reg_small", lambda: reg.search(inp, k=50))
-    for i in range(1, 6):
-        reg.register(f"d{i}", candidates["trade prices"])
-    n_big = jobs("reg_big", lambda: reg.search(inp, k=50))
-    assert n_small == n_big, (n_small, n_big)
-
-    # scale evidence (VERDICT r3 #6): ~100 registered datasets.
-    # register() itself must stay O(1) jobs regardless of how many
-    # datasets the registry already holds, and search's job count must
-    # be flat past any size.  One caveat: past 32 partitions Spark's
-    # parquet listing itself becomes ONE distributed job
-    # (parallelPartitionDiscovery.threshold) — a constant, and exactly
-    # what a 10^5-partition registry wants — so the strict equality is
-    # asserted between 50 and 100 datasets (both past the threshold)
-    # and the small→large delta is bounded by that single listing job.
-    from pyspark.sql import functions as F
-
-    filler = spark.createDataFrame(
-        [("alpha", 1.0), ("beta", 2.0)], "code string, amount double"
-    )
-    n_reg_early = jobs("reg_add_early", lambda: reg.register("d6", filler))
-
-    def bulk_fill(lo, hi):
-        # test scaffolding only: replicate d6's registry rows under new
-        # dataset names in ONE append (93 sequential register() calls
-        # would cost minutes of suite time and prove nothing extra —
-        # the O(1)-jobs claim is carried by the two measured calls)
-        base = reg.read(spark).where(F.col("dataset") == "d6").drop("dataset")
-        names = spark.createDataFrame(
-            [(f"d{i}",) for i in range(lo, hi)], "dataset string"
-        )
-        base.crossJoin(names).write.mode("append").partitionBy(
-            "dataset"
-        ).parquet(reg._table())
-
-    bulk_fill(7, 50)
-    n_50 = jobs("reg_50", lambda: reg.search(inp, k=50))
-    bulk_fill(50, 99)
-    n_reg_late = jobs("reg_add_late", lambda: reg.register("d99", filler))
-    assert n_reg_early == n_reg_late, (n_reg_early, n_reg_late)
-    n_100 = jobs("reg_100", lambda: reg.search(inp, k=50))
-    assert n_100 == n_50, (n_50, n_100)
-    assert n_100 <= n_small + 1, (n_small, n_100)
-
-
-def test_registry_edge_cases(spark, tmp_path):
-    from datamart_spark.operators.registry import DatasetRegistry
-
-    reg = DatasetRegistry(str(tmp_path / "reg_edge"))
-    inp = spark.createDataFrame([("1.0", "a")], "amount string, code string")
-    # empty registry: no table yet
-    assert reg.search(inp, k=10) == []
-    # a dataset with nothing searchable (only d3mIndex) registers 0 rows
-    only_idx = spark.createDataFrame([(1,)], "d3mIndex long")
-    assert reg.register("useless", only_idx) == 0
-    assert reg.search(inp, k=10) == []
-
-
-def test_registry_spatial_coverage_scoring(spark, tmp_path):
-    """J7/R3 via the registry: a registered dataset with detected
-    lat/lon columns gets a spatial-coverage row; an input with lat/lon
-    scores candidates by intersection_area / query_coverage (the
-    reference's datamart_spatial_coverage query, search/join.py:229-331)."""
-    from datamart_spark.operators.registry import SPATIAL_TYPE, DatasetRegistry
-
-    def geo_df(lat_lo, lat_hi, lon_lo, lon_hi, n=400):
-        rows = [
-            (str(lat_lo + (lat_hi - lat_lo) * i / (n - 1)),
-             str(lon_lo + (lon_hi - lon_lo) * i / (n - 1)),
-             f"v{i}")
-            for i in range(n)
-        ]
-        return spark.createDataFrame(
-            rows, "latitude string, longitude string, note string"
-        )
-
-    reg = DatasetRegistry(str(tmp_path / "reg_geo"))
-    reg.register("north box", geo_df(10.0, 50.0, 0.0, 40.0))
-    reg.register("far box", geo_df(-80.0, -60.0, -170.0, -150.0))
-
-    # the spatial rows landed
-    rows = reg.read(spark).where(
-        f"structural_type = '{SPATIAL_TYPE}'"
-    ).collect()
-    assert {r["dataset"] for r in rows} == {"north box", "far box"}
-    assert all(r["column"] == "latitude|longitude" for r in rows)
-
-    # input overlapping only the north box
-    res = reg.search(geo_df(20.0, 40.0, 10.0, 30.0), k=50)
-    spatial_hits = [
-        r for r in res
-        if r["type"] == "join" and r["column"] == "latitude|longitude"
-    ]
-    assert spatial_hits and spatial_hits[0]["dataset"] == "north box"
-    assert all(h["dataset"] != "far box" for h in spatial_hits)
-    assert 0 < spatial_hits[0]["score"] <= 1.0
-    # the lat/lon pseudo-column never leaks into union name matching
-    for r in res:
-        if r["type"] == "union":
-            assert all("|" not in p[1] for p in r["matched_pairs"])

@@ -91,77 +91,3 @@ def test_lazo_estimate_bounds(slots, card_l, card_r):
     # monotone in matches: identical sketches estimate >= mismatched ones
     est_same = lazo_containment_estimate(sl, card_l, sl, card_r)
     assert est_same >= est or np.isclose(est_same, est)
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=-(10**6), max_value=10**6),
-            st.floats(min_value=-1e6, max_value=1e6,
-                      allow_nan=False, allow_infinity=False),
-            st.text(
-                alphabet=st.characters(min_codepoint=32, max_codepoint=126,
-                                       blacklist_characters='",\r\n'),
-                max_size=12,
-            ),
-        ),
-        min_size=0, max_size=20,
-    ),
-)
-@settings(max_examples=25, deadline=None)
-def test_sav_roundtrip_property(rows):
-    """Arbitrary (int, float, short-string) rows survive a .sav
-    write/read roundtrip through the compressed bytecode path."""
-    import csv
-    import io
-    import struct
-    import tempfile
-
-    from datamart_spark.sources.spss import sav_to_csv
-
-    def pad(b, n, fill=b" "):
-        return b + fill * (n - len(b))
-
-    out = bytearray()
-    out += b"$FL2" + pad(b"@(#) PROP", 60)
-    out += struct.pack("<iiiii", 2, 3, 1, 0, len(rows))
-    out += struct.pack("<d", 100.0)
-    out += pad(b"01 Jan 26", 9) + pad(b"00:00:00", 8)
-    out += pad(b"prop", 64) + b"\x00" * 3
-
-    def var(vtype, fmt_type, name):
-        fmt = (fmt_type << 16) | (8 << 8)
-        return (struct.pack("<iiiii", 2, vtype, 0, 0, fmt)
-                + struct.pack("<i", fmt) + pad(name.encode(), 8))
-
-    out += var(0, 5, "A") + var(0, 5, "B") + var(8, 1, "C")
-    out += struct.pack("<ii", 999, 0)
-    lit, cmds = [], []
-    for iv, fv, sv in rows:
-        for v in (float(iv), fv):
-            cmds.append(253)
-            lit.append(struct.pack("<d", v))
-        cmds.append(253)
-        lit.append(pad(sv.encode()[:8], 8))
-    cmds.append(252)
-    i = li = 0
-    while i < len(cmds):
-        grp = cmds[i:i + 8]
-        out += bytes(grp) + b"\x00" * (8 - len(grp))
-        for c in grp:
-            if c == 253:
-                out += lit[li]
-                li += 1
-        i += 8
-    with tempfile.NamedTemporaryFile(suffix=".sav", delete=False) as f:
-        f.write(bytes(out))
-        path = f.name
-    dst = path + ".csv"
-    sav_to_csv(path, dst)
-    got = list(csv.reader(io.StringIO(open(dst).read())))
-    assert got[0] == ["A", "B", "C"]
-    assert len(got) == 1 + len(rows)
-    for (iv, fv, sv), row in zip(rows, got[1:]):
-        assert row[0] == "%g" % float(iv)
-        assert row[1] == "%g" % fv
-        assert row[2] == sv[:8].rstrip()
