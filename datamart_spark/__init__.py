@@ -15,8 +15,8 @@ Layout:
     corpus      — deterministic Common-Crawl-style synthetic corpus
     index/      — build doc_stats / term_stats / postings; resume, delete
     query/      — one batch planner + block-max WAND / positional kernels
-    profiler/   — datamart-parity column profiling (types, geo, ranges)
-    operators/  — augmentation + discovery ops (join, union, sketches)
+    profiler/   — the offline admin-area gazetteer (suite admin_area_profile)
+    operators/  — discovery scorers and spatial ops the suite calls
     streaming/  — incremental ingest (Structured Streaming)
     suite/      — the oracle-gated query suite behind __spark_entry__.py
 """

@@ -218,7 +218,7 @@ def keyword_multiplier_expr(score_col: str = "score",
     )
 
 
-# --- augmentation search facade (§3.1 lifecycle, steps 4-5) -------------------
+# --- R2 coverage-range overlap -----------------------------------------------
 
 
 def range_overlap_score(query_ranges, cand_ranges) -> float:
@@ -235,97 +235,3 @@ def range_overlap_score(query_ranges, cand_ranges) -> float:
             if inter > 0:
                 s += inter / total
     return s
-
-
-def augmentation_search(
-    input_df: DataFrame,
-    candidates: dict[str, DataFrame],
-    keywords: str | None = None,
-    k: int = 50,
-    n_hashes: int = N_PERMUTATIONS,
-) -> list[dict]:
-    """The reference's augmentation-search lifecycle over a registry of
-    candidate datasets (apiserver search/__init__.py:374-425):
-
-    - JOIN discovery per input column: numeric/temporal columns score by
-      coverage-range intersection (R2, ranges from the A8 K-Means
-      compression); textual columns score by Lazo sketch containment
-      (R5/J8) — each scored (dataset, column) pair is one join result;
-    - R4: with a keyword query, candidates whose name matches every
-      keyword get their join score ×10 (function_score weight=10);
-    - UNION discovery: column-name similarity + greedy matching → R6
-      dataset score;
-    - W2: join and union result lists interleaved pairwise, cut to
-      top-``k`` (TOP_K_SIZE=50).
-
-    Driver-side orchestration is correct here by construction: it loops
-    over dataset METADATA (profiles + sketches — each produced by a
-    distributed job), exactly like the reference's ES metadata queries;
-    no table data crosses the driver."""
-    from ..profiler.types_infer import (
-        TYPE_FLOAT, TYPE_INTEGER, TYPE_TEXT, profile_dataframe,
-    )
-
-    def _profile(df):
-        # P10: the synthetic d3mIndex column is excluded everywhere the
-        # reference searches (search/join.py:54-56, union.py:35-37)
-        df = df.drop("d3mIndex")
-        profs = profile_dataframe(df, compute_ranges=True)
-        numeric = [p for p in profs if p.structural_type in (TYPE_INTEGER, TYPE_FLOAT)]
-        text = [p for p in profs if p.structural_type == TYPE_TEXT]
-        return profs, numeric, text
-
-    in_profs, in_numeric, in_text = _profile(input_df)
-    in_sketches = {
-        p.name: column_minhash_sketch(input_df, p.name, n_hashes) for p in in_text
-    }
-
-    kw_terms = [t for t in (keywords or "").lower().split() if t]
-
-    join_results: list[dict] = []
-    union_results: list[dict] = []
-    for name, cand in candidates.items():
-        profs, numeric, text = _profile(cand)
-        kw_match = bool(kw_terms) and all(t in name.lower() for t in kw_terms)
-        for ip in in_numeric:
-            if not ip.ranges:
-                continue
-            for cp in numeric:
-                if not cp.ranges:
-                    continue
-                score = range_overlap_score(ip.ranges, cp.ranges)
-                if score > 0:
-                    join_results.append(
-                        {
-                            "type": "join", "dataset": name,
-                            "input_column": ip.name, "column": cp.name,
-                            "score": score * (10.0 if kw_match else 1.0),  # R4
-                        }
-                    )
-        for ip in in_text:
-            sl, cl = in_sketches[ip.name]
-            for cp in text:
-                sr, cr = column_minhash_sketch(cand, cp.name, n_hashes)
-                score = lazo_containment_estimate(sl, cl, sr, cr)  # R5
-                if score > 0:
-                    join_results.append(
-                        {
-                            "type": "join", "dataset": name,
-                            "input_column": ip.name, "column": cp.name,
-                            "score": score * (10.0 if kw_match else 1.0),
-                        }
-                    )
-        u_score, matched = union_candidate_score(
-            [p.name for p in in_profs], [p.name for p in profs]
-        )
-        if u_score > 0:
-            union_results.append(
-                {
-                    "type": "union", "dataset": name, "score": u_score,
-                    "matched_pairs": matched,
-                }
-            )
-
-    join_results.sort(key=lambda r: (-r["score"], r["dataset"], r["column"]))
-    union_results.sort(key=lambda r: (-r["score"], r["dataset"]))
-    return interleave_results(join_results, union_results, k=k)  # W2

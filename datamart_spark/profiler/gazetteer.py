@@ -1,20 +1,21 @@
 """Offline administrative-area gazetteer (reference: datamart-geo).
 
 The reference resolves TEXT columns against the ``datamart_geo.GeoData``
-sqlite database (Wikidata-derived place names + bounds) and classifies a
-column ``AdministrativeArea`` when more than 70% of its values resolve
-(lib_profiler/datamart_profiler/profile_types.py:199-203), then guesses
-the admin level when one level holds >= max(3, 90%) of the resolved
-values (core.py:35,486-499, MAX_WRONG_LEVEL_ADMIN = 0.10) and merges the
-areas' bounding boxes into a spatial coverage envelope (core.py:640-668).
+sqlite database (Wikidata-derived place names + bounds); the suite's
+``admin_area_profile`` applies its AdministrativeArea rule (more than
+70% of a column resolves, level guessed at max(3, 90%) —
+profile_types.py:199-203, core.py:486-499) over ``NAMES_BY_LEVEL``.
+``admin_level_for`` states the same level guess over plain counts, and
+``merged_bounds`` the reference's coverage envelope of the resolved
+areas' bounding boxes (core.py:640-668).
 
-The sandbox has no network and no datamart-geo data files, so this
-module vendors a COMPACT public-knowledge table: ~55 countries
+The package ships without the datamart-geo data files, so this module
+vendors a COMPACT public-knowledge table: ~55 countries
 (level 0 — includes every TPC-H nation name), the 50 U.S. states and
 the 16 German Länder (level 1), each with a coarse lat/lon bounding
 box.  Same contract, smaller world: ``resolve(name)`` -> (level,
 bounds) or None.  Swap ``AREAS`` for the full datamart-geo extract on a
-real deployment; every rule constant stays.
+real deployment.
 
 Name collisions across levels (e.g. "Georgia" the U.S. state vs the
 country) resolve to the LOWEST level present — matching datamart_geo's
@@ -24,9 +25,6 @@ preference for the most prominent (lowest-level) entity.
 from __future__ import annotations
 
 MAX_WRONG_LEVEL_ADMIN = 0.10  # core.py:35
-ADMIN_RESOLUTION_THRESHOLD = 0.70  # profile_types.py:201
-
-SEM_ADMIN = "http://schema.org/AdministrativeArea"
 
 # (canonical name, aliases, level, (min_lat, max_lat, min_lon, max_lon))
 # Bounds are coarse public-knowledge envelopes (degrees, rounded) — the
@@ -176,21 +174,12 @@ def _build() -> dict[str, tuple[int, tuple[float, float, float, float]]]:
 
 _LOOKUP = _build()
 
-#: normalized names by resolved level — the flat lists the profiler's
-#: single-pass aggregation embeds as JVM-side ``isin`` literals (a few
-#: hundred strings: negligible against any scan)
+#: normalized names by resolved level — the flat lists
+#: ``suite/star.admin_area_profile`` embeds as JVM-side ``isin``
+#: literals (a few hundred strings: negligible against any scan)
 NAMES_BY_LEVEL: dict[int, list[str]] = {}
 for _k, (_lvl, _b) in _LOOKUP.items():
     NAMES_BY_LEVEL.setdefault(_lvl, []).append(_k)
-ALL_NAMES: list[str] = sorted(_LOOKUP)
-
-
-#: flat (normalized name, level, min_lat, max_lat, min_lon, max_lon)
-#: rows — the broadcast-side table for envelope computation
-AREA_ROWS: list[tuple[str, int, float, float, float, float]] = [
-    (k, lvl, float(b[0]), float(b[1]), float(b[2]), float(b[3]))
-    for k, (lvl, b) in sorted(_LOOKUP.items())
-]
 
 
 def resolve(name: str) -> tuple[int, tuple[float, float, float, float]] | None:

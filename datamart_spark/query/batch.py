@@ -231,6 +231,8 @@ def _topk(spark: SparkSession, catalog, queries: list[dict],
     (query_id, doc_id, score), ≤ k rows per live spec, ordered
     (query_id, score desc, doc_id asc) — a pandas frame when the kernels
     ran in-process or the plan has no live spec, else a DataFrame."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
     plan = _plan_queries(spark, catalog, queries)
     if not plan.specs:
         return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})

@@ -131,13 +131,16 @@ def search_many(
     k: int = TOP_K_SIZE,
 ) -> DataFrame:
     """Bulk ranked search: the whole query batch (per-query AND/OR mode,
-    phrase flags and lang/ts filters — see ``bm25_topk_batch``) in ONE
-    job, hydrated with one broadcast join.  Returns (query_id, doc_id,
-    url, lang, warc_ts, score), each query's hits ordered (score desc,
-    doc_id asc).  The reference answers one ``POST /api/v1/search`` per
-    HTTP request; a bulk evaluation client looping that endpoint pays
-    N round-trips + N ES requests — this is the engine-side batch form
-    of the same semantics (apiserver/apiserver/search/__init__.py:
-    429-604 per query)."""
+    phrase flags and lang/ts filters — see ``bm25_topk_batch``) in one
+    scan and one kernel pass, hydrated on the branch the kernels took
+    (``_hydrate``): a small selection runs in-process and hydrates with
+    one pyarrow ``doc_id IN hits`` read of doc_stats, no Spark job; a
+    larger one is ONE job hydrated with one broadcast join against
+    doc_stats.  Returns (query_id, doc_id, url, lang, warc_ts, score),
+    each query's hits ordered (score desc, doc_id asc).  The reference
+    answers one ``POST /api/v1/search`` per HTTP request; a bulk
+    evaluation client looping that endpoint pays N round-trips + N ES
+    requests — this is the engine-side batch form of the same semantics
+    (apiserver/apiserver/search/__init__.py:429-604 per query)."""
     return _hydrate(spark, catalog, _topk_many(spark, catalog, queries, k),
                     "query_id")

@@ -395,8 +395,8 @@ def ann_ivf_probe(spark, sf_dir):
     and rescans exactly those.  Centroids here are a deterministic seed
     set (first {_IVF_K} vectors) so the DuckDB oracle reproduces the
     quantizer bit-for-bit — at scale the centroids come from k-means
-    (profiler.ranges-style Lloyd's) and the lists become the partition
-    keys of the embedding table; the probe plan is unchanged."""
+    (Lloyd's iterations) and the lists become the partition keys of the
+    embedding table; the probe plan is unchanged."""
     from pyspark.sql import Window
 
     emb = table(spark, sf_dir, "embeddings")

@@ -273,6 +273,22 @@ def test_batch_rejects_duplicate_query_ids(built, spark):
         )
 
 
+def test_negative_k_raises(built, spark, kernel_branch):
+    """A negative k is one clear ValueError on either branch, not a
+    truncated or unbounded ranking; k=0 is an empty result."""
+    from datamart_spark.corpus import _VOCAB
+
+    q = f"the {_VOCAB[60]}"
+    specs = [{"query_id": "a", "query": q}, {"query_id": "b", "query": "the"}]
+    with pytest.raises(ValueError, match="k must be >= 0, got -1"):
+        search(spark, built, q, k=-1)
+    with pytest.raises(ValueError, match="k must be >= 0, got -1"):
+        bm25_topk_batch(spark, built, specs, k=-1)
+    assert search(spark, built, q, k=1).count() == 1  # q matches
+    assert search(spark, built, q, k=0).collect() == []
+    assert bm25_topk_batch(spark, built, specs, k=0).collect() == []
+
+
 def test_generated_query_set_deterministic_and_mixed():
     """generate_query_set(n): the bulk-labeling workload generator —
     deterministic, reference-set mix proportions at any n, and NOT a

@@ -2,14 +2,9 @@
 profile_types.py:199-203, core.py:486-499,640-668) over the vendored
 offline gazetteer."""
 
-import pytest
-
 from datamart_spark.profiler.gazetteer import (
-    ADMIN_RESOLUTION_THRESHOLD,
-    SEM_ADMIN,
     admin_level_for,
     merged_bounds,
-    normalize,
     resolve,
 )
 
@@ -59,80 +54,3 @@ def test_merged_bounds_envelope():
     assert b == (41, 55, -5, 15)
     # degenerate (sub-0.01-degree) envelopes are discarded
     assert merged_bounds([(1.0, 1.005, 2.0, 9.0)]) is None
-
-
-def test_profile_dataframe_classifies_admin(spark):
-    from datamart_spark.profiler.types_infer import profile_dataframe
-
-    rows = [("FRANCE", "AFRICA"), ("GERMANY", "ASIA"), ("PERU", "EUROPE"),
-            ("CHINA", "AMERICA"), ("KENYA", "MIDDLE EAST"),
-            ("JAPAN", "AFRICA"), ("CANADA", "ASIA"), ("BRAZIL", "EUROPE"),
-            ("INDIA", "AMERICA"), ("EGYPT", "MIDDLE EAST")]
-    df = spark.createDataFrame(rows, "nation string, region string")
-    profs = {p.name: p for p in profile_dataframe(df, compute_ranges=False)}
-    assert SEM_ADMIN in profs["nation"].semantic_types
-    assert profs["nation"].admin_area_level == 0
-    assert profs["nation"].admin_bounds is not None
-    # continents never resolve: plain categorical text, no admin type
-    assert SEM_ADMIN not in profs["region"].semantic_types
-    assert profs["region"].admin_area_level is None
-
-
-def test_profile_dataframe_admin_level1_and_below_threshold(spark):
-    states = ["california", "texas", "ohio", "nevada", "utah",
-              "oregon", "georgia", "maine", "iowa", "kansas"]
-    mixed = states[:6] + ["narnia", "mordor", "gondor", "hogwarts"]  # 60%
-    df = spark.createDataFrame(
-        list(zip(states, mixed)), "state string, mixed string"
-    )
-    from datamart_spark.profiler.types_infer import profile_dataframe
-
-    profs = {p.name: p for p in profile_dataframe(df, compute_ranges=False)}
-    assert SEM_ADMIN in profs["state"].semantic_types
-    assert profs["state"].admin_area_level == 1
-    # 60% resolved is under the reference's 70% rule
-    assert SEM_ADMIN not in profs["mixed"].semantic_types
-
-
-def test_free_text_vs_categorical(spark):
-    """profile_types.py:84-85,196-218: >=98% of non-empty values with
-    >=3 whitespace runs -> semantic Text (free text), suppressing the
-    distinct-ratio Enumeration rule; short categorical strings keep
-    Enumeration; admin columns stay categorical even when sentence-y."""
-    from datamart_spark.profiler.types_infer import (
-        SEM_ENUMERATION,
-        TYPE_TEXT,
-        profile_dataframe,
-    )
-
-    sentences = [
-        "the quick brown fox jumps",
-        "pack my box with five dozen jugs",
-    ]
-    rows = [(sentences[i % 2], ["red", "blue"][i % 2]) for i in range(40)]
-    df = spark.createDataFrame(rows, "body string, color string")
-    profs = {p.name: p for p in profile_dataframe(df, compute_ranges=False)}
-    # 2 distinct sentences over 40 rows: the ratio rule ALONE would say
-    # Enumeration — free text must win
-    assert TYPE_TEXT in profs["body"].semantic_types
-    assert SEM_ENUMERATION not in profs["body"].semantic_types
-    assert SEM_ENUMERATION in profs["color"].semantic_types
-    assert TYPE_TEXT not in profs["color"].semantic_types
-
-
-def test_free_text_threshold_and_geo_exclusion(spark):
-    from datamart_spark.profiler.types_infer import (
-        TYPE_GEO_POLYGON,
-        TYPE_TEXT,
-        profile_dataframe,
-    )
-
-    mixed = ["one two three four"] * 9 + ["solo"] * 1  # 90% < 98%
-    poly = ["POLYGON ((1 2), (3 4))"] * 10  # whitespace-y but geo
-    df = spark.createDataFrame(
-        list(zip(mixed, poly)), "mixed string, poly string"
-    )
-    profs = {p.name: p for p in profile_dataframe(df, compute_ranges=False)}
-    assert TYPE_TEXT not in profs["mixed"].semantic_types
-    assert profs["poly"].structural_type == TYPE_GEO_POLYGON
-    assert TYPE_TEXT not in profs["poly"].semantic_types

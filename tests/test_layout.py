@@ -1,6 +1,7 @@
 """Package layout: every module under `datamart_spark/` is imported,
 directly or transitively, by the engine (`index/`, `query/`, `suite/`)
-or by a script that runs it. A module only tests import is dead weight.
+or by a script that runs it. A module only tests import is dead weight,
+and a package `__init__` that re-exports would hide one.
 The walk reads source with `ast`; nothing is imported and no Spark job
 runs."""
 
@@ -91,3 +92,17 @@ def test_every_module_is_reached():
     assert not unreached, f"modules no engine path or script imports: {unreached}"
     # an exemption for a module that is gone or now reached is stale
     assert set(UNREACHED_OK) <= set(modules) - reached
+
+
+def test_no_reexports_outside_public_packages():
+    """A package `__init__` that imports its modules reaches them for
+    every importer of a sibling, so a test-only module would look used.
+    Only the package root, the engine packages and the listed
+    exceptions may re-export."""
+    public = {PKG, *(f"{PKG}.{p}" for p in ROOT_PACKAGES), *UNREACHED_OK}
+    reexporting = sorted(
+        name for name, path in _package_modules().items()
+        if path.endswith("__init__.py") and name not in public
+        and _imports(path, name, True)
+    )
+    assert not reexporting, f"package __init__ files that import: {reexporting}"

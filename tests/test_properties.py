@@ -1,6 +1,6 @@
 """Property-based gates (hypothesis) for the pure kernels: the varbyte
-codec, delta coding, the UAX#29 tokenizer, K-Means ranges, and the Lazo
-estimator — the deterministic cores everything distributed sits on."""
+codec, delta coding, the UAX#29 tokenizer and the Lazo estimator — the
+deterministic cores everything distributed sits on."""
 
 import numpy as np
 from hypothesis import given, settings
@@ -13,7 +13,6 @@ from datamart_spark.index.varbyte import (
     vb_encode_with_sizes,
 )
 from datamart_spark.operators.discovery import lazo_containment_estimate
-from datamart_spark.profiler.ranges import MIN_RANGE_SIZE, N_RANGES, kmeans_ranges
 from datamart_spark.uax29 import tokenize_uax29
 
 
@@ -52,29 +51,6 @@ def test_uax29_tokens_are_substrings_and_cover_word_chars(text):
     in_words = sorted(re.findall(r"\w", text))
     out_words = sorted(ch for t in toks for ch in t if re.match(r"\w", ch))
     assert in_words == out_words
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(
-        st.floats(min_value=-1e12, max_value=1e12, allow_nan=False),
-        max_size=400,
-    )
-)
-def test_kmeans_ranges_invariants(values):
-    ranges = kmeans_ranges(values)
-    vals = np.asarray(values, dtype=np.float64)
-    assert len(ranges) <= N_RANGES
-    prev_hi = -np.inf
-    for gte, lte in ranges:
-        assert gte <= lte
-        assert gte >= prev_hi or np.isclose(gte, prev_hi)  # sorted, ~disjoint
-        prev_hi = gte
-        # endpoints are actual data values (5%/95% indices of a cluster)
-        assert np.isclose(vals, gte).any() and np.isclose(vals, lte).any()
-    if len(vals):
-        # a cluster must hold >= 10% of values to produce a range
-        assert len(ranges) <= max(1, int(1 / MIN_RANGE_SIZE))
 
 
 @settings(max_examples=200, deadline=None)
