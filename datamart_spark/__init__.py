@@ -16,7 +16,7 @@ Layout:
     index/      — build doc_stats / term_stats / postings; resume, delete
     query/      — one batch planner + block-max WAND / positional kernels
     profiler/   — the offline admin-area gazetteer (suite admin_area_profile)
-    operators/  — discovery scorers and spatial ops the suite calls
+    operators/  — join containment and spatial ops the suite calls
     streaming/  — incremental ingest (Structured Streaming)
     suite/      — the oracle-gated query suite behind __spark_entry__.py
 """

@@ -27,9 +27,9 @@ Two profiles:
   term-frequency computation (lib_profiler core.py:54,445-451:
   ``split(lower(text), '\\W+')``).
 
-``resolve_tokenizer(None, stemming)`` implements the default pairing;
-both halves of every comparison must pass the same profile explicitly
-to diverge from it.
+``resolve_tokenizer(stemming)`` implements the pairing: a fresh build
+and the python oracle both take it, and a resumed build keeps the
+tokenizer its snapshot records.
 
 All Spark entry points are Arrow-batched pandas UDFs / builtin
 expressions — no per-row Python UDFs (north rule §2.10).
@@ -63,12 +63,10 @@ for _c in b"abcdefghijklmnopqrstuvwxyz0123456789_":
     _WORD_LUT[_c] = True
 
 
-def resolve_tokenizer(tokenizer: str | None, stemming: bool) -> str:
+def resolve_tokenizer(stemming: bool) -> str:
     """Default pairing: the full (stemming) analyzer tokenizes with
     Lucene-fidelity ``uax29``; the oracle-facing non-stemming profile
     stays ``simple`` (the DuckDB oracle mirrors ``\\w+``)."""
-    if tokenizer is not None:
-        return tokenizer
     return "uax29" if stemming else "simple"
 
 
@@ -112,40 +110,6 @@ def analyze_str(
     return [stem_cache(t) for t in toks]
 
 
-def analyze_series(
-    texts: pd.Series, stemming: bool = True, tokenizer: str = "simple"
-) -> pd.Series:
-    """Batch analysis: Series[str] → Series[list[str]].
-
-    pandas ``str.findall`` keeps the regex loop in C; stemming memoizes
-    per batch (vocabulary ≪ token count, so hit-rate ≈ 100%).
-    """
-    if tokenizer == "uax29":
-        from .uax29 import _MAYBE_SLOW, _NEEDS_SLOW, tokenize_uax29
-
-        # vectorized fast path: documents without CJK/Extend/Format/
-        # mid-joiner-between-word-chars segment identically under \w+
-        # (uax29.py docstring).  Two-stage detection, both C-speed: a
-        # cheap single-class scan eliminates most rows, the precise
-        # lookaround scan runs only on its survivors, and the full
-        # Python grammar only on rows that truly need it.
-        low = texts.str.lower()
-        toks = low.str.findall(_TOKEN_RE)
-        maybe = low.str.contains(_MAYBE_SLOW, regex=True, na=False)
-        if maybe.any():
-            sub = low[maybe]
-            slow = sub.str.contains(_NEEDS_SLOW, regex=True, na=False)
-            if slow.any():
-                toks = toks.copy()
-                toks[slow[slow].index] = sub[slow].map(tokenize_uax29)
-    else:
-        toks = texts.str.lower().str.findall(_TOKEN_RE)
-    if not stemming:
-        return toks
-    cache = StemCache()
-    return toks.map(lambda ts: [cache(t) for t in ts] if ts is not None else None)
-
-
 def tokenize_batch_flat(
     texts: pd.Series, tokenizer: str = "simple"
 ) -> tuple:
@@ -165,10 +129,8 @@ def tokenize_batch_flat(
     contiguous string buffer (word-class lookup table + shifted
     comparisons ≡ ``\\w+`` findall on lowered ASCII), and factorized
     with ``pc.dictionary_encode``.  Remaining rows take the exact
-    per-row python path (``analyze_series`` semantics); the two
-    streams merge at the (tiny) vocabulary level, so results are
-    bit-identical to the previous pandas ``str.findall``
-    implementation."""
+    per-row python path (``analyze_str`` semantics); the two
+    streams merge at the (tiny) vocabulary level."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc

@@ -69,7 +69,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..analyzer import analyze_series, extract_text_series
+from ..analyzer import extract_text_series, resolve_tokenizer
 from .catalog import IndexCatalog
 from .varbyte import vb_encode_with_sizes
 
@@ -168,7 +168,6 @@ def term_doc_tf(
     docs: DataFrame,
     text_col: str = "text",
     stemming: bool = True,
-    title_boost: int | None = None,
     meta_cols: list[str] | None = None,
     tokenizer: str = "simple",
     positions: bool = False,
@@ -177,24 +176,11 @@ def term_doc_tf(
     row per doc (term NULL, doclen + metadata columns); tf aggregated
     inside the Arrow batch (map-side combine before any shuffle).
 
-    ``title_boost``: BM25F-style field boost — the reference queries
-    `multi_match` with `id^10` (apiserver/apiserver/search/__init__.py:
-    65-77); the analog here treats the document's first line (the page
-    title in the corpus layout) as a boosted field via weighted field
-    concatenation: tf' = tf_body + boost·tf_title, doclen' likewise.
-    Integer boost keeps tf varbyte-encodable; rank identity is defined
-    against the same formula in the oracle.
-
     ``positions``: carry each (doc, term)'s within-doc token positions
     (0-based, post-analyzer order; a stem's positions are the union of
     its surface forms') as a delta+varbyte payload — the phrase-query
     layout.  The shuffle payload grows from distinct-terms-per-doc rows
-    to +O(total tokens) compressed bytes, which is why it is opt-in.
-    Incompatible with ``title_boost`` (weighted tf has no single token
-    stream to take positions over)."""
-    if positions and title_boost is not None:
-        raise ValueError("positions=True is incompatible with title_boost "
-                         "(weighted-field tf has no single position stream)")
+    to +O(total tokens) compressed bytes, which is why it is opt-in."""
     if meta_cols is None:
         meta_cols = [c for c in META_COLS if c in docs.columns]
     schema = _tokens_schema(meta_cols, positions=positions)
@@ -204,65 +190,25 @@ def term_doc_tf(
         from ..porter2 import stem
 
         for b in batches:
-            if title_boost is None:
-                # whole-batch Arrow tokenization (analyzer.
-                # tokenize_batch_flat): byte-level numpy split +
-                # C++ dictionary encode for provably-\w+-identical
-                # rows, python fallback for the rest — replaces the
-                # pandas str.findall + pd.factorize pair that dominated
-                # the analyze phase (guide §4.2); returns the
-                # already-factorized stream
-                codes, uniq0, lens, stream_order = tokenize_batch_flat(
-                    b[text_col], tokenizer=tokenizer
-                )
-                toks = None
-                weights_per_doc = None
-            else:
-                split = b[text_col].fillna("").str.split("\n", n=1)
-                titles = split.map(lambda p: p[0] if p else "")
-                bodies = split.map(lambda p: p[1] if p and len(p) > 1 else "")
-                t_toks = analyze_series(titles, stemming=False, tokenizer=tokenizer).map(
-                    lambda ts: ts if ts is not None else []
-                )
-                b_toks = analyze_series(bodies, stemming=False, tokenizer=tokenizer).map(
-                    lambda ts: ts if ts is not None else []
-                )
-                toks = t_toks.combine(b_toks, lambda a, c: a + c)
-                weights_per_doc = [
-                    np.concatenate(
-                        [
-                            np.full(len(a), title_boost, dtype=np.int64),
-                            np.ones(len(c), dtype=np.int64),
-                        ]
-                    )
-                    for a, c in zip(t_toks, b_toks)
-                ]
-            if toks is not None:
-                lens = toks.map(len).to_numpy(dtype=np.int64)
+            # whole-batch Arrow tokenization (analyzer.tokenize_batch_flat):
+            # byte-level numpy split + C++ dictionary encode for
+            # provably-\w+-identical rows, python fallback for the rest
+            # (guide §4.2); returns the already-factorized stream — rows
+            # appear in stream_order (each row contiguous, tokens in
+            # document order)
+            inv, uniq, lens, stream_order = tokenize_batch_flat(
+                b[text_col], tokenizer=tokenizer
+            )
             doc_ids = b["doc_id"].to_numpy()
             pos_bytes: list[bytes] = []
             if lens.sum() == 0:
                 out_doc_idx = np.zeros(0, dtype=np.int64)
                 stems = np.zeros(0, dtype=object)
                 out_term_idx = pair_counts = out_doc_idx
-                doclens = lens
             else:
-                if toks is None:
-                    # stream already factorized by tokenize_batch_flat;
-                    # rows appear in stream_order (each row contiguous,
-                    # tokens in document order)
-                    inv, uniq = codes, uniq0
-                else:
-                    stream_order = np.arange(len(b), dtype=np.int64)
-                    flat = np.concatenate(
-                        [np.asarray(t, dtype=object) for t in toks]
-                    )
-                    # hash-factorize (pd.factorize is O(n); sort-based
-                    # np.unique over object strings was the profile's hot
-                    # spot), stem once per UNIQUE surface token, then
-                    # refactorize on the STEM so forms that collapse to one
-                    # stem ("runs","running"→"run") merge into a single tf
-                    inv, uniq = pd.factorize(flat, sort=False)
+                # stem once per UNIQUE surface token, then refactorize on
+                # the STEM so forms that collapse to one stem
+                # ("runs","running"→"run") merge into a single tf
                 if stemming:
                     if len(_STEM_CACHE) > _STEM_CACHE_MAX:
                         _STEM_CACHE.clear()
@@ -276,9 +222,9 @@ def term_doc_tf(
                 stems = np.asarray(stems, dtype=object)
                 token_stem = stem_of_surf[inv]
                 # integer-factorized (doc, stem) pair counting — all
-                # C-level.  The flat stream lists rows in stream_order
-                # (identity for the legacy path), so the per-token doc
-                # index repeats the ORIGINAL row positions in that order
+                # C-level.  The flat stream lists rows in stream_order,
+                # so the per-token doc index repeats the ORIGINAL row
+                # positions in that order
                 doc_idx = np.repeat(stream_order, lens[stream_order])
                 n_terms = len(stems)
                 pair_codes = doc_idx * n_terms + token_stem
@@ -315,8 +261,7 @@ def term_doc_tf(
                     pos_bytes = [
                         pbuf[poff[a]:poff[z]] for a, z in zip(gstarts, gends)
                     ]
-                    doclens = lens
-                elif weights_per_doc is None:
+                else:
                     # hash-factorize + bincount: O(n) vs np.unique's
                     # O(n log n) sort over the token-scale code array
                     # (row order of the emitted pairs is first-appearance
@@ -324,15 +269,6 @@ def term_doc_tf(
                     # tokens table ordered; the encoder re-sorts)
                     pair_inv, pair_uniq = pd.factorize(pair_codes, sort=False)
                     pair_counts = np.bincount(pair_inv, minlength=len(pair_uniq))
-                    doclens = lens
-                else:
-                    w = np.concatenate(weights_per_doc)
-                    pair_uniq, pair_inv = np.unique(pair_codes, return_inverse=True)
-                    pair_counts = np.zeros(pair_uniq.size, dtype=np.int64)
-                    np.add.at(pair_counts, pair_inv, w)
-                    doclens = np.array(
-                        [int(ws.sum()) for ws in weights_per_doc], dtype=np.int64
-                    )
                 out_doc_idx = pair_uniq // n_terms
                 out_term_idx = pair_uniq % n_terms
 
@@ -351,7 +287,7 @@ def term_doc_tf(
                         [pair_counts, np.zeros(len(b), dtype=np.int64)]
                     ).astype(np.int32),
                     "doclen": np.concatenate(
-                        [doclens[out_doc_idx], doclens]
+                        [lens[out_doc_idx], lens]
                     ).astype(np.int32),
                 }
             )
@@ -486,8 +422,6 @@ def build_index(
     resume: bool = True,
     n_docs: int | None = None,
     only_shards: list[int] | None = None,
-    title_boost: int | None = None,
-    tokenizer: str | None = None,
     positions: bool = False,
 ) -> dict:
     """Full or incremental build.  Returns the committed snapshot.
@@ -507,7 +441,6 @@ def build_index(
         return _build_index_impl(
             docs, catalog, n_shards=n_shards, stemming=stemming,
             resume=resume, n_docs=n_docs, only_shards=only_shards,
-            title_boost=title_boost, tokenizer=tokenizer,
             positions=positions,
         )
     except BaseException:
@@ -523,8 +456,6 @@ def _build_index_impl(
     resume: bool = True,
     n_docs: int | None = None,
     only_shards: list[int] | None = None,
-    title_boost: int | None = None,
-    tokenizer: str | None = None,
     positions: bool = False,
 ) -> dict:
     """Build body — call through ``build_index`` (the rollback wrapper).
@@ -575,28 +506,26 @@ def _build_index_impl(
                 "dead despite the pid probe, run catalog.recover(force=True)"
             )
     snap = catalog.current_snapshot() if resume else None
-    if tokenizer is None:
-        # default profile: uax29 under stemming, simple otherwise
-        # (analyzer.resolve_tokenizer) — but a RESUMED build inherits
-        # the snapshot's committed tokenizer, whatever it is
-        from ..analyzer import resolve_tokenizer
-
-        tokenizer = (
-            snap.get("tokenizer", "simple") if snap
-            else resolve_tokenizer(None, stemming)
-        )
+    # default profile: uax29 under stemming, simple otherwise
+    # (analyzer.resolve_tokenizer) — but a RESUMED build inherits the
+    # snapshot's committed tokenizer, whatever it is
+    tokenizer = (
+        snap.get("tokenizer", "simple") if snap else resolve_tokenizer(stemming)
+    )
     if snap:
+        # a snapshot with an index-time field boost holds weighted tf:
+        # growing it with plain tf would mix incompatible postings
         if (
             bool(snap.get("stemming", True)) != bool(stemming)
-            or snap.get("title_boost") != title_boost
-            or snap.get("tokenizer", "simple") != tokenizer
+            or snap.get("title_boost") is not None
             or bool(snap.get("positions", False)) != bool(positions)
         ):
             raise ValueError(
-                "resume with different analyzer settings (stemming/title_boost/"
-                "positions) would mix incompatible postings; drop() the catalog "
-                f"or match the snapshot ({snap.get('stemming')}, "
-                f"{snap.get('title_boost')}, {snap.get('positions', False)})"
+                "resume with different analyzer settings (stemming/positions, "
+                "or a snapshot built with an index-time field boost) would mix "
+                "incompatible postings; drop() the catalog or match the "
+                f"snapshot (stemming={snap.get('stemming')}, "
+                f"positions={snap.get('positions', False)})"
             )
         if snap.get("postings_format", 1) < POSTINGS_FORMAT:
             raise ValueError(
@@ -666,9 +595,8 @@ def _build_index_impl(
     if fresh or not catalog.exists("tokens"):
         # narrow map job: analyze + write the tokenized table (no shuffle)
         catalog.write(
-            term_doc_tf(docs, stemming=stemming, title_boost=title_boost,
-                        meta_cols=meta_cols, tokenizer=tokenizer,
-                        positions=positions)
+            term_doc_tf(docs, stemming=stemming, meta_cols=meta_cols,
+                        tokenizer=tokenizer, positions=positions)
             .withColumn("shard", shard).withColumn("kind", kind),
             "tokens",
             partition_by=["shard", "kind"],
@@ -682,9 +610,8 @@ def _build_index_impl(
         # (closes the r3 crash window; see catalog.rewrite_partitions)
         delta = docs.where(F.col("doc_id") >= delta_start)
         catalog.rewrite_partitions(
-            term_doc_tf(delta, stemming=stemming, title_boost=title_boost,
-                        meta_cols=meta_cols, tokenizer=tokenizer,
-                        positions=positions)
+            term_doc_tf(delta, stemming=stemming, meta_cols=meta_cols,
+                        tokenizer=tokenizer, positions=positions)
             .withColumn("shard", shard).withColumn("kind", kind),
             "tokens",
             sorted(set(range(delta_start // width, n_shards))),
@@ -878,7 +805,6 @@ def _build_index_impl(
         # mis-scales block pruning)
         "tfn_ref_avgdl": TFN_REF_AVGDL,
         "stemming": stemming,
-        "title_boost": title_boost,
         "tokenizer": tokenizer,
         "positions": positions,
         "lineage": lineage_summary,

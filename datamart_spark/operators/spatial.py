@@ -58,27 +58,6 @@ def bbox_filter(
 # --- R3 / J7: envelope intersection score -------------------------------------
 
 
-def spatial_overlap_score(query_boxes, cand_boxes) -> float:
-    """R3: Σ over box pairs of intersection_area / query_coverage.
-    Boxes are (min_lat, max_lat, min_lon, max_lon).  Mirrors the
-    painless script (join.py:279-292): clamp the intersection, score
-    only positive-area overlaps, coverage = Σ query box areas."""
-    coverage = sum(
-        (mx_lat - mn_lat) * (mx_lon - mn_lon)
-        for mn_lat, mx_lat, mn_lon, mx_lon in query_boxes
-    )
-    if coverage <= 0:
-        return 0.0
-    s = 0.0
-    for q_mn_lat, q_mx_lat, q_mn_lon, q_mx_lon in query_boxes:
-        for c_mn_lat, c_mx_lat, c_mn_lon, c_mx_lon in cand_boxes:
-            i_lat = min(q_mx_lat, c_mx_lat) - max(q_mn_lat, c_mn_lat)
-            i_lon = min(q_mx_lon, c_mx_lon) - max(q_mn_lon, c_mn_lon)
-            if i_lat > 0 and i_lon > 0:
-                s += (i_lat * i_lon) / coverage
-    return s
-
-
 def spatial_join_candidates(
     boxes: DataFrame,
     query_boxes: list[tuple[float, float, float, float]],

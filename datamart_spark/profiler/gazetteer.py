@@ -5,9 +5,6 @@ sqlite database (Wikidata-derived place names + bounds); the suite's
 ``admin_area_profile`` applies its AdministrativeArea rule (more than
 70% of a column resolves, level guessed at max(3, 90%) —
 profile_types.py:199-203, core.py:486-499) over ``NAMES_BY_LEVEL``.
-``admin_level_for`` states the same level guess over plain counts, and
-``merged_bounds`` the reference's coverage envelope of the resolved
-areas' bounding boxes (core.py:640-668).
 
 The package ships without the datamart-geo data files, so this module
 vendors a COMPACT public-knowledge table: ~55 countries
@@ -23,8 +20,6 @@ preference for the most prominent (lowest-level) entity.
 """
 
 from __future__ import annotations
-
-MAX_WRONG_LEVEL_ADMIN = 0.10  # core.py:35
 
 # (canonical name, aliases, level, (min_lat, max_lat, min_lon, max_lon))
 # Bounds are coarse public-knowledge envelopes (degrees, rounded) — the
@@ -185,31 +180,3 @@ for _k, (_lvl, _b) in _LOOKUP.items():
 def resolve(name: str) -> tuple[int, tuple[float, float, float, float]] | None:
     """(level, (min_lat, max_lat, min_lon, max_lon)) or None."""
     return _LOOKUP.get(normalize(name))
-
-
-def admin_level_for(counts: dict[int, int], n_total: int) -> int | None:
-    """The reference's level guess (core.py:486-499): the first level
-    holding at least max(3, 90%-of-total) resolved values.  ``n_total``
-    is the column length INCLUDING unresolved/empty values — the
-    reference thresholds on ``len(areas)``, the whole array."""
-    threshold = max(3.0, (1.0 - MAX_WRONG_LEVEL_ADMIN) * n_total)
-    for level, count in sorted(counts.items()):
-        if count >= threshold:
-            return level
-    return None
-
-
-def merged_bounds(
-    boxes: list[tuple[float, float, float, float]],
-) -> tuple[float, float, float, float] | None:
-    """Union envelope of the resolved areas (core.py:640-657); the
-    reference keeps it only when it spans > 0.01 deg in both axes."""
-    if not boxes:
-        return None
-    mn_lat = min(b[0] for b in boxes)
-    mx_lat = max(b[1] for b in boxes)
-    mn_lon = min(b[2] for b in boxes)
-    mx_lon = max(b[3] for b in boxes)
-    if mx_lat - mn_lat <= 0.01 or mx_lon - mn_lon <= 0.01:
-        return None
-    return (mn_lat, mx_lat, mn_lon, mx_lon)

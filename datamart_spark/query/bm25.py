@@ -278,6 +278,8 @@ def bm25_topk_dataframe(
     ts_lo=None,
     ts_hi=None,
 ) -> DataFrame:
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
     snap = _committed_snapshot(catalog)
     stemming = snap.get("stemming", True)
     avgdl = snap["avgdl"]

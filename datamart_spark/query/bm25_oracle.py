@@ -1,14 +1,16 @@
 """Pure-Python BM25 reference oracle (driver-side, small corpora only).
 
-Rank-identity for the engine is defined against THIS implementation
-(SURVEY.md §7 "we define rank-identity against our own reference
-implementation of BM25, not against live ES").  Parameters are the
-reference's effective ones: ES 7.8.1 default similarity — k1=1.2,
-b=0.75 (reference: docker-compose.yml:6; not overridden anywhere),
-idf = ln(1 + (N - df + 0.5)/(df + 0.5)), AND semantics over query
-terms (reference: apiserver/apiserver/search/__init__.py:67,
-operator:'and').  Tie-break: (score desc, doc_id asc) — pinned total
-order per SURVEY.md §7.
+The engine never imports it: the rank-identity tests score one corpus
+here and through ``query/`` and compare.  Rank-identity for the engine
+is defined against THIS implementation (SURVEY.md §7 "we define
+rank-identity against our own reference implementation of BM25, not
+against live ES").  Parameters are the reference's effective ones:
+ES 7.8.1 default similarity — k1=1.2, b=0.75 (reference:
+docker-compose.yml:6; not overridden anywhere), idf = ln(1 + (N - df +
+0.5)/(df + 0.5)), AND semantics over query terms (reference:
+apiserver/apiserver/search/__init__.py:67, operator:'and').
+Tie-break: (score desc, doc_id asc) — pinned total order per SURVEY.md
+§7.
 """
 
 from __future__ import annotations
@@ -26,43 +28,22 @@ B = 0.75
 
 
 class Bm25Oracle:
-    def __init__(
-        self,
-        docs: pd.DataFrame,
-        stemming: bool = True,
-        title_boost: int | None = None,
-        tokenizer: str | None = None,
-    ):
+    def __init__(self, docs: pd.DataFrame, stemming: bool = True):
         """docs: DataFrame with doc_id, text (+ optional lang, warc_ts).
-
-        ``title_boost``: BM25F weighted-field-concatenation semantics,
-        identical to index/build.py — the first text line is the title;
-        tf' = tf_body + boost·tf_title, doclen' likewise.  ``tokenizer``
-        defaults exactly as build_index does (resolve_tokenizer)."""
+        The tokenizer follows ``stemming`` exactly as a fresh
+        ``build_index`` does (resolve_tokenizer)."""
         self.stemming = stemming
-        self.tokenizer = resolve_tokenizer(tokenizer, stemming)
+        self.tokenizer = resolve_tokenizer(stemming)
         cache = StemCache() if stemming else None
         self.meta = docs.set_index("doc_id")
         self.tf: dict[int, Counter] = {}
         self.df: Counter = Counter()
         self.doclen: dict[int, int] = {}
         for doc_id, text in zip(docs["doc_id"], docs["text"]):
-            if title_boost is None:
-                toks = analyze_str(text, cache, tokenizer=self.tokenizer)
-                c = Counter(toks)
-                dl = len(toks)
-            else:
-                parts = (text or "").split("\n", 1)
-                t_toks = analyze_str(parts[0], cache, tokenizer=self.tokenizer)
-                b_toks = analyze_str(parts[1] if len(parts) > 1 else "", cache, tokenizer=self.tokenizer)
-                c = Counter()
-                for t in t_toks:
-                    c[t] += title_boost
-                for t in b_toks:
-                    c[t] += 1
-                dl = title_boost * len(t_toks) + len(b_toks)
+            toks = analyze_str(text, cache, tokenizer=self.tokenizer)
+            c = Counter(toks)
             self.tf[int(doc_id)] = c
-            self.doclen[int(doc_id)] = dl
+            self.doclen[int(doc_id)] = len(toks)
             for t in c:
                 self.df[t] += 1
         self.n_docs = len(self.tf)

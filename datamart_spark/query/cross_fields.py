@@ -20,10 +20,10 @@ TERM-centric (Lucene BlendedTermQuery): for each query term,
 
 The webtext corpus analog of the reference's field set: `title` (the
 first line of the page text — the `id^10` analog, boosted) and `body`
-(the rest).  Contrast with the BM25F-style ``title_boost`` index path
-(index/build.py term_doc_tf): BM25F merges fields into one weighted
-bag (single df, single norm), which re-ranks when a term's df differs
-per field; this module reproduces the reference's blended-df dismax
+(the rest).  This is the engine's one field-boost path: BM25F-style
+index-time boosting would merge the fields into one weighted bag
+(single df, single norm), which re-ranks when a term's df differs per
+field; this module reproduces the reference's blended-df dismax
 semantics exactly, index-free, as one declarative plan.
 
 Scale shape: two narrow token passes (title/body can't avoid separate
@@ -36,6 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index.build import B, K1
+
+#: the reference's title field boost (`id^10`)
+TITLE_BOOST = 10.0
 
 
 def _field_tokens(docs: DataFrame) -> DataFrame:
@@ -63,9 +66,10 @@ def cross_fields_topk(
     docs: DataFrame,
     terms: list[str],
     k: int = 10,
-    title_boost: float = 10.0,
 ) -> DataFrame:
     """Top-k (doc_id, score) under cross_fields/AND semantics."""
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
     # dedupe, order-preserving: the AND gate below compares the count of
     # DISTINCT matched terms per doc against len(terms) — a duplicated
     # query term would make it unsatisfiable (ADVICE r2)
@@ -93,7 +97,7 @@ def cross_fields_topk(
         "idf", F.expr(f"ln(1 + ({n_docs!r} - df + 0.5) / (df + 0.5))")
     ).select("term", "idf")
 
-    boost = F.when(F.col("field") == "title", F.lit(title_boost)).otherwise(F.lit(1.0))
+    boost = F.when(F.col("field") == "title", F.lit(TITLE_BOOST)).otherwise(F.lit(1.0))
     contrib = (
         tf.join(dl, ["doc_id", "field"])
         .join(F.broadcast(avgdl), "field")

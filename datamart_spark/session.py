@@ -15,6 +15,7 @@ Every knob here matters at scale:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 
@@ -24,27 +25,32 @@ from pyspark.sql import SparkSession
 def package_zip(dest_dir: str = "/tmp") -> str:
     """Zip this package for executor shipping — the local-mode analog of
     ``spark-submit --py-files datamart_spark.zip`` (north rule: runs via
-    spark-submit --py-files on multi-executor clusters)."""
+    spark-submit --py-files on multi-executor clusters).
+
+    The zip is named after the package directory, so two checkouts on
+    one host never ship each other's code, and it is rebuilt when its
+    file list differs from the tree's or any ``.py`` is newer."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(dest_dir, "datamart_spark_pkg.zip")
-    mtimes = [
-        os.path.getmtime(os.path.join(root, f))
+    key = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
+    out = os.path.join(dest_dir, f"datamart_spark_pkg-{key}.zip")
+    sources = {
+        os.path.join(root, f): "datamart_spark/" + os.path.relpath(
+            os.path.join(root, f), pkg_dir
+        ).replace(os.sep, "/")
         for root, _, files in os.walk(pkg_dir)
         for f in files
         if f.endswith(".py")
-    ]
-    if os.path.exists(out) and os.path.getmtime(out) >= max(mtimes):
-        return out
+    }
+    if os.path.exists(out) and os.path.getmtime(out) >= max(
+        os.path.getmtime(p) for p in sources
+    ):
+        with zipfile.ZipFile(out) as z:
+            if sorted(z.namelist()) == sorted(sources.values()):
+                return out
     tmp = out + ".tmp"
     with zipfile.ZipFile(tmp, "w") as z:
-        for root, _, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "datamart_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    z.write(full, rel)
+        for full, rel in sources.items():
+            z.write(full, rel)
     os.replace(tmp, out)
     return out
 

@@ -175,7 +175,7 @@ _NEEDS_SLOW = re.compile(
 # cheap over-approximation of _NEEDS_SLOW: a single character class
 # (any mid char, any non-ASCII) scans ~8× faster than the lookaround
 # pattern — rows failing it are PROVABLY fast-path; only survivors pay
-# the precise scan (analyze_series runs this two-stage)
+# the precise scan (tokenize_batch_flat runs this two-stage)
 _MAYBE_SLOW = re.compile("[" + _MIDS + "\u0080-\U0010FFFF]")
 _SIMPLE_RE = re.compile(r"\w+", re.UNICODE)
 

@@ -289,6 +289,32 @@ def test_negative_k_raises(built, spark, kernel_branch):
     assert bm25_topk_batch(spark, built, specs, k=0).collect() == []
 
 
+@pytest.mark.parametrize("entry", ["dataframe", "cross_fields"])
+def test_negative_k_raises_off_planner(built, spark, spark_jobs, entry):
+    """The entry points the planner does not front reject a negative k
+    with the planner's ValueError before any Spark job; k=0 is empty."""
+    from datamart_spark.corpus import _VOCAB
+    from datamart_spark.query.cross_fields import cross_fields_topk
+
+    terms = ["the", _VOCAB[60]]
+    if entry == "dataframe":
+        def call(k):
+            return bm25_topk_dataframe(spark, built, " ".join(terms), k=k)
+    else:
+        docs = generate_documents(spark, 300)
+
+        def call(k):
+            return cross_fields_topk(spark, docs, terms, k=k)
+
+    def negative():
+        with pytest.raises(ValueError, match="k must be >= 0, got -1"):
+            call(-1)
+
+    _, jobs = spark_jobs(negative)
+    assert jobs == 0
+    assert call(0).collect() == []
+
+
 def test_generated_query_set_deterministic_and_mixed():
     """generate_query_set(n): the bulk-labeling workload generator —
     deterministic, reference-set mix proportions at any n, and NOT a

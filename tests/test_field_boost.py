@@ -1,69 +1,6 @@
 """Field-boosted BM25 (the reference's `id^10` multi_match analog,
-apiserver/apiserver/search/__init__.py:65-77) — BM25F weighted field
-concatenation with the title as the boosted field."""
-
-import math
-
-import pytest
-
-from datamart_spark.corpus import generate_documents, generate_documents_pandas, _VOCAB
-from datamart_spark.index import IndexCatalog, build_index
-from datamart_spark.query import bm25_topk_blockmax, bm25_topk_dataframe
-from datamart_spark.query.bm25_oracle import Bm25Oracle
-
-N = 800
-BOOST = 10
-
-
-@pytest.fixture(scope="module")
-def boosted(spark, tmp_path_factory):
-    cat = IndexCatalog(str(tmp_path_factory.mktemp("boost_idx")))
-    build_index(generate_documents(spark, N), cat, n_shards=4, resume=False,
-                title_boost=BOOST)
-    oracle = Bm25Oracle(
-        generate_documents_pandas(N)[["doc_id", "text", "lang", "warc_ts"]],
-        title_boost=BOOST,
-    )
-    return cat, oracle
-
-
-def _rows(df):
-    return [(r["doc_id"], r["score"]) for r in df.collect()]
-
-
-def test_boosted_rank_identity(boosted, spark):
-    cat, oracle = boosted
-    for q in (_VOCAB[40], f"{_VOCAB[31]} {_VOCAB[200]}", "the"):
-        for fn in (bm25_topk_blockmax, bm25_topk_dataframe):
-            got = _rows(fn(spark, cat, q, k=10))
-            want = oracle.topk(q, k=10)
-            assert len(got) == len(want), (q, got, want)
-            for (gd, gs), (wd, ws) in zip(got, want):
-                assert gd == wd and math.isclose(gs, ws, rel_tol=1e-9), (q, got, want)
-
-
-def test_title_hit_outranks_body_hit(boosted, spark):
-    """A term appearing in a title must outrank a same-doclen body-only
-    occurrence — the point of the boost."""
-    cat, oracle = boosted
-    docs = generate_documents_pandas(N)
-    # find a term that appears in some doc's title
-    title_term = None
-    title_doc = None
-    for i in range(100, N):
-        title = docs.iloc[i]["text"].split("\n", 1)[0].split()
-        for w in title:
-            if len(w) > 3 and w.isalpha():
-                title_term, title_doc = w, i
-                break
-        if title_term:
-            break
-    assert title_term is not None
-    got = _rows(bm25_topk_blockmax(spark, cat, title_term, k=50))
-    assert any(d == title_doc for d, _ in got), (title_term, title_doc, got[:5])
-    # the title doc should sit in the upper half of the result list
-    ids = [d for d, _ in got]
-    assert ids.index(title_doc) < max(1, len(ids) // 2)
+apiserver/apiserver/search/__init__.py:65-77), served at query time by
+``query/cross_fields.py``."""
 
 
 def test_cross_fields_duplicate_query_terms(spark):

@@ -1,12 +1,8 @@
 """AdministrativeArea resolution (reference: datamart-geo +
-profile_types.py:199-203, core.py:486-499,640-668) over the vendored
+profile_types.py:199-203, core.py:486-499) over the vendored
 offline gazetteer."""
 
-from datamart_spark.profiler.gazetteer import (
-    admin_level_for,
-    merged_bounds,
-    resolve,
-)
+from datamart_spark.profiler.gazetteer import resolve
 
 
 def test_resolve_countries_and_aliases():
@@ -37,20 +33,3 @@ def test_level_collision_prefers_lowest_level():
     assert resolve("georgia")[0] == 1
     # a level-0 name shadowing nothing stays level 0
     assert resolve("germany")[0] == 0
-
-
-def test_admin_level_threshold_semantics():
-    # reference: first level with count >= max(3, 0.9 * len(array))
-    assert admin_level_for({0: 25}, 25) == 0
-    assert admin_level_for({0: 22, 1: 3}, 25) is None  # 22 < 22.5
-    assert admin_level_for({0: 23, 1: 2}, 25) == 0
-    assert admin_level_for({1: 3}, 3) == 1  # the max(3, ...) floor
-    assert admin_level_for({}, 10) is None
-
-
-def test_merged_bounds_envelope():
-    assert merged_bounds([]) is None
-    b = merged_bounds([(41, 51, -5, 10), (47, 55, 6, 15)])  # FR ∪ DE
-    assert b == (41, 55, -5, 15)
-    # degenerate (sub-0.01-degree) envelopes are discarded
-    assert merged_bounds([(1.0, 1.005, 2.0, 9.0)]) is None

@@ -150,16 +150,6 @@ def test_phrase_needs_positional_index(spark, tmp_path):
         bm25_phrase_topk(spark, cat, "hash join")
 
 
-def test_positions_incompatible_with_title_boost(spark, tmp_path):
-    docs = spark.createDataFrame(
-        [(d, t, lg) for d, t, lg in DOCS], "doc_id long, text string, lang string"
-    )
-    cat = IndexCatalog(str(tmp_path / "tb"))
-    with pytest.raises(ValueError, match="title_boost"):
-        build_index(docs, cat, stemming=False, resume=False,
-                    n_docs=len(DOCS), positions=True, title_boost=10)
-
-
 def test_resume_flags_positions_mismatch(spark, pos_catalog, tmp_path):
     docs = spark.createDataFrame(
         [(d, t, lg) for d, t, lg in DOCS], "doc_id long, text string, lang string"

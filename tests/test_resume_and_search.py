@@ -144,6 +144,27 @@ def test_resume_analyzer_mismatch_raises(spark, tmp_path):
         build_index(generate_documents(spark, 100), cat)
 
 
+def test_resume_refuses_boosted_snapshot(spark, tmp_path):
+    """A snapshot whose manifest records an index-time title_boost holds
+    weighted tf; a resumed build must refuse it, not grow it with plain
+    tf, and must commit nothing."""
+    import glob
+    import json
+
+    cat = IndexCatalog(str(tmp_path / "boosted"))
+    build_index(generate_documents(spark, 200), cat, resume=False)
+    path = sorted(glob.glob(str(tmp_path / "boosted" / "_snapshots" / "snap-*.json")))[-1]
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["title_boost"] = 10
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="analyzer settings"):
+        build_index(generate_documents(spark, 250), cat)
+    assert cat.current_snapshot()["sequence"] == manifest["sequence"]
+    assert len(glob.glob(str(tmp_path / "boosted" / "_snapshots" / "snap-*"))) == 1
+
+
 def test_delete_docs_rank_identical_to_fresh_subset(spark, tmp_path):
     """S14 delete-by-dataset analog: per-shard rewrite of one deleted
     document equals a fresh index over the surviving doc set."""

@@ -1,15 +1,4 @@
-"""Pivot detection (S10) and keyset pagination (W5)."""
-
-from datamart_spark.operators.discovery import looks_pivoted
-
-
-def test_looks_pivoted():
-    # reference rule (materialize.py:244-248): ≥3 columns, non-date
-    # column count ≤ max(2, 20%·n)
-    assert looks_pivoted(["country", "2001", "2002", "2003"])
-    assert looks_pivoted(["country", "gdp", "2001"])  # 2 non-dates allowed
-    assert not looks_pivoted(["country", "gdp", "pop", "2001", "2002"])  # 3 > 2
-    assert not looks_pivoted(["country", "2001"])  # <3 columns
+"""Keyset pagination (W5)."""
 
 
 def test_keyset_pagination_walks_all_pages(spark, tmp_path):
