@@ -11,6 +11,12 @@ Subcommands:
                           generated docs, default 5000, when ROOT has
                           no snapshot): selected postings bytes and
                           min-of-N seconds per branch, one JSON line
+  search ROOT [N_DOCS]    per-query median milliseconds of each layer of
+                          search() on the same kind of catalog, timed by
+                          wrapping the query modules' functions from
+                          outside: plan, selection, postings read,
+                          grouping, kernels, merge, hydrate read, frame
+                          build, collect; one JSON line
 
 Env: SPARK_GRAFT_SF_DIR (default: bench.py's), SPARK_GRAFT_CPUS,
 BE_REPEATS.
@@ -192,6 +198,113 @@ def cmd_breakeven(root: str, n_docs: int) -> None:
     spark.stop()
 
 
+#: layers of one in-process ``search()``, in call order
+SEARCH_LAYERS = ["plan", "selection", "postings_read", "grouping", "kernels",
+                 "merge", "hydrate_read", "frame_build", "collect"]
+
+
+def _search_layers(spark, cat, q: dict, k: int) -> dict[str, float]:
+    """One ``search(...).collect()`` split into ``SEARCH_LAYERS``
+    seconds.  Functions the layers run through are wrapped with timers
+    for the call and restored after it; a layer with no function of its
+    own is its caller's time minus its timed callees':
+    postings read = ``_shard_kernel_job`` − selection − grouping −
+    kernels (it includes a filtered query's doc-id read and the result
+    frame), merge = ``_topk`` − plan − ``_shard_kernel_job``, hydrate
+    read = ``_hydrate_local`` − frame build."""
+    from importlib import import_module
+
+    from datamart_spark.query import batch, wand
+
+    # the package re-exports the search() function under the module's name
+    search_mod = import_module("datamart_spark.query.search")
+    spent: dict[str, float] = {}
+
+    def timed(name, fn):
+        def run(*a, **kw):
+            t0 = time.perf_counter()
+            try:
+                return fn(*a, **kw)
+            finally:
+                spent[name] = spent.get(name, 0.0) + time.perf_counter() - t0
+        return run
+
+    def job(spark_, catalog, scan_terms, shard_fn, *rest, **kw):
+        return real_job(spark_, catalog, scan_terms, timed("kernels", shard_fn),
+                        *rest, **kw)
+
+    real_job = batch._shard_kernel_job
+    patches = {
+        (batch, "_plan_queries"): timed("plan", batch._plan_queries),
+        (wand, "_selection"): timed("selection", wand._selection),
+        (wand, "_shard_groups"): timed("grouping", wand._shard_groups),
+        (batch, "_shard_kernel_job"): timed("job", job),
+        (search_mod, "_topk"): timed("topk", search_mod._topk),
+        (search_mod, "_hydrate_local"): timed("hydrate", search_mod._hydrate_local),
+        (search_mod, "_local_frame"): timed("frame_build", search_mod._local_frame),
+    }
+    saved = {key: getattr(*key) for key in patches}
+    try:
+        for (mod, attr), fn in patches.items():
+            setattr(mod, attr, fn)
+        df = search_mod.search(spark, cat, q["query"], k=k, lang=q["lang"],
+                               ts_lo=q["ts_lo"], ts_hi=q["ts_hi"],
+                               phrase=q["phrase"])
+        timed("collect", df.collect)()
+    finally:
+        for (mod, attr), fn in saved.items():
+            setattr(mod, attr, fn)
+    g = spent.get
+    return {
+        "plan": g("plan", 0.0), "selection": g("selection", 0.0),
+        "postings_read": g("job", 0.0) - g("selection", 0.0) - g("grouping", 0.0)
+        - g("kernels", 0.0),
+        "grouping": g("grouping", 0.0), "kernels": g("kernels", 0.0),
+        "merge": g("topk", 0.0) - g("plan", 0.0) - g("job", 0.0),
+        "hydrate_read": g("hydrate", 0.0) - g("frame_build", 0.0),
+        "frame_build": g("frame_build", 0.0), "collect": g("collect", 0.0),
+    }
+
+
+def cmd_search(root: str, n_docs: int) -> None:
+    """Per-layer medians of ``search()`` over ``generate_query_set``'s
+    200-query mix (single- and multi-term, lang- and warc_ts-filtered,
+    absent terms), every fourth two-term query run as an exact phrase.  The
+    first pass over the set warms caches and is not reported; the
+    layers sum to the per-query wall time up to the wrappers' cost."""
+    import statistics
+
+    import pandas as pd
+
+    from datamart_spark.corpus import generate_documents, generate_query_set
+    from datamart_spark.index import IndexCatalog, build_index
+
+    spark = _session("be_search")
+    cat = IndexCatalog(root)
+    if cat.current_snapshot() is None:
+        build_index(generate_documents(spark, n_docs), cat, resume=False,
+                    n_docs=n_docs, positions=True)
+    queries = []
+    for i, q in generate_query_set(200).iterrows():
+        queries.append({
+            "query": q["query"],
+            "lang": q["lang_filter"] if isinstance(q["lang_filter"], str) else None,
+            "ts_lo": q["ts_lo"] if pd.notna(q["ts_lo"]) else None,
+            "ts_hi": q["ts_hi"] if pd.notna(q["ts_hi"]) else None,
+            "phrase": len(q["query"].split()) == 2 and i % 4 == 0,
+        })
+    for q in queries:
+        _search_layers(spark, cat, q, k=10)
+    rows = [_search_layers(spark, cat, q, k=10) for q in queries]
+    ms = {name: round(1e3 * statistics.median(r[name] for r in rows), 3)
+          for name in SEARCH_LAYERS}
+    total = round(1e3 * statistics.median(sum(r.values()) for r in rows), 3)
+    print(json.dumps({"root": root, "n_docs": cat.current_snapshot()["n_docs"],
+                      "cpus": CPUS, "queries": len(rows), "total_ms": total,
+                      "layers_ms": ms}))
+    spark.stop()
+
+
 def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
@@ -203,6 +316,8 @@ def main() -> None:
         cmd_build(int(sys.argv[2]), int(sys.argv[3]) if len(sys.argv) > 3 else 200000)
     elif cmd == "breakeven":
         cmd_breakeven(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 5000)
+    elif cmd == "search":
+        cmd_search(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 5000)
     else:
         raise SystemExit(f"unknown subcommand {cmd}")
 

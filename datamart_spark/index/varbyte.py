@@ -62,24 +62,28 @@ def vb_encode(values: np.ndarray) -> bytes:
     return vb_encode_with_sizes(values)[0]
 
 
-def vb_decode(buf: bytes) -> np.ndarray:
-    """Decode varbyte bytes → uint64 array."""
+def vb_decode(buf) -> np.ndarray:
+    """Decode varbyte bytes (or a uint8 array) → uint64 array.
+
+    One vectorized pass per byte position: value i's j-th byte sits at
+    starts[i] + j, so ≤10 passes, each over only the values that long —
+    for the typical 1–3-byte values that is 1–3 passes, and an
+    all-single-byte buffer (most tf runs) is a mask and a cast."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
-    ends = np.flatnonzero(b & 0x80)
-    n = ends.size
-    starts = np.empty(n, dtype=np.int64)
+    low = b & np.uint8(0x7F)
+    ends = np.flatnonzero(b >= 0x80)
+    if ends.size == b.size:
+        return low.astype(np.uint64)
+    starts = np.empty(ends.size, dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    # byte position within its value
-    value_id = np.zeros(b.size, dtype=np.int64)
-    value_id[starts[1:]] = 1
-    value_id = np.cumsum(value_id)
-    pos = np.arange(b.size, dtype=np.int64) - starts[value_id]
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
-    out = np.zeros(n, dtype=np.uint64)
-    np.add.at(out, value_id, contrib)
+    lens = ends - starts + 1
+    out = low[starts].astype(np.uint64)
+    for j in range(1, int(lens.max())):
+        sel = np.flatnonzero(lens > j)
+        out[sel] |= low[starts[sel] + j].astype(np.uint64) << np.uint64(7 * j)
     return out
 
 

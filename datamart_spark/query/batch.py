@@ -26,24 +26,28 @@ Execution (wand._shard_kernel_job, the one skeleton):
 
   postings scan, `term IN (union of every live spec's terms)` pushed
   to parquet row-group pruning — ONE scan regardless of query count
-  → per-shard groups [with the distinct filter contexts' doc-id sets,
-    tagged by context id, when any spec is filtered]
+  → one sort into per-(shard, term) column dicts (wand._shard_groups)
+    [with the distinct filter contexts' doc-id sets, tagged by context
+    id, when any spec is filtered]
   → per-shard kernel: score each spec over its term subset
-    (wand._topk_from_terms / phrase._phrase_topk_from_terms) through
-    the one block decoder (wand._decode_blocks) and one per-term
-    decode cache shared by every spec, keyword and phrase alike — a
-    posting block's payloads decode at most once per shard no matter
-    how many queries touch its term
+    (wand._topk_from_terms / phrase._phrase_topk_from_terms, each
+    returning (doc_ids, scores) arrays) through the one block decoder
+    (wand._decode_blocks) and one per-term decode cache shared by every
+    spec, keyword and phrase alike — a posting block's payloads decode
+    at most once per shard no matter how many queries touch its term;
+    the kernel concatenates its specs' arrays into one set of
+    (query_id, doc_id, score) columns
   → merge to ≤ k rows per spec, (score desc, doc_id asc).
 
 ``_shard_kernel_job`` picks the branch from the bytes the scan selects.
 A selection up to ``wand._IN_PROCESS_MAX_BYTES`` (94 MiB) runs
 in-process: a pyarrow read of the selected row groups, the kernel once
-per shard on the driver, and a pandas merge — no Spark job.  A larger
-one is one ``applyInPandas`` job (a cogroup with the cached filter doc
-ids when filtered), merged by ``orderBy(score desc, doc_id asc)
-.limit(k)`` for one live spec (TakeOrderedAndProject, no exchange) or
-one per-query window over ≤ k·S·Q tiny local rows for several.  A plan
+per shard on the driver, one frame of their concatenated columns and a
+pandas merge — no Spark job.  A larger one is one ``applyInPandas`` job
+(a cogroup with the cached filter doc ids when filtered), merged by
+``orderBy(score desc, doc_id asc).limit(k)`` for one live spec
+(TakeOrderedAndProject, no exchange) or one per-query window over
+≤ k·S·Q tiny local rows for several.  A plan
 with no live spec runs nothing.  Public entry points return a DataFrame
 either way; the in-process result is built from Arrow (a LocalRelation,
 which collects without a job).
@@ -62,13 +66,14 @@ from __future__ import annotations
 from collections import defaultdict
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..analyzer import StemCache, analyze_query, analyze_str
 from .bm25 import _committed_snapshot, _local_frame, idf_map
 from .phrase import _PHRASE_COLS, _phrase_topk_from_terms, expand_prefixes
-from .wand import _POSTING_COLS, _shard_kernel_job, _topk_from_terms
+from .wand import _NO_HITS, _POSTING_COLS, _shard_kernel_job, _topk_from_terms
 
 #: fixed reference avgdl the baked per-block max_tfn is quantized at —
 #: single definition in index.build (a drifted duplicate would silently
@@ -238,30 +243,27 @@ def _topk(spark: SparkSession, catalog, queries: list[dict],
         return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
     idfs, avgdl, tfn_ref = plan.idfs, plan.avgdl, plan.tfn_ref
 
-    def kernel(by_term, fids_by_ctx) -> pd.DataFrame:
+    def kernel(by_term, fids_by_ctx) -> dict[str, np.ndarray]:
         # one per-term decode pool (wand._decode_blocks) shared by every
         # spec of the shard, keyword and positional alike
         caches: dict[str, dict] = defaultdict(dict)
-        parts = []
+        qids, docs, scores = [np.zeros(0, object)], [_NO_HITS[0]], [_NO_HITS[1]]
         for s in plan.specs:
             fids = fids_by_ctx[s.cid]
             if s.positional:
-                r = _phrase_topk_from_terms(by_term, fids, s.term_sets, s.idf_sum,
-                                            avgdl, k, s.slop, caches)
+                d, sc = _phrase_topk_from_terms(by_term, fids, s.term_sets, s.idf_sum,
+                                                avgdl, k, s.slop, caches)
             else:
                 sub = {ts[0]: by_term[ts[0]] for ts in s.term_sets if ts[0] in by_term}
                 if not sub:
                     continue
-                r = _topk_from_terms(sub, fids, idfs, avgdl, k, len(s.term_sets),
-                                     s.or_mode, tfn_ref, caches)
-            if len(r):
-                r.insert(0, "query_id", s.query_id)
-                parts.append(r)
-        if not parts:
-            return pd.DataFrame({"query_id": pd.Series([], dtype="object"),
-                                 "doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        return pd.concat(parts, ignore_index=True)
+                d, sc = _topk_from_terms(sub, fids, idfs, avgdl, k, len(s.term_sets),
+                                         s.or_mode, tfn_ref, caches)
+            qids.append(np.full(d.size, s.query_id, dtype=object))
+            docs.append(d)
+            scores.append(sc)
+        return {"query_id": np.concatenate(qids), "doc_id": np.concatenate(docs),
+                "score": np.concatenate(scores)}
 
     cols = _PHRASE_COLS if any(s.positional for s in plan.specs) else _POSTING_COLS
     per_shard = _shard_kernel_job(spark, catalog, plan.scan_terms, kernel,

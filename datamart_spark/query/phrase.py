@@ -60,30 +60,16 @@ from ..analyzer import analyze_str
 from ..index.build import B, K1
 from .bm25 import _local_frame
 from .wand import (
-    _POSTING_COLS, _decode_blocks, _local_topk, _no_hits, _shard_kernel_job,
+    _NO_HITS, _POSTING_COLS, _decode_blocks, _local_topk, _ragged_gather,
+    _shard_kernel_job,
 )
 
 #: the keyword scan columns plus the position payload
 _PHRASE_COLS = [*_POSTING_COLS, "pos_vb"]
 
 
-def _ragged_gather(offsets: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Indices selecting, for each j, the slice
-    [offsets[j], offsets[j]+counts[j]) — concatenated, no python loop."""
-    total = int(counts.sum())
-    if total == 0:
-        return np.zeros(0, dtype=np.int64)
-    shift = np.zeros(counts.size, dtype=np.int64)
-    np.cumsum(counts[:-1], out=shift[1:])
-    return (
-        np.arange(total, dtype=np.int64)
-        - np.repeat(shift, counts)
-        + np.repeat(offsets, counts)
-    )
-
-
 def _phrase_topk_from_terms(
-    by_term: dict[str, pd.DataFrame],
+    by_term: dict[str, dict],
     filter_ids: np.ndarray | None,
     term_sets: list[list[str]],
     idf_sum: float,
@@ -91,11 +77,12 @@ def _phrase_topk_from_terms(
     k: int,
     slop: int,
     caches: dict[str, dict],
-) -> pd.DataFrame:
-    """One positional query's top-k within one shard, over the shard's
-    term → posting-rows map (the batch kernel's positional counterpart
-    of ``wand._topk_from_terms``; ``caches`` maps term → its
-    ``_decode_blocks`` pool, shared with the kernel's keyword specs).
+) -> tuple[np.ndarray, np.ndarray]:
+    """One positional query's top-k (doc_ids, scores) within one
+    shard, over the shard's term → posting-rows map (the batch
+    kernel's positional counterpart of ``wand._topk_from_terms``;
+    ``caches`` maps term → its ``_decode_blocks`` pool, shared with the
+    kernel's keyword specs).
 
     ``term_sets[i]`` is the set of terms acceptable at phrase position
     i — singletons for an exact phrase, and the prefix's expansion set
@@ -107,7 +94,7 @@ def _phrase_topk_from_terms(
     i at p+i."""
     sm = _slop_matches(by_term, filter_ids, term_sets, slop, caches)
     if sm is None:
-        return _no_hits()
+        return _NO_HITS
     cand, dl_cand, start, gap = sm
     pf = np.bincount(start >> 33, weights=1.0 / (gap + 1.0), minlength=cand.size)
     hit = pf > 0
@@ -118,7 +105,7 @@ def _phrase_topk_from_terms(
 
 
 def _gather_positions(
-    by_term: dict[str, pd.DataFrame],
+    by_term: dict[str, dict],
     filter_ids: np.ndarray | None,
     term_sets: list[list[str]],
     caches: dict[str, dict],
@@ -182,7 +169,7 @@ def _gather_positions(
 
 
 def _slop_matches(
-    by_term: dict[str, pd.DataFrame],
+    by_term: dict[str, dict],
     filter_ids: np.ndarray | None,
     term_sets: list[list[str]],
     slop: int,
@@ -314,17 +301,16 @@ def _phrase_spans_df(
     spec = plan.specs[0]
     m = len(spec.term_sets)
 
-    def emit(by_term, fids_by_ctx) -> pd.DataFrame:
+    def emit(by_term, fids_by_ctx) -> dict[str, np.ndarray]:
         sm = _slop_matches(by_term, fids_by_ctx[spec.cid], spec.term_sets, 0,
                            defaultdict(dict))
         if sm is None:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "pos": pd.Series([], dtype="int32")})
+            return {"doc_id": np.zeros(0, np.int64), "pos": np.zeros(0, np.int32)}
         cand, _, start, _ = sm
-        return pd.DataFrame({
+        return {
             "doc_id": cand[start >> 33].astype(np.int64),
             "pos": (start & ((1 << 33) - 1)).astype(np.int32),
-        })
+        }
 
     spans = _shard_kernel_job(
         spark, catalog, plan.scan_terms, emit, _SPANS_SCHEMA, plan.contexts,

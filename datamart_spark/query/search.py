@@ -11,14 +11,15 @@ are the query planner and its one shard-kernel skeleton
 (query/batch.py): ``search`` is a planned batch of one and
 ``search_many`` a planned batch, and both hydrate through ``_hydrate``
 on the branch the kernels took — in-process hits with one pyarrow
-``doc_id IN hits`` read of doc_stats and no Spark job, Spark-job hits
-with one broadcast join against doc_stats.  A query with no live spec
-(an absent AND term) hydrates to its empty frame without reading
-doc_stats.
+``doc_id IN hits`` read of the hits' doc_stats shards and no Spark job,
+Spark-job hits with one broadcast join against doc_stats.  A query with
+no live spec (an absent AND term) hydrates to its empty frame without
+reading doc_stats.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -83,16 +84,22 @@ def _hydrate(spark: SparkSession, catalog: IndexCatalog,
 def _hydrate_local(spark: SparkSession, catalog: IndexCatalog,
                    hits: pd.DataFrame, lead: tuple[str, ...]) -> DataFrame:
     """``_hydrate`` of in-process hits: one pyarrow ``doc_id IN hits``
-    read of doc_stats, a pandas inner join, a frame built from Arrow —
-    no Spark job.  No hits (a plan with no live spec) read nothing."""
+    read of doc_stats, pruned to the hits' shard partitions, a pandas
+    inner join, a frame built from Arrow — no Spark job.  No hits (a
+    plan with no live spec) read nothing."""
     ds = catalog.snapshot_dataset("doc_stats")
     meta_cols = [c for c in ("url", "lang", "warc_ts") if c in ds.schema.names]
     cols = [*lead, "doc_id", *meta_cols, "score"]
     if meta_cols and len(hits):
-        meta = ds.to_table(
-            columns=["doc_id", *meta_cols],
-            filter=pads.field("doc_id").isin(hits["doc_id"].unique()),
-        ).to_pandas()
+        ids = hits["doc_id"].unique()
+        pred = pads.field("doc_id").isin(ids)
+        width = catalog.current_snapshot().get("shard_width")
+        if width:
+            # the build's shard rule (index/build._shard_col): the double
+            # doc_id / width, truncated
+            shards = np.unique((ids / width).astype(np.int64)).tolist()
+            pred = pads.field("shard").isin(shards) & pred
+        meta = ds.to_table(columns=["doc_id", *meta_cols], filter=pred).to_pandas()
         hits = hits.merge(meta, on="doc_id")
     out = hits.reindex(columns=cols).sort_values(
         [*lead, "score", "doc_id"], ascending=[*(True for _ in lead), False, True])

@@ -31,9 +31,11 @@ planned once by query/batch.py and executes as:
 
   postings scan, `term IN (scan terms)` pushed to parquet (the build
   writes each shard partition as ONE term-sorted file, so row-group
-  min/max stats prune everything but the query terms' blocks)
-  → per-shard groups [with the tagged filter doc-id sets when any
-    query is filtered]          — ``_shard_kernel_job``, this module
+  min/max stats prune everything but the query terms' blocks; that
+  order serves pruning only — kernels see rows re-sorted)
+  → per-(shard, term) column dicts, ``_shard_groups`` [with the tagged
+    filter doc-id sets when any query is filtered]
+                                — ``_shard_kernel_job``, this module
   → per-shard kernel: top-k per query (``_topk_from_terms`` here,
     ``phrase._phrase_topk_from_terms``) or phrase spans
   → global merge over ≤ k·S·Q tiny rows (query/batch.py).
@@ -51,25 +53,32 @@ threshold seeded from the best blocks of every query term, block
 pruning by ub(b) + Σ max_ub(other terms) < θ, exact rescore of
 survivors.
 
-The kernels take and return pandas frames — Arrow in, Arrow out, no
+The kernels take column arrays and return arrays: ``_shard_groups``
+sorts the selected postings once by (shard, term, block_id) and hands
+each (shard, term) group over as a dict of numpy column slices (the
+varbyte payloads as their Arrow data buffer and offsets); a top-k
+kernel returns (doc_ids, scores), and the in-process branch builds
+one result frame per call (``applyInPandas`` needs one per shard) — no
 per-row Python at any boundary (north rule §2.10).  Where they run is
 decided once per query, in ``_shard_kernel_job``, from the bytes the
 ``term IN`` filter selects: up to ``_IN_PROCESS_MAX_BYTES`` they run
 in-process on the driver over a pyarrow read of the same committed
 files (no Spark job; a query on a 5k-doc index selects ~3 MB), beyond
-it inside ``applyInPandas`` groups.  Both branches call the same
-kernels, once per shard.
+it inside ``applyInPandas`` groups, each turned into the same column
+dict by the same helper.  Both branches call the same kernels, once
+per shard.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..index.build import B, K1
-from ..index.varbyte import vb_decode, delta_decode
+from ..index.varbyte import vb_decode
 from .bm25 import _arrow_filter_context, _filtered_doc_ids, _struct
 
 _POSTING_COLS = [
@@ -82,76 +91,166 @@ _Z = np.zeros(0, np.uint64)
 #: positions decode to int64 (the chain's doc·2^33+pos keys); an empty
 #: uint64 here would promote those keys to float64
 _ZPOS = np.zeros(0, np.int64)
+#: a kernel's empty (doc_ids, scores)
+_NO_HITS = (np.zeros(0, np.int64), np.zeros(0, np.float64))
 
 
-def _no_hits() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                         "score": pd.Series([], dtype="float64")})
+def _ragged_gather(offsets: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Indices selecting, for each j, the slice
+    [offsets[j], offsets[j]+counts[j]) — concatenated, no python loop."""
+    total = int(counts.sum())
+    if total == 0:
+        return np.zeros(0, dtype=np.int64)
+    shift = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=shift[1:])
+    return (
+        np.arange(total, dtype=np.int64)
+        - np.repeat(shift, counts)
+        + np.repeat(offsets, counts)
+    )
+
+
+def _binary_column(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A binary Arrow array as (data, offsets): its data buffer as
+    uint8 and the len+1 int64 byte offsets of its rows into it."""
+    _, offs, data = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offs, width)[arr.offset:arr.offset + len(arr) + 1]
+    data = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+    return data, offs.astype(np.int64)
+
+
+def _shard_groups(table: pa.Table) -> list[tuple[int, dict[str, dict]]]:
+    """Postings rows → ``[(shard, by_term)]``, shards ascending, where
+    ``by_term`` maps each term to its rows as a column dict ordered by
+    block_id: each numeric column a numpy slice, each varbyte payload
+    column ``(data, offsets)`` — the column's uint8 data buffer and the
+    rows' len+1 byte offsets into it.  The rows are sorted here, once,
+    so no kernel depends on the order the files store them in.  Both
+    branches of ``_shard_kernel_job`` group through this."""
+    if table.num_rows == 0:
+        return []
+    table = table.sort_by([("shard", "ascending"), ("term", "ascending"),
+                           ("block_id", "ascending")])
+    terms = table.column("term").combine_chunks().dictionary_encode()
+    code = terms.indices.to_numpy()
+    names = terms.dictionary.to_pylist()
+    shard = table.column("shard").to_numpy()
+    cols = {}
+    for c in table.column_names:
+        if c not in ("shard", "term"):
+            arr = table.column(c).combine_chunks()
+            cols[c] = (_binary_column(arr) if pa.types.is_binary(arr.type)
+                       or pa.types.is_large_binary(arr.type) else arr.to_numpy())
+    starts = np.flatnonzero(np.r_[True, (shard[1:] != shard[:-1])
+                                  | (code[1:] != code[:-1])])
+    out: list[tuple[int, dict[str, dict]]] = []
+    for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(shard)]):
+        s = int(shard[lo])
+        if not out or out[-1][0] != s:
+            out.append((s, {}))
+        out[-1][1][names[code[lo]]] = {
+            c: (v[0], v[1][lo:hi + 1]) if isinstance(v, tuple) else v[lo:hi]
+            for c, v in cols.items()
+        }
+    return out
+
+
+def _decode_payloads(rows: dict, col: str, idx: np.ndarray) -> np.ndarray:
+    """ONE ``vb_decode`` of the ``col`` payloads of rows ``idx``,
+    concatenated in row order: values are terminator-delimited, so the
+    concatenation decodes to exactly the rows' values, in order."""
+    data, offs = rows[col]
+    return vb_decode(data[_ragged_gather(offs[idx], offs[idx + 1] - offs[idx])])
+
+
+def _segmented_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Running sums of ``deltas`` restarting at each of the consecutive
+    segments of ``counts`` values (each segment's first value is
+    absolute).  Integer wraparound of the whole-array sum cancels in
+    the subtraction, so the result is exact."""
+    run = np.cumsum(deltas)
+    starts = np.cumsum(counts) - counts
+    return run - np.repeat(run[starts] - deltas[starts], counts)
 
 
 def _decode_blocks(
-    rows: pd.DataFrame,
+    rows: dict,
     candidates: np.ndarray | None,
     cache: dict,
     positions: bool = False,
+    blocks: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray | None]:
-    """Decode one term's blocks within a shard, skipping blocks whose
-    [first_doc_id, last_doc_id] fence misses the candidate set.
-    Returns (doc_ids, tfs, doclens, positions).  ``positions`` is None
-    unless asked for; then it holds every posting's absolute token
-    offsets, ascending within the posting, concatenated in posting
-    order (posting j owns the tfs[j] offsets after Σ tfs[:j]).
+    """Decode one term's blocks within a shard (``rows``, the term's
+    column dict from ``_shard_groups``, ordered by block_id), skipping
+    blocks whose [first_doc_id, last_doc_id] fence misses the candidate
+    set and, when ``blocks`` (a mask over ``rows``) is given, the blocks
+    it leaves out.  Returns (doc_ids, tfs, doclens, positions), doc ids
+    ascending.  ``positions`` is None unless asked for; then it holds
+    every posting's absolute token offsets, ascending within the
+    posting, concatenated in posting order (posting j owns the tfs[j]
+    offsets after Σ tfs[:j]).
 
     ``cache`` is the term's one decode pool in a shard kernel:
     block_id → [doc_ids, tfs, doclens, positions-or-None].  Every
     keyword and positional pass of every query of the kernel reads it,
     so each payload of a block decodes at most once per shard.  The
-    position payload, the largest, decodes only when a positional pass
-    asks for it.  Candidate pruning only selects WHICH blocks decode;
-    the per-block payloads are candidate-independent, so entries are
-    exact."""
-    order = np.argsort(rows["block_id"].to_numpy())
-    firsts = rows["first_doc_id"].to_numpy()[order]
-    lasts = rows["last_doc_id"].to_numpy()[order]
-    keep = np.ones(len(order), dtype=bool)
+    blocks a call finds missing decode together: one ``vb_decode`` per
+    payload column over their concatenated payloads
+    (``_decode_payloads``), a segmented cumsum for the doc-id deltas
+    (each block's first is absolute), and a split by each block's
+    ``n``.  The position payload, the largest, decodes only when a
+    positional pass asks for it, split by each block's Σ tf.  Candidate
+    pruning only selects WHICH blocks decode; the per-block payloads
+    are candidate-independent, so entries are exact."""
+    keep = np.ones(rows["block_id"].size, dtype=bool) if blocks is None else blocks
     if candidates is not None:
         if candidates.size == 0:
             return _Z, _Z, _Z, (_ZPOS if positions else None)
         # block survives iff any candidate falls inside its fence
-        left = np.searchsorted(candidates, firsts, side="left")
-        keep = (left < candidates.size) & (candidates[np.minimum(left, candidates.size - 1)] <= lasts)
-    bids = rows["block_id"].to_numpy()[order]
-    dvb = rows["doc_ids_vb"].to_numpy()[order]
-    tvb = rows["tfs_vb"].to_numpy()[order]
-    lvb = rows["dls_vb"].to_numpy()[order]
-    pvb = rows["pos_vb"].to_numpy()[order] if positions else None
-    entries = []
-    for i in np.flatnonzero(keep):
-        e = cache.get(bids[i])
-        if e is None:
-            e = cache[bids[i]] = [
-                delta_decode(vb_decode(bytes(dvb[i]))),
-                vb_decode(bytes(tvb[i])),
-                vb_decode(bytes(lvb[i])),
-                None,
-            ]
-        if positions and e[3] is None:
-            # per-posting delta streams concatenated; a groupwise cumsum
-            # with a reset at each posting start recovers absolutes
-            deltas = vb_decode(bytes(pvb[i])).astype(np.int64)
-            counts = e[1].astype(np.int64)
-            starts = np.cumsum(counts) - counts
-            run = np.cumsum(deltas)
-            e[3] = run - np.repeat(run[starts] - deltas[starts], counts)
-        entries.append(e)
-    if not entries:
+        left = np.searchsorted(candidates, rows["first_doc_id"], side="left")
+        keep = keep & (left < candidates.size) & (
+            candidates[np.minimum(left, candidates.size - 1)] <= rows["last_doc_id"])
+    idx = np.flatnonzero(keep)
+    if idx.size == 0:
         return _Z, _Z, _Z, (_ZPOS if positions else None)
-    d, tf, dl = (np.concatenate([e[j] for e in entries]) for j in range(3))
-    return d, tf, dl, (np.concatenate([e[3] for e in entries]) if positions else None)
+    bids = rows["block_id"][idx].tolist()
+    entries = [cache.get(b) for b in bids]
+    miss = [j for j, e in enumerate(entries) if e is None]
+    if miss:
+        n = rows["n"][idx[miss]].astype(np.int64)
+        fresh = (
+            _segmented_cumsum(_decode_payloads(rows, "doc_ids_vb", idx[miss]), n),
+            _decode_payloads(rows, "tfs_vb", idx[miss]),
+            _decode_payloads(rows, "dls_vb", idx[miss]),
+        )
+        ends = np.cumsum(n).tolist()
+        for j, lo, hi in zip(miss, [0, *ends[:-1]], ends):
+            entries[j] = cache[bids[j]] = [a[lo:hi] for a in fresh] + [None]
+    if len(miss) == len(entries):
+        d, tf, dl = fresh
+    else:
+        d, tf, dl = (np.concatenate([e[c] for e in entries]) for c in range(3))
+    if not positions:
+        return d, tf, dl, None
+    pmiss = [j for j, e in enumerate(entries) if e[3] is None]
+    if pmiss:
+        # per-posting delta streams concatenated: the cumsum restarts
+        # at each posting; block j's offsets end at its last posting's
+        # running Σ tf
+        counts = np.concatenate([entries[j][1] for j in pmiss]).astype(np.int64)
+        flat = _segmented_cumsum(
+            _decode_payloads(rows, "pos_vb", idx[pmiss]).astype(np.int64), counts)
+        ends = np.cumsum(counts)[np.cumsum(rows["n"][idx[pmiss]]) - 1].tolist()
+        for j, lo, hi in zip(pmiss, [0, *ends[:-1]], ends):
+            entries[j][3] = flat[lo:hi]
+        if len(pmiss) == len(entries):
+            return d, tf, dl, flat
+    return d, tf, dl, np.concatenate([e[3] for e in entries])
 
 
 def _topk_from_terms(
-    by_term: dict[str, pd.DataFrame],
+    by_term: dict[str, dict],
     filter_ids: np.ndarray | None,
     idfs: dict[str, float],
     avgdl: float,
@@ -160,18 +259,19 @@ def _topk_from_terms(
     or_mode: bool,
     tfn_ref: float,
     caches: dict[str, dict],
-) -> pd.DataFrame:
-    """One keyword query's top-k within one shard, over the query's
-    term → posting-rows map.  ``filter_ids``: sorted doc_ids surviving
-    the non-scoring filter context, or None = unfiltered.  ``caches``
-    maps each term to its ``_decode_blocks`` pool, shared by every
-    keyword and phrase spec of the shard kernel (query/batch.py)."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """One keyword query's top-k (doc_ids, scores) within one shard,
+    over the query's term → posting-rows map (``_shard_groups``).
+    ``filter_ids``: sorted doc_ids surviving the non-scoring filter
+    context, or None = unfiltered.  ``caches`` maps each term to its
+    ``_decode_blocks`` pool, shared by every keyword and phrase spec of
+    the shard kernel (query/batch.py)."""
     if filter_ids is not None and filter_ids.size == 0:
-        return _no_hits()
+        return _NO_HITS
     if not or_mode and len(by_term) < n_terms:
-        return _no_hits()  # a query term absent from this shard ⇒ no AND match here
+        return _NO_HITS  # a query term absent from this shard ⇒ no AND match here
     if not by_term:
-        return _no_hits()
+        return _NO_HITS
 
     if or_mode:
         return _shard_topk_or(by_term, filter_ids, idfs, avgdl, k, tfn_ref, caches)
@@ -184,12 +284,12 @@ def _topk_from_terms(
     tf_by_term: dict[str, np.ndarray] = {}
     for t in term_order[1:]:
         if cand.size == 0:
-            return _no_hits()
+            return _NO_HITS
         d, tf, _, _ = _decode_blocks(by_term[t], cand, caches[t])
         mask = np.isin(cand, d)
         cand = cand[mask]
         if cand.size == 0:
-            return _no_hits()
+            return _NO_HITS
         sel = np.searchsorted(d, cand)
         tf_by_term[t] = tf[sel]
         # shrink previously-gathered tf arrays to the surviving candidates
@@ -238,15 +338,15 @@ def _score_docs(cand, by_term, idfs, avgdl, caches):
 
 
 def _block_bounds(
-    rows: pd.DataFrame, idf: float, avgdl: float, tfn_ref: float
+    rows: dict, idf: float, avgdl: float, tfn_ref: float
 ) -> np.ndarray:
     """Per-block BM25 upper bound: min(corner bound, scaled baked bound).
     ``tfn_ref`` is the reference avgdl the index baked qmax_tfn at
     (from the snapshot manifest — must match the build, not this code)."""
-    mtf = rows["max_tf"].to_numpy().astype(np.float64)
-    mdl = rows["min_dl"].to_numpy().astype(np.float64)
+    mtf = rows["max_tf"].astype(np.float64)
+    mdl = rows["min_dl"].astype(np.float64)
     corner = mtf / (mtf + K1 * (1.0 - B + B * mdl / avgdl))
-    baked = (rows["qmax_tfn"].to_numpy().astype(np.float64) / 255.0) * max(
+    baked = (rows["qmax_tfn"].astype(np.float64) / 255.0) * max(
         1.0, avgdl / tfn_ref
     )
     return idf * np.minimum(corner, baked)
@@ -254,7 +354,7 @@ def _block_bounds(
 
 def _shard_topk_or(
     by_term, filter_ids, idfs, avgdl, k, tfn_ref, caches,
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray]:
     """OR mode: block-max WAND-style pruning, exact results.
 
     1. Seed a threshold θ: fully score the union of every term's
@@ -279,8 +379,9 @@ def _shard_topk_or(
     n_seed = max(1, (2 * k + 127) // 128)
     seed_parts = []
     for t, rows in by_term.items():
-        order = np.argsort(-ubs[t])
-        seed_parts.append(_decode_blocks(rows.iloc[order[:n_seed]], None, caches[t])[0])
+        best = np.zeros(ubs[t].size, dtype=bool)
+        best[np.argsort(-ubs[t])[:n_seed]] = True
+        seed_parts.append(_decode_blocks(rows, None, caches[t], blocks=best)[0])
     seed_docs = np.unique(np.concatenate(seed_parts))
     if filter_ids is not None:
         seed_docs = seed_docs[np.isin(seed_docs, filter_ids)]
@@ -297,20 +398,20 @@ def _shard_topk_or(
         keep = ubs[t] + rest >= theta
         if not keep.any():
             continue
-        kept = rows[pd.Series(keep, index=rows.index)]
-        cand_parts.append(_decode_blocks(kept, None, caches[t])[0])
+        cand_parts.append(_decode_blocks(rows, None, caches[t], blocks=keep)[0])
     cand = np.unique(np.concatenate(cand_parts)) if cand_parts else np.zeros(0, np.uint64)
     if filter_ids is not None:
         cand = cand[np.isin(cand, filter_ids)]
     if cand.size == 0:
-        return _no_hits()
+        return _NO_HITS
 
     # 3. exact rescore of all surviving candidates
     score = _score_docs(cand, by_term, idfs, avgdl, caches)
     return _local_topk(cand, score, k)
 
 
-def _local_topk(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+def _local_topk(doc_ids: np.ndarray, scores: np.ndarray,
+                k: int) -> tuple[np.ndarray, np.ndarray]:
     if doc_ids.size > k:
         # keep every doc whose score ties the k-th — an arbitrary k*2
         # truncation could drop boundary-tied docs with small doc_ids,
@@ -319,9 +420,7 @@ def _local_topk(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame
         keep = scores >= kth
         doc_ids, scores = doc_ids[keep], scores[keep]
     order = np.lexsort((doc_ids, -scores))[:k]
-    return pd.DataFrame(
-        {"doc_id": doc_ids[order].astype(np.int64), "score": scores[order]}
-    )
+    return doc_ids[order].astype(np.int64), scores[order]
 
 
 def bm25_topk_blockmax(
@@ -352,17 +451,22 @@ def bm25_topk_blockmax(
 #: selected byte, an OR query over four stopword-tier terms (WAND
 #: prunes little of their near-equal block bounds), in-process vs job:
 #:
-#:     2.9 MiB   (5k docs)   0.21 s  vs  1.20 s
+#:     2.9 MiB   (5k docs)   0.09 s  vs  0.60–0.78 s
 #:    10.0 MiB  (20k docs)   0.24 s  vs  1.19 s
-#:    23.8 MiB  (50k docs)   0.49 s  vs  1.21 s
+#:    23.8 MiB  (50k docs)   0.13 s  vs  0.75–0.82 s
 #:    47.1 MiB (100k docs)   0.51–0.70 s  vs  1.60–1.72 s
 #:    93.7 MiB (200k docs)   0.88–1.03 s  vs  1.44–1.69 s
 #:
-#: In-process time grows 8–9 ms/MiB, the job's ~4 ms/MiB over a ~1.2 s
-#: floor, so the lines cross near 200–250 MiB; a 400k-doc index, which
-#: would show it, ran out of memory to build on that host.  The limit
-#: is the largest selection measured where in-process still won, since
-#: the driver holds the whole selection in memory.
+#: The 5k and 50k rows are from the columnar kernels (one sort into
+#: column dicts, one ``vb_decode`` per payload column per term); the
+#: others, and the slopes below, predate them, when in-process time was
+#: 2.2× higher at 50k docs (0.27–0.29 s in the same window), so the
+#: crossing has only moved out.  In-process time grew 8–9 ms/MiB, the
+#: job's ~4 ms/MiB over a ~1.2 s floor, so the lines crossed near
+#: 200–250 MiB; a 400k-doc index, which would show it, ran out of
+#: memory to build on that host.  The limit is the largest selection
+#: measured where in-process still won, since the driver holds the
+#: whole selection in memory.
 _IN_PROCESS_MAX_BYTES = 94 * 2**20
 
 
@@ -384,10 +488,11 @@ def _shard_kernel_job(
     contexts: list[tuple], cols: list[str] = _POSTING_COLS,
 ) -> DataFrame | pd.DataFrame:
     """The query family's one execution skeleton: term-IN pruned
-    postings scan over ``cols`` → per-shard Arrow groups →
-    ``shard_fn(by_term, fids_by_ctx)``.  ``by_term`` maps each scanned
-    term to the shard's posting rows of that term; ``fids_by_ctx`` maps
-    a filter-context id (its index in ``contexts``, the distinct
+    postings scan over ``cols`` → per-shard groups (``_shard_groups``)
+    → ``shard_fn(by_term, fids_by_ctx)``, which returns the ``schema``
+    columns as numpy arrays.  ``by_term`` maps each scanned term to the
+    shard's posting rows of that term, as a column dict; ``fids_by_ctx``
+    maps a filter-context id (its index in ``contexts``, the distinct
     (lang, ts_lo, ts_hi) triples of a plan) to the shard's sorted
     surviving doc ids, and None to None (unfiltered).  Top-k, spans and
     passages all run through here, so scan pruning / filter plumbing
@@ -395,9 +500,9 @@ def _shard_kernel_job(
 
     This is the one place that decides where the kernels run.  A
     selection of at most ``_IN_PROCESS_MAX_BYTES`` runs in-process and
-    returns the concatenated kernel output as a pandas frame: no Spark
-    job, since reading and scoring that much here costs less than a
-    job's fixed costs.  A larger one returns the ``applyInPandas`` job
+    returns the concatenated kernel output as ONE pandas frame: no
+    Spark job, since reading and scoring that much here costs less than
+    a job's fixed costs.  A larger one returns the ``applyInPandas`` job
     as a DataFrame; callers merge and hydrate on the branch they get."""
     ds, filt, groups, nbytes = _selection(catalog, scan_terms)
     if nbytes <= _IN_PROCESS_MAX_BYTES:
@@ -411,8 +516,9 @@ def _shard_kernel_job(
     )
 
     def run(post_pdf: pd.DataFrame, fids_by_ctx: dict) -> pd.DataFrame:
-        return shard_fn(dict(tuple(post_pdf.groupby("term", sort=False))),
-                        fids_by_ctx)
+        # one shard per group
+        [(_, by_term)] = _shard_groups(pa.Table.from_pandas(post_pdf, preserve_index=False))
+        return pd.DataFrame(shard_fn(by_term, fids_by_ctx))
 
     if not contexts:
         return postings.groupby("shard").applyInPandas(
@@ -447,24 +553,28 @@ def _run_in_process(spark, catalog, ds, filt, groups, shard_fn, schema: str,
                     contexts: list[tuple], cols: list[str]) -> pd.DataFrame:
     """The Spark job's program on the driver: the selected row groups,
     each context's (shard, doc_id) with its predicate pushed to the
-    doc_stats read, ``shard_fn`` once per shard, results concatenated."""
+    doc_stats read, ``shard_fn`` once per shard, and its outputs
+    concatenated into one frame."""
     post = pads.FileSystemDataset(groups, ds.schema, ds.format, ds.filesystem)
-    post = post.to_table(columns=cols, filter=filt).to_pandas()
-    shards = sorted(post["shard"].unique().tolist())
+    shards = _shard_groups(post.to_table(columns=cols, filter=filt))
     fids = {s: {None: None, **{cid: _Z for cid in range(len(contexts))}}
-            for s in shards}
+            for s, _ in shards}
     if contexts and shards:
         docs = catalog.snapshot_dataset("doc_stats")
         tz = spark.conf.get("spark.sql.session.timeZone")
         for cid, ctx in enumerate(contexts):
-            pred = _arrow_filter_context(pads.field("shard").isin(shards), *ctx, tz)
-            ids = docs.to_table(columns=["shard", "doc_id"], filter=pred).to_pandas()
-            for s, g in ids.groupby("shard"):
-                fids[int(s)][cid] = np.sort(g["doc_id"].to_numpy().astype(np.uint64))
-    parts = [
-        shard_fn(dict(tuple(g.groupby("term", sort=False))), fids[int(s)])
-        for s, g in post.groupby("shard", sort=True)
-    ]
-    names = _struct(schema).names
-    return pd.concat(parts, ignore_index=True)[names] if parts else pd.DataFrame(
-        {c: [] for c in names})
+            pred = _arrow_filter_context(pads.field("shard").isin(list(fids)), *ctx, tz)
+            ids = docs.to_table(columns=["shard", "doc_id"], filter=pred)
+            shard = ids.column("shard").to_numpy()
+            doc = ids.column("doc_id").to_numpy().astype(np.uint64)
+            order = np.lexsort((doc, shard))
+            shard, doc = shard[order], doc[order]
+            cuts = np.flatnonzero(shard[1:] != shard[:-1]) + 1
+            for s, part in zip(shard[np.r_[0, cuts]].tolist() if shard.size else [],
+                               np.split(doc, cuts)):
+                fids[s][cid] = part
+    outs = [shard_fn(by_term, fids[s]) for s, by_term in shards]
+    return pd.DataFrame({
+        c: np.concatenate([o[c] for o in outs]) if outs else []
+        for c in _struct(schema).names
+    })

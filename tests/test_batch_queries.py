@@ -247,6 +247,91 @@ def test_search_many_hydrates_and_matches_search(built, spark):
     assert all(r["lang"] == "de" for r in out if r["query_id"] == "b")
 
 
+@pytest.fixture(scope="module")
+def two_shards(spark, tmp_path_factory):
+    """The corpus of ``built`` in 2 shards: stopword-tier terms span
+    several posting blocks per shard."""
+    catalog = IndexCatalog(str(tmp_path_factory.mktemp("two_shards")))
+    build_index(generate_documents(spark, N_DOCS), catalog, n_shards=2)
+    return catalog
+
+
+def test_shuffled_postings_rows_give_the_same_hits(two_shards, spark, kernel_branch,
+                                                   tmp_path):
+    """Kernels see postings only through ``wand._shard_groups``, which
+    sorts each shard's rows by (term, block_id): a copy of the index
+    whose postings files hold their rows in a shuffled order gives the
+    stored order's hits for the whole reference set plus stopword-tier
+    queries, AND and OR, filtered and not, on either kernel branch."""
+    import shutil
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from datamart_spark.corpus import _VOCAB
+
+    root = str(tmp_path / "shuffled")
+    shutil.copytree(two_shards.root, root)
+    rng = np.random.default_rng(7)
+    moved = 0
+    for dirpath, _, files in os.walk(os.path.join(root, "postings")):
+        for f in files:
+            if f.endswith(".parquet"):
+                path = os.path.join(dirpath, f)
+                tb = pq.read_table(path)
+                perm = rng.permutation(tb.num_rows)
+                moved += int((perm != np.arange(tb.num_rows)).sum())
+                pq.write_table(tb.take(perm), path)
+                crc = os.path.join(dirpath, f".{f}.crc")  # Hadoop's checksum
+                if os.path.exists(crc):
+                    os.remove(crc)
+    assert moved
+
+    # stopword-tier terms hold several blocks per shard
+    specs = _specs(or_ids=(1, 21, 26, 31, 36, 41, 45, 47, 49)) + [
+        {"query_id": "stop_or", "query": " ".join(_VOCAB[:4]), "or_mode": True},
+        {"query_id": "stop_and", "query": f"{_VOCAB[0]} {_VOCAB[2]}"},
+        {"query_id": "stop_de", "query": f"{_VOCAB[1]} {_VOCAB[60]}", "lang": "de"},
+    ]
+
+    def hits(cat):
+        return [tuple(r) for r in bm25_topk_batch(spark, cat, specs, k=K).collect()]
+
+    want = hits(two_shards)
+    assert want and hits(IndexCatalog(root)) == want
+
+
+def test_in_process_hydration_reads_only_the_hits_shards(built, spark, in_process,
+                                                         monkeypatch):
+    """In-process hydration reads doc_stats only from the shard
+    partitions its hits fall in (doc_id // shard_width, the build's
+    shard rule), not every shard's file."""
+    import re
+
+    from datamart_spark.corpus import _VOCAB
+
+    real = built.snapshot_dataset
+    read: list[str] = []
+
+    class Recording:
+        def __init__(self, ds):
+            self.ds = ds
+            self.schema = ds.schema
+
+        def to_table(self, columns=None, filter=None):
+            read.extend(f.path for f in self.ds.get_fragments(filter))
+            return self.ds.to_table(columns=columns, filter=filter)
+
+    monkeypatch.setattr(built, "snapshot_dataset", lambda name: (
+        Recording(real(name)) if name == "doc_stats" else real(name)))
+    width = built.current_snapshot()["shard_width"]
+    assert built.current_snapshot()["n_shards"] > 2
+    rows = search(spark, built, f"the {_VOCAB[60]}", k=2).collect()
+    assert rows and all(r["url"] is not None for r in rows)
+    shards = {int(re.search(r"shard=(\d+)", p).group(1)) for p in read}
+    assert shards and shards <= {r["doc_id"] // width for r in rows}
+
+
 def test_batch_single_query_matches(built, oracle, spark):
     """A 1-query batch (the one-spec merge) ranks like the oracle."""
     from datamart_spark.corpus import _VOCAB

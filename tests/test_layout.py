@@ -38,8 +38,6 @@ TEST_ONLY_OK = {
         "independent BM25 reference the rank-identity tests compare against",
     f"{PKG}.corpus.generate_documents_pandas":
         "fixture: the synthetic corpus as pandas, the oracle's input",
-    f"{PKG}.corpus.generate_query_set":
-        "fixture: deterministic bulk query sets of the reference mix",
     f"{PKG}.index.build.extract_text":
         "html_strip front for the corpus's html:binary column",
     **{

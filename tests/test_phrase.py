@@ -329,13 +329,16 @@ def test_phrase_spans_filtered_and_empty(spark, pos_catalog):
 
 def test_keyword_and_phrase_kernels_share_one_decode_pool(pos_catalog, monkeypatch):
     """No Spark job: the keyword kernel and then the phrase kernel run
-    over one shard's postings with ONE decode-cache dict.  No block
-    payload (doc ids, tfs, doclens, positions) decodes twice and every
-    doc-id payload decodes, so each decodes exactly once; sharing the
-    pool changes no result."""
+    over one shard's column-dict rows (``wand._shard_groups``) with ONE
+    decode-cache dict.  Every decode is a batched call
+    (``wand._decode_payloads``: one ``vb_decode`` over the concatenated
+    payloads of one column of a term's missing blocks), recorded by
+    (term, column, block id).  No block payload (doc ids, tfs, doclens,
+    positions) decodes twice and every doc-id payload decodes, so each
+    decodes exactly once; sharing the pool changes no result."""
     from collections import Counter, defaultdict
 
-    import pyarrow.parquet as pq
+    import pyarrow.dataset as pads
 
     from datamart_spark.query import phrase as phrase_mod
     from datamart_spark.query import wand
@@ -344,21 +347,31 @@ def test_keyword_and_phrase_kernels_share_one_decode_pool(pos_catalog, monkeypat
     snap = pos_catalog.current_snapshot()
     avgdl, tfn_ref = snap["avgdl"], snap["tfn_ref_avgdl"]
     idfs = {t: 1.0 for t in terms}
-    postings = pq.read_table(
-        pos_catalog.table_path("postings"), filters=[("term", "in", terms)]
-    ).to_pandas()
+    cols = ["doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb"]
+    table = pos_catalog.snapshot_dataset("postings").to_table(
+        columns=[*wand._POSTING_COLS, "pos_vb"],
+        filter=pads.field("term").isin(terms))
+    payload = {  # (shard, term, column, block id) → its stored bytes
+        (r["shard"], r["term"], c, r["block_id"]): r[c]
+        for r in table.to_pylist() for c in cols
+    }
 
-    calls = []
-    real = wand.vb_decode
+    vb_calls, batches = [], []
+    real_vb, real_batch = wand.vb_decode, wand._decode_payloads
 
     def counting(buf):
-        calls.append(bytes(buf))
-        return real(buf)
+        vb_calls.append(bytes(buf))
+        return real_vb(buf)
+
+    def recording(rows, col, idx):
+        batches.append((term_of[id(rows)], col, rows["block_id"][idx].tolist()))
+        return real_batch(rows, col, idx)
 
     # every query-layer module that binds its own vb_decode
     for mod in (wand, phrase_mod):
         if hasattr(mod, "vb_decode"):
             monkeypatch.setattr(mod, "vb_decode", counting)
+    monkeypatch.setattr(wand, "_decode_payloads", recording)
 
     def keyword(by_term, caches):
         return wand._topk_from_terms(by_term, None, idfs, avgdl, 10, len(terms),
@@ -369,23 +382,29 @@ def test_keyword_and_phrase_kernels_share_one_decode_pool(pos_catalog, monkeypat
             by_term, None, [[t] for t in terms], 2.0, avgdl, 10, 0, caches)
 
     shards_run = 0
-    for _, rows in postings.groupby("shard", observed=True):
-        by_term = dict(tuple(rows.groupby("term", sort=False)))
+    for shard, by_term in wand._shard_groups(table):
         if len(by_term) < len(terms):
             continue
-        calls.clear()
+        term_of = {id(rows): t for t, rows in by_term.items()}
+        vb_calls.clear()
+        batches.clear()
         shared = defaultdict(dict)
         kw, ph = keyword(by_term, shared), phrase(by_term, shared)
-        assert len(kw) and len(ph)
-        payloads = Counter(
-            bytes(b) for c in ("doc_ids_vb", "tfs_vb", "dls_vb", "pos_vb")
-            for b in rows[c]
-        )
-        assert not Counter(calls) - payloads, "a block payload decoded twice"
-        for b in rows["doc_ids_vb"]:
-            assert bytes(b) in calls
-        pd.testing.assert_frame_equal(kw, keyword(by_term, defaultdict(dict)))
-        pd.testing.assert_frame_equal(ph, phrase(by_term, defaultdict(dict)))
+        assert len(kw[0]) and len(ph[0])
+        # each batch is one vb_decode of exactly its blocks' payloads
+        assert vb_calls == [
+            b"".join(payload[(shard, t, c, bid)] for bid in bids)
+            for t, c, bids in batches
+        ]
+        decoded = Counter((t, c, bid) for t, c, bids in batches for bid in bids)
+        assert max(decoded.values()) == 1, "a block payload decoded twice"
+        for t, rows in by_term.items():
+            for bid in rows["block_id"].tolist():
+                assert (t, "doc_ids_vb", bid) in decoded
+        for got, again in ((kw, keyword(by_term, defaultdict(dict))),
+                           (ph, phrase(by_term, defaultdict(dict)))):
+            np.testing.assert_array_equal(got[0], again[0])
+            np.testing.assert_array_equal(got[1], again[1])
         shards_run += 1
     assert shards_run
 
