@@ -67,15 +67,12 @@ def vb_decode(buf) -> np.ndarray:
 
     One vectorized pass per byte position: value i's j-th byte sits at
     starts[i] + j, so ≤10 passes, each over only the values that long —
-    for the typical 1–3-byte values that is 1–3 passes, and an
-    all-single-byte buffer (most tf runs) is a mask and a cast."""
+    for the typical 1–3-byte values that is 1–3 passes."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
     low = b & np.uint8(0x7F)
     ends = np.flatnonzero(b >= 0x80)
-    if ends.size == b.size:
-        return low.astype(np.uint64)
     starts = np.empty(ends.size, dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1

@@ -92,13 +92,11 @@ def _hydrate_local(spark: SparkSession, catalog: IndexCatalog,
     cols = [*lead, "doc_id", *meta_cols, "score"]
     if meta_cols and len(hits):
         ids = hits["doc_id"].unique()
-        pred = pads.field("doc_id").isin(ids)
-        width = catalog.current_snapshot().get("shard_width")
-        if width:
-            # the build's shard rule (index/build._shard_col): the double
-            # doc_id / width, truncated
-            shards = np.unique((ids / width).astype(np.int64)).tolist()
-            pred = pads.field("shard").isin(shards) & pred
+        # the build's shard rule (index/build._shard_col): the double
+        # doc_id / width, truncated
+        width = catalog.current_snapshot()["shard_width"]
+        shards = np.unique((ids / width).astype(np.int64)).tolist()
+        pred = pads.field("shard").isin(shards) & pads.field("doc_id").isin(ids)
         meta = ds.to_table(columns=["doc_id", *meta_cols], filter=pred).to_pandas()
         hits = hits.merge(meta, on="doc_id")
     out = hits.reindex(columns=cols).sort_values(

@@ -227,10 +227,7 @@ def _decode_blocks(
         ends = np.cumsum(n).tolist()
         for j, lo, hi in zip(miss, [0, *ends[:-1]], ends):
             entries[j] = cache[bids[j]] = [a[lo:hi] for a in fresh] + [None]
-    if len(miss) == len(entries):
-        d, tf, dl = fresh
-    else:
-        d, tf, dl = (np.concatenate([e[c] for e in entries]) for c in range(3))
+    d, tf, dl = (np.concatenate([e[c] for e in entries]) for c in range(3))
     if not positions:
         return d, tf, dl, None
     pmiss = [j for j, e in enumerate(entries) if e[3] is None]
@@ -244,8 +241,6 @@ def _decode_blocks(
         ends = np.cumsum(counts)[np.cumsum(rows["n"][idx[pmiss]]) - 1].tolist()
         for j, lo, hi in zip(pmiss, [0, *ends[:-1]], ends):
             entries[j][3] = flat[lo:hi]
-        if len(pmiss) == len(entries):
-            return d, tf, dl, flat
     return d, tf, dl, np.concatenate([e[3] for e in entries])
 
 
@@ -451,16 +446,16 @@ def bm25_topk_blockmax(
 #: selected byte, an OR query over four stopword-tier terms (WAND
 #: prunes little of their near-equal block bounds), in-process vs job:
 #:
-#:     2.9 MiB   (5k docs)   0.09 s  vs  0.60–0.78 s
+#:     2.9 MiB   (5k docs)   0.08–0.10 s  vs  0.63–0.81 s
 #:    10.0 MiB  (20k docs)   0.24 s  vs  1.19 s
-#:    23.8 MiB  (50k docs)   0.13 s  vs  0.75–0.82 s
+#:    23.8 MiB  (50k docs)   0.12–0.16 s  vs  0.72–0.90 s
 #:    47.1 MiB (100k docs)   0.51–0.70 s  vs  1.60–1.72 s
 #:    93.7 MiB (200k docs)   0.88–1.03 s  vs  1.44–1.69 s
 #:
 #: The 5k and 50k rows are from the columnar kernels (one sort into
 #: column dicts, one ``vb_decode`` per payload column per term); the
 #: others, and the slopes below, predate them, when in-process time was
-#: 2.2× higher at 50k docs (0.27–0.29 s in the same window), so the
+#: about 2× higher at 50k docs (0.26–0.32 s in the same window), so the
 #: crossing has only moved out.  In-process time grew 8–9 ms/MiB, the
 #: job's ~4 ms/MiB over a ~1.2 s floor, so the lines crossed near
 #: 200–250 MiB; a 400k-doc index, which would show it, ran out of
@@ -516,8 +511,11 @@ def _shard_kernel_job(
     )
 
     def run(post_pdf: pd.DataFrame, fids_by_ctx: dict) -> pd.DataFrame:
-        # one shard per group
-        [(_, by_term)] = _shard_groups(pa.Table.from_pandas(post_pdf, preserve_index=False))
+        # one shard per group; a cogroup calls this for a shard whose
+        # docs pass the filter but that holds no scanned term, with an
+        # empty post_pdf — an empty term map
+        groups = _shard_groups(pa.Table.from_pandas(post_pdf, preserve_index=False))
+        by_term = groups[0][1] if groups else {}
         return pd.DataFrame(shard_fn(by_term, fids_by_ctx))
 
     if not contexts:

@@ -178,6 +178,31 @@ def test_absent_term_search_runs_no_spark_job(built, spark, kernel_branch,
     assert many == [] and jobs == 0
 
 
+def test_filtered_rare_term_absent_from_shards_with_passing_docs(built, oracle, spark,
+                                                                 kernel_branch):
+    """A filtered query whose only term lives in one shard: every other
+    shard holds docs that pass the filter but no posting of the term, so
+    the Spark job's cogroup hands those shards an empty postings side."""
+    from datamart_spark.analyzer import analyze_query
+
+    width = built.current_snapshot()["shard_width"]
+    shards_of: dict[str, set] = {}
+    for doc_id, tf in oracle.tf.items():
+        for t in tf:
+            shards_of.setdefault(t, set()).add(doc_id // width)
+    docs = generate_documents_pandas(N_DOCS)
+    en_shards = {d // width for d in docs.loc[docs["lang"] == "en", "doc_id"]}
+    word = next(w for text in docs.loc[docs["lang"] == "en", "text"]
+                for w in text.split()
+                if (terms := analyze_query(w)) and len(shards_of.get(terms[0], ())) == 1)
+    assert len(en_shards - shards_of[analyze_query(word)[0]]) >= 1
+    want = oracle.topk(word, k=K, lang="en")
+    assert want
+    got = [(r["doc_id"], r["score"]) for r in search(
+        spark, built, word, k=K, lang="en").collect()]
+    _assert_rank_identical(got, want, word)
+
+
 def test_filter_stats_cache_skips_dead_session_handles(built, spark, spark_job):
     """Evicting a _DS_CACHE entry from a PREVIOUS SparkSession must not
     touch its dead JVM handle (unpersist on a stopped context NPEs —
