@@ -39,15 +39,17 @@ waits for avgdl (no stats barrier; valid under corpus growth), plus a
 baked per-doc max_tfn quantized up to uint8 at the fixed reference
 avgdl TFN_REF_AVGDL (query scales it by max(1, avgdl/ref); tighter
 than the corner whenever the block's max-tf document is long).
-After encode, a compaction exchange (segment-merge analog) lands each
-shard partition as ONE file sorted by (term, block_id) — parquet
-row-group min/max stats then prune a query's scan to just its terms'
-blocks, and per-query footer reads drop from O(encode tasks) to
+The encode exchange is also the compaction (segment-merge analog):
+each shard partition lands as ONE file sorted by (term, block_id) —
+parquet row-group min/max stats then prune a query's scan to just its
+terms' blocks, and per-query footer reads drop from O(encode tasks) to
 O(shards touched).
 
 All tables are hash-free doc-range partitioned by ``shard`` (the
 Iceberg partition-spec analog): resume, corpus growth, and per-dataset
-delete are all per-shard-partition rewrites.  Per-shard lineage is a
+delete are all per-shard-partition rewrites, and all three commit
+through one tail (``_rewrite_shards``) — they differ only in how they
+produce their ``tokens`` partitions.  Per-shard lineage is a
 parquet TABLE (derived distributed from the postings block summaries);
 the snapshot manifest carries only its O(1) summary — count + totals +
 a content checksum binding the manifest to the table bytes.
@@ -63,11 +65,11 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..analyzer import extract_text_series, resolve_tokenizer
 from .catalog import IndexCatalog
@@ -414,6 +416,60 @@ def encode_partitioning(todo: list[int], parallelism: int):
     return n, F.element_at(F.create_map(*pairs), F.col("shard"))
 
 
+class _Clock:
+    """A writer run's wall time and its ``phase_seconds``: ``mark(name)``
+    books the time since the previous mark (or the start) to ``name``."""
+
+    def __init__(self) -> None:
+        self.t0 = self._t = time.time()
+        self.phases: dict[str, float] = {}
+
+    def mark(self, name: str) -> None:
+        now = time.time()
+        self.phases[name] = round(now - self._t, 3)
+        self._t = now
+
+
+def _writer_guard(catalog: IndexCatalog) -> dict | None:
+    """The one guard in front of every write over a committed snapshot
+    (``build_index(resume=True)``, ``delete_docs``); returns that
+    snapshot, or None.
+
+    - roll back any rewrite that crashed mid-swap before trusting
+      partition directories (``catalog.recover``);
+    - refuse while another writer holds in-flight markers;
+    - refuse a snapshot whose postings this code would re-encode
+      differently: both writers re-encode only the shards they touch, so
+      a different block layout (``postings_format``), a different
+      reference avgdl for the baked qmax_tfn bound (``tfn_ref_avgdl``:
+      the query-time pruning bound would stop being an upper bound on
+      one side, ADVICE r3) or an index-time field boost (weighted tf)
+      would mix two encodings in one index.
+    """
+    catalog.recover()
+    if catalog._pending_markers():
+        raise RuntimeError(
+            "another writer holds in-flight rewrite markers on this "
+            "catalog (single-writer contract); if that process is "
+            "dead despite the pid probe, run catalog.recover(force=True)"
+        )
+    snap = catalog.current_snapshot()
+    if snap:
+        encoding = (snap.get("postings_format", 1),
+                    float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL)),
+                    snap.get("title_boost"))
+        if encoding != (POSTINGS_FORMAT, TFN_REF_AVGDL, None):
+            raise ValueError(
+                "the committed postings are encoded differently from this "
+                "code's (postings_format, tfn_ref_avgdl, index-time field "
+                f"boost) = {(POSTINGS_FORMAT, TFN_REF_AVGDL, None)}: got "
+                f"{encoding}; a partial re-encode would mix incompatible "
+                "postings (block layout, pruning bound or analyzer settings) "
+                "— rebuild with build_index(resume=False) or drop() the catalog"
+            )
+    return snap
+
+
 def build_index(
     docs: DataFrame,
     catalog: IndexCatalog,
@@ -426,26 +482,19 @@ def build_index(
 ) -> dict:
     """Full or incremental build.  Returns the committed snapshot.
 
-    Failure atomicity (ADVICE r4): if the build fails by RAISING — a
-    Spark job abort, OOM-killed stage, analysis error — rather than by
-    process death, the writer process stays alive, so the pid-liveness
-    probe in ``recover()`` would treat its staged swaps as in-flight
-    forever and queries in the same driver would silently read the
-    half-swapped tables.  The exception path therefore rolls back this
-    build's own staged mutations (``catalog.rollback_own()``) before
-    propagating: the committed snapshot again reads exactly its own
-    data.  Resolution is snapshot-decided, so a failure AFTER the
-    commit finalizes forward instead of undoing it.
+    Failure atomicity (ADVICE r4): a build that fails by RAISING — a
+    Spark job abort, OOM-killed stage, analysis error — rolls back its
+    own staged mutations before propagating
+    (``catalog.rollback_on_raise``), so the committed snapshot again
+    reads exactly its own data; a failure AFTER the commit finalizes
+    forward instead of undoing it.
     """
-    try:
+    with catalog.rollback_on_raise():
         return _build_index_impl(
             docs, catalog, n_shards=n_shards, stemming=stemming,
             resume=resume, n_docs=n_docs, only_shards=only_shards,
             positions=positions,
         )
-    except BaseException:
-        catalog.rollback_own()
-        raise
 
 
 def _build_index_impl(
@@ -475,37 +524,22 @@ def _build_index_impl(
       10^12 docs the intermediate exceeds any storage memory, and an
       8g-heap persist() of this set caused GC/eviction chaos
       (NOTES_SCALING.md).
+
+    This body only produces the ``tokens`` partitions; everything
+    derived from them is ``_rewrite_shards``, shared with delete_docs.
     """
     spark = docs.sparkSession
-    t0 = time.time()
+    clock = _Clock()
 
     if "doc_id" not in docs.columns:
         raise ValueError("documents must carry doc_id (assign before build)")
     meta_cols = [c for c in META_COLS if c in docs.columns]
 
-    phases: dict[str, float] = {}
-    t_phase = time.time()
-
-    def mark(name: str) -> None:
-        nonlocal t_phase
-        phases[name] = round(time.time() - t_phase, 3)
-        t_phase = time.time()
-
     if n_docs is None:
         n_docs = docs.count()
-    mark("count")
+    clock.mark("count")
 
-    if resume:
-        # roll back any rewrite that crashed mid-swap before trusting
-        # partition directories (catalog.recover docstring)
-        catalog.recover()
-        if catalog._pending_markers():
-            raise RuntimeError(
-                "another writer holds in-flight rewrite markers on this "
-                "catalog (single-writer contract); if that process is "
-                "dead despite the pid probe, run catalog.recover(force=True)"
-            )
-    snap = catalog.current_snapshot() if resume else None
+    snap = _writer_guard(catalog) if resume else None
     # default profile: uax29 under stemming, simple otherwise
     # (analyzer.resolve_tokenizer) — but a RESUMED build inherits the
     # snapshot's committed tokenizer, whatever it is
@@ -513,25 +547,15 @@ def _build_index_impl(
         snap.get("tokenizer", "simple") if snap else resolve_tokenizer(stemming)
     )
     if snap:
-        # a snapshot with an index-time field boost holds weighted tf:
-        # growing it with plain tf would mix incompatible postings
         if (
             bool(snap.get("stemming", True)) != bool(stemming)
-            or snap.get("title_boost") is not None
             or bool(snap.get("positions", False)) != bool(positions)
         ):
             raise ValueError(
-                "resume with different analyzer settings (stemming/positions, "
-                "or a snapshot built with an index-time field boost) would mix "
-                "incompatible postings; drop() the catalog or match the "
+                "resume with different analyzer settings (stemming/positions) "
+                "would mix incompatible postings; drop() the catalog or match the "
                 f"snapshot (stemming={snap.get('stemming')}, "
                 f"positions={snap.get('positions', False)})"
-            )
-        if snap.get("postings_format", 1) < POSTINGS_FORMAT:
-            raise ValueError(
-                f"snapshot has postings_format {snap.get('postings_format', 1)} "
-                f"< {POSTINGS_FORMAT}; resuming would mix block layouts — "
-                "rebuild with resume=False (or drop() the catalog)"
             )
         # growth/boundary bookkeeping keys off the doc-id HIGH-WATER MARK
         # (next_doc_id), never the index's live-doc count: delete_docs
@@ -559,21 +583,22 @@ def _build_index_impl(
         width = max(1, -(-n_docs // n_shards)) if n_docs else 1
     shard = _shard_col(width)
     grown = snap is not None and n_docs > old_n
+    fresh = snap is None
 
     # lineage validated against disk: a shard the manifest claims but
     # whose partition directory is gone (crash between table write and
     # snapshot commit cannot cause this, but operator error can) is
     # rebuilt rather than trusted (ADVICE: validate table state on resume)
     done = set()
-    if resume and snap is not None:
+    if snap is not None:
         done = {
             s
             for s, blocks, _p in catalog.lineage_rows(spark)
             if blocks == 0 or catalog.partition_exists("postings", s)
         }
     todo = set(range(n_shards)) - done
-    fresh = not resume or snap is None
 
+    delta_shards: list[int] = []
     if grown:
         # the boundary shard (containing doc old_n-1) is committed but
         # PARTIAL: new docs extend its range, so re-analyze + rebuild it
@@ -581,7 +606,8 @@ def _build_index_impl(
         # docs avoids a read-modify-write race on the tokens table)
         boundary = (old_n - 1) // width
         delta_start = boundary * width if old_n % width else old_n
-        todo |= set(range(delta_start // width, n_shards))
+        delta_shards = list(range(delta_start // width, n_shards))
+        todo |= set(delta_shards)
 
     if only_shards is not None:  # bounded incremental run (checkpointed)
         todo &= set(only_shards)
@@ -592,57 +618,97 @@ def _build_index_impl(
     # kind=t — both scans partition-prune instead of row-filtering the
     # token-scale table
     kind = F.when(F.col("term").isNull(), F.lit("d")).otherwise(F.lit("t"))
-    if fresh or not catalog.exists("tokens"):
-        # narrow map job: analyze + write the tokenized table (no shuffle)
-        catalog.write(
-            term_doc_tf(docs, stemming=stemming, meta_cols=meta_cols,
+    tokens_fresh = fresh or not catalog.exists("tokens")
+    if tokens_fresh or grown:
+        # fresh: a narrow map job analyzes + writes the whole tokenized
+        # table (no shuffle).  Grown: the delta's partitions, staged +
+        # deferred — the swap is provisional until the snapshot commits,
+        # so a crash anywhere in the grown build leaves the OLD snapshot
+        # reading exactly its old data (see catalog.rewrite_partitions)
+        src = docs if tokens_fresh else docs.where(F.col("doc_id") >= delta_start)
+        catalog.replace(
+            term_doc_tf(src, stemming=stemming, meta_cols=meta_cols,
                         tokenizer=tokenizer, positions=positions)
             .withColumn("shard", shard).withColumn("kind", kind),
-            "tokens",
+            "tokens", tokens_fresh, shards=delta_shards,
             partition_by=["shard", "kind"],
         )
-        mark("analyze_tokens")
-    elif grown:
-        # staged + deferred: the swap is provisional until the snapshot
-        # commits — recover() rolls it back (or forward) based on
-        # whether the commit landed, so a crash anywhere in the grown
-        # build leaves the OLD snapshot reading exactly its old data
-        # (closes the r3 crash window; see catalog.rewrite_partitions)
-        delta = docs.where(F.col("doc_id") >= delta_start)
-        catalog.rewrite_partitions(
-            term_doc_tf(delta, stemming=stemming, meta_cols=meta_cols,
-                        tokenizer=tokenizer, positions=positions)
-            .withColumn("shard", shard).withColumn("kind", kind),
-            "tokens",
-            sorted(set(range(delta_start // width, n_shards))),
-            partition_by=["shard", "kind"],
-            defer_cleanup=True,
-        )
-        mark("analyze_tokens")
-    tdf = catalog.read(spark, "tokens")
+        clock.mark("analyze_tokens")
 
-    # doc_stats = the sentinel rows — a narrow filter-project of tokens
-    # (no shuffle, no join); runs concurrently with the posting encode
+    return _rewrite_shards(
+        spark, catalog, fresh=fresh,
+        token_shards=None if fresh else delta_shards, todo=todo,
+        n_shards=n_shards, positions=positions, clock=clock,
+        # a bounded grown run that excluded delta shards must NOT claim
+        # them: their on-disk postings (the boundary shard's OLD
+        # partition) predate the delta's tokens/doc_stats rewrite, and a
+        # later resume sees n_docs unchanged + partition_exists and would
+        # trust them forever (ADVICE r2).  Dropping their lineage makes
+        # the next resume rebuild exactly those shards.
+        unclaimed=sorted(set(delta_shards) - set(todo)),
+        docs_read=n_docs,
+        manifest={
+            # doc-id high-water mark + 1: monotone across grown builds
+            # and deletes; the ONLY safe base for new doc_id allocation
+            "next_doc_id": max(n_docs, old_n),
+            "n_shards": n_shards,
+            "shard_width": width,
+            "stemming": stemming,
+            "tokenizer": tokenizer,
+            "positions": positions,
+            "source": "documents",
+        },
+    )
+
+
+def _rewrite_shards(
+    spark: SparkSession,
+    catalog: IndexCatalog,
+    fresh: bool,
+    token_shards: list[int] | None,
+    todo: list[int],
+    n_shards: int,
+    positions: bool,
+    clock: _Clock,
+    manifest: dict,
+    unclaimed: Sequence[int] = (),
+    docs_read: int | None = None,
+) -> dict:
+    """The one shard-rewrite tail: build, grown build and delete_docs
+    differ only in how they produce their ``tokens`` partitions, and all
+    of them commit through here.  Returns the committed snapshot.
+
+    ``fresh``: no committed snapshot — every table is written plainly;
+    otherwise each write is a staged swap the snapshot commit decides
+    (``catalog.replace``).  ``token_shards``: the shards whose tokens
+    changed (None = all, for a fresh build); ``todo``: the shards to
+    re-encode.  In order:
+
+    1. doc_stats of ``token_shards`` from the sentinel rows (a narrow
+       filter-project of tokens: no shuffle, no join), then avgdl and
+       the live-doc count — on a side thread, concurrently with 2;
+    2. postings of ``todo`` through the one ``encode_partitioning``
+       exchange;
+    3. term_stats, derived from the postings block summaries;
+    4. lineage: members = ``todo`` ∪ the committed lineage, minus
+       ``unclaimed``;
+    5. the manifest (``manifest`` holds the caller's own keys), then
+       ``finalize_pending``.
+    """
     from concurrent.futures import ThreadPoolExecutor
 
-    stat_jobs = []
-    pool = ThreadPoolExecutor(1)
-    avgdl_box: list[float] = []
+    tdf = catalog.read(spark, "tokens")
+    meta_cols = [c for c in META_COLS if c in tdf.columns]
 
-    def _doc_stats_and_avgdl() -> None:
-        if fresh or grown:
+    def doc_stats_and_avgdl() -> tuple[int, float]:
+        if fresh or token_shards:
             sent = tdf.where(F.col("kind") == "d")  # partition-pruned
-            if grown:  # only the re-analyzed partitions need replacing
-                sent = sent.where(F.col("shard") >= delta_start // width)
-            sent = sent.select("doc_id", "doclen", *meta_cols, "shard")
-            if fresh:
-                catalog.write(sent, "doc_stats", partition_by=["shard"])
-            else:  # staged + deferred (see tokens rewrite above)
-                catalog.rewrite_partitions(
-                    sent, "doc_stats",
-                    sorted(set(range(delta_start // width, n_shards))),
-                    defer_cleanup=True,
-                )
+            if not fresh:
+                sent = sent.where(F.col("shard").isin(token_shards))
+            catalog.replace(
+                sent.select("doc_id", "doclen", *meta_cols, "shard"),
+                "doc_stats", fresh, shards=token_shards, partition_by=["shard"],
+            )
         # avgdl + live-doc count over ALL docs incl. empty ones — one agg
         # over the small doc_stats table (sentinels), never a scan of
         # token-scale data.  The doc_stats row count (not the corpus
@@ -654,100 +720,79 @@ def _build_index_impl(
             .collect()[0]
         )
         n_live = int(row["n"])
-        avgdl_box.append(float(row["s"] or 0) / n_live if n_live else 0.0)
-        avgdl_box.append(n_live)
+        return n_live, (float(row["s"] or 0) / n_live if n_live else 0.0)
 
-    stat_jobs.append(pool.submit(_doc_stats_and_avgdl))
+    # leaving the pool waits for the stats thread, so on a failure here
+    # its staged doc_stats rewrite finishes (or fails) before the
+    # rollback wrapper runs, instead of racing it
+    with ThreadPoolExecutor(1) as pool:
+        stats = pool.submit(doc_stats_and_avgdl)
+        if todo:
+            tok = tdf.where(F.col("kind") == "t")  # partition-pruned
+            if len(todo) < n_shards:
+                tok = tok.where(F.col("shard").isin(todo))  # partition-pruned
 
-    def _drain_stats_quietly() -> None:
-        """On a main-thread failure, wait out the stats thread before
-        the ``build_index`` wrapper rolls back — its staged doc_stats
-        rewrite must finish (or fail) first, not race the rollback."""
-        for j in stat_jobs:
-            try:
-                j.result()
-            except Exception:
-                pass
+            def encode_partition(batches):
+                import pyarrow as pa
 
-    if todo:
-        tok = tdf.where(F.col("kind") == "t")  # partition-pruned
-        if len(todo) < n_shards:
-            tok = tok.where(F.col("shard").isin(todo))  # partition-pruned
+                batches = list(batches)  # a hash partition can be empty
+                if not batches:
+                    return
+                tbl = pa.Table.from_batches(batches)
+                if tbl.num_rows:
+                    yield from _encode_partition_arrow(tbl, positions=positions)
 
-        def encode_partition(batches):
-            import pyarrow as pa
-
-            batches = list(batches)  # a hash partition can be empty
-            if not batches:
-                return
-            tbl = pa.Table.from_batches(batches)
-            if tbl.num_rows:
-                yield from _encode_partition_arrow(tbl, positions=positions)
-
-        # ONE exchange, partitioned on shard alone: each doc-range shard
-        # lands whole in EXACTLY ONE task (driver-computed salt map ⇒
-        # collision-free 1:1 shard→task assignment, encode_partitioning
-        # — plain hash placement left one task carrying 4 whole shards
-        # at 5M docs while other slots idled), and the encoder emits its
-        # groups in (shard, term-LEXICOGRAPHIC) order, so the
-        # partitionBy(shard) write directly produces one term-sorted
-        # file per shard — the query layout (row-group min/max pruning
-        # on `term IN`) with NO second shuffle.  A whole shard per task
-        # is the memory contract default_n_shards sizes (250k docs ⇒
-        # ~30M combined (doc,term) rows ≈ 1 GB Arrow per encode task).
-        # mapInArrow (not mapInPandas): the term strings stay in Arrow
-        # buffers and are dictionary-encoded in C++ — materializing 36M
-        # python string objects was the dominant encode cost.
-        nparts, pexpr = encode_partitioning(
-            todo, spark.sparkContext.defaultParallelism
-        )
-        enc_cols = ["term", "shard", "doc_id", "tf", "doclen"]
-        if positions:
-            enc_cols.append("pos_vb")
-        postings = (
-            tok.select(*enc_cols)
-            .repartition(nparts, pexpr)
-            .mapInArrow(
-                encode_partition,
-                schema=POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
+            # ONE exchange, partitioned on shard alone: each doc-range
+            # shard lands whole in EXACTLY ONE task (driver-computed salt
+            # map ⇒ collision-free 1:1 shard→task assignment,
+            # encode_partitioning — plain hash placement left one task
+            # carrying 4 whole shards at 5M docs while other slots
+            # idled), and the encoder emits its groups in (shard,
+            # term-LEXICOGRAPHIC, block_id) order, so the
+            # partitionBy(shard) write directly produces one term-sorted
+            # file per shard — the query layout (row-group min/max
+            # pruning on `term IN`, tests/test_postings_layout.py) with
+            # NO second shuffle and no sort.  A whole shard per task is
+            # the memory contract default_n_shards sizes (250k docs ⇒
+            # ~30M combined (doc,term) rows ≈ 1 GB Arrow per encode
+            # task).  mapInArrow (not mapInPandas): the term strings stay
+            # in Arrow buffers and are dictionary-encoded in C++ —
+            # materializing 36M python string objects was the dominant
+            # encode cost.
+            nparts, pexpr = encode_partitioning(
+                todo, spark.sparkContext.defaultParallelism
             )
-        )
-        try:
-            if fresh:
-                catalog.write(
-                    postings, "postings", partition_by=["shard"],
-                    options=POSTINGS_WRITE_OPTIONS,
+            enc_cols = ["term", "shard", "doc_id", "tf", "doclen"]
+            if positions:
+                # a positional index keeps pos_vb on every rewrite, or
+                # phrase queries on the rewritten shards break
+                enc_cols.append("pos_vb")
+            postings = (
+                tok.select(*enc_cols)
+                .repartition(nparts, pexpr)
+                .mapInArrow(
+                    encode_partition,
+                    schema=POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
                 )
-            else:  # staged + deferred (see tokens rewrite above)
-                catalog.rewrite_partitions(
-                    postings, "postings", todo,
-                    defer_cleanup=True, options=POSTINGS_WRITE_OPTIONS,
-                )
-        except BaseException:
-            _drain_stats_quietly()
-            raise
-        mark("postings")
-    for j in stat_jobs:
-        j.result()
-    avgdl, n_live = avgdl_box[0], int(avgdl_box[1])
-    mark("doc_stats_avgdl")
+            )
+            catalog.replace(postings, "postings", fresh, shards=todo,
+                            partition_by=["shard"], options=POSTINGS_WRITE_OPTIONS)
+            clock.mark("postings")
+        n_live, avgdl = stats.result()
+    clock.mark("doc_stats_avgdl")
 
     # term_stats + per-shard lineage metrics, both DERIVED from the
     # block-summary columns of the postings table (302k blocks for 36M
     # postings — three orders of magnitude smaller than the token set)
     pst = catalog.read(spark, "postings")
-    ts_df = pst.groupBy("term").agg(
-        F.sum("n").cast("long").alias("df"), F.sum("tf_sum").alias("cf")
+    catalog.replace(
+        pst.groupBy("term").agg(
+            F.sum("n").cast("long").alias("df"), F.sum("tf_sum").alias("cf")
+        ),
+        "term_stats", fresh,
     )
-    if fresh:
-        catalog.write(ts_df, "term_stats")
-    else:
-        # staged whole-table swap: a plain overwrite would destroy the
-        # committed snapshot's term_stats if this build crashed mid-write
-        catalog.rewrite_table(ts_df, "term_stats")
-    mark("term_stats")
+    clock.mark("term_stats")
     # per-shard lineage: a parquet TABLE derived entirely distributed —
-    # membership = (this run's todo) ∪ (previously committed shards),
     # stats left-joined from the postings block summaries, zeros for
     # empty shards (else re-built forever).  Nothing shard-sized is
     # collected; the manifest gets only the O(1) summary block.
@@ -755,58 +800,38 @@ def _build_index_impl(
         F.count(F.lit(1)).alias("blocks"), F.sum("n").alias("postings")
     )
     if len(todo) == n_shards:
-        todo_df = spark.range(n_shards).select(
+        members = spark.range(n_shards).select(
             F.col("id").cast("int").alias("shard")
         )
     else:
-        todo_df = spark.createDataFrame(
-            [(int(s),) for s in sorted(todo)], "shard int"
+        members = spark.createDataFrame([(int(s),) for s in todo], "shard int")
+    if not fresh:
+        members = members.union(catalog.lineage_shard_df(spark)).distinct()
+    if unclaimed:
+        members = members.join(
+            spark.createDataFrame([(int(s),) for s in unclaimed], "shard int"),
+            "shard", "left_anti",
         )
-    members = todo_df
-    if snap is not None:
-        prior = catalog.lineage_shard_df(spark)
-        if prior is not None:
-            members = members.union(prior).distinct()
-    if grown and only_shards is not None:
-        # a bounded grown run that excluded delta shards must NOT claim
-        # them: their on-disk postings (the boundary shard's OLD
-        # partition) predate the delta's tokens/doc_stats rewrite, and a
-        # later resume sees n_docs unchanged + partition_exists and would
-        # trust them forever (ADVICE r2).  Dropping their lineage makes
-        # the next resume rebuild exactly those shards.
-        excluded = sorted(set(range(delta_start // width, n_shards)) - set(todo))
-        if excluded:
-            members = members.join(
-                spark.createDataFrame([(int(s),) for s in excluded],
-                                      "shard int"),
-                "shard", "left_anti",
-            )
-    lineage_df = (
+    lineage_summary = catalog.write_lineage(
+        spark,
         members.join(shard_stats, "shard", "left")
-        .fillna(0, subset=["blocks", "postings"])
+        .fillna(0, subset=["blocks", "postings"]),
+        fresh=fresh,
     )
-    lineage_summary = catalog.write_lineage(spark, lineage_df, fresh=fresh)
-    mark("metrics")
+    clock.mark("metrics")
 
-    elapsed = time.time() - t0
+    elapsed = time.time() - clock.t0
     manifest = {
-        "phase_seconds": phases,
+        **manifest,
+        "phase_seconds": clock.phases,
         "postings_format": POSTINGS_FORMAT,
         "n_docs": n_live,
-        # doc-id high-water mark + 1: monotone across grown builds and
-        # deletes; the ONLY safe base for new doc_id allocation
-        "next_doc_id": max(n_docs, old_n),
-        "n_shards": n_shards,
-        "shard_width": width,
         "avgdl": avgdl,
         # reference avgdl the baked uint8 qmax_tfn bound was quantized
         # at — queries MUST scale by the build's value, not their own
         # code's constant (ADVICE r3: a drifted duplicate silently
         # mis-scales block pruning)
         "tfn_ref_avgdl": TFN_REF_AVGDL,
-        "stemming": stemming,
-        "tokenizer": tokenizer,
-        "positions": positions,
         "lineage": lineage_summary,
         # observability metadata — capped so a full build over millions
         # of shards cannot make the manifest O(#shards) again
@@ -815,9 +840,9 @@ def _build_index_impl(
             else {"n": len(todo), "first": todo[0], "last": todo[-1]}
         ),
         "build_seconds": elapsed,
-        "docs_per_sec": (n_docs / elapsed) if elapsed > 0 else None,
-        "source": "documents",
     }
+    if docs_read is not None:
+        manifest["docs_per_sec"] = docs_read / elapsed if elapsed > 0 else None
     catalog.commit_snapshot(manifest)
     # the commit above is the atomic point — only now may the staged
     # rewrites' backups go (a crash before this line rolls forward)

@@ -24,23 +24,23 @@ Crash model (per mutation path):
 - FRESH build: table writes land before the snapshot commit; a crash
   leaves extra partition data that the next resume overwrites
   idempotently — the previous snapshot stays consistent.
-- GROWN build and delete_docs: every partition replacement is a
-  staged swap under a ``_pending_rewrite`` marker with DEFERRED
-  cleanup (``rewrite_partitions(defer_cleanup=True)`` /
-  ``rewrite_table``): the pre-swap data stays on disk as
-  underscore-prefixed backups (invisible to Spark listings) until
-  ``finalize_pending()`` runs AFTER the snapshot commit.  The marker
-  records the snapshot sequence at swap time, so ``recover()`` —
-  invoked by ``read_snapshot`` (the query path) and by
-  ``build_index(resume=True)``/``delete_docs`` — resolves a crash in
-  the direction the snapshot log decided: commit landed ⇒ roll
-  forward (drop backups); commit missing ⇒ roll back (restore
+- Every other write — resumed or grown build, delete_docs — goes
+  through ``replace(fresh=False)``: each partition or whole-table
+  replacement is a staged swap under a ``_pending_rewrite`` marker
+  (``rewrite_partitions`` / ``rewrite_table``).  The pre-swap data stays
+  on disk as underscore-prefixed backups (invisible to Spark listings)
+  until ``finalize_pending()`` runs AFTER the snapshot commit.  The
+  marker records the snapshot sequence at swap time, so ``recover()`` —
+  invoked by ``read_snapshot`` (the query path) and by the writers'
+  guard (``build_index(resume=True)``, ``delete_docs``) — resolves a
+  crash in the direction the snapshot log decided: commit landed ⇒
+  roll forward (drop backups); commit missing ⇒ roll back (restore
   backups, delete brand-new partitions).  The single atomic rename of
   the snapshot JSON is therefore the commit point for the whole
   multi-table mutation — the Iceberg atomic-swap semantics, on plain
-  parquet (closes the r3 crash window where a grown build could
-  briefly expose boundary-shard rows under the old snapshot, and the
-  old "delete visible early" window).
+  parquet.  Both writers commit through the one build tail
+  (``build._rewrite_shards``), so the build, a grown build and a delete
+  share one write order and one commit point.
 
 On a real cluster, swap `_write`/`_read` for ``df.writeTo(...)`` on an
 Iceberg catalog; build/query code stays.
@@ -48,11 +48,13 @@ Iceberg catalog; build/query code stays.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
 import uuid
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,7 +69,7 @@ class IndexCatalog:
         # probe protects in-flight writers from concurrent queries, but a
         # writer that FAILS BY RAISING (job abort, executor loss) is
         # still alive — it must be able to roll back its own staged
-        # swaps, which rollback_own() authorizes via this token.
+        # swaps, which rollback_on_raise() authorizes via this token.
         self._writer_token = uuid.uuid4().hex
         # Table handles memoized per (spark app, table, snapshot) — a
         # Spark DataFrame, or under app None the pyarrow dataset of
@@ -167,16 +169,11 @@ class IndexCatalog:
 
     def write_lineage(self, spark: SparkSession, df: DataFrame,
                       fresh: bool) -> dict[str, Any]:
-        """Write the per-shard lineage table (plain for a fresh build,
-        staged swap otherwise — the snapshot commit decides, exactly
-        like term_stats) and return the manifest summary computed from
-        the table AS WRITTEN, so the committed checksum vouches for the
-        bytes on disk."""
-        df = self._normalize_lineage(df).coalesce(8)
-        if fresh:
-            self.write(df, "lineage")
-        else:
-            self.rewrite_table(df, "lineage")
+        """Write the per-shard lineage table (``replace``: plain for a
+        fresh build, staged swap otherwise) and return the manifest
+        summary computed from the table AS WRITTEN, so the committed
+        checksum vouches for the bytes on disk."""
+        self.replace(self._normalize_lineage(df).coalesce(8), "lineage", fresh)
         return self.lineage_summary(self.read(spark, "lineage"))
 
     def lineage_rows(self, spark: SparkSession) -> list[tuple[int, int, int]]:
@@ -233,25 +230,41 @@ class IndexCatalog:
     def partition_exists(self, name: str, shard: int) -> bool:
         return os.path.isdir(self.partition_path(name, shard))
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
-              mode: str = "overwrite",
-              options: dict[str, str] | None = None) -> None:
-        """``mode='overwrite'`` replaces the whole table;
-        ``mode='overwrite_partitions'`` replaces only the partitions
-        present in ``df`` (Iceberg overwritePartitions analog);
-        ``mode='append'`` appends.  ``options`` are parquet writer
-        options (e.g. ``parquet.block.size`` for skip-friendly row
-        groups on the postings table)."""
-        self._df_cache.clear()
-        if mode == "overwrite_partitions":
-            w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        else:
-            w = df.write.mode(mode)
+    @staticmethod
+    def _write_parquet(df: DataFrame, path: str,
+                       partition_by: list[str] | None,
+                       options: dict[str, str] | None) -> None:
+        w = df.write.mode("overwrite")
         for k, v in (options or {}).items():
             w = w.option(k, v)
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(self.table_path(name))
+        w.parquet(path)
+
+    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
+              options: dict[str, str] | None = None) -> None:
+        """Overwrite the whole table.  ``options`` are parquet writer
+        options (e.g. ``parquet.block.size`` for skip-friendly row
+        groups on the postings table)."""
+        self._df_cache.clear()
+        self._write_parquet(df, self.table_path(name), partition_by, options)
+
+    def replace(self, df: DataFrame, name: str, fresh: bool,
+                shards: list[int] | None = None,
+                partition_by: list[str] | None = None,
+                options: dict[str, str] | None = None) -> None:
+        """The one place a writer picks how a table is replaced.
+        ``fresh`` (a build with no snapshot to protect): a plain
+        ``write``.  Otherwise a staged swap the next snapshot commit
+        decides — of the ``shards`` partitions (``rewrite_partitions``),
+        or of the whole table when ``shards`` is None
+        (``rewrite_table``)."""
+        if fresh:
+            self.write(df, name, partition_by=partition_by, options=options)
+        elif shards is None:
+            self.rewrite_table(df, name, options=options, partition_by=partition_by)
+        else:
+            self.rewrite_partitions(df, name, shards, partition_by, options)
 
     def _pending_path(self, name: str) -> str:
         return os.path.join(self.root, f"_pending_rewrite_{name}.json")
@@ -265,14 +278,31 @@ class IndexCatalog:
         partition column; ``shard=3.old`` would be, too."""
         return os.path.join(self.table_path(name), f"_old_shard_{shard}")
 
+    def _write_marker(self, name: str, payload: dict[str, Any]) -> None:
+        """Atomically record a deferred swap of ``name``: the snapshot
+        sequence seen now decides it on ``recover()``."""
+        snap = self.current_snapshot()
+        marker = self._pending_path(name)
+        with open(marker + ".tmp", "w") as f:
+            json.dump(
+                {
+                    **payload,
+                    "deferred": True,
+                    "snap_seq": snap["sequence"] if snap else 0,
+                    "pid": os.getpid(),
+                    "token": self._writer_token,
+                },
+                f,
+            )
+        os.rename(marker + ".tmp", marker)
+
     def rewrite_partitions(
         self,
         df: DataFrame,
         name: str,
         shards: list[int],
-        partition_by: str | list[str] = "shard",
+        partition_by: list[str],
         options: dict[str, str] | None = None,
-        defer_cleanup: bool = False,
     ) -> None:
         """Row-level rewrite of the given shard partitions (Iceberg
         ``DELETE WHERE`` analog): ``df`` holds the SURVIVING rows of
@@ -282,65 +312,36 @@ class IndexCatalog:
         reading), and partitions that end up EMPTY must have their
         directories removed (dynamic overwrite would leave them stale).
 
-        Crash-safe via a pending marker: each partition swap renames the
-        committed directory to ``<dst>.old`` before moving the new one
-        in.  ``defer_cleanup=False``: ``.old`` dirs and the marker are
-        removed as the swap completes; a crash mid-swap rolls half-
-        swapped partitions back on ``recover()``.
-
-        ``defer_cleanup=True`` (the Iceberg-snapshot-swap analog, used
-        by grown builds and delete_docs): every ``.old`` dir, the
-        staging dir and the marker are KEPT until
-        ``finalize_pending()``, which the caller runs only after
-        ``commit_snapshot``.  The marker records the snapshot sequence
-        seen now; ``recover()`` compares it with the current sequence —
-        commit landed ⇒ roll forward (cleanup only), commit missing ⇒
-        roll every partition back (restore ``.old``, delete partitions
-        that had no prior directory).  The snapshot commit (one atomic
-        rename) thereby decides whether the whole multi-table mutation
-        happened — closing the window where a crash between a staged
-        partition overwrite and the snapshot commit exposed newer rows
-        under the old snapshot (VERDICT r3 #5)."""
+        Deferred (the Iceberg-snapshot-swap analog): each partition swap
+        renames the committed directory to a backup before moving the
+        new one in, and every backup, the staging dir and the pending
+        marker are KEPT until ``finalize_pending()``, which the writer
+        runs only after ``commit_snapshot``.  ``recover()`` compares the
+        marker's snapshot sequence with the current one — commit landed
+        ⇒ roll forward (cleanup only), commit missing ⇒ roll every
+        partition back (restore the backup, delete partitions that had
+        no prior directory).  The snapshot commit (one atomic rename)
+        thereby decides whether the whole multi-table mutation happened
+        — closing the window where a crash between a staged partition
+        overwrite and the snapshot commit exposed newer rows under the
+        old snapshot (VERDICT r3 #5)."""
         self._df_cache.clear()
-        parts = [partition_by] if isinstance(partition_by, str) else list(partition_by)
         tmp = self.table_path(f"_{name}__rewrite")
         shutil.rmtree(tmp, ignore_errors=True)
-        w = df.write.mode("overwrite")
-        for k, v in (options or {}).items():
-            w = w.option(k, v)
-        w.partitionBy(*parts).parquet(tmp)
+        self._write_parquet(df, tmp, partition_by, options)
         had_old = [
             s for s in shards if os.path.isdir(self.partition_path(name, s))
         ]
-        snap = self.current_snapshot()
-        marker = self._pending_path(name)
-        with open(marker + ".tmp", "w") as f:
-            json.dump(
-                {
-                    "shards": shards,
-                    "had_old": had_old,
-                    "deferred": defer_cleanup,
-                    "snap_seq": snap["sequence"] if snap else 0,
-                    "pid": os.getpid(),
-                    "token": self._writer_token,
-                },
-                f,
-            )
-        os.rename(marker + ".tmp", marker)
+        self._write_marker(name, {"shards": shards, "had_old": had_old})
         for s in shards:  # the outer partition level must be the shard
             dst = self.partition_path(name, s)
             old = self._backup_path(name, s)
             shutil.rmtree(old, ignore_errors=True)
             if os.path.isdir(dst):
                 os.rename(dst, old)
-            src = os.path.join(tmp, f"{parts[0]}={s}")
+            src = os.path.join(tmp, f"{partition_by[0]}={s}")
             if os.path.isdir(src):
                 shutil.move(src, dst)
-            if not defer_cleanup:
-                shutil.rmtree(old, ignore_errors=True)
-        if not defer_cleanup:
-            os.remove(marker)
-            shutil.rmtree(tmp, ignore_errors=True)
 
     def _table_backup_path(self, name: str) -> str:
         return os.path.join(self.root, f"_old_table_{name}")
@@ -352,36 +353,18 @@ class IndexCatalog:
         options: dict[str, str] | None = None,
         partition_by: list[str] | None = None,
     ) -> None:
-        """Whole-table analog of the deferred ``rewrite_partitions``:
-        stage ``df`` to a side dir, swap it in with the old table kept
-        as a backup, and let the snapshot commit decide — ``recover()``
-        restores the backup if the commit never lands,
-        ``finalize_pending()`` drops it afterwards.  For small derived
-        tables (term_stats) whose plain overwrite would trash the
-        committed snapshot's copy on a crash."""
+        """Whole-table analog of ``rewrite_partitions``: stage ``df`` to
+        a side dir, swap it in with the old table kept as a backup, and
+        let the snapshot commit decide — ``recover()`` restores the
+        backup if the commit never lands, ``finalize_pending()`` drops
+        it afterwards.  For small derived tables (term_stats, lineage)
+        whose plain overwrite would trash the committed snapshot's copy
+        on a crash."""
         self._df_cache.clear()
         tmp = self.table_path(f"_{name}__rewrite")
         shutil.rmtree(tmp, ignore_errors=True)
-        w = df.write.mode("overwrite")
-        for k, v in (options or {}).items():
-            w = w.option(k, v)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        snap = self.current_snapshot()
-        marker = self._pending_path(name)
-        with open(marker + ".tmp", "w") as f:
-            json.dump(
-                {
-                    "whole_table": True,
-                    "deferred": True,
-                    "snap_seq": snap["sequence"] if snap else 0,
-                    "pid": os.getpid(),
-                    "token": self._writer_token,
-                },
-                f,
-            )
-        os.rename(marker + ".tmp", marker)
+        self._write_parquet(df, tmp, partition_by, options)
+        self._write_marker(name, {"whole_table": True})
         dst = self.table_path(name)
         backup = self._table_backup_path(name)
         shutil.rmtree(backup, ignore_errors=True)
@@ -427,18 +410,22 @@ class IndexCatalog:
         except OSError:
             return False
 
-    def rollback_own(self) -> list[str]:
-        """Resolve pending markers THIS catalog instance wrote, ignoring
-        the writer-liveness probe — for the in-process failure path
-        (ADVICE r4): a build/delete that fails by RAISING leaves the
-        writer alive, so a later query's ``recover()`` would skip its
-        half-swapped tables forever and ``read_snapshot`` would serve
-        them silently under the old snapshot.  The failing mutation
-        calls this from its exception handler; resolution direction is
-        still snapshot-decided (commit landed ⇒ forward, else back), so
-        calling it after a post-commit failure is a finalize, not an
-        undo."""
-        return self.recover(own_token=self._writer_token)
+    @contextlib.contextmanager
+    def rollback_on_raise(self) -> Iterator[None]:
+        """The writers' rollback wrapper (``build_index``,
+        ``delete_docs``): on a raise, resolve the pending markers THIS
+        catalog instance wrote, ignoring the writer-liveness probe
+        (ADVICE r4).  A writer that fails by RAISING stays alive, so a
+        later query's ``recover()`` would skip its half-swapped tables
+        forever and ``read_snapshot`` would serve them silently under
+        the old snapshot.  Resolution is still snapshot-decided (commit
+        landed ⇒ forward, else back), so a failure after the commit
+        finalizes forward instead of undoing it."""
+        try:
+            yield
+        except BaseException:
+            self.recover(own_token=self._writer_token)
+            raise
 
     def recover(self, force: bool = False,
                 own_token: str | None = None) -> list[str]:
@@ -455,7 +442,7 @@ class IndexCatalog:
           stand-in for Iceberg's commit lease is a same-host pid probe,
           overridable with ``force=True`` after pid reuse, and bypassed
           for markers whose ``token`` matches ``own_token`` (the
-          ``rollback_own`` path: the failing writer IS this process);
+          ``rollback_on_raise`` path: the failing writer IS this process);
         - otherwise the writer is dead and the commit never happened —
           roll back: restore each partition whose backup survives, and
           delete partitions the marker says had no prior directory

@@ -3,28 +3,20 @@
 The reference removes one dataset from all its Elasticsearch indices
 with delete-by-query (lib_core/datamart_core/common.py:280-317) and
 re-inserts on re-profile (delete-then-reinsert, profiler/profiler.py:
-286-297).  Here the analog is per-shard-partition rewrite: deleting a
-document touches exactly the doc-range shard partitions that contain
-it — tokens and doc_stats are filter-rewritten, postings for those
-shards are re-encoded from the surviving tokens, term_stats/avgdl are
-re-derived, and a new snapshot commits the lineage.  On Iceberg this
-whole function is ``DELETE FROM ... WHERE`` + the posting rebuild of
-the touched partitions.
+286-297).  Reinsertion is the index build itself, and so is the second
+half of a delete: ``delete_docs`` filter-rewrites the ``tokens``
+partitions of the doc-range shards that hold the deleted documents,
+then runs the build's own tail (``build._rewrite_shards``) over exactly
+those shards — doc_stats from the sentinels, postings through the one
+encode exchange, term_stats/avgdl, lineage, and the snapshot commit.
+On Iceberg the first half is ``DELETE FROM tokens WHERE``.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import SparkSession, functions as F
 
-from .build import (
-    POSTINGS_SCHEMA,
-    POSTINGS_SCHEMA_POS,
-    POSTINGS_WRITE_OPTIONS,
-    TFN_REF_AVGDL,
-    _encode_partition_arrow,
-)
+from .build import _Clock, _rewrite_shards, _writer_guard
 from .catalog import IndexCatalog
 
 
@@ -34,27 +26,11 @@ def delete_docs(
     doc_ids: list[int] | None = None,
     urls: list[str] | None = None,
 ) -> dict:
-    """Rollback wrapper over ``_delete_docs_impl`` (ADVICE r4): a delete
-    that fails by raising leaves this process alive, so ``recover()``'s
-    pid-liveness probe would skip its staged swaps forever — roll back
-    our own markers before propagating.  Snapshot-decided: a failure
-    after the commit finalizes forward."""
-    try:
-        return _delete_docs_impl(spark, catalog, doc_ids=doc_ids, urls=urls)
-    except BaseException:
-        catalog.rollback_own()
-        raise
-
-
-def _delete_docs_impl(
-    spark: SparkSession,
-    catalog: IndexCatalog,
-    doc_ids: list[int] | None = None,
-    urls: list[str] | None = None,
-) -> dict:
     """Remove documents (by doc_id and/or url) from every index table,
     rebuilding only the shard partitions that contained them.  Returns
-    the new committed snapshot.
+    the new committed snapshot.  Same failure atomicity as
+    ``build_index``: staged until the snapshot commit, and rolled back
+    on a raise (``catalog.rollback_on_raise``).
 
     Scope: this deletes from the INDEX, not from the corpus table.  If
     the deleted docs remain in the corpus, a later grown-corpus build
@@ -63,29 +39,21 @@ def _delete_docs_impl(
     from the corpus table too when removal must be permanent.  Deleted
     doc_ids are never re-allocated (the snapshot's next_doc_id high-water
     mark is monotone)."""
-    catalog.recover()  # roll back any earlier delete that crashed mid-swap
-    if catalog._pending_markers():
-        raise RuntimeError(
-            "another writer holds in-flight rewrite markers on this "
-            "catalog (single-writer contract); if that process is "
-            "dead despite the pid probe, run catalog.recover(force=True)"
-        )
-    snap = catalog.current_snapshot()
+    with catalog.rollback_on_raise():
+        return _delete_docs_impl(spark, catalog, doc_ids=doc_ids, urls=urls)
+
+
+def _delete_docs_impl(
+    spark: SparkSession,
+    catalog: IndexCatalog,
+    doc_ids: list[int] | None = None,
+    urls: list[str] | None = None,
+) -> dict:
+    """Delete body — call through ``delete_docs`` (the rollback wrapper)."""
+    snap = _writer_guard(catalog)
     if not snap:
         raise ValueError("nothing committed in this catalog")
-    # the rewrite re-encodes ONLY the touched shards with this code's
-    # TFN_REF_AVGDL; untouched shards keep the build's baked bounds, so
-    # the two constants must agree or block pruning mis-scales on one
-    # side (ADVICE r3)
-    snap_ref = float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL))
-    if snap_ref != TFN_REF_AVGDL:
-        raise ValueError(
-            f"index baked qmax_tfn at reference avgdl {snap_ref}, this code "
-            f"uses {TFN_REF_AVGDL}; partial re-encode would mix scales — "
-            "rebuild with build_index(resume=False) instead"
-        )
-    width = snap["shard_width"]
-    t0 = time.time()
+    clock = _Clock()
 
     ids = set(int(d) for d in (doc_ids or []))
     if urls:
@@ -99,122 +67,30 @@ def _delete_docs_impl(
     if not ids:
         return snap
     ids = sorted(ids)
+    width = snap["shard_width"]
     shards = sorted({d // width for d in ids})
 
-    # 1. tokens: filter-rewrite the touched shard partitions (row delete)
-    tdf = catalog.read(spark, "tokens")
-    surviving = tdf.where(F.col("shard").isin(shards)).where(
-        ~F.col("doc_id").isin(ids)
+    surviving = (
+        catalog.read(spark, "tokens")
+        .where(F.col("shard").isin(shards))
+        .where(~F.col("doc_id").isin(ids))
     )
-    catalog.rewrite_partitions(surviving, "tokens", shards,
-                               partition_by=["shard", "kind"],
-                               defer_cleanup=True)
+    catalog.replace(surviving, "tokens", False, shards=shards,
+                    partition_by=["shard", "kind"])
+    clock.mark("tokens")
 
-    # 2. doc_stats: re-derive the touched partitions from the sentinels
-    tdf = catalog.read(spark, "tokens")
-    meta_cols = [c for c in ("url", "lang", "warc_ts") if c in tdf.columns]
-    sent = (
-        tdf.where(F.col("shard").isin(shards))
-        .where(F.col("kind") == "d")
-        .select("doc_id", "doclen", *meta_cols, "shard")
-    )
-    catalog.rewrite_partitions(sent, "doc_stats", shards, defer_cleanup=True)
-
-    # 3. postings: re-encode the touched shards from surviving tokens.
-    # A positional snapshot carries pos_vb on its token rows — the
-    # rewrite must preserve it (the committed snapshot keeps
-    # positions:true, so dropping the column would break every later
-    # phrase/span/passage query on the touched shards)
     positions = bool(snap.get("positions", False))
-    enc_cols = ["term", "shard", "doc_id", "tf", "doclen"]
-    if positions:
-        enc_cols.append("pos_vb")
-    tok = (
-        tdf.where(F.col("shard").isin(shards))
-        .where(F.col("kind") == "t")
-        .select(*enc_cols)
-    )
-
-    def encode_partition(batches):
-        import pyarrow as pa
-
-        batches = list(batches)  # a hash partition can be empty
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)
-        if tbl.num_rows:
-            yield from _encode_partition_arrow(tbl, positions=positions)
-
-    postings = tok.repartition(
-        max(len(shards), spark.sparkContext.defaultParallelism), "term", "shard"
-    ).mapInArrow(
-        encode_partition,
-        schema=POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
-    )
-    # same compaction as the build: one term-sorted file per shard,
-    # with the exact shard→task assignment (no hash co-location)
-    from .build import encode_partitioning
-
-    nparts, pexpr = encode_partitioning(
-        shards, spark.sparkContext.defaultParallelism
-    )
-    postings = postings.repartition(nparts, pexpr).sortWithinPartitions(
-        "shard", "term", "block_id"
-    )
-    catalog.rewrite_partitions(postings, "postings", shards,
-                               options=POSTINGS_WRITE_OPTIONS,
-                               defer_cleanup=True)
-
-    # 4. re-derive term_stats / avgdl / lineage from the new state.
-    # Every mutation above is DEFERRED: the snapshot commit at the end
-    # decides whether the delete happened at all — a crash anywhere in
-    # between rolls the whole multi-table delete back on recover(),
-    # closing the old "delete visible early" window.
-    pst = catalog.read(spark, "postings")
-    catalog.rewrite_table(
-        pst.groupBy("term").agg(
-            F.sum("n").cast("long").alias("df"), F.sum("tf_sum").alias("cf")
-        ),
-        "term_stats",
-    )
-    ds = catalog.read(spark, "doc_stats")
-    agg = ds.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s")
-    ).collect()[0]
-    n_docs = agg["n"]
-    avgdl = float(agg["s"] or 0) / n_docs if n_docs else 0.0
-    # per-shard lineage table: shard membership is unchanged by a
-    # delete, so members = the committed lineage's shards; stats are
-    # re-derived from the post-delete postings (zeros for emptied
-    # shards).  Distributed end-to-end — nothing shard-sized reaches
-    # the driver (VERDICT r5 #2).
-    shard_stats = pst.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("blocks"), F.sum("n").alias("postings")
-    )
-    members = catalog.lineage_shard_df(spark)
-    lineage_summary = catalog.write_lineage(
-        spark,
-        members.join(shard_stats, "shard", "left")
-        .fillna(0, subset=["blocks", "postings"]),
-        fresh=False,
-    )
-
-    manifest = dict(snap)
-    manifest.pop("shards", None)  # legacy in-manifest lineage map
-    manifest.update(
-        {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "tfn_ref_avgdl": TFN_REF_AVGDL,
-            "lineage": lineage_summary,
-            "built_shards_this_run": shards,
-            "deleted_doc_ids": len(ids),
-            "build_seconds": time.time() - t0,
-            "phase_seconds": {},
+    return _rewrite_shards(
+        spark, catalog, fresh=False, token_shards=shards, todo=shards,
+        n_shards=snap["n_shards"], positions=positions, clock=clock,
+        manifest={
+            "next_doc_id": snap.get("next_doc_id", snap["n_docs"]),
+            "n_shards": snap["n_shards"],
+            "shard_width": width,
+            "stemming": snap.get("stemming", True),
+            "tokenizer": snap.get("tokenizer", "simple"),
+            "positions": positions,
             "source": "delete_docs",
-        }
+            "deleted_doc_ids": len(ids),
+        },
     )
-    manifest.pop("docs_per_sec", None)
-    catalog.commit_snapshot(manifest)
-    catalog.finalize_pending()  # commit landed — backups may go
-    return catalog.current_snapshot()

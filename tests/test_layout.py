@@ -28,7 +28,7 @@ ROOT_PACKAGES = ["index", "query", "suite"]
 # Modules no root reaches that stay on purpose, with the reason.
 UNREACHED_OK = {
     f"{PKG}.streaming{sub}": "incremental ingest in front of build_index(resume=True)"
-    for sub in ("", ".ingest", ".state")
+    for sub in ("", ".ingest")
 }
 
 # Top-level names only tests use that stay on purpose, with the reason.

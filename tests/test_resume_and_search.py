@@ -1,6 +1,8 @@
 """Incremental/partial builds (north rule: resumable from checkpoint
 with per-partition lineage) and the top-level search facade."""
 
+import os
+
 import pytest
 
 from datamart_spark.corpus import generate_documents, generate_documents_pandas, _VOCAB
@@ -165,6 +167,54 @@ def test_resume_refuses_boosted_snapshot(spark, tmp_path):
     assert len(glob.glob(str(tmp_path / "boosted" / "_snapshots" / "snap-*"))) == 1
 
 
+def _edit_manifest(cat, **keys):
+    """Overwrite keys of the committed snapshot's manifest in place;
+    returns the edited manifest."""
+    import json
+
+    path = os.path.join(cat.root, "_snapshots",
+                        f"snap-{cat.current_snapshot()['sequence']:06d}.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest.update(keys)
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    return manifest
+
+
+def _assert_nothing_committed(cat, manifest):
+    assert cat.current_snapshot() == manifest
+    assert len(os.listdir(os.path.join(cat.root, "_snapshots"))) == 1
+    assert not cat._pending_markers()
+
+
+def test_grown_build_refuses_other_tfn_ref_avgdl(spark, tmp_path):
+    """A grown build re-encodes only the boundary and new shards at this
+    code's TFN_REF_AVGDL: over shards baked at another reference avgdl
+    the pruning bound would stop being an upper bound, so it refuses
+    and commits nothing."""
+    cat = IndexCatalog(str(tmp_path / "ref"))
+    build_index(generate_documents(spark, 200), cat, n_shards=4, resume=False)
+    manifest = _edit_manifest(cat, tfn_ref_avgdl=128.0)
+    with pytest.raises(ValueError, match="encoded differently"):
+        build_index(generate_documents(spark, 250), cat)
+    _assert_nothing_committed(cat, manifest)
+
+
+def test_delete_refuses_other_postings_format(spark, tmp_path):
+    """delete_docs re-encodes the touched shards in this code's block
+    layout: over postings of another format it refuses and commits
+    nothing."""
+    from datamart_spark.index import delete_docs
+
+    cat = IndexCatalog(str(tmp_path / "fmt"))
+    build_index(generate_documents(spark, 200), cat, n_shards=4, resume=False)
+    manifest = _edit_manifest(cat, postings_format=1)
+    with pytest.raises(ValueError, match="encoded differently"):
+        delete_docs(spark, cat, doc_ids=[3])
+    _assert_nothing_committed(cat, manifest)
+
+
 def test_delete_docs_rank_identical_to_fresh_subset(spark, tmp_path):
     """S14 delete-by-dataset analog: per-shard rewrite of one deleted
     document equals a fresh index over the surviving doc set."""
@@ -183,6 +233,9 @@ def test_delete_docs_rank_identical_to_fresh_subset(spark, tmp_path):
     m2 = delete_docs(spark, cat, doc_ids=[10, 11], urls=drop_urls)
     assert m2["n_docs"] == n - 3
     assert m2["built_shards_this_run"] == [0, 3]  # only touched shards
+    # the build's tail times the delete's phases too
+    assert {"doc_stats_avgdl", "postings", "term_stats", "metrics"} <= \
+        set(m2["phase_seconds"])
 
     fresh = IndexCatalog(str(tmp_path / "del_fresh"))
     build_index(

@@ -1,7 +1,7 @@
 """Structured-Streaming ingest: exactly-once drains, latest-per-url,
-ingest-then-index, and the stateful recrawl counter."""
+and ingest-then-index."""
 
-from datamart_spark.corpus import generate_documents, generate_documents_pandas
+from datamart_spark.corpus import generate_documents
 from datamart_spark.streaming import incremental_ingest
 from datamart_spark.streaming.ingest import latest_per_url
 
@@ -85,40 +85,3 @@ def test_ingest_and_index_end_to_end(spark, tmp_path):
          for r in bm25_topk_blockmax(spark, fresh, q, k=15).collect()]
     assert a == b and len(a) > 0
 
-
-def test_stateful_recrawl_counter_across_drains(spark, tmp_path):
-    """§2.9 custom stateful operator (applyInPandasWithState): per-url
-    crawl counters must ACCUMULATE across availableNow drains via the
-    checkpointed state store — run 2 sees run 1's counts without any
-    corpus rescan."""
-    from pyspark.sql import functions as F
-
-    from datamart_spark.streaming.state import latest_crawl_state, track_recrawls
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    docs = generate_documents(spark, 60)
-    # drain 1: urls 0..39 once
-    docs.where("doc_id < 40").write.parquet(landing)
-    track_recrawls(spark, landing, out, ckpt)
-    s1 = {r["url"]: r["n_crawls"] for r in latest_crawl_state(spark, out).collect()}
-    assert len(s1) == 40 and set(s1.values()) == {1}
-
-    # drain 2: urls 20..59 land again (20..39 are RE-crawls)
-    docs.where("doc_id >= 20").withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 10 DAYS")
-    ).write.mode("append").parquet(landing)
-    track_recrawls(spark, landing, out, ckpt)
-    s2 = {r["url"]: r["n_crawls"] for r in latest_crawl_state(spark, out).collect()}
-    assert len(s2) == 60
-    pdf = generate_documents_pandas(60)
-    for i, url in enumerate(pdf["url"]):
-        assert s2[url] == (2 if 20 <= i < 40 else 1), (i, url, s2[url])
-
-    # first/last seen bookkeeping: recrawled urls span the 10-day shift
-    row = latest_crawl_state(spark, out).where(
-        F.col("n_crawls") == 2
-    ).select(F.min("first_seen").alias("f"), F.max("last_seen").alias("l")).collect()[0]
-    assert row["f"] < row["l"]
