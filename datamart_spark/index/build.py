@@ -431,21 +431,11 @@ class _Clock:
 
 
 def _writer_guard(catalog: IndexCatalog) -> dict | None:
-    """The one guard in front of every write over a committed snapshot
-    (``build_index(resume=True)``, ``delete_docs``); returns that
-    snapshot, or None.
-
-    - roll back any rewrite that crashed mid-swap before trusting
-      partition directories (``catalog.recover``);
-    - refuse while another writer holds in-flight markers;
-    - refuse a snapshot whose postings this code would re-encode
-      differently: both writers re-encode only the shards they touch, so
-      a different block layout (``postings_format``), a different
-      reference avgdl for the baked qmax_tfn bound (``tfn_ref_avgdl``:
-      the query-time pruning bound would stop being an upper bound on
-      one side, ADVICE r3) or an index-time field boost (weighted tf)
-      would mix two encodings in one index.
-    """
+    """The one guard in front of every write (``build_index``, resumed
+    or not, and ``delete_docs``); returns the committed snapshot, or
+    None.  Rolls back any rewrite that crashed mid-swap before anything
+    trusts partition directories (``catalog.recover``), and refuses
+    while another writer holds in-flight markers."""
     catalog.recover()
     if catalog._pending_markers():
         raise RuntimeError(
@@ -453,21 +443,32 @@ def _writer_guard(catalog: IndexCatalog) -> dict | None:
             "catalog (single-writer contract); if that process is "
             "dead despite the pid probe, run catalog.recover(force=True)"
         )
-    snap = catalog.current_snapshot()
-    if snap:
-        encoding = (snap.get("postings_format", 1),
-                    float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL)),
-                    snap.get("title_boost"))
-        if encoding != (POSTINGS_FORMAT, TFN_REF_AVGDL, None):
-            raise ValueError(
-                "the committed postings are encoded differently from this "
-                "code's (postings_format, tfn_ref_avgdl, index-time field "
-                f"boost) = {(POSTINGS_FORMAT, TFN_REF_AVGDL, None)}: got "
-                f"{encoding}; a partial re-encode would mix incompatible "
-                "postings (block layout, pruning bound or analyzer settings) "
-                "— rebuild with build_index(resume=False) or drop() the catalog"
-            )
-    return snap
+    return catalog.current_snapshot()
+
+
+def _refuse_other_encoding(snap: dict) -> None:
+    """Refuse to keep committed shards this code would encode
+    differently.  A resumed or grown build and ``delete_docs`` re-encode
+    only the shards they touch, so a different block layout
+    (``postings_format``), a different reference avgdl for the baked
+    qmax_tfn bound (``tfn_ref_avgdl``: the query-time pruning bound would
+    stop being an upper bound on one side, ADVICE r3), an index-time
+    field boost (weighted tf) or a manifest without the lineage table
+    would mix two encodings in one index.  A rebuild keeps nothing, so
+    it is the remedy."""
+    encoding = (snap.get("postings_format", 1),
+                float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL)),
+                snap.get("title_boost"), "lineage" in snap)
+    ours = (POSTINGS_FORMAT, TFN_REF_AVGDL, None, True)
+    if encoding != ours:
+        raise ValueError(
+            "the committed postings are encoded differently from this "
+            "code's (postings_format, tfn_ref_avgdl, index-time field "
+            f"boost, lineage table) = {ours}: got {encoding}; a partial "
+            "re-encode would mix incompatible postings (block layout, "
+            "pruning bound or analyzer settings) — rebuild with "
+            "build_index(resume=False) or drop() the catalog"
+        )
 
 
 def build_index(
@@ -482,12 +483,17 @@ def build_index(
 ) -> dict:
     """Full or incremental build.  Returns the committed snapshot.
 
+    ``resume=False`` rebuilds every table and keeps no committed shard;
+    ``resume=True`` keeps the committed shards and builds only the
+    missing and grown ones.  Either way every table write is staged and
+    the snapshot commit decides it (see ``index/catalog.py``).
+
     Failure atomicity (ADVICE r4): a build that fails by RAISING — a
     Spark job abort, OOM-killed stage, analysis error — rolls back its
     own staged mutations before propagating
-    (``catalog.rollback_on_raise``), so the committed snapshot again
-    reads exactly its own data; a failure AFTER the commit finalizes
-    forward instead of undoing it.
+    (``catalog.rollback_on_raise``), so the committed snapshot, if any,
+    again reads exactly its own tables; a failure AFTER the commit
+    finalizes forward instead of undoing it.
     """
     with catalog.rollback_on_raise():
         return _build_index_impl(
@@ -539,7 +545,9 @@ def _build_index_impl(
         n_docs = docs.count()
     clock.mark("count")
 
-    snap = _writer_guard(catalog) if resume else None
+    snap = _writer_guard(catalog)
+    if not resume:
+        snap = None  # a rebuild keeps no committed shard
     # default profile: uax29 under stemming, simple otherwise
     # (analyzer.resolve_tokenizer) — but a RESUMED build inherits the
     # snapshot's committed tokenizer, whatever it is
@@ -547,6 +555,7 @@ def _build_index_impl(
         snap.get("tokenizer", "simple") if snap else resolve_tokenizer(stemming)
     )
     if snap:
+        _refuse_other_encoding(snap)
         if (
             bool(snap.get("stemming", True)) != bool(stemming)
             or bool(snap.get("positions", False)) != bool(positions)
@@ -583,7 +592,6 @@ def _build_index_impl(
         width = max(1, -(-n_docs // n_shards)) if n_docs else 1
     shard = _shard_col(width)
     grown = snap is not None and n_docs > old_n
-    fresh = snap is None
 
     # lineage validated against disk: a shard the manifest claims but
     # whose partition directory is gone (crash between table write and
@@ -618,26 +626,26 @@ def _build_index_impl(
     # kind=t — both scans partition-prune instead of row-filtering the
     # token-scale table
     kind = F.when(F.col("term").isNull(), F.lit("d")).otherwise(F.lit("t"))
-    tokens_fresh = fresh or not catalog.exists("tokens")
-    if tokens_fresh or grown:
-        # fresh: a narrow map job analyzes + writes the whole tokenized
-        # table (no shuffle).  Grown: the delta's partitions, staged +
-        # deferred — the swap is provisional until the snapshot commits,
-        # so a crash anywhere in the grown build leaves the OLD snapshot
-        # reading exactly its old data (see catalog.rewrite_partitions)
-        src = docs if tokens_fresh else docs.where(F.col("doc_id") >= delta_start)
+    tokens_all = snap is None or not catalog.exists("tokens")
+    if tokens_all or grown:
+        # a narrow map job (no shuffle) analyzes the whole corpus, or
+        # for a grown build only the delta's partitions.  Either write
+        # is a staged swap, provisional until the snapshot commits, so
+        # a crash anywhere in the build leaves the OLD snapshot reading
+        # exactly its old data (see catalog.replace)
+        src = docs if tokens_all else docs.where(F.col("doc_id") >= delta_start)
         catalog.replace(
             term_doc_tf(src, stemming=stemming, meta_cols=meta_cols,
                         tokenizer=tokenizer, positions=positions)
             .withColumn("shard", shard).withColumn("kind", kind),
-            "tokens", tokens_fresh, shards=delta_shards,
+            "tokens", shards=None if tokens_all else delta_shards,
             partition_by=["shard", "kind"],
         )
         clock.mark("analyze_tokens")
 
     return _rewrite_shards(
-        spark, catalog, fresh=fresh,
-        token_shards=None if fresh else delta_shards, todo=todo,
+        spark, catalog,
+        token_shards=None if snap is None else delta_shards, todo=todo,
         n_shards=n_shards, positions=positions, clock=clock,
         # a bounded grown run that excluded delta shards must NOT claim
         # them: their on-disk postings (the boundary shard's OLD
@@ -664,7 +672,6 @@ def _build_index_impl(
 def _rewrite_shards(
     spark: SparkSession,
     catalog: IndexCatalog,
-    fresh: bool,
     token_shards: list[int] | None,
     todo: list[int],
     n_shards: int,
@@ -678,11 +685,11 @@ def _rewrite_shards(
     differ only in how they produce their ``tokens`` partitions, and all
     of them commit through here.  Returns the committed snapshot.
 
-    ``fresh``: no committed snapshot — every table is written plainly;
-    otherwise each write is a staged swap the snapshot commit decides
+    Every table write is a staged swap the snapshot commit decides
     (``catalog.replace``).  ``token_shards``: the shards whose tokens
-    changed (None = all, for a fresh build); ``todo``: the shards to
-    re-encode.  In order:
+    changed, or None for a rebuild, which rewrites every table whole
+    and keeps no committed lineage; ``todo``: the shards to re-encode.
+    In order:
 
     1. doc_stats of ``token_shards`` from the sentinel rows (a narrow
        filter-project of tokens: no shuffle, no join), then avgdl and
@@ -690,8 +697,8 @@ def _rewrite_shards(
     2. postings of ``todo`` through the one ``encode_partitioning``
        exchange;
     3. term_stats, derived from the postings block summaries;
-    4. lineage: members = ``todo`` ∪ the committed lineage, minus
-       ``unclaimed``;
+    4. lineage: members = ``todo`` ∪ the committed lineage (none for a
+       rebuild), minus ``unclaimed``;
     5. the manifest (``manifest`` holds the caller's own keys), then
        ``finalize_pending``.
     """
@@ -701,13 +708,13 @@ def _rewrite_shards(
     meta_cols = [c for c in META_COLS if c in tdf.columns]
 
     def doc_stats_and_avgdl() -> tuple[int, float]:
-        if fresh or token_shards:
+        if token_shards is None or token_shards:
             sent = tdf.where(F.col("kind") == "d")  # partition-pruned
-            if not fresh:
+            if token_shards is not None:
                 sent = sent.where(F.col("shard").isin(token_shards))
             catalog.replace(
                 sent.select("doc_id", "doclen", *meta_cols, "shard"),
-                "doc_stats", fresh, shards=token_shards, partition_by=["shard"],
+                "doc_stats", shards=token_shards, partition_by=["shard"],
             )
         # avgdl + live-doc count over ALL docs incl. empty ones — one agg
         # over the small doc_stats table (sentinels), never a scan of
@@ -775,7 +782,8 @@ def _rewrite_shards(
                     schema=POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
                 )
             )
-            catalog.replace(postings, "postings", fresh, shards=todo,
+            catalog.replace(postings, "postings",
+                            shards=None if token_shards is None else todo,
                             partition_by=["shard"], options=POSTINGS_WRITE_OPTIONS)
             clock.mark("postings")
         n_live, avgdl = stats.result()
@@ -789,7 +797,7 @@ def _rewrite_shards(
         pst.groupBy("term").agg(
             F.sum("n").cast("long").alias("df"), F.sum("tf_sum").alias("cf")
         ),
-        "term_stats", fresh,
+        "term_stats",
     )
     clock.mark("term_stats")
     # per-shard lineage: a parquet TABLE derived entirely distributed —
@@ -805,8 +813,9 @@ def _rewrite_shards(
         )
     else:
         members = spark.createDataFrame([(int(s),) for s in todo], "shard int")
-    if not fresh:
-        members = members.union(catalog.lineage_shard_df(spark)).distinct()
+    if token_shards is not None:
+        members = members.union(
+            catalog.read(spark, "lineage").select("shard")).distinct()
     if unclaimed:
         members = members.join(
             spark.createDataFrame([(int(s),) for s in unclaimed], "shard int"),
@@ -816,7 +825,6 @@ def _rewrite_shards(
         spark,
         members.join(shard_stats, "shard", "left")
         .fillna(0, subset=["blocks", "postings"]),
-        fresh=fresh,
     )
     clock.mark("metrics")
 

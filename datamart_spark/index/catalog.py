@@ -7,11 +7,9 @@ no Iceberg runtime jars and no network, so this module provides the
 same contract over parquet directories + JSON snapshot manifests:
 
 - snapshot JSON commits are atomic (write to ``.tmp`` then rename);
-- table writes are per-shard-partition: full overwrite, dynamic
-  partition overwrite (only the partitions present in the output are
-  replaced — Iceberg ``overwritePartitions`` analog), and a
-  filter-rewrite swap for row-level deletes (Iceberg ``DELETE WHERE``
-  analog);
+- table writes are staged swaps of the whole table or of the given
+  shard partitions (Iceberg ``overwritePartitions`` / ``DELETE WHERE``
+  analogs);
 - per-shard lineage + build metrics in each snapshot (north rule:
   "resumable from checkpoint with per-partition lineage + metrics");
 - resume = (wanted shards) − (shards in current snapshot), with the
@@ -19,31 +17,22 @@ same contract over parquet directories + JSON snapshot manifests:
   disk (``partition_exists``) — a manifest is trusted only as far as
   the storage agrees with it.
 
-Crash model (per mutation path):
+Crash model: every table write, fresh builds included, is a staged
+swap under a ``_pending_rewrite`` marker (``replace`` →
+``rewrite_partitions`` / ``rewrite_table``).  The pre-swap data stays on
+disk as underscore-prefixed backups (invisible to Spark listings) until
+``finalize_pending()`` runs AFTER the snapshot commit, and the marker
+records the snapshot sequence at swap time, so ``recover()`` — run by
+``read_snapshot`` (the query path), the writers' guard and their
+rollback wrapper — resolves a crash in the direction the snapshot log
+decided: commit landed ⇒ roll forward (drop backups); commit missing ⇒
+roll back (restore backups, delete brand-new partitions).  The one
+atomic rename of the snapshot JSON is thus the commit point of every
+multi-table mutation — the Iceberg atomic-swap semantics, on plain
+parquet.
 
-- FRESH build: table writes land before the snapshot commit; a crash
-  leaves extra partition data that the next resume overwrites
-  idempotently — the previous snapshot stays consistent.
-- Every other write — resumed or grown build, delete_docs — goes
-  through ``replace(fresh=False)``: each partition or whole-table
-  replacement is a staged swap under a ``_pending_rewrite`` marker
-  (``rewrite_partitions`` / ``rewrite_table``).  The pre-swap data stays
-  on disk as underscore-prefixed backups (invisible to Spark listings)
-  until ``finalize_pending()`` runs AFTER the snapshot commit.  The
-  marker records the snapshot sequence at swap time, so ``recover()`` —
-  invoked by ``read_snapshot`` (the query path) and by the writers'
-  guard (``build_index(resume=True)``, ``delete_docs``) — resolves a
-  crash in the direction the snapshot log decided: commit landed ⇒
-  roll forward (drop backups); commit missing ⇒ roll back (restore
-  backups, delete brand-new partitions).  The single atomic rename of
-  the snapshot JSON is therefore the commit point for the whole
-  multi-table mutation — the Iceberg atomic-swap semantics, on plain
-  parquet.  Both writers commit through the one build tail
-  (``build._rewrite_shards``), so the build, a grown build and a delete
-  share one write order and one commit point.
-
-On a real cluster, swap `_write`/`_read` for ``df.writeTo(...)`` on an
-Iceberg catalog; build/query code stays.
+On a real cluster, swap ``_write_parquet``/``read`` for
+``df.writeTo(...)`` on an Iceberg catalog; build/query code stays.
 """
 
 from __future__ import annotations
@@ -109,19 +98,6 @@ class IndexCatalog:
         os.rename(tmp, path)
         return path
 
-    def committed_shards(self, spark: SparkSession | None = None) -> set[int]:
-        snap = self.current_snapshot()
-        if not snap:
-            return set()
-        if snap.get("lineage") is None:  # legacy in-manifest lineage map
-            return {int(s) for s in snap.get("shards", {})}
-        if spark is None:
-            raise ValueError(
-                "committed_shards needs a SparkSession to read the "
-                "lineage table of a current-format snapshot"
-            )
-        return {s for s, _b, _p in self.lineage_rows(spark)}
-
     # --- per-shard lineage table ---------------------------------------
     #
     # Per-shard lineage (shard, blocks, postings) lives in a parquet
@@ -134,8 +110,7 @@ class IndexCatalog:
     # so operator error (stale/foreign lineage table under a manifest)
     # is detected, mirroring partition_exists for data partitions.
     # Iceberg analog: per-partition stats live in manifest FILES, not
-    # the catalog pointer.  Legacy snapshots (pre-table "shards" map)
-    # stay readable.
+    # the catalog pointer.
 
     @staticmethod
     def _normalize_lineage(df: DataFrame) -> DataFrame:
@@ -167,30 +142,24 @@ class IndexCatalog:
             "checksum": str(row[3] or 0),
         }
 
-    def write_lineage(self, spark: SparkSession, df: DataFrame,
-                      fresh: bool) -> dict[str, Any]:
-        """Write the per-shard lineage table (``replace``: plain for a
-        fresh build, staged swap otherwise) and return the manifest
-        summary computed from the table AS WRITTEN, so the committed
-        checksum vouches for the bytes on disk."""
-        self.replace(self._normalize_lineage(df).coalesce(8), "lineage", fresh)
+    def write_lineage(self, spark: SparkSession, df: DataFrame) -> dict[str, Any]:
+        """Write the per-shard lineage table (a staged ``rewrite_table``)
+        and return the manifest summary computed from the table AS
+        WRITTEN, so the committed checksum vouches for the bytes on
+        disk."""
+        self.rewrite_table(self._normalize_lineage(df).coalesce(8), "lineage")
         return self.lineage_summary(self.read(spark, "lineage"))
 
     def lineage_rows(self, spark: SparkSession) -> list[tuple[int, int, int]]:
         """Committed per-shard lineage as (shard, blocks, postings)
-        rows — from the lineage table (verified against the manifest
-        checksum) for current snapshots, or the legacy in-manifest map.
-        Driver cost is O(#shards) ints, which the RESUME planner needs
-        anyway (the todo-set diff); queries never call this."""
+        rows — from the lineage table, verified against the manifest
+        checksum.  Driver cost is O(#shards) ints, which the RESUME
+        planner needs anyway (the todo-set diff); queries never call
+        this."""
         snap = self.current_snapshot()
         if not snap:
             return []
-        li = snap.get("lineage")
-        if li is None:
-            return [
-                (int(s), int(m.get("blocks", 0)), int(m.get("postings", 0)))
-                for s, m in snap.get("shards", {}).items()
-            ]
+        li = snap["lineage"]
         df = self.read(spark, "lineage")
         summary = self.lineage_summary(df)
         if (summary["checksum"] != li["checksum"]
@@ -205,19 +174,6 @@ class IndexCatalog:
         return [
             (r["shard"], r["blocks"], r["postings"]) for r in df.collect()
         ]
-
-    def lineage_shard_df(self, spark: SparkSession) -> DataFrame | None:
-        """Committed shard ids as a 1-column DataFrame (for distributed
-        set algebra in build/delete — never collected there), or None
-        when no snapshot exists."""
-        snap = self.current_snapshot()
-        if not snap:
-            return None
-        if snap.get("lineage") is None:
-            return spark.createDataFrame(
-                [(int(s),) for s in snap.get("shards", {})], "shard int"
-            )
-        return self.read(spark, "lineage").select("shard")
 
     # --- tables ----------------------------------------------------------
 
@@ -241,27 +197,17 @@ class IndexCatalog:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
-              options: dict[str, str] | None = None) -> None:
-        """Overwrite the whole table.  ``options`` are parquet writer
-        options (e.g. ``parquet.block.size`` for skip-friendly row
-        groups on the postings table)."""
-        self._df_cache.clear()
-        self._write_parquet(df, self.table_path(name), partition_by, options)
-
-    def replace(self, df: DataFrame, name: str, fresh: bool,
+    def replace(self, df: DataFrame, name: str,
                 shards: list[int] | None = None,
                 partition_by: list[str] | None = None,
                 options: dict[str, str] | None = None) -> None:
-        """The one place a writer picks how a table is replaced.
-        ``fresh`` (a build with no snapshot to protect): a plain
-        ``write``.  Otherwise a staged swap the next snapshot commit
-        decides — of the ``shards`` partitions (``rewrite_partitions``),
-        or of the whole table when ``shards`` is None
-        (``rewrite_table``)."""
-        if fresh:
-            self.write(df, name, partition_by=partition_by, options=options)
-        elif shards is None:
+        """The one way a writer replaces a table: a staged swap the next
+        snapshot commit decides — of the whole table when ``shards`` is
+        None (``rewrite_table``), else of the ``shards`` partitions
+        (``rewrite_partitions``).  ``options`` are parquet writer
+        options (e.g. ``parquet.block.size`` for skip-friendly row
+        groups on the postings table)."""
+        if shards is None:
             self.rewrite_table(df, name, options=options, partition_by=partition_by)
         else:
             self.rewrite_partitions(df, name, shards, partition_by, options)
@@ -272,14 +218,14 @@ class IndexCatalog:
     def _backup_path(self, name: str, shard: int) -> str:
         """Pre-swap backup dir for a partition: underscore-prefixed AND
         ``=``-free so Spark's listing ignores it even while it persists
-        across reads (deferred rewrites keep backups until finalize).
+        across reads (staged rewrites keep backups until finalize).
         Spark's hidden-path filter keeps ``_``-names that contain ``=``
         — a ``_old_shard=3`` sibling is inferred as a conflicting
         partition column; ``shard=3.old`` would be, too."""
         return os.path.join(self.table_path(name), f"_old_shard_{shard}")
 
     def _write_marker(self, name: str, payload: dict[str, Any]) -> None:
-        """Atomically record a deferred swap of ``name``: the snapshot
+        """Atomically record a staged swap of ``name``: the snapshot
         sequence seen now decides it on ``recover()``."""
         snap = self.current_snapshot()
         marker = self._pending_path(name)
@@ -287,7 +233,6 @@ class IndexCatalog:
             json.dump(
                 {
                     **payload,
-                    "deferred": True,
                     "snap_seq": snap["sequence"] if snap else 0,
                     "pid": os.getpid(),
                     "token": self._writer_token,
@@ -312,7 +257,7 @@ class IndexCatalog:
         reading), and partitions that end up EMPTY must have their
         directories removed (dynamic overwrite would leave them stale).
 
-        Deferred (the Iceberg-snapshot-swap analog): each partition swap
+        Staged (the Iceberg-snapshot-swap analog): each partition swap
         renames the committed directory to a backup before moving the
         new one in, and every backup, the staging dir and the pending
         marker are KEPT until ``finalize_pending()``, which the writer
@@ -357,9 +302,8 @@ class IndexCatalog:
         a side dir, swap it in with the old table kept as a backup, and
         let the snapshot commit decide — ``recover()`` restores the
         backup if the commit never lands, ``finalize_pending()`` drops
-        it afterwards.  For small derived tables (term_stats, lineage)
-        whose plain overwrite would trash the committed snapshot's copy
-        on a crash."""
+        it afterwards.  A fresh build writes every table this way, so a
+        failed rebuild leaves the old snapshot reading its own tables."""
         self._df_cache.clear()
         tmp = self.table_path(f"_{name}__rewrite")
         shutil.rmtree(tmp, ignore_errors=True)
@@ -382,11 +326,11 @@ class IndexCatalog:
         return out
 
     def finalize_pending(self) -> list[str]:
-        """Clean up deferred rewrites AFTER their snapshot committed:
-        drop every ``.old`` partition dir, the staging dir and the
-        marker.  Call only once ``commit_snapshot`` has succeeded — the
-        commit, not this cleanup, is the atomic point (a crash before
-        this runs is rolled FORWARD by ``recover()``)."""
+        """Clean up staged rewrites AFTER their snapshot committed:
+        drop every backup, the staging dir and the marker.  Call only
+        once ``commit_snapshot`` has succeeded — the commit, not this
+        cleanup, is the atomic point (a crash before this runs is rolled
+        FORWARD by ``recover()``)."""
         done = []
         for name, path, payload in self._pending_markers():
             if payload.get("whole_table"):
@@ -453,14 +397,11 @@ class IndexCatalog:
         cur_seq = cur["sequence"] if cur else 0
         recovered = []
         for name, path, payload in self._pending_markers():
-            committed = (
-                payload.get("deferred", False)
-                and cur_seq > payload.get("snap_seq", cur_seq)
-            )
+            committed = cur_seq > payload.get("snap_seq", cur_seq)
             mine = own_token is not None and payload.get("token") == own_token
             if not committed and not force and not mine \
                     and self._writer_alive(payload):
-                continue  # in-flight deferred mutation — not ours to undo
+                continue  # in-flight mutation — not ours to undo
             if payload.get("whole_table"):
                 backup = self._table_backup_path(name)
                 if committed:
@@ -478,7 +419,7 @@ class IndexCatalog:
                 for s in shards:
                     shutil.rmtree(self._backup_path(name, s), ignore_errors=True)
             else:
-                had_old = set(payload.get("had_old", shards))
+                had_old = set(payload["had_old"])
                 for s in shards:
                     dst = self.partition_path(name, s)
                     old = self._backup_path(name, s)

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
-from .build import _Clock, _rewrite_shards, _writer_guard
+from .build import _Clock, _refuse_other_encoding, _rewrite_shards, _writer_guard
 from .catalog import IndexCatalog
 
 
@@ -53,6 +53,7 @@ def _delete_docs_impl(
     snap = _writer_guard(catalog)
     if not snap:
         raise ValueError("nothing committed in this catalog")
+    _refuse_other_encoding(snap)
     clock = _Clock()
 
     ids = set(int(d) for d in (doc_ids or []))
@@ -75,13 +76,13 @@ def _delete_docs_impl(
         .where(F.col("shard").isin(shards))
         .where(~F.col("doc_id").isin(ids))
     )
-    catalog.replace(surviving, "tokens", False, shards=shards,
+    catalog.replace(surviving, "tokens", shards=shards,
                     partition_by=["shard", "kind"])
     clock.mark("tokens")
 
     positions = bool(snap.get("positions", False))
     return _rewrite_shards(
-        spark, catalog, fresh=False, token_shards=shards, todo=shards,
+        spark, catalog, token_shards=shards, todo=shards,
         n_shards=snap["n_shards"], positions=positions, clock=clock,
         manifest={
             "next_doc_id": snap.get("next_doc_id", snap["n_docs"]),

@@ -30,9 +30,12 @@ Every query — one keyword or phrase search, or a whole batch — is
 planned once by query/batch.py and executes as:
 
   postings scan, `term IN (scan terms)` pushed to parquet (the build
-  writes each shard partition as ONE term-sorted file, so row-group
-  min/max stats prune everything but the query terms' blocks; that
-  order serves pruning only — kernels see rows re-sorted)
+  writes each shard partition as ONE term-sorted file so that row-group
+  min/max stats can prune everything but the query terms' blocks; the
+  driver-side pyarrow read does not prune them yet — pyarrow 16 tests
+  `isin` against hive partitions only, never against row-group
+  statistics, see ``_selection`` and ROADMAP Direction 1; kernels see
+  rows re-sorted either way)
   → per-(shard, term) column dicts, ``_shard_groups`` [with the tagged
     filter doc-id sets when any query is filtered]
                                 — ``_shard_kernel_job``, this module
@@ -466,8 +469,11 @@ _IN_PROCESS_MAX_BYTES = 94 * 2**20
 
 
 def _selection(catalog, scan_terms: list[str]):
-    """The postings row groups ``term IN scan_terms`` keeps (pruned on
-    footer min/max statistics), and their compressed bytes."""
+    """The postings row groups ``term IN scan_terms`` keeps, and their
+    compressed bytes.  Nothing prunes here yet: pyarrow 16 tests
+    ``isin`` against hive partitions (``shard``, which this term filter
+    does not constrain) but never against row-group min/max statistics,
+    so every postings row group is selected (ROADMAP Direction 1)."""
     ds = catalog.snapshot_dataset("postings")
     filt = pads.field("term").isin(scan_terms)
     groups = [g for f in ds.get_fragments(filt) for g in f.split_by_row_group(filt)]

@@ -91,7 +91,7 @@ from . import spatial  # noqa: E402,F401
 # round, so rotation never un-gates an operator locally.
 _TAIL = [
     "bm25_single_term",  # same bm25_direct path gated by bm25_two_term_and + bm25_lang_filtered
-    "bm25_indexed_lang_filtered",  # _filtered_doc_ids+cogroup path gated by bm25_batch_topk's lang member; P2 semantics by bm25_lang_filtered
+    "bm25_indexed_lang_filtered",  # filtered in-process kernel gated by bm25_batch_topk's lang member (the suite SFs never cogroup: tests/test_plans.py covers it); P2 semantics by bm25_lang_filtered
     "mean_stddev_pop",  # avg+stddev_pop exprs gated by numeric_profile_lineitem
     "minhash_signatures",  # minhash kernel gated by minhash_lsh_pairs + dedup_pipeline (same signatures built inside both)
     "distinct_counts",  # count_distinct agg gated by profile_columns_documents

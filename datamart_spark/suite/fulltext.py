@@ -286,10 +286,15 @@ def top_terms_per_lang(spark, sf_dir):
 #
 # These build a persistent varbyte/block-max catalog over the sf dir's
 # documents table (stemming=False so tokenization matches _TOK_SQL:
-# `\w+` findall ≡ split on `\W+`) and answer through the cogrouped
-# block-max DAAT kernel (query/wand.py).  The oracle is the same BM25
-# SQL as the index-free entries — so the driver's CORRECTNESS gate
-# covers the varbyte decode + WAND kernel path, not just pytest.
+# `\w+` findall ≡ split on `\W+`) and answer through the block-max
+# DAAT kernel (query/wand.py).  The oracle is the same BM25 SQL as the
+# index-free entries — so the driver's CORRECTNESS gate covers the
+# varbyte decode + WAND kernel path, not just pytest.  At sf0.01 and
+# sf0.1 every indexed entry's selection is far below
+# wand._IN_PROCESS_MAX_BYTES, so the kernels run in-process; the Spark
+# job and its filtered cogroup are covered by
+# tests/test_plans.py::test_only_filtered_queries_cogroup and
+# ::test_batch_query_filtered_plan_shape.
 
 #: memoized per-process: validating the on-disk snapshot costs a
 #: docs.count() + listdir, which every indexed suite entry used to
@@ -400,8 +405,9 @@ def bm25_indexed_stopword_and(spark, sf_dir):
 
 #: (query_id, terms, or_mode, lang) — one AND, one OR, TWO
 #: differently-lang-filtered and one stopword-tier query share ONE
-#: scan + kernel pass; the two filter contexts ride the same cogroup
-#: as context-tagged doc-id sets (the heterogeneous-batch shape), and
+#: scan + kernel pass; the two filter contexts ride the same kernel
+#: pass as context-tagged doc-id sets (the heterogeneous-batch shape;
+#: in-process at the suite SFs, a cogroup on the Spark-job branch), and
 #: the shared terms ("spark", "join" ×2, "data" ×3, "table" ×2)
 #: exercise the cross-query block-decode cache.
 _BATCH_SPECS = [

@@ -2,8 +2,9 @@
 manifest must stay O(1) in shard count — at the 10^12-doc / ~4M-shard
 design point an in-manifest lineage map is a multi-hundred-MB JSON
 parsed on every snapshot read — with a content checksum binding the
-manifest to the table bytes, and legacy (in-manifest map) snapshots
-still readable so existing catalogs resume without migration."""
+manifest to the table bytes.  A legacy (in-manifest map) snapshot is
+not grown or deleted from: its writers refuse, and a rebuild converts
+it."""
 
 import json
 import os
@@ -67,10 +68,16 @@ def test_checksum_detects_out_of_band_table_edit(spark, tmp_path):
         cat.lineage_rows(spark)
 
 
-def test_legacy_in_manifest_lineage_still_resumes(spark, tmp_path):
+def test_legacy_in_manifest_lineage_refuses_partial_rewrite(spark, tmp_path):
     """Catalogs committed before the lineage table existed carry the
-    per-shard map in the manifest; they must read and GROW without
-    migration (the grown build upgrades them to the table format)."""
+    per-shard map in the manifest.  A grown build or a delete over one
+    would keep shards it cannot vouch for, so both refuse and commit
+    nothing; the rebuild the refusal names converts the catalog to the
+    table format."""
+    import pytest
+
+    from datamart_spark.index import delete_docs
+
     cat = IndexCatalog(str(tmp_path / "legacy"))
     build_index(generate_documents(spark, 450), cat, n_shards=4, resume=False)
 
@@ -90,14 +97,19 @@ def test_legacy_in_manifest_lineage_still_resumes(spark, tmp_path):
     shutil.rmtree(cat.table_path("lineage"))
     cat._df_cache.clear()
 
-    assert cat.committed_shards() == {0, 1, 2, 3}  # no spark needed
-    assert sorted(cat.lineage_rows(spark)) == sorted(rows)
+    with pytest.raises(ValueError, match="encoded differently"):
+        build_index(generate_documents(spark, 800), cat)
+    with pytest.raises(ValueError, match="encoded differently"):
+        delete_docs(spark, cat, doc_ids=[3])
+    assert cat.current_snapshot() == snap
+    assert os.listdir(os.path.dirname(snap_file)) == [os.path.basename(snap_file)]
+    assert not cat._pending_markers()
 
-    # grow through the legacy snapshot: resume must trust committed
-    # shards and the new commit must be table-format
-    m = build_index(generate_documents(spark, 800), cat)
+    # the remedy: a rebuild commits the table format
+    m = build_index(generate_documents(spark, 800), cat, resume=False)
     assert "shards" not in m and m["lineage"]["n_shards"] == m["n_shards"]
     assert os.path.isdir(cat.table_path("lineage"))
+    assert not cat._pending_markers()
 
     fresh = IndexCatalog(str(tmp_path / "fresh"))
     build_index(generate_documents(spark, 800), fresh, resume=False)

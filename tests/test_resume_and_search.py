@@ -215,6 +215,65 @@ def test_delete_refuses_other_postings_format(spark, tmp_path):
     _assert_nothing_committed(cat, manifest)
 
 
+def _leftovers(root):
+    """Markers, backups and staging dirs anywhere under a catalog root."""
+    return sorted(
+        os.path.join(d, x)
+        for d, dirs, files in os.walk(root) for x in dirs + files
+        if x.startswith(("_old_", "_pending_rewrite_")) or x.endswith("__rewrite")
+    )
+
+
+def test_rebuild_over_other_encoding_commits_this_codes(spark, tmp_path):
+    """The remedy the encoding refusal names: a resume=False rebuild
+    over postings of another format and reference avgdl keeps no
+    committed shard, so it runs, commits this code's encoding and ranks
+    like a fresh catalog."""
+    from datamart_spark.index.build import POSTINGS_FORMAT, TFN_REF_AVGDL
+
+    cat = IndexCatalog(str(tmp_path / "enc"))
+    build_index(generate_documents(spark, 300), cat, n_shards=4, resume=False)
+    _edit_manifest(cat, postings_format=1, tfn_ref_avgdl=128.0)
+    m = build_index(generate_documents(spark, 300), cat, n_shards=4, resume=False)
+    assert m["sequence"] == 2
+    assert m["postings_format"] == POSTINGS_FORMAT
+    assert m["tfn_ref_avgdl"] == TFN_REF_AVGDL
+    assert _leftovers(cat.root) == []
+    fresh = IndexCatalog(str(tmp_path / "enc_fresh"))
+    build_index(generate_documents(spark, 300), fresh, n_shards=4, resume=False)
+    q = f"{_VOCAB[40]} {_VOCAB[120]}"
+    assert _topk(spark, cat, q) == _topk(spark, fresh, q) != []
+
+
+def test_rebuild_failure_rolls_back_to_old_snapshot(spark, tmp_path):
+    """A resume=False rebuild over a committed snapshot writes every
+    table as a staged swap: one that fails before its commit leaves the
+    old snapshot reading exactly its own tables — same sequence, its own
+    doc_stats rows, the same ranking, nothing staged left behind."""
+    root = str(tmp_path / "rb")
+    cat = IndexCatalog(root)
+    build_index(generate_documents(spark, 300), cat, n_shards=4, resume=False)
+    q = f"{_VOCAB[40]} {_VOCAB[120]}"
+    before = _topk(spark, cat, q, k=10)
+
+    cat.commit_snapshot = _boom
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(generate_documents(spark, 500), cat, resume=False)
+    del cat.commit_snapshot
+
+    cat2 = IndexCatalog(root)
+    snap = cat2.current_snapshot()
+    assert snap["sequence"] == 1 and snap["n_docs"] == 300
+    assert cat2.read(spark, "doc_stats").count() == 300
+    assert _topk(spark, cat2, q, k=10) == before
+    assert _leftovers(root) == []
+
+    m = build_index(generate_documents(spark, 500), cat2, resume=False)
+    assert m["sequence"] == 2 and m["n_docs"] == 500
+    assert cat2.read(spark, "doc_stats").count() == 500
+    assert _leftovers(root) == []
+
+
 def test_delete_docs_rank_identical_to_fresh_subset(spark, tmp_path):
     """S14 delete-by-dataset analog: per-shard rewrite of one deleted
     document equals a fresh index over the surviving doc set."""
@@ -627,8 +686,9 @@ def test_recover_skips_live_writers(spark, tmp_path):
     q = f"{_VOCAB[40]} {_VOCAB[120]}"
     assert len(_topk(spark, cat, q, k=5)) > 0  # queries still serve
 
-    with pytest.raises(RuntimeError, match="another writer"):
-        build_index(generate_documents(spark, 300), cat)
+    for resume in (True, False):
+        with pytest.raises(RuntimeError, match="another writer"):
+            build_index(generate_documents(spark, 300), cat, resume=resume)
     with pytest.raises(RuntimeError, match="another writer"):
         delete_docs(spark, cat, doc_ids=[1])
 
